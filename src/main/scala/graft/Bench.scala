@@ -13,6 +13,25 @@ object Bench {
   private val Prewarm = 2
   private val Measured = 6
 
+  private def jstr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The streaming block as (full, compact) JSON objects: one
+    * `name: [min, med, max]` entry per timed entry, then the total and
+    * the canary pairs. An empty `rows` (every entry failed) still gives
+    * valid JSON. */
+  private[graft] def streamBlockJson(
+      rows: Seq[(String, Double, Double, Double)],
+      canary: (Double, Double), canaryMulti: (Double, Double)): (String, String) = {
+    val full = rows.map { case (k, mn, md, mx) => s"${jstr(k)}:[$mn,$md,$mx]" } ++ Seq(
+      s""""total_med":${rows.map(_._3).sum}""",
+      s""""cpu_canary_sec":[${canary._1},${canary._2}]""",
+      s""""cpu_canary_multi_sec":[${canaryMulti._1},${canaryMulti._2}]""")
+    def r3s(d: Double): Double = math.rint(d * 1000) / 1000
+    val compact = rows.map { case (k, _, md, _) => s"${jstr(k)}:${r3s(md)}" }
+    (full.mkString("{", ",", "}"), compact.mkString("{", ",", "}"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -136,20 +155,9 @@ object Bench {
           else Some((q.name, runs.head, runs(runs.size / 2), runs.last))
         }
         val (sPost, sPostM) = Measure.canaryPair()
-        def jq(s: String): String = "\"" + s + "\""
-        val full = sRows
-          .map { case (k, mn, md, mx) => s"${jq(k)}:[$mn,$md,$mx]" }
-          .mkString("{", ",", s""","total_med":${sRows.map(_._3).sum},""" +
-            s""""cpu_canary_sec":[$sPre,$sPost],""" +
-            s""""cpu_canary_multi_sec":[$sPreM,$sPostM]}""")
-        def r3s(d: Double): Double = math.rint(d * 1000) / 1000
-        val compact = sRows.map { case (k, _, md, _) => s"${jq(k)}:${r3s(md)}" }
-          .mkString("{", ",", "}")
-        (full, compact)
+        streamBlockJson(sRows, (sPre, sPost), (sPreM, sPostM))
       }
 
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qs = results.map { case (k, _, med, _, _) => s"${jstr(k)}:$med" }
       .mkString("{", ",", "}")
     val spread = results

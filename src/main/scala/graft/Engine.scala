@@ -12,9 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  /** Build a session tuned for the local[32] test box but configured the
+  /** Build a local session with `cores` worker threads, configured the
     * way a large cluster job would be: AQE on (runtime re-plan, skew-join
-    * splitting, dynamic coalesce), modest shuffle parallelism, UTC.
+    * splitting, dynamic coalesce), `shufflePartitions` shuffle
+    * partitions, UTC. The defaults suit a 32-core host; pass the host's
+    * core count elsewhere.
     */
   def session(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
@@ -257,15 +259,22 @@ object Engine {
 
   def prestoDialectActive: Boolean = prestoDialect.get()
 
-  def sql(spark: SparkSession, dir: String, query: String): DataFrame = {
+  def sql(spark: SparkSession, dir: String, query: String): DataFrame =
+    sql(spark, dir, query, smallPath = true)
+
+  /** [[sql]] with the small-statement path switchable: `smallPath =
+    * false` keeps every query on whole-stage codegen, the compiled side
+    * the interpreted path is checked against. */
+  private[graft] def sql(spark: SparkSession, dir: String, query: String,
+      smallPath: Boolean): DataFrame = {
     val prevDialect = prestoDialect.get()
     prestoDialect.set(true)
-    try sqlImpl(spark, dir, query)
+    try sqlImpl(spark, dir, query, smallPath)
     finally prestoDialect.set(prevDialect)
   }
 
-  private def sqlImpl(
-      spark: SparkSession, dir: String, query: String): DataFrame = {
+  private def sqlImpl(spark: SparkSession, dir: String, query: String,
+      smallPath: Boolean): DataFrame = {
     Tables.registerAll(spark, dir)
     // a session not minted by Engine.session (e.g. spark.newSession())
     // must still see the whole function catalog — the reference exposes
@@ -482,7 +491,11 @@ object Engine {
             "atomic-write narrowing — there is no transaction to roll " +
             "back. Re-create the previous state explicitly instead.")
       case None =>
-        spark.sql(translate(query))
+        // a plain query over little input runs interpreted (see
+        // org.apache.spark.sql.classic.SmallStatement)
+        val df = spark.sql(translate(query))
+        if (smallPath) org.apache.spark.sql.classic.SmallStatement.route(df)
+        else df
     }
   }
 

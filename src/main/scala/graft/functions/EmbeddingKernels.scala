@@ -86,11 +86,14 @@ object EmbeddingKernels {
       exprs => ShingleHistogram(exprs(0), exprs(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_lsh_sig",
       exprs => LshSignature(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_sig_vec",
-      exprs => LshSignatureVec(exprs(0), exprs(1), exprs(2),
-        if (exprs.length >= 4) exprs(3)
-        else org.apache.spark.sql.catalyst.expressions.Literal(-1)),
-      "built-in")
+    reg.createOrReplaceTempFunction("graft_lsh_sig_vec", { exprs =>
+      require(exprs.length == 3 || exprs.length == 4,
+        s"graft_lsh_sig_vec takes 3 or 4 arguments " +
+          s"(vector, planes, tables[, dim]), got ${exprs.length}")
+      LshSignatureVec(exprs(0), exprs(1), exprs(2),
+        if (exprs.length == 4) exprs(3)
+        else org.apache.spark.sql.catalyst.expressions.Literal(-1))
+    }, "built-in")
     reg.createOrReplaceTempFunction("graft_pack_ints",
       exprs => PackInts(exprs(0), exprs(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_sig_match",

@@ -34,7 +34,7 @@ object StreamingOps {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    } catch { case _: java.io.IOException => 0L }
+    } catch { case scala.util.control.NonFatal(_) => 0L }
     if (len > 0) spark.conf.set("graft.stream.inputBytes", len.toString)
     val schema = spark.read.parquet(path).schema
     // The file stream source wants a directory; narrow it to the events

@@ -128,6 +128,15 @@ class EmbeddingKernelsSpec extends QueryAssertions {
       "float-vector kernel buckets diverged from the declarative projection")
   }
 
+  test("graft_lsh_sig_vec rejects arities other than 3 or 4") {
+    for (n <- Seq(2, 5)) {
+      val e = intercept[Exception](spark.sql(
+        s"SELECT graft_lsh_sig_vec(${Seq.fill(n)("8").mkString(", ")})").collect())
+      assert(e.getMessage.contains(s"takes 3 or 4 arguments (vector, planes, tables[, dim]), got $n"),
+        e.getMessage)
+    }
+  }
+
   test("graft_pack_ints / graft_sig_match: agreement count and canonical table") {
     for (w <- Seq(2, 4)) {
       val rows = spark.sql(

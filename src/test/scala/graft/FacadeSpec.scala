@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `Engine.sql` facade as a USER sees it: a fresh `Engine.session`
@@ -1074,6 +1078,62 @@ class FacadeSpec extends AnyFunSuite {
     intercept[Exception](ddl("DROP MATERIALIZED VIEW graft_mv_sums"))
     ddl("DROP MATERIALIZED VIEW IF EXISTS graft_mv_sums")
     intercept[Exception](one("SELECT * FROM graft_mv_sums"))
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** The executed plan's operators (through AQE stages) after a run. */
+  private def executedOps(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    PlanWalk.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  private def codegenStages(df: DataFrame): Int =
+    executedOps(df).count(_.isInstanceOf[WholeStageCodegenExec])
+
+  test("small statements run interpreted; large ones, DDL and streams do not") {
+    val s = spark.newSession()
+    // a statement over a few kB runs on a clone without codegen stages;
+    // the caller's tracker still holds its parse and analysis phases
+    val tiny = Engine.sql(s, dir, "SELECT o_orderstatus, count(*) FROM orders GROUP BY 1")
+    assert(tiny.sparkSession ne s)
+    assert(codegenStages(tiny) == 0)
+    assert(Set("parsing", "analysis").subsetOf(tiny.queryExecution.tracker.phases.keySet),
+      tiny.queryExecution.tracker.phases.keySet)
+    // the compiled path of the same statement has codegen stages
+    assert(codegenStages(Engine.sql(s, dir,
+      "SELECT o_orderstatus, count(*) FROM orders GROUP BY 1", smallPath = false)) > 0)
+    // large inputs keep whole-stage codegen on the caller's session:
+    // range(10000000) is 80 MB, sf0.1 lineitem 10.8 MB
+    val range = Engine.sql(s, dir, "SELECT count(*) FROM range(10000000)")
+    assert(range.sparkSession eq s)
+    assert(codegenStages(range) > 0)
+    val big = spark.newSession()
+    val lineitem = Engine.sql(big, "/root/testdata/sf0.1", "SELECT count(*) FROM lineitem")
+    assert(lineitem.sparkSession eq big)
+    assert(codegenStages(lineitem) > 0)
+    // facade DDL and Spark commands are not wrapped (a command already
+    // ran eagerly; wrapping would run it again)
+    assert(Engine.sql(s, dir, "CREATE VIEW graft_route_v AS SELECT 1 AS x")
+      .sparkSession eq s)
+    assert(Engine.sql(s, dir, "SHOW TABLES").sparkSession eq s)
+    // a streaming plan is not wrapped
+    s.readStream.format("rate").load().createOrReplaceTempView("graft_route_stream")
+    val stream = Engine.sql(s, dir, "SELECT value FROM graft_route_stream")
+    assert(stream.isStreaming && (stream.sparkSession eq s))
+  }
+
+  test("the small path sees a SET the caller made before the statement") {
+    val s = spark.newSession()
+    Engine.sql(s, dir, "SET SESSION spark.sql.autoBroadcastJoinThreshold = -1")
+    val df = Engine.sql(s, dir,
+      "SELECT count(*) FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey")
+    assert(df.sparkSession ne s)
+    val ops = executedOps(df)
+    assert(ops.exists(_.isInstanceOf[SortMergeJoinExec]) &&
+      !ops.exists(_.isInstanceOf[BroadcastHashJoinExec]), ops.map(_.nodeName))
+    // the caller's conf keeps codegen on
+    assert(s.conf.get("spark.sql.codegen.wholeStage") == "true")
   }
 
   test("UNNEST argument scan survives comments and quoted identifiers") {

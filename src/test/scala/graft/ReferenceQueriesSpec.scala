@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Replays the reference's ENGINE-LEVEL query corpus through
@@ -92,6 +92,12 @@ class ReferenceQueriesSpec extends AnyFunSuite {
           gc.zip(wc).forall { case (a, b) => cellsMatch(a, b) }
       })
 
+  /** Canonical rows: cells joined by \u0001, sorted unless ordered. */
+  private def canonRows(rows: Array[Row], ordered: Boolean): Seq[String] = {
+    val got = rows.toSeq.map(_.toSeq.map(canonCell).mkString("\u0001"))
+    if (ordered) got else got.sorted
+  }
+
   private final case class Case(file: String, method: String, sql: String,
       ordered: Boolean, mode: String, nRows: Int, nCols: Int,
       expected: Seq[String])
@@ -134,8 +140,7 @@ class ReferenceQueriesSpec extends AnyFunSuite {
         else if (rows.nonEmpty && rows.head.length != c.nCols)
           Some(s"cols ${rows.head.length} != ${c.nCols}")
         else {
-          var got = rows.toSeq.map(_.toSeq.map(canonCell).mkString(""))
-          if (!c.ordered) got = got.sorted
+          val got = canonRows(rows, c.ordered)
           if (rowsMatch(got, c.expected)) None
           else {
             val i = got.zip(c.expected).indexWhere { case (g, w) => g != w }
@@ -173,6 +178,33 @@ class ReferenceQueriesSpec extends AnyFunSuite {
     // slice at once) still trips it
     assert(ok >= (slice.size * 85) / 100,
       s"smoke tranche: $ok of ${slice.size}\n${failures.take(10).mkString("\n")}")
+  }
+
+  test("smoke tranche: the interpreted small-statement path returns the " +
+      "compiled path's canonical rows") {
+    // the small path (org.apache.spark.sql.classic.SmallStatement) runs
+    // the custom expressions' eval; the compiled path their doGenCode
+    val slice = corpus.zipWithIndex.collect { case (c, i) if i % 20 == 0 => c }
+    var routed = 0
+    def run(c: Case, smallPath: Boolean): Either[String, Seq[String]] =
+      try {
+        val df = Engine.sql(tiny, TinyDir, c.sql, smallPath)
+        if (df.sparkSession ne tiny) routed += 1
+        Right(canonRows(df.collect(), c.ordered))
+      } catch {
+        case e: Throwable => Left(String.valueOf(e.getMessage).takeWhile(_ != '\n'))
+      }
+    val diffs = slice.flatMap { c =>
+      (run(c, smallPath = true), run(c, smallPath = false)) match {
+        case (Right(a), Right(b)) if rowsMatch(a, b) => None
+        case (Left(_), Left(_)) => None
+        case (a, b) => Some(s"${c.file}:${c.method}: interpreted=${a.toString.take(200)} " +
+          s"compiled=${b.toString.take(200)}\n    SQL: ${c.sql.take(200)}")
+      }
+    }
+    info(s"$routed of ${slice.size} statements took the interpreted path")
+    assert(routed >= slice.size / 2, s"only $routed of ${slice.size} statements were routed")
+    assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 
   test("full sweep (SPARK_GRAFT_REPLAY=1): frozen engine-level corpus " +
