@@ -1223,42 +1223,6 @@ object Dialect {
           out.append(if (twoArg) "map_from_arrays(" else "map(")
           stack.prepend(new Frame('('))
           i = k + 1
-        } else if ((lower == "bing_tile_parent" || lower == "bing_tile_children") &&
-            k < q.length && q(k) == '(' &&
-            parseParenArgs(q, k).exists(_._1.lengthCompare(2) == 0)) {
-          // the reference overloads these by arity (BingTileFunctions
-          // .java:382-439); Spark's UDF registry is arity-monomorphic, so
-          // the 2-arg target-zoom form routes to the `_zoom` registration
-          out.append(lower).append("_zoom(")
-          stack.prepend(new Frame('('))
-          i = k + 1
-        } else if (lower == "bing_tile" &&
-            k < q.length && q(k) == '(' &&
-            parseParenArgs(q, k).exists(_._1.lengthCompare(1) == 0)) {
-          // the reference's 1-arg quadkey constructor (BingTileFunctions
-          // .java toBingTile(quadKey)) — under the quadkey-VARCHAR
-          // narrowing it is validation + identity, which
-          // bing_tile_quadkey already implements
-          out.append("bing_tile_quadkey(")
-          stack.prepend(new Frame('('))
-          i = k + 1
-        } else if (lower == "spatial_partitions" &&
-            k < q.length && q(k) == '(' &&
-            parseParenArgs(q, k).exists(_._1.lengthCompare(3) == 0)) {
-          // the reference's 3-arg distance overload (GeoFunctions.java
-          // :1213) routes to the `_within` registration by arity
-          out.append("spatial_partitions_within(")
-          stack.prepend(new Frame('('))
-          i = k + 1
-        } else if (lower == "uniqueness_distribution" &&
-            k < q.length && q(k) == '(' &&
-            parseParenArgs(q, k).exists(_._1.lengthCompare(2) == 0)) {
-          // 2-arg uniqueness_distribution(khll, histogramSize) (reference
-          // KHyperLogLogFunctions.java:92) → the explicit-size spelling;
-          // the 1-arg registration uses the digest's own minhash size
-          out.append("khll_uniqueness_distribution(")
-          stack.prepend(new Frame('('))
-          i = k + 1
         } else if (k < q.length && q(k) == '(' && functionAliases.contains(lower)) {
           out.append(functionAliases(lower)).append('(')
           stack.prepend(new Frame('('))

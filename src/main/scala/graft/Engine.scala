@@ -1,26 +1,29 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The engine facade: session construction + catalog registration + the
-  * SQL entry point. The reference's only public query surface is SQL over
-  * HTTP (reference: presto-main/src/main/java/com/facebook/presto/server/
-  * protocol/QueuedStatementResource.java:168-169, parsed by presto-parser/
-  * .../parser/SqlParser.java); our equivalent is `Engine.sql` — catalog
+/** The engine facade: session construction + the SQL entry point. The
+  * reference's only public query surface is SQL over HTTP (reference:
+  * presto-main/src/main/java/com/facebook/presto/server/protocol/
+  * QueuedStatementResource.java:168-169, parsed by presto-parser/.../
+  * parser/SqlParser.java); our equivalent is `Engine.sql` — table
   * registration + a light Presto→Spark dialect shim + `spark.sql`, so
   * Catalyst does parse/analyze/optimize/execute (SURVEY §3.1-3.2).
   */
 object Engine {
 
-  /** Build a local session with `cores` worker threads, configured the
-    * way a large cluster job would be: AQE on (runtime re-plan, skew-join
-    * splitting, dynamic coalesce), `shufflePartitions` shuffle
-    * partitions, UTC. The defaults suit a 32-core host; pass the host's
+  /** Build a session with [[graft.plans.GraftExtensions]] (the resolution
+    * rules and the whole function catalog), configured the way a large
+    * cluster job would be: AQE on (runtime re-plan, skew-join splitting,
+    * dynamic coalesce), `shufflePartitions` shuffle partitions, UTC. The
+    * master is the one already set in conf (spark-submit), else
+    * `local[cores]`. The defaults suit a 32-core host; pass the host's
     * core count elsewhere.
     */
   def session(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(masterFor(new SparkConf(), cores))
       .appName("graft")
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -88,104 +91,13 @@ object Engine {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerFunctions(spark)
     spark
   }
 
-  /** Register the full graft function catalog on a session. Memoized per
-    * session (weak keys — a discarded session stays collectable):
-    * re-registering is semantically idempotent but each call replaces
-    * every registry entry and logs a replacement warning, so callers that
-    * pair registration with table loads would otherwise spam the log.
-    * `Engine.session` calls it so a bare `Engine.sql` user can reach every
-    * custom function (the reference exposes its whole registry to every
-    * query — BuiltInTypeAndFunctionNamespaceManager.java).
-    */
-  private val registered: java.util.Map[SparkSession, java.lang.Boolean] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  def registerFunctions(spark: SparkSession): Unit = registered.synchronized {
-    if (registered.get(spark) == null) {
-      registered.put(spark, java.lang.Boolean.TRUE)
-      registerFunctionsNow(spark)
-    }
-  }
-
-  /** The actual registrations; unconditional. */
-  private def registerFunctionsNow(spark: SparkSession): Unit = {
-    graft.functions.DotProductFloat.register(spark)
-    graft.functions.VecSum.register(spark)
-    graft.functions.NearestList.register(spark)
-    graft.functions.EmbeddingKernels.registerAll(spark)
-    graft.functions.TextKernelsRegistry.registerAll(spark)
-    graft.functions.GraftFunctions.registerAll(spark)
-    graft.functions.HyperLogLog.registerAll(spark)
-    graft.functions.QuantileSketch.registerAll(spark)
-    graft.functions.TDigest.registerAll(spark)
-    graft.functions.SetDigestSketch.registerAll(spark)
-    graft.functions.KHyperLogLogSketch.registerAll(spark)
-    graft.functions.Classification.registerAll(spark)
-    graft.functions.TriviaScalars.registerAll(spark)
-    graft.functions.ColorPack.registerAll(spark)
-    graft.functions.UnnestGenerator.register(spark)
-    graft.functions.BinaryExtras.registerAll(spark)
-    graft.functions.MiscExtras.registerAll(spark)
-    graft.functions.StatsCdf.registerAll(spark)
-    graft.functions.IpFunctions.registerAll(spark)
-    graft.functions.ToJsonText.register(spark)
-    graft.functions.Teradata.registerAll(spark)
-    graft.functions.GeoFunctions.registerAll(spark)
-    graft.functions.KdbSpatial.registerAll(spark)
-    graft.functions.MlFunctions.registerAll(spark)
-    graft.functions.I18nFunctions.registerAll(spark)
-
-    // Presto's MySQL-'%'-token date dialect (reference: presto-main/.../
-    // operator/scalar/DateTimeFunctions.java dateFormat/dateParse) —
-    // runtime token translation so non-literal format args work too.
-    // Wall-clock <-> instant conversion goes through the SESSION zone
-    // (the reference evaluates in the session zone); java.sql.Timestamp's
-    // toLocalDateTime/valueOf would silently use the JVM default zone,
-    // which shifts every value on a non-UTC host. The zone is read per
-    // call (not captured at registration) so a later
-    // `SET spark.sql.session.timeZone` changes these functions in step
-    // with Spark's own timestamp rendering.
-    spark.udf.register("presto_date_format",
-      (ts: java.sql.Timestamp, fmt: String) =>
-        if (ts == null || fmt == null) null
-        else java.time.format.DateTimeFormatter
-          .ofPattern(prestoDateFormat(fmt))
-          .format(ts.toInstant.atZone(currentZone).toLocalDateTime))
-    // localtime (reference: DateTimeFunctions.java localTime — TIME in
-    // the session zone) under the documented TIME narrowing: the current
-    // session-zone wall-clock time-of-day anchored on the epoch day.
-    // Millisecond precision, matching the reference's TIME resolution.
-    spark.udf.register("localtime", () => {
-      val now = java.time.LocalTime.now(currentZone)
-        .truncatedTo(java.time.temporal.ChronoUnit.MILLIS)
-      java.sql.Timestamp.from(
-        java.time.LocalDateTime.of(java.time.LocalDate.EPOCH, now)
-          .atZone(currentZone).toInstant)
-    }).asNondeterministic()
-
-    spark.udf.register("presto_date_parse",
-      (s: String, fmt: String) =>
-        if (s == null || fmt == null) null
-        else {
-          import java.time.temporal.ChronoField._
-          val b = new java.time.format.DateTimeFormatterBuilder()
-            .appendPattern(prestoDateFormat(fmt))
-            .parseDefaulting(YEAR_OF_ERA, 1970)
-            .parseDefaulting(MONTH_OF_YEAR, 1)
-            .parseDefaulting(DAY_OF_MONTH, 1)
-            .parseDefaulting(HOUR_OF_DAY, 0)
-            .parseDefaulting(MINUTE_OF_HOUR, 0)
-            .parseDefaulting(SECOND_OF_MINUTE, 0)
-            .parseDefaulting(NANO_OF_SECOND, 0)
-          java.sql.Timestamp.from(
-            java.time.LocalDateTime.from(b.toFormatter.parse(s))
-              .atZone(currentZone).toInstant)
-        })
-  }
+  /** The master `session` asks for: the one already set in conf (e.g. by
+    * spark-submit --master), else `local[cores]`. */
+  private[graft] def masterFor(conf: SparkConf, cores: Int): String =
+    conf.getOption("spark.master").getOrElse(s"local[$cores]")
 
   /** The session's SQL time zone (spark.sql.session.timeZone), as the
     * zone wall-clock date functions must render/parse in. */
@@ -235,6 +147,17 @@ object Engine {
 
   private val preparedFor = new SessionStore[String]
 
+  /** Fail on a session built without [[graft.plans.GraftExtensions]]: it
+    * has neither the function catalog nor the resolution rules the
+    * translated SQL relies on, so it would run with other semantics. */
+  private def requireExtensions(spark: SparkSession): Unit =
+    if (!spark.sessionState.analyzer.extendedResolutionRules
+        .contains(graft.plans.ConcatArrayElement))
+      throw new IllegalStateException(
+        "Engine.sql needs a session built with graft.plans.GraftExtensions: " +
+          "use Engine.session, or set " +
+          "spark.sql.extensions=graft.plans.GraftExtensions")
+
   /** Register the parquet catalog and run a query through Spark SQL after
     * the dialect shim. This is the reference's `POST /v1/statement`
     * equivalent: SQL in, DataFrame (result cursor) out. PREPARE /
@@ -275,11 +198,8 @@ object Engine {
 
   private def sqlImpl(spark: SparkSession, dir: String, query: String,
       smallPath: Boolean): DataFrame = {
+    requireExtensions(spark)
     Tables.registerAll(spark, dir)
-    // a session not minted by Engine.session (e.g. spark.newSession())
-    // must still see the whole function catalog — the reference exposes
-    // its registry to every query; memoized, so a no-op after the first
-    registerFunctions(spark)
     // shadow the object-level translate: every statement path in this
     // method first resolves the session's user-defined type names
     // (CREATE TYPE), then runs the dialect translation

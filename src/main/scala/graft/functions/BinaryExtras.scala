@@ -3,7 +3,8 @@ package graft.functions
 import java.nio.{ByteBuffer, ByteOrder}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** The reference's varbinary encoding/hash scalars (reference: presto-main/
   * .../operator/scalar/VarbinaryFunctions.java), implemented from the
@@ -286,30 +287,30 @@ object BinaryExtras {
   private def digest(algo: String, b: Array[Byte]): Array[Byte] =
     MessageDigest.getInstance(algo).digest(b)
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("to_hex", (b: Array[Byte]) => toHex(b))
-    spark.udf.register("from_hex", (s: String) => fromHex(s))
-    spark.udf.register("to_base64url", (b: Array[Byte]) =>
-      java.util.Base64.getUrlEncoder.encodeToString(b))
-    spark.udf.register("from_base64url", (s: String) =>
-      java.util.Base64.getUrlDecoder.decode(s))
-    spark.udf.register("to_big_endian_32", (i: Int) => be(4)(_.putInt(i)))
-    spark.udf.register("from_big_endian_32", (b: Array[Byte]) => req(b, 4).getInt)
-    spark.udf.register("to_big_endian_64", (i: Long) => be(8)(_.putLong(i)))
-    spark.udf.register("from_big_endian_64", (b: Array[Byte]) => req(b, 8).getLong)
-    spark.udf.register("to_ieee754_32", (f: Float) => be(4)(_.putFloat(f)))
-    spark.udf.register("from_ieee754_32", (b: Array[Byte]) => req(b, 4).getFloat)
-    spark.udf.register("to_ieee754_64", (d: Double) => be(8)(_.putDouble(d)))
-    spark.udf.register("from_ieee754_64", (b: Array[Byte]) => req(b, 8).getDouble)
-    spark.udf.register("fnv1_32", (b: Array[Byte]) => fnv32(b, fnv1a = false))
-    spark.udf.register("fnv1_64", (b: Array[Byte]) => fnv64(b, fnv1a = false))
-    spark.udf.register("fnv1a_32", (b: Array[Byte]) => fnv32(b, fnv1a = true))
-    spark.udf.register("fnv1a_64", (b: Array[Byte]) => fnv64(b, fnv1a = true))
-    spark.udf.register("murmur3_x64_128", (b: Array[Byte]) => murmur3x64128(b))
-    spark.udf.register("spooky_hash_v2_64", (b: Array[Byte]) => be(8)(_.putLong(spooky64(b))))
-    spark.udf.register("spooky_hash_v2_32", (b: Array[Byte]) => be(4)(_.putInt(spooky64(b).toInt)))
-    spark.udf.register("sha256", (b: Array[Byte]) => digest("SHA-256", b))
-    spark.udf.register("sha512", (b: Array[Byte]) => digest("SHA-512", b))
-    spark.udf.register("key_sampling_percent", (s: String) => keySamplingPercent(s))
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("to_hex", udf((b: Array[Byte]) => toHex(b))),
+    FunctionEntry.udf("from_hex", udf((s: String) => fromHex(s))),
+    FunctionEntry.udf("to_base64url", udf((b: Array[Byte]) =>
+      java.util.Base64.getUrlEncoder.encodeToString(b))),
+    FunctionEntry.udf("from_base64url", udf((s: String) =>
+      java.util.Base64.getUrlDecoder.decode(s))),
+    FunctionEntry.udf("to_big_endian_32", udf((i: Int) => be(4)(_.putInt(i)))),
+    FunctionEntry.udf("from_big_endian_32", udf((b: Array[Byte]) => req(b, 4).getInt)),
+    FunctionEntry.udf("to_big_endian_64", udf((i: Long) => be(8)(_.putLong(i)))),
+    FunctionEntry.udf("from_big_endian_64", udf((b: Array[Byte]) => req(b, 8).getLong)),
+    FunctionEntry.udf("to_ieee754_32", udf((f: Float) => be(4)(_.putFloat(f)))),
+    FunctionEntry.udf("from_ieee754_32", udf((b: Array[Byte]) => req(b, 4).getFloat)),
+    FunctionEntry.udf("to_ieee754_64", udf((d: Double) => be(8)(_.putDouble(d)))),
+    FunctionEntry.udf("from_ieee754_64", udf((b: Array[Byte]) => req(b, 8).getDouble)),
+    FunctionEntry.udf("fnv1_32", udf((b: Array[Byte]) => fnv32(b, fnv1a = false))),
+    FunctionEntry.udf("fnv1_64", udf((b: Array[Byte]) => fnv64(b, fnv1a = false))),
+    FunctionEntry.udf("fnv1a_32", udf((b: Array[Byte]) => fnv32(b, fnv1a = true))),
+    FunctionEntry.udf("fnv1a_64", udf((b: Array[Byte]) => fnv64(b, fnv1a = true))),
+    FunctionEntry.udf("murmur3_x64_128", udf((b: Array[Byte]) => murmur3x64128(b))),
+    FunctionEntry.udf("spooky_hash_v2_64", udf((b: Array[Byte]) => be(8)(_.putLong(spooky64(b))))),
+    FunctionEntry.udf("spooky_hash_v2_32", udf((b: Array[Byte]) => be(4)(_.putInt(spooky64(b).toInt)))),
+    FunctionEntry.udf("sha256", udf((b: Array[Byte]) => digest("SHA-256", b))),
+    FunctionEntry.udf("sha512", udf((b: Array[Byte]) => digest("SHA-512", b))),
+    FunctionEntry.udf("key_sampling_percent", udf((s: String) => keySamplingPercent(s))),
+  )
 }

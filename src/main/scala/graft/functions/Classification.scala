@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -95,7 +96,7 @@ object Classification {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
   }
 
-  def registerAll(spark: SparkSession): Unit = {
+  lazy val functions: Seq[FunctionEntry] = {
     val inEnc = Encoders.tuple(
       Encoders.LONG, Encoders.DOUBLE, Encoders.BOOLEAN)
     Seq(
@@ -104,8 +105,8 @@ object Classification {
       "classification_miss_rate" -> MissRate,
       "classification_fall_out" -> FallOut,
       "classification_thresholds" -> Thresholds,
-    ).foreach { case (name, m) =>
-      spark.udf.register(name, udaf(new ClassificationAgg(m), inEnc))
+    ).map { case (name, m) =>
+      FunctionEntry.udf(name, udaf(new ClassificationAgg(m), inEnc))
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** The reference's color/visualization scalars (reference:
   * presto-main/.../operator/scalar/ColorFunctions.java; docs
@@ -117,31 +118,31 @@ object ColorPack {
     sb.toString
   }
 
-  /** Internal-name UDF registration; the public overloaded names are
-    * dispatched in PrestoFunctions. Boxed parameters + null guards:
+  /** Internal-name UDFs; the public overloaded names are dispatched in
+    * PrestoFunctions. Boxed parameters + null guards:
     * reference scalars return NULL on any NULL argument (no @SqlNullable
     * on ColorFunctions.java), where a primitive-typed Scala UDF would
     * throw. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("graft_color_parse",
-      (s: String) => if (s == null) null else java.lang.Long.valueOf(parseColor(s)))
-    spark.udf.register("graft_color_rgb",
-      (r: java.lang.Long, g: java.lang.Long, b: java.lang.Long) =>
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("graft_color_parse",
+      udf((s: String) => if (s == null) null else java.lang.Long.valueOf(parseColor(s)))),
+    FunctionEntry.udf("graft_color_rgb",
+      udf((r: java.lang.Long, g: java.lang.Long, b: java.lang.Long) =>
         if (r == null || g == null || b == null) null
-        else java.lang.Long.valueOf(rgb(r, g, b)))
-    spark.udf.register("graft_color_interp",
-      (f: java.lang.Double, lo: java.lang.Long, hi: java.lang.Long) =>
+        else java.lang.Long.valueOf(rgb(r, g, b)))),
+    FunctionEntry.udf("graft_color_interp",
+      udf((f: java.lang.Double, lo: java.lang.Long, hi: java.lang.Long) =>
         if (f == null || lo == null || hi == null) null
-        else java.lang.Long.valueOf(interpolate(f, lo, hi)))
-    spark.udf.register("graft_color_render",
-      (v: String, c: java.lang.Long) =>
-        if (v == null || c == null) null else render(v, c))
-    spark.udf.register("graft_color_render_bool",
-      (b: java.lang.Boolean) => if (b == null) null else renderBoolean(b))
-    spark.udf.register("graft_color_bar",
-      (p: java.lang.Double, w: java.lang.Long,
+        else java.lang.Long.valueOf(interpolate(f, lo, hi)))),
+    FunctionEntry.udf("graft_color_render",
+      udf((v: String, c: java.lang.Long) =>
+        if (v == null || c == null) null else render(v, c))),
+    FunctionEntry.udf("graft_color_render_bool",
+      udf((b: java.lang.Boolean) => if (b == null) null else renderBoolean(b))),
+    FunctionEntry.udf("graft_color_bar",
+      udf((p: java.lang.Double, w: java.lang.Long,
        lo: java.lang.Long, hi: java.lang.Long) =>
         if (p == null || w == null || lo == null || hi == null) null
-        else bar(p, w, lo, hi))
-  }
+        else bar(p, w, lo, hi))),
+  )
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,8 +83,6 @@ case class DotProductFloat(left: Expression, right: Expression)
 }
 
 object DotProductFloat {
-  /** Register as a SQL-callable function on the session's registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_dot", 2)(a => DotProductFloat(a(0), a(1))))
 }

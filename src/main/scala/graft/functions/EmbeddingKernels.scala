@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,35 +79,27 @@ object EmbeddingKernels {
       out
     })
 
-  /** Register the kernels as SQL-callable functions (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_shingle_hist",
-      exprs => ShingleHistogram(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_sig",
-      exprs => LshSignature(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_sig_vec", { exprs =>
-      require(exprs.length == 3 || exprs.length == 4,
-        s"graft_lsh_sig_vec takes 3 or 4 arguments " +
-          s"(vector, planes, tables[, dim]), got ${exprs.length}")
-      LshSignatureVec(exprs(0), exprs(1), exprs(2),
-        if (exprs.length == 4) exprs(3)
-        else org.apache.spark.sql.catalyst.expressions.Literal(-1))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pack_ints",
-      exprs => PackInts(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_match",
-      exprs => SigMatch(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_keep",
-      exprs => SigKeep(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_probe_keys",
-      exprs => LshProbeKeys(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_key_in_set",
-      exprs => KeyInSortedSet(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_keep_routed",
-      exprs => SigKeepRouted(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4)), "built-in")
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_shingle_hist", 2)(a =>
+      ShingleHistogram(a(0), a(1))),
+    FunctionEntry.native("graft_lsh_sig", 3)(a =>
+      LshSignature(a(0), a(1), a(2))),
+    FunctionEntry("graft_lsh_sig_vec", 3, 4, a =>
+      LshSignatureVec(a(0), a(1), a(2),
+        if (a.length == 4) a(3)
+        else org.apache.spark.sql.catalyst.expressions.Literal(-1)),
+      "vector, planes, tables[, dim]"),
+    FunctionEntry.native("graft_pack_ints", 2)(a => PackInts(a(0), a(1))),
+    FunctionEntry.native("graft_sig_match", 3)(a => SigMatch(a(0), a(1), a(2))),
+    FunctionEntry.native("graft_sig_keep", 4)(a =>
+      SigKeep(a(0), a(1), a(2), a(3))),
+    FunctionEntry.native("graft_lsh_probe_keys", 2)(a =>
+      LshProbeKeys(a(0), a(1))),
+    FunctionEntry.native("graft_key_in_set", 2)(a =>
+      KeyInSortedSet(a(0), a(1))),
+    FunctionEntry.native("graft_sig_keep_routed", 5)(a =>
+      SigKeepRouted(a(0), a(1), a(2), a(3), a(4))),
+  )
 
   private[functions] def foldableInt(e: Expression, what: String): Int = {
     require(e.foldable, s"$what must be a literal integer")

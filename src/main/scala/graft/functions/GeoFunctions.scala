@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** Planar geospatial scalars (reference: presto-geospatial/src/main/java/
   * com/facebook/presto/plugin/geospatial/GeoFunctions.java, spherical
@@ -1603,31 +1604,56 @@ object GeoFunctions {
     * through its Esri deserializer); the hot relational path (the grid
     * cells of [[graft.ops.SpatialJoin]]) stays in built-in codegen'd
     * expressions. */
-  def registerAll(spark: SparkSession): Unit = {
-    val u = spark.udf
-    def g1[R: reflect.runtime.universe.TypeTag](name: String)(f: Geom => R): Unit =
-      u.register(name, (wkt: String) => if (wkt == null) null.asInstanceOf[R] else f(parse(wkt)))
-    def g2[R: reflect.runtime.universe.TypeTag](name: String)(f: (Geom, Geom) => R): Unit =
-      u.register(name, (a: String, b: String) =>
-        if (a == null || b == null) null.asInstanceOf[R] else f(parse(a), parse(b)))
+  private def g1[R: reflect.runtime.universe.TypeTag](name: String)(f: Geom => R): FunctionEntry =
+    FunctionEntry.udf(name, udf((wkt: String) => if (wkt == null) null.asInstanceOf[R] else f(parse(wkt))))
 
-    u.register("st_point", (x: Double, y: Double) => print(GPoint(Some(Pt(x, y)))))
-    g1("st_geometry_from_text")(print)
-    u.register("st_geometryfromtext", (wkt: String) => if (wkt == null) null else print(parse(wkt)))
-    g1("st_astext")(print)
-    g1("st_geometrytype")(typeName)
-    u.register("st_linefromtext", (wkt: String) => if (wkt == null) null else parse(wkt) match {
+  private def g2[R: reflect.runtime.universe.TypeTag](name: String)(f: (Geom, Geom) => R): FunctionEntry =
+    FunctionEntry.udf(name, udf((a: String, b: String) =>
+      if (a == null || b == null) null.asInstanceOf[R] else f(parse(a), parse(b))))
+
+  private def pointCoord(name: String, pick: Pt => Double): FunctionEntry =
+    FunctionEntry.udf(name, udf((wkt: String) => if (wkt == null) null else parse(wkt) match {
+      case GPoint(Some(p)) => java.lang.Double.valueOf(pick(p))
+      case GPoint(None)    => null
+      case other => invalid(s"$name requires a Point. Input type is: ${typeName(other)}")
+    }))
+
+  private def envCoord(name: String, pick: ((Double, Double, Double, Double)) => Double): FunctionEntry =
+    g1[java.lang.Double](name)(g => envelope(g) match {
+      case Some(e) => java.lang.Double.valueOf(pick(e))
+      case None    => null
+    })
+
+  private def rel(name: String, f: (Geom, Geom) => Option[Boolean]): FunctionEntry =
+    g2[java.lang.Boolean](name)((a, b) => f(a, b) match {
+      case Some(v) => java.lang.Boolean.valueOf(v)
+      case None    => null
+    })
+
+  private lazy val hullEnc: org.apache.spark.sql.Encoder[Vector[(Double, Double)]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Vector[(Double, Double)]]()
+
+  private lazy val bingTileQuadkey = FunctionEntry.udf("bing_tile_quadkey",
+    udf((q: String) => if (q == null) null else { quadKeyToTile(q); q }))
+
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("st_point", udf((x: Double, y: Double) => print(GPoint(Some(Pt(x, y)))))),
+    g1("st_geometry_from_text")(print),
+    FunctionEntry.udf("st_geometryfromtext", udf((wkt: String) => if (wkt == null) null else print(parse(wkt)))),
+    g1("st_astext")(print),
+    g1("st_geometrytype")(typeName),
+    FunctionEntry.udf("st_linefromtext", udf((wkt: String) => if (wkt == null) null else parse(wkt) match {
       case l: GLineString => print(l)
       case other => invalid(s"ST_LineFromText requires a LINESTRING literal. Input type is: ${typeName(other)}")
-    })
-    u.register("st_polygon", (wkt: String) => if (wkt == null) null else parse(wkt) match {
+    })),
+    FunctionEntry.udf("st_polygon", udf((wkt: String) => if (wkt == null) null else parse(wkt) match {
       case p: GPolygon => print(p)
       case other => invalid(s"ST_Polygon requires a POLYGON literal. Input type is: ${typeName(other)}")
-    })
+    })),
     // ST_LineString(array(Point)) constructor (reference GeoFunctions
     // .java stLineString): nulls and empty points are rejected with the
     // reference's per-index error; < 2 points degrade to LINESTRING EMPTY.
-    u.register("st_linestring", (pts: Seq[String]) =>
+    FunctionEntry.udf("st_linestring", udf((pts: Seq[String]) =>
       if (pts == null) null
       else {
         val ps = pts.toVector.zipWithIndex.map { case (w, i) =>
@@ -1639,8 +1665,8 @@ object GeoFunctions {
           }
         }
         print(if (ps.length < 2) GLineString(Vector.empty) else GLineString(ps))
-      })
-    u.register("st_multipoint", (pts: Seq[String]) =>
+      })),
+    FunctionEntry.udf("st_multipoint", udf((pts: Seq[String]) =>
       if (pts == null) null
       else print(GMultiPoint(pts.toVector.zipWithIndex.map {
         case (w, i) =>
@@ -1649,45 +1675,34 @@ object GeoFunctions {
             case GPoint(Some(p)) => p
             case other => invalid(s"Invalid input to ST_MultiPoint: geometry is not a point: ${typeName(other)} at index ${i + 1}")
           }
-      })))
+      })))),
 
-    def pointCoord(name: String, pick: Pt => Double): Unit =
-      u.register(name, (wkt: String) => if (wkt == null) null else parse(wkt) match {
-        case GPoint(Some(p)) => java.lang.Double.valueOf(pick(p))
-        case GPoint(None)    => null
-        case other => invalid(s"$name requires a Point. Input type is: ${typeName(other)}")
-      })
-    pointCoord("st_x", _.x)
-    pointCoord("st_y", _.y)
+    pointCoord("st_x", _.x),
+    pointCoord("st_y", _.y),
 
-    def envCoord(name: String, pick: ((Double, Double, Double, Double)) => Double): Unit =
-      g1[java.lang.Double](name)(g => envelope(g) match {
-        case Some(e) => java.lang.Double.valueOf(pick(e))
-        case None    => null
-      })
-    envCoord("st_xmin", _._1)
-    envCoord("st_ymin", _._2)
-    envCoord("st_xmax", _._3)
-    envCoord("st_ymax", _._4)
+    envCoord("st_xmin", _._1),
+    envCoord("st_ymin", _._2),
+    envCoord("st_xmax", _._3),
+    envCoord("st_ymax", _._4),
 
-    g1[java.lang.Double]("st_area")(g => java.lang.Double.valueOf(area(g)))
-    g1[java.lang.Double]("st_length")(g => java.lang.Double.valueOf(length(g)))
-    g1[String]("st_centroid")(g => print(GPoint(centroid(g))))
-    g1[java.lang.Boolean]("st_isempty")(g => java.lang.Boolean.valueOf(isEmpty(g)))
+    g1[java.lang.Double]("st_area")(g => java.lang.Double.valueOf(area(g))),
+    g1[java.lang.Double]("st_length")(g => java.lang.Double.valueOf(length(g))),
+    g1[String]("st_centroid")(g => print(GPoint(centroid(g)))),
+    g1[java.lang.Boolean]("st_isempty")(g => java.lang.Boolean.valueOf(isEmpty(g))),
     g1[java.lang.Boolean]("st_isclosed") {
       case GLineString(ps) => java.lang.Boolean.valueOf(ps.nonEmpty && ps.head == ps.last)
       case GMultiLineString(ls) => java.lang.Boolean.valueOf(ls.nonEmpty && ls.forall(ps => ps.nonEmpty && ps.head == ps.last))
       case other => invalid(s"ST_IsClosed applies to LineString or MultiLineString. Input type is: ${typeName(other)}")
-    }
+    },
     g1[java.lang.Boolean]("st_isring") {
       case GLineString(ps) =>
         java.lang.Boolean.valueOf(ps.length >= 4 && ps.head == ps.last &&
           invalidReason(GPolygon(Vector(ps))).isEmpty)
       case other => invalid(s"ST_IsRing applies to a LineString. Input type is: ${typeName(other)}")
-    }
-    g1[java.lang.Boolean]("st_isvalid")(g => java.lang.Boolean.valueOf(invalidReason(g).isEmpty))
-    g1[String]("geometry_invalid_reason")(g => invalidReason(g).orNull)
-    g1[java.lang.Integer]("st_numpoints")(g => java.lang.Integer.valueOf(vertices(g).length))
+    },
+    g1[java.lang.Boolean]("st_isvalid")(g => java.lang.Boolean.valueOf(invalidReason(g).isEmpty)),
+    g1[String]("geometry_invalid_reason")(g => invalidReason(g).orNull),
+    g1[java.lang.Integer]("st_numpoints")(g => java.lang.Integer.valueOf(vertices(g).length)),
     g1[java.lang.Integer]("st_numgeometries")(g => java.lang.Integer.valueOf(g match {
       case g2 if isEmpty(g2)    => 0
       case GMultiPoint(ps)      => ps.length
@@ -1695,7 +1710,7 @@ object GeoFunctions {
       case GMultiPolygon(ps)    => ps.length
       case GCollection(gs)      => gs.length
       case _                    => 1
-    }))
+    })),
     g1[java.lang.Integer]("st_dimension")(g => java.lang.Integer.valueOf(g match {
       case _: GPoint | _: GMultiPoint           => 0
       case _: GLineString | _: GMultiLineString => 1
@@ -1705,24 +1720,24 @@ object GeoFunctions {
         case _: GLineString | _: GMultiLineString => 1
         case _ => 2
       }.max
-    }))
-    u.register("st_coorddim", (wkt: String) => if (wkt == null) null else { parse(wkt); java.lang.Integer.valueOf(2) })
+    })),
+    FunctionEntry.udf("st_coorddim", udf((wkt: String) => if (wkt == null) null else { parse(wkt); java.lang.Integer.valueOf(2) })),
 
     g1[String]("st_startpoint") {
       case GLineString(ps) if ps.nonEmpty => print(GPoint(Some(ps.head)))
       case GLineString(_) => null
       case other => invalid(s"ST_StartPoint applies to a LineString. Input type is: ${typeName(other)}")
-    }
+    },
     g1[String]("st_endpoint") {
       case GLineString(ps) if ps.nonEmpty => print(GPoint(Some(ps.last)))
       case GLineString(_) => null
       case other => invalid(s"ST_EndPoint applies to a LineString. Input type is: ${typeName(other)}")
-    }
-    u.register("st_pointn", (wkt: String, n: Int) => if (wkt == null) null else parse(wkt) match {
+    },
+    FunctionEntry.udf("st_pointn", udf((wkt: String, n: Int) => if (wkt == null) null else parse(wkt) match {
       case GLineString(ps) => if (n >= 1 && n <= ps.length) print(GPoint(Some(ps(n - 1)))) else null
       case other => invalid(s"ST_PointN applies to a LineString. Input type is: ${typeName(other)}")
-    })
-    u.register("st_geometryn", (wkt: String, n: Int) => if (wkt == null) null else {
+    })),
+    FunctionEntry.udf("st_geometryn", udf((wkt: String, n: Int) => if (wkt == null) null else {
       val g = parse(wkt)
       val parts: Vector[Geom] = g match {
         case GMultiPoint(ps)      => ps.map(p => GPoint(Some(p)))
@@ -1732,14 +1747,14 @@ object GeoFunctions {
         case single               => Vector(single)
       }
       if (n >= 1 && n <= parts.length) print(parts(n - 1)) else null
-    })
+    })),
     g1[String]("st_envelope")(g => envelope(g) match {
       case None => "POLYGON EMPTY"
       case Some((x0, y0, x1, y1)) =>
         if (x0 == x1 && y0 == y1) print(GPoint(Some(Pt(x0, y0))))
         else if (x0 == x1 || y0 == y1) print(GLineString(Vector(Pt(x0, y0), Pt(x1, y1))))
         else print(GPolygon(Vector(Vector(Pt(x0, y0), Pt(x1, y0), Pt(x1, y1), Pt(x0, y1), Pt(x0, y0)))))
-    })
+    }),
     g1[String]("st_boundary") {
       case _: GPoint | _: GMultiPoint => "GEOMETRYCOLLECTION EMPTY"
       case GLineString(ps) =>
@@ -1756,71 +1771,76 @@ object GeoFunctions {
         val rings = ps.flatten
         if (rings.isEmpty) "MULTILINESTRING EMPTY" else print(GMultiLineString(rings))
       case GCollection(_) => invalid("ST_Boundary does not apply to GeometryCollection under the WKT narrowing")
-    }
+    },
     g1[String]("st_exteriorring") {
       case GPolygon(rs) if rs.nonEmpty => print(GLineString(rs.head))
       case GPolygon(_) => null
       case other => invalid(s"ST_ExteriorRing applies to a Polygon. Input type is: ${typeName(other)}")
-    }
+    },
     g1[java.lang.Integer]("st_numinteriorring") {
       case GPolygon(rs) => java.lang.Integer.valueOf(Math.max(0, rs.length - 1))
       case other => invalid(s"ST_NumInteriorRing applies to a Polygon. Input type is: ${typeName(other)}")
-    }
-    u.register("st_interiorringn", (wkt: String, n: Int) => if (wkt == null) null else parse(wkt) match {
+    },
+    FunctionEntry.udf("st_interiorringn", udf((wkt: String, n: Int) => if (wkt == null) null else parse(wkt) match {
       case GPolygon(rs) => if (n >= 1 && n < rs.length) print(GLineString(rs(n))) else null
       case other => invalid(s"ST_InteriorRingN applies to a Polygon. Input type is: ${typeName(other)}")
-    })
+    })),
 
     g2[java.lang.Double]("st_distance")((a, b) => distance(a, b) match {
       case Some(d) => java.lang.Double.valueOf(d)
       case None    => null
-    })
+    }),
     g2[java.lang.Boolean]("st_intersects")((a, b) => intersects(a, b) match {
       case Some(v) => java.lang.Boolean.valueOf(v)
       case None    => null
-    })
+    }),
     g2[java.lang.Boolean]("st_disjoint")((a, b) => intersects(a, b) match {
       case Some(v) => java.lang.Boolean.valueOf(!v)
       case None    => null
-    })
+    }),
     g2[java.lang.Boolean]("st_contains")((a, b) => contains(a, b) match {
       case Some(v) => java.lang.Boolean.valueOf(v)
       case None    => null
-    })
+    }),
     g2[java.lang.Boolean]("st_within")((a, b) => contains(b, a) match {
       case Some(v) => java.lang.Boolean.valueOf(v)
       case None    => null
-    })
+    }),
 
-    g1[String]("st_convexhull")(g => print(convexHull(g)))
-    u.register("simplify_geometry", (wkt: String, tol: Double) =>
-      if (wkt == null) null else print(simplify(parse(wkt), tol)))
+    g1[String]("st_convexhull")(g => print(convexHull(g))),
+    FunctionEntry.udf("simplify_geometry", udf((wkt: String, tol: Double) =>
+      if (wkt == null) null else print(simplify(parse(wkt), tol)))),
     g2[java.lang.Double]("line_locate_point")((l, p) => lineLocatePoint(l, p) match {
       case Some(f) => java.lang.Double.valueOf(f)
       case None    => null
-    })
-    u.register("line_interpolate_point", (wkt: String, f: Double) =>
-      if (wkt == null) null else print(lineInterpolatePoint(parse(wkt), f)))
+    }),
+    FunctionEntry.udf("line_interpolate_point", udf((wkt: String, f: Double) =>
+      if (wkt == null) null else print(lineInterpolatePoint(parse(wkt), f)))),
 
-    u.register("great_circle_distance",
-      (lat1: Double, lon1: Double, lat2: Double, lon2: Double) =>
-        greatCircleDistance(lat1, lon1, lat2, lon2))
+    FunctionEntry.udf("great_circle_distance",
+      udf((lat1: Double, lon1: Double, lat2: Double, lon2: Double) =>
+        greatCircleDistance(lat1, lon1, lat2, lon2))),
 
-    u.register("bing_tile", (x: Int, y: Int, zoom: Int) => tileToQuadKey(x, y, zoom))
-    u.register("bing_tile_at", (lat: Double, lon: Double, zoom: Int) => {
+    // the reference's 1-arg quadkey constructor (BingTileFunctions.java
+    // toBingTile(quadKey)) is, under the quadkey-VARCHAR narrowing,
+    // validation + identity: bing_tile_quadkey
+    FunctionEntry.overload("bing_tile",
+      FunctionEntry.udf("bing_tile", udf((x: Int, y: Int, zoom: Int) => tileToQuadKey(x, y, zoom))),
+      bingTileQuadkey),
+    FunctionEntry.udf("bing_tile_at", udf((lat: Double, lon: Double, zoom: Int) => {
       val (x, y) = latLonToTile(lat, lon, zoom)
       tileToQuadKey(x, y, zoom)
-    })
-    u.register("bing_tile_quadkey", (q: String) => if (q == null) null else { quadKeyToTile(q); q })
-    u.register("bing_tile_zoom_level", (q: String) =>
-      if (q == null) null else java.lang.Integer.valueOf(quadKeyToTile(q)._3))
-    u.register("bing_tile_coordinates", (q: String) =>
-      if (q == null) null else { val (x, y, _) = quadKeyToTile(q); (x, y) })
-    u.register("bing_tile_polygon", (q: String) => if (q == null) null else tilePolygon(q))
-    u.register("geometry_to_bing_tiles", (wkt: String, zoom: Int) =>
+    })),
+    bingTileQuadkey,
+    FunctionEntry.udf("bing_tile_zoom_level", udf((q: String) =>
+      if (q == null) null else java.lang.Integer.valueOf(quadKeyToTile(q)._3))),
+    FunctionEntry.udf("bing_tile_coordinates", udf((q: String) =>
+      if (q == null) null else { val (x, y, _) = quadKeyToTile(q); (x, y) })),
+    FunctionEntry.udf("bing_tile_polygon", udf((q: String) => if (q == null) null else tilePolygon(q))),
+    FunctionEntry.udf("geometry_to_bing_tiles", udf((wkt: String, zoom: Int) =>
       if (wkt == null) null.asInstanceOf[Seq[String]]
-      else geometryToBingTiles(parse(wkt), zoom))
-    u.register("bing_tiles_around", (lat: Double, lon: Double, zoom: Int) => {
+      else geometryToBingTiles(parse(wkt), zoom))),
+    FunctionEntry.udf("bing_tiles_around", udf((lat: Double, lon: Double, zoom: Int) => {
       val (tx, ty) = latLonToTile(lat, lon, zoom)
       val max = (1 << zoom) - 1
       for {
@@ -1828,36 +1848,37 @@ object GeoFunctions {
         x = tx + i; y = ty + j
         if x >= 0 && x <= max && y >= 0 && y <= max
       } yield tileToQuadKey(x, y, zoom)
-    })
+    })),
 
-    // round-10 additions. The 2-arg bing_tile_parent/children arities are
-    // the `_zoom` spellings; Dialect rewrites the reference's overloaded
-    // name by argument count (Spark's UDF registry is arity-monomorphic).
-    u.register("bing_tile_parent", (q: String) =>
-      if (q == null) null else parentQuadKey(q, -1))
-    u.register("bing_tile_parent_zoom", (q: String, z: Int) =>
-      if (q == null) null else parentQuadKey(q, z))
-    u.register("bing_tile_children", (q: String) =>
-      if (q == null) null.asInstanceOf[Seq[String]] else childrenQuadKeys(q, -1))
-    u.register("bing_tile_children_zoom", (q: String, z: Int) =>
-      if (q == null) null.asInstanceOf[Seq[String]] else childrenQuadKeys(q, z))
+    // round-10 additions: the reference overloads these by arity
+    // (BingTileFunctions.java:382-439), the 2-arg form with a target zoom
+    FunctionEntry.overload("bing_tile_parent",
+      FunctionEntry.udf("bing_tile_parent", udf((q: String) =>
+        if (q == null) null else parentQuadKey(q, -1))),
+      FunctionEntry.udf("bing_tile_parent", udf((q: String, z: Int) =>
+        if (q == null) null else parentQuadKey(q, z)))),
+    FunctionEntry.overload("bing_tile_children",
+      FunctionEntry.udf("bing_tile_children", udf((q: String) =>
+        if (q == null) null.asInstanceOf[Seq[String]] else childrenQuadKeys(q, -1))),
+      FunctionEntry.udf("bing_tile_children", udf((q: String, z: Int) =>
+        if (q == null) null.asInstanceOf[Seq[String]] else childrenQuadKeys(q, z)))),
 
-    g1[java.lang.Boolean]("st_issimple")(g => java.lang.Boolean.valueOf(isSimple(g)))
+    g1[java.lang.Boolean]("st_issimple")(g => java.lang.Boolean.valueOf(isSimple(g))),
     g1[Seq[String]]("st_points")(g =>
-      if (isEmpty(g)) null else vertices(g).map(p => print(GPoint(Some(p)))))
-    g1[Seq[String]]("st_geometries")(g => componentGeoms(g).map(_.map(print)).orNull)
+      if (isEmpty(g)) null else vertices(g).map(p => print(GPoint(Some(p))))),
+    g1[Seq[String]]("st_geometries")(g => componentGeoms(g).map(_.map(print)).orNull),
     g1[Seq[String]]("st_interiorrings") {
       case GPolygon(rs) => if (rs.isEmpty) null else rs.tail.map(r => print(GLineString(r)))
       case other => invalid(s"ST_InteriorRings applies to a Polygon. Input type is: ${typeName(other)}")
-    }
+    },
     g1[Seq[String]]("flatten_geometry_collections")(g =>
-      flattenCollections(g).map(print))
+      flattenCollections(g).map(print)),
     g1[Seq[String]]("st_envelopeaspts")(g => envelope(g) match {
       case None => null
       case Some((x0, y0, x1, y1)) =>
         Seq(print(GPoint(Some(Pt(x0, y0)))), print(GPoint(Some(Pt(x1, y1)))))
-    })
-    u.register("expand_envelope", (wkt: String, d: Double) => {
+    }),
+    FunctionEntry.udf("expand_envelope", udf((wkt: String, d: Double) => {
       if (wkt == null) null
       else {
         require(!d.isNaN, "expand_envelope: distance is NaN")
@@ -1871,17 +1892,17 @@ object GeoFunctions {
               Pt(ex0, ey0), Pt(ex1, ey0), Pt(ex1, ey1), Pt(ex0, ey1), Pt(ex0, ey0)))))
         }
       }
-    })
+    })),
     g2[Seq[String]]("geometry_nearest_points")((a, b) =>
       nearestPoints(a, b) match {
         case Some((p, qq)) => Seq(print(GPoint(Some(p))), print(GPoint(Some(qq))))
         case None => null
-      })
-    u.register("st_geomfrombinary", (b: Array[Byte]) =>
-      if (b == null) null else print(parseWkb(b)))
-    g1[String]("geometry_as_geojson")(g => if (isEmpty(g)) null else toGeoJson(g))
-    u.register("geometry_from_geojson", (s: String) =>
-      if (s == null) null else print(fromGeoJson(s)))
+      }),
+    FunctionEntry.udf("st_geomfrombinary", udf((b: Array[Byte]) =>
+      if (b == null) null else print(parseWkb(b)))),
+    g1[String]("geometry_as_geojson")(g => if (isEmpty(g)) null else toGeoJson(g)),
+    FunctionEntry.udf("geometry_from_geojson", udf((s: String) =>
+      if (s == null) null else print(fromGeoJson(s)))),
     // SPHERICAL narrowing: geography values share the WKT VARCHAR carrier;
     // to_spherical_geography validates the lat/lon domain like the
     // reference (SphericalGeoFunctions.java:77-108), to_geometry is the
@@ -1899,43 +1920,36 @@ object GeoFunctions {
           s"Latitude must be between -90 and 90, got ${p.y}")
       }
       print(g)
-    }
-    g1[String]("to_geometry")(print)
+    },
+    g1[String]("to_geometry")(print),
 
-    def rel(name: String, f: (Geom, Geom) => Option[Boolean]): Unit =
-      g2[java.lang.Boolean](name)((a, b) => f(a, b) match {
-        case Some(v) => java.lang.Boolean.valueOf(v)
-        case None    => null
-      })
-    rel("st_equals", geomEquals)
-    rel("st_touches", touches)
-    rel("st_crosses", crosses)
-    rel("st_overlaps", overlaps)
-    g2[String]("st_intersection")((a, b) => print(intersection(a, b)))
-    g2[String]("st_union")((a, b) => print(union(a, b)))
-    g2[String]("st_difference")((a, b) => print(difference(a, b)))
-    g2[String]("st_symdifference")((a, b) => print(symDifference(a, b)))
-    u.register("st_relate", (a: String, b: String, pat: String) =>
+    rel("st_equals", geomEquals),
+    rel("st_touches", touches),
+    rel("st_crosses", crosses),
+    rel("st_overlaps", overlaps),
+    g2[String]("st_intersection")((a, b) => print(intersection(a, b))),
+    g2[String]("st_union")((a, b) => print(union(a, b))),
+    g2[String]("st_difference")((a, b) => print(difference(a, b))),
+    g2[String]("st_symdifference")((a, b) => print(symDifference(a, b))),
+    FunctionEntry.udf("st_relate", udf((a: String, b: String, pat: String) =>
       if (a == null || b == null || pat == null) null
       else relate(parse(a), parse(b), pat) match {
         case Some(v) => java.lang.Boolean.valueOf(v)
         case None    => null
-      })
-    u.register("geometry_to_dissolved_bing_tiles", (wkt: String, zoom: Int) =>
+      })),
+    FunctionEntry.udf("geometry_to_dissolved_bing_tiles", udf((wkt: String, zoom: Int) =>
       if (wkt == null) null.asInstanceOf[Seq[String]]
-      else geometryToDissolvedBingTiles(parse(wkt), zoom))
-    u.register("st_buffer", (wkt: String, d: Double) =>
-      if (wkt == null) null else print(buffer(parse(wkt), d)))
+      else geometryToDissolvedBingTiles(parse(wkt), zoom))),
+    FunctionEntry.udf("st_buffer", udf((wkt: String, d: Double) =>
+      if (wkt == null) null else print(buffer(parse(wkt), d)))),
 
-    val hullEnc: org.apache.spark.sql.Encoder[Vector[(Double, Double)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Vector[(Double, Double)]]()
-    u.register("convex_hull_agg",
+    FunctionEntry.udf("convex_hull_agg",
       org.apache.spark.sql.functions.udaf(new ConvexHullAgg(hullEnc),
-        org.apache.spark.sql.Encoders.STRING))
-    u.register("geometry_union_agg",
+        org.apache.spark.sql.Encoders.STRING)),
+    FunctionEntry.udf("geometry_union_agg",
       org.apache.spark.sql.functions.udaf(new GeometryUnionAgg(hullEnc),
-        org.apache.spark.sql.Encoders.STRING))
-    u.register("geometry_union", (wkts: Seq[String]) =>
-      if (wkts == null) null else geometryUnion(wkts))
-  }
+        org.apache.spark.sql.Encoders.STRING)),
+    FunctionEntry.udf("geometry_union", udf((wkts: Seq[String]) =>
+      if (wkts == null) null else geometryUnion(wkts))),
+  )
 }

@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Custom function registry (SURVEY §2.11): the Spark equivalents of the
-  * reference's annotated-function surface — scalar UDFs via
-  * spark.udf.register (reference: @ScalarFunction + metadata/
-  * FunctionListBuilder.java) and typed Aggregators via udaf() (reference:
-  * @AggregationFunction compiled by aggregation/AccumulatorCompiler.java).
-  * Registration is idempotent; every function is then SQL-invocable
-  * through Engine.sql.
+  * reference's annotated-function surface — scalar UDFs via udf()
+  * (reference: @ScalarFunction + metadata/FunctionListBuilder.java) and
+  * typed Aggregators via udaf() (reference: @AggregationFunction compiled
+  * by aggregation/AccumulatorCompiler.java). Every function is
+  * SQL-invocable on any session built with graft.plans.GraftExtensions.
   */
 object GraftFunctions {
 
@@ -384,42 +384,40 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
   }
 
-  /** Register everything on the session (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
+  lazy val functions: Seq[FunctionEntry] = {
     val mapEnc: Encoder[Map[String, Long]] = {
       implicit val strEnc: Encoder[String] = Encoders.STRING
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
     }
-    spark.udf.register("map_union_sum", udaf(new MapUnionSumAgg(mapEnc)))
     val strMapEnc: Encoder[Map[String, String]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, String]]()
-    spark.udf.register("map_agg", udaf(new MapAggAgg(strMapEnc),
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)))
-    spark.udf.register("map_union", udaf(new MapUnionAgg(strMapEnc), strMapEnc))
-    spark.udf.register("histogram", udaf(new HistogramAgg(mapEnc), Encoders.STRING))
     val amfEnc: Encoder[(Int, Int, Map[String, Long])] = {
       implicit val m: Encoder[Map[String, Long]] = mapEnc
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Int, Int, Map[String, Long])]()
     }
-    spark.udf.register("approx_most_frequent", udaf(new ApproxMostFrequentAgg(amfEnc),
-      Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaInt)))
-    spark.udf.register("geometric_mean", udaf(GeometricMeanAgg, Encoders.DOUBLE))
-    spark.udf.register("word_stem_lite", wordStemLite _)
-    // word_stem(word[, lang]) — Snowball stemmers (the reference's
-    // one-arg form is the ENGLISH Snowball stemmer, not Porter 1980)
-    Snowball.register(spark)
     val multimapEnc: Encoder[Map[String, Seq[String]]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Seq[String]]]()
-    spark.udf.register("multimap_agg", udaf(new MultimapAgg(multimapEnc),
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)))
-    spark.udf.register("numeric_histogram", udaf(new NumericHistogramAgg,
-      Encoders.tuple(Encoders.LONG, Encoders.DOUBLE)))
     val bkEnc: Encoder[(Int, Seq[(Long, String)])] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Int, Seq[(Long, String)])]()
-    spark.udf.register("bottom_k_sample", udaf(new BottomKSampleAgg(bkEnc),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)))
-    spark.udf.register("reservoir_sample", udaf(new ReservoirSampleAgg(bkEnc),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING)))
-    ScalarPack.registerAll(spark)
+    Seq(
+      FunctionEntry.udf("map_union_sum", udaf(new MapUnionSumAgg(mapEnc))),
+      FunctionEntry.udf("map_agg", udaf(new MapAggAgg(strMapEnc),
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))),
+      FunctionEntry.udf("map_union", udaf(new MapUnionAgg(strMapEnc), strMapEnc)),
+      FunctionEntry.udf("histogram", udaf(new HistogramAgg(mapEnc), Encoders.STRING)),
+      FunctionEntry.udf("approx_most_frequent", udaf(new ApproxMostFrequentAgg(amfEnc),
+        Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaInt))),
+      FunctionEntry.udf("geometric_mean", udaf(GeometricMeanAgg, Encoders.DOUBLE)),
+      FunctionEntry.udf("word_stem_lite", udf(wordStemLite _)),
+      FunctionEntry.udf("multimap_agg", udaf(new MultimapAgg(multimapEnc),
+        Encoders.tuple(Encoders.STRING, Encoders.STRING))),
+      FunctionEntry.udf("numeric_histogram", udaf(new NumericHistogramAgg,
+        Encoders.tuple(Encoders.LONG, Encoders.DOUBLE))),
+      FunctionEntry.udf("bottom_k_sample", udaf(new BottomKSampleAgg(bkEnc),
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong))),
+      FunctionEntry.udf("reservoir_sample", udaf(new ReservoirSampleAgg(bkEnc),
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING))),
+    )
   }
+
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -81,13 +82,13 @@ object HyperLogLog {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("approx_set_agg", udaf(new ApproxSetAgg, Encoders.LONG))
-    spark.udf.register("merge_hll", udaf(new MergeHllAgg, Encoders.BINARY))
-    spark.udf.register("hll_cardinality", udf((s: Array[Byte]) =>
-      if (s == null) 0L else estimate(s)))
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("approx_set_agg", udaf(new ApproxSetAgg, Encoders.LONG)),
+    FunctionEntry.udf("merge_hll", udaf(new MergeHllAgg, Encoders.BINARY)),
+    FunctionEntry.udf("hll_cardinality", udf((s: Array[Byte]) =>
+      if (s == null) 0L else estimate(s))),
     // empty_approx_set() (reference: scalar/HyperLogLogFunctions.java) —
     // the zero sketch, mergeable with any other
-    spark.udf.register("empty_approx_set", udf(() => emptySketch))
-  }
+    FunctionEntry.udf("empty_approx_set", udf(() => emptySketch)),
+  )
 }

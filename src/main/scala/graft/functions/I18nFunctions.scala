@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** The presto-i18n-functions surface (reference: presto-i18n-functions/.../
   * I18nMyanmarFunctions.java:42-68): `myanmar_font_encoding` labels a string
@@ -89,10 +90,10 @@ object I18nFunctions {
       .map(p => if (looksZawgyi(p)) convertZ2U(p) else p)
       .mkString("\n")
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("myanmar_font_encoding",
-      (s: String) => if (s == null) null else fontEncoding(s))
-    spark.udf.register("myanmar_normalize_unicode",
-      (s: String) => if (s == null) null else normalizeUnicode(s))
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("myanmar_font_encoding",
+      udf((s: String) => if (s == null) null else fontEncoding(s))),
+    FunctionEntry.udf("myanmar_normalize_unicode",
+      udf((s: String) => if (s == null) null else normalizeUnicode(s))),
+  )
 }

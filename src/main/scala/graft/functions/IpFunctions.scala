@@ -2,7 +2,8 @@ package graft.functions
 
 import java.net.InetAddress
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** IP prefix/subnet scalars (reference: presto-main/.../operator/scalar/
   * IpPrefixFunctions.java). The reference's IPADDRESS/IPPREFIX types are
@@ -215,17 +216,17 @@ object IpFunctions {
       render(addr) + "/" + (if (addr.length == 4) 32 else 128)
     }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("ip_prefix", (ip: String, bits: Long) =>
-      if (ip == null) null else ipPrefix(ip, bits))
-    spark.udf.register("ip_subnet_min", (p: String) =>
-      if (p == null) null else subnetMin(p))
-    spark.udf.register("ip_subnet_max", (p: String) =>
-      if (p == null) null else subnetMax(p))
-    spark.udf.register("ip_subnet_range", (p: String) =>
-      if (p == null) null else Seq(subnetMin(p), subnetMax(p)))
-    spark.udf.register("is_subnet_of", (p: String, ip: String) =>
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("ip_prefix", udf((ip: String, bits: Long) =>
+      if (ip == null) null else ipPrefix(ip, bits))),
+    FunctionEntry.udf("ip_subnet_min", udf((p: String) =>
+      if (p == null) null else subnetMin(p))),
+    FunctionEntry.udf("ip_subnet_max", udf((p: String) =>
+      if (p == null) null else subnetMax(p))),
+    FunctionEntry.udf("ip_subnet_range", udf((p: String) =>
+      if (p == null) null else Seq(subnetMin(p), subnetMax(p)))),
+    FunctionEntry.udf("is_subnet_of", udf((p: String, ip: String) =>
       if (p == null || ip == null) null
-      else java.lang.Boolean.valueOf(isSubnetOf(p, ip)))
-  }
+      else java.lang.Boolean.valueOf(isSubnetOf(p, ip)))),
+  )
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -131,37 +132,37 @@ object KHyperLogLogSketch {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Seq[Long])]]()
   }
 
-  def registerAll(spark: SparkSession): Unit = {
+  lazy val functions: Seq[FunctionEntry] = {
     val enc: Encoder[State] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[State]()
-    spark.udf.register("khyperloglog_agg",
-      udaf(new KhllAgg(enc), Encoders.tuple(Encoders.STRING, Encoders.STRING)))
-    spark.udf.register("merge_khll", udaf(new MergeKhllAgg(enc),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Seq[Long])]]()))
-    spark.udf.register("khll_cardinality",
-      udf((d: Seq[(Long, Seq[Long])]) =>
-        if (d == null || d.isEmpty) null
-        else java.lang.Long.valueOf(cardinality(d))))
-    spark.udf.register("khll_uniqueness_distribution",
+    val reidentification = udf((d: Seq[(Long, Seq[Long])], t: Long) =>
+      if (d == null || d.isEmpty) null
+      else java.lang.Double.valueOf(reidentificationPotential(d, t)))
+    val uniquenessN = FunctionEntry.udf("khll_uniqueness_distribution",
       udf((d: Seq[(Long, Seq[Long])], n: Long) =>
         if (d == null || d.isEmpty) null else uniquenessDistribution(d, n)))
-    spark.udf.register("khll_reidentification_potential",
-      udf((d: Seq[(Long, Seq[Long])], t: Long) =>
-        if (d == null || d.isEmpty) null
-        else java.lang.Double.valueOf(reidentificationPotential(d, t))))
-    // the reference SQL names (KHyperLogLogFunctions.java:80-110):
-    // reidentification_potential is 2-arg; uniqueness_distribution's
-    // 1-arg form uses the digest's own minhash size as the histogram
-    // bound (getMinhashSize()), and its 2-arg form is rewritten by the
-    // facade onto khll_uniqueness_distribution (arity-monomorphic
-    // registry, same mechanism as bing_tile_parent)
-    spark.udf.register("reidentification_potential",
-      udf((d: Seq[(Long, Seq[Long])], t: Long) =>
-        if (d == null || d.isEmpty) null
-        else java.lang.Double.valueOf(reidentificationPotential(d, t))))
-    spark.udf.register("uniqueness_distribution",
-      udf((d: Seq[(Long, Seq[Long])]) =>
-        if (d == null || d.isEmpty) null
-        else uniquenessDistribution(d, minhashSize(d))))
+    Seq(
+      FunctionEntry.udf("khyperloglog_agg",
+        udaf(new KhllAgg(enc), Encoders.tuple(Encoders.STRING, Encoders.STRING))),
+      FunctionEntry.udf("merge_khll", udaf(new MergeKhllAgg(enc),
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Seq[Long])]]())),
+      FunctionEntry.udf("khll_cardinality",
+        udf((d: Seq[(Long, Seq[Long])]) =>
+          if (d == null || d.isEmpty) null
+          else java.lang.Long.valueOf(cardinality(d)))),
+      uniquenessN,
+      FunctionEntry.udf("khll_reidentification_potential", reidentification),
+      // the reference SQL names (KHyperLogLogFunctions.java:80-110):
+      // reidentification_potential is 2-arg; uniqueness_distribution's
+      // 1-arg form uses the digest's own minhash size as the histogram
+      // bound (getMinhashSize()), its 2-arg form is the explicit size
+      FunctionEntry.udf("reidentification_potential", reidentification),
+      FunctionEntry.overload("uniqueness_distribution",
+        FunctionEntry.udf("uniqueness_distribution",
+          udf((d: Seq[(Long, Seq[Long])]) =>
+            if (d == null || d.isEmpty) null
+            else uniquenessDistribution(d, minhashSize(d)))),
+        uniquenessN),
+    )
   }
 }

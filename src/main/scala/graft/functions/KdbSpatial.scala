@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -228,27 +229,33 @@ object KdbSpatial extends Serializable {
 
   // ---------------------------------------------------------- registration
 
-  def registerAll(spark: SparkSession): Unit = {
-    val enc: Encoder[State] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[State]()
-    spark.udf.register("spatial_partitioning",
-      udaf(new SpatialPartitioningAgg(enc),
-        Encoders.tuple(Encoders.STRING, Encoders.scalaInt)))
-    def partitions(tree: String, wkt: String, distance: Double): Seq[Int] = {
-      require(!distance.isNaN, "distance is NaN")
-      require(!distance.isInfinite, "distance is infinite")
-      require(distance >= 0, s"distance is negative")
-      GeoFunctions.envelope(GeoFunctions.parse(wkt)) match {
-        case None => null
-        case Some((x0, y0, x1, y1)) =>
-          partitionsFor(cachedTree(tree),
-            Rect(x0 - distance, y0 - distance, x1 + distance, y1 + distance))
-      }
+  private def partitions(tree: String, wkt: String, distance: Double): Seq[Int] = {
+    require(!distance.isNaN, "distance is NaN")
+    require(!distance.isInfinite, "distance is infinite")
+    require(distance >= 0, s"distance is negative")
+    GeoFunctions.envelope(GeoFunctions.parse(wkt)) match {
+      case None => null
+      case Some((x0, y0, x1, y1)) =>
+        partitionsFor(cachedTree(tree),
+          Rect(x0 - distance, y0 - distance, x1 + distance, y1 + distance))
     }
-    spark.udf.register("spatial_partitions", (tree: String, wkt: String) =>
-      if (tree == null || wkt == null) null else partitions(tree, wkt, 0.0))
-    spark.udf.register("spatial_partitions_within",
-      (tree: String, wkt: String, d: Double) =>
-        if (tree == null || wkt == null) null else partitions(tree, wkt, d))
   }
+
+  private lazy val partitionsWithin = FunctionEntry.udf(
+    "spatial_partitions_within", udf((tree: String, wkt: String, d: Double) =>
+      if (tree == null || wkt == null) null else partitions(tree, wkt, d)))
+
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("spatial_partitioning",
+      udaf(new SpatialPartitioningAgg(
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[State]()),
+        Encoders.tuple(Encoders.STRING, Encoders.scalaInt))),
+    // the reference's 3-arg distance overload (GeoFunctions.java:1213)
+    FunctionEntry.overload("spatial_partitions",
+      FunctionEntry.udf("spatial_partitions", udf((tree: String, wkt: String) =>
+        if (tree == null || wkt == null) null else partitions(tree, wkt, 0.0))),
+      partitionsWithin),
+    partitionsWithin,
+  )
+
 }

@@ -4,7 +4,8 @@ import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 import com.fasterxml.jackson.databind.JsonNode
 
@@ -135,41 +136,41 @@ object MiscExtras {
 
   private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper
 
-  def registerAll(spark: SparkSession): Unit = {
+  lazy val functions: Seq[FunctionEntry] = Seq(
     // Presto chr(n) is a Unicode CODE POINT constructor (reference:
     // presto-main/.../operator/scalar/StringFunctions.java:69-77); Spark's
     // built-in chr is ASCII-mod-256. Dialect aliases chr → presto_chr.
-    spark.udf.register("presto_chr",
-      (n: java.lang.Long) =>
+    FunctionEntry.udf("presto_chr",
+      udf((n: java.lang.Long) =>
         if (n == null) null
         else {
           require(n >= 0 && n <= Character.MAX_CODE_POINT &&
             !(n >= 0xD800L && n <= 0xDFFFL),
             s"Not a valid Unicode code point: $n")
           new String(Character.toChars(n.toInt))
-        })
-    spark.udf.register("json_extract",
-      (j: String, p: String) => jsonExtract(j, p).map(_.toString).orNull)
-    spark.udf.register("is_json_scalar",
-      (j: String) =>
+        })),
+    FunctionEntry.udf("json_extract",
+      udf((j: String, p: String) => jsonExtract(j, p).map(_.toString).orNull)),
+    FunctionEntry.udf("is_json_scalar",
+      udf((j: String) =>
         if (j == null) null
         else java.lang.Boolean.valueOf(
           try { val n = mapper.readTree(j); n != null && n.isValueNode }
-          catch { case _: com.fasterxml.jackson.core.JacksonException => false }))
-    spark.udf.register("strrpos",
-      (s: String, sub: String) =>
+          catch { case _: com.fasterxml.jackson.core.JacksonException => false }))),
+    FunctionEntry.udf("strrpos",
+      udf((s: String, sub: String) =>
         if (s == null || sub == null) null
-        else java.lang.Long.valueOf(strrpos(s, sub, 1L)))
-    spark.udf.register("split_to_multimap",
-      (s: String, e: String, kv: String) => splitToMultimap(s, e, kv))
-    spark.udf.register("format_datetime",
-      (ts: java.sql.Timestamp, fmt: String) =>
+        else java.lang.Long.valueOf(strrpos(s, sub, 1L)))),
+    FunctionEntry.udf("split_to_multimap",
+      udf((s: String, e: String, kv: String) => splitToMultimap(s, e, kv))),
+    FunctionEntry.udf("format_datetime",
+      udf((ts: java.sql.Timestamp, fmt: String) =>
         if (ts == null || fmt == null) null
         else DateTimeFormatter.ofPattern(fmt, Locale.ENGLISH)
           .withZone(graft.Engine.currentZone)
-          .format(ts.toInstant))
-    spark.udf.register("parse_datetime",
-      (s: String, fmt: String) =>
+          .format(ts.toInstant))),
+    FunctionEntry.udf("parse_datetime",
+      udf((s: String, fmt: String) =>
         if (s == null || fmt == null) null
         else {
           val f = DateTimeFormatter.ofPattern(fmt, Locale.ENGLISH)
@@ -184,57 +185,104 @@ object MiscExtras {
             case d: java.time.LocalDate     => d.atStartOfDay(zone).toInstant
           }
           java.sql.Timestamp.from(instant)
-        })
-    spark.udf.register("timezone_hour",
-      (ts: java.sql.Timestamp) =>
+        })),
+    FunctionEntry.udf("timezone_hour",
+      udf((ts: java.sql.Timestamp) =>
         if (ts == null) null
-        else java.lang.Long.valueOf((offsetSeconds(ts.toInstant) / 3600).toLong))
-    spark.udf.register("timezone_minute",
-      (ts: java.sql.Timestamp) =>
+        else java.lang.Long.valueOf((offsetSeconds(ts.toInstant) / 3600).toLong))),
+    FunctionEntry.udf("timezone_minute",
+      udf((ts: java.sql.Timestamp) =>
         if (ts == null) null
-        else java.lang.Long.valueOf(((offsetSeconds(ts.toInstant) / 60) % 60).toLong))
-    spark.udf.register("to_milliseconds",
-      (d: java.time.Duration) => if (d == null) null else java.lang.Long.valueOf(d.toMillis))
+        else java.lang.Long.valueOf(((offsetSeconds(ts.toInstant) / 60) % 60).toLong))),
+    FunctionEntry.udf("to_milliseconds",
+      udf((d: java.time.Duration) => if (d == null) null else java.lang.Long.valueOf(d.toMillis))),
     // secure_random family (reference: scalar/MathFunctions.java:699-797,
     // deterministic = false): a REAL java.security.SecureRandom per
     // executor thread — the reference's CSPRNG contract, which Spark's
     // XORShift rand() does not meet. Overload dispatch (0-arg double /
     // 2-arg same-as-input) lives in PrestoFunctions; asNondeterministic
     // stops Catalyst from constant-folding or deduplicating calls.
-    spark.udf.register("graft_secure_random0",
-      org.apache.spark.sql.functions.udf(
-        () => secureRng.get().nextDouble()).asNondeterministic())
-    spark.udf.register("graft_secure_random_double",
-      org.apache.spark.sql.functions.udf(
+    FunctionEntry.udf("graft_secure_random0",
+      udf(
+        () => secureRng.get().nextDouble()).asNondeterministic()),
+    FunctionEntry.udf("graft_secure_random_double",
+      udf(
         (lo: java.lang.Double, hi: java.lang.Double) =>
           if (lo == null || hi == null) null
           else {
             require(lo < hi, "lower must be less than upper")
             java.lang.Double.valueOf(
               lo + secureRng.get().nextDouble() * (hi - lo))
-          }).asNondeterministic())
+          }).asNondeterministic()),
     // random(n)/rand(n): bigint in [0, n) via ThreadLocalRandom, the
     // reference's own generator shape (MathFunctions.java random(n));
     // the Dialect rewrites the 1-arg spelling here because Spark's
     // builtin rand(seed) would otherwise shadow it
-    spark.udf.register("graft_random_long",
-      org.apache.spark.sql.functions.udf(
+    FunctionEntry.udf("graft_random_long",
+      udf(
         (n: java.lang.Long) =>
           if (n == null) null
           else {
             require(n > 0, "bound must be positive")
             java.lang.Long.valueOf(
               java.util.concurrent.ThreadLocalRandom.current().nextLong(n))
-          }).asNondeterministic())
-    spark.udf.register("graft_secure_random_long",
-      org.apache.spark.sql.functions.udf(
+          }).asNondeterministic()),
+    FunctionEntry.udf("graft_secure_random_long",
+      udf(
         (lo: java.lang.Long, hi: java.lang.Long) =>
           if (lo == null || hi == null) null
           else {
             require(lo < hi, "lower must be less than upper")
             java.lang.Long.valueOf(lo + secureRng.get().nextLong(hi - lo))
-          }).asNondeterministic())
-  }
+          }).asNondeterministic()),
+
+    // Presto's MySQL-'%'-token date dialect (reference: presto-main/.../
+    // operator/scalar/DateTimeFunctions.java dateFormat/dateParse) —
+    // runtime token translation so non-literal format args work too.
+    // Wall-clock <-> instant conversion goes through the SESSION zone
+    // (the reference evaluates in the session zone); java.sql.Timestamp's
+    // toLocalDateTime/valueOf would silently use the JVM default zone,
+    // which shifts every value on a non-UTC host. The zone is read per
+    // call (Engine.currentZone) so a later
+    // `SET spark.sql.session.timeZone` changes these functions in step
+    // with Spark's own timestamp rendering.
+    FunctionEntry.udf("presto_date_format",
+      udf((ts: java.sql.Timestamp, fmt: String) =>
+        if (ts == null || fmt == null) null
+        else DateTimeFormatter
+          .ofPattern(graft.Engine.prestoDateFormat(fmt))
+          .format(ts.toInstant.atZone(graft.Engine.currentZone).toLocalDateTime))),
+    // localtime (reference: DateTimeFunctions.java localTime — TIME in
+    // the session zone) under the documented TIME narrowing: the current
+    // session-zone wall-clock time-of-day anchored on the epoch day.
+    // Millisecond precision, matching the reference's TIME resolution.
+    FunctionEntry.udf("localtime", udf(() => {
+      val zone = graft.Engine.currentZone
+      val now = java.time.LocalTime.now(zone)
+        .truncatedTo(java.time.temporal.ChronoUnit.MILLIS)
+      java.sql.Timestamp.from(
+        java.time.LocalDateTime.of(java.time.LocalDate.EPOCH, now)
+          .atZone(zone).toInstant)
+    })),
+    FunctionEntry.udf("presto_date_parse",
+      udf((s: String, fmt: String) =>
+        if (s == null || fmt == null) null
+        else {
+          import java.time.temporal.ChronoField._
+          val b = new java.time.format.DateTimeFormatterBuilder()
+            .appendPattern(graft.Engine.prestoDateFormat(fmt))
+            .parseDefaulting(YEAR_OF_ERA, 1970)
+            .parseDefaulting(MONTH_OF_YEAR, 1)
+            .parseDefaulting(DAY_OF_MONTH, 1)
+            .parseDefaulting(HOUR_OF_DAY, 0)
+            .parseDefaulting(MINUTE_OF_HOUR, 0)
+            .parseDefaulting(SECOND_OF_MINUTE, 0)
+            .parseDefaulting(NANO_OF_SECOND, 0)
+          java.sql.Timestamp.from(
+            java.time.LocalDateTime.from(b.toFormatter.parse(s))
+              .atZone(graft.Engine.currentZone).toInstant)
+        })),
+  )
 
   private val secureRng: ThreadLocal[java.security.SecureRandom] =
     ThreadLocal.withInitial(() => new java.security.SecureRandom())

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, Row, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Cast, CreateMap, Literal}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.functions.{udaf, udf}
 import org.apache.spark.sql.types.DoubleType
 
 /** The presto-ml surface re-expressed Spark-first (reference:
@@ -425,51 +426,48 @@ object MlFunctions {
           s"learn_libsvm_*: malformed params entry '$kv' (want key=value[,key=value…])")
       }
 
-  def registerAll(spark: SparkSession): Unit = {
-    // features(f1, …, fn): native CreateMap — stays codegen'd.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "features",
-      exprs => CreateMap(
-        exprs.zipWithIndex.flatMap { case (e, i) =>
-          Seq(Literal(i.toLong), Cast(e, DoubleType))
-        },
-        useStringTypeWhenEmpty = false),
-      "built-in")
-
+  lazy val functions: Seq[FunctionEntry] = {
     val stateEnc: Encoder[LearnState] = ExpressionEncoder[LearnState]()
     val modelEnc: Encoder[MlModel] = ExpressionEncoder[MlModel]()
     val mapEnc: Encoder[Map[Long, Double]] = ExpressionEncoder[Map[Long, Double]]()
     val regIn = Encoders.tuple(Encoders.DOUBLE, mapEnc)
     val clsIn = Encoders.tuple(Encoders.STRING, mapEnc)
-
-    spark.udf.register("learn_regressor",
-      udaf(new LearnRegressorAgg(stateEnc, modelEnc), regIn))
-    spark.udf.register("learn_classifier",
-      udaf(new LearnClassifierAgg("classifier(bigint)", stateEnc, modelEnc), clsIn))
-    spark.udf.register("learn_varchar_classifier",
-      udaf(new LearnClassifierAgg("classifier(varchar)", stateEnc, modelEnc), clsIn))
-
     // libsvm spellings: params validated then ignored (see scaladoc).
     val regIn3 = Encoders.tuple(Encoders.DOUBLE, mapEnc, Encoders.STRING)
     val clsIn3 = Encoders.tuple(Encoders.STRING, mapEnc, Encoders.STRING)
-    spark.udf.register("learn_libsvm_regressor",
-      udaf(new LearnLibSvmRegressorAgg(stateEnc, modelEnc), regIn3))
-    spark.udf.register("learn_libsvm_classifier",
-      udaf(new LearnLibSvmClassifierAgg("classifier(bigint)", stateEnc, modelEnc), clsIn3))
-    spark.udf.register("learn_libsvm_varchar_classifier",
-      udaf(new LearnLibSvmClassifierAgg("classifier(varchar)", stateEnc, modelEnc), clsIn3))
-
-    spark.udf.register("classify",
-      (features: Map[Long, Double], model: Row) =>
-        if (features == null || model == null) null else classifyRow(features, model))
-    spark.udf.register("regress",
-      (features: Map[Long, Double], model: Row) =>
-        if (features == null || model == null) null.asInstanceOf[java.lang.Double]
-        else java.lang.Double.valueOf(regressRow(features, model)))
-
     val evalEnc: Encoder[EvalState] = ExpressionEncoder[EvalState]()
-    spark.udf.register("evaluate_classifier_predictions",
-      udaf(new EvaluatePredictionsAgg(evalEnc),
-        Encoders.tuple(Encoders.STRING, Encoders.STRING)))
+    Seq(
+      // features(f1, …, fn): native CreateMap — stays codegen'd.
+      FunctionEntry.native("features", 0, FunctionEntry.Variadic) { exprs =>
+        CreateMap(
+          exprs.zipWithIndex.flatMap { case (e, i) =>
+            Seq(Literal(i.toLong), Cast(e, DoubleType))
+          },
+          useStringTypeWhenEmpty = false)
+      },
+      FunctionEntry.udf("learn_regressor",
+        udaf(new LearnRegressorAgg(stateEnc, modelEnc), regIn)),
+      FunctionEntry.udf("learn_classifier",
+        udaf(new LearnClassifierAgg("classifier(bigint)", stateEnc, modelEnc), clsIn)),
+      FunctionEntry.udf("learn_varchar_classifier",
+        udaf(new LearnClassifierAgg("classifier(varchar)", stateEnc, modelEnc), clsIn)),
+      FunctionEntry.udf("learn_libsvm_regressor",
+        udaf(new LearnLibSvmRegressorAgg(stateEnc, modelEnc), regIn3)),
+      FunctionEntry.udf("learn_libsvm_classifier",
+        udaf(new LearnLibSvmClassifierAgg("classifier(bigint)", stateEnc, modelEnc), clsIn3)),
+      FunctionEntry.udf("learn_libsvm_varchar_classifier",
+        udaf(new LearnLibSvmClassifierAgg("classifier(varchar)", stateEnc, modelEnc), clsIn3)),
+      FunctionEntry.udf("classify",
+        udf((features: Map[Long, Double], model: Row) =>
+          if (features == null || model == null) null else classifyRow(features, model))),
+      FunctionEntry.udf("regress",
+        udf((features: Map[Long, Double], model: Row) =>
+          if (features == null || model == null) null.asInstanceOf[java.lang.Double]
+          else java.lang.Double.valueOf(regressRow(features, model)))),
+      FunctionEntry.udf("evaluate_classifier_predictions",
+        udaf(new EvaluatePredictionsAgg(evalEnc),
+          Encoders.tuple(Encoders.STRING, Encoders.STRING))),
+    )
   }
+
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,8 +92,6 @@ case class NearestList(
 }
 
 object NearestList {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_list",
-      exprs => NearestList(exprs(0), exprs(1), exprs(2)), "built-in")
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_nearest_list", 3)(a => NearestList(a(0), a(1), a(2))))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -96,14 +97,14 @@ object QuantileSketch {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("qdigest_agg", udaf(new QdigestAgg, Encoders.DOUBLE))
-    spark.udf.register("merge_qdigest", udaf(new MergeQdigestAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()))
-    spark.udf.register("value_at_quantile",
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("qdigest_agg", udaf(new QdigestAgg, Encoders.DOUBLE)),
+    FunctionEntry.udf("merge_qdigest", udaf(new MergeQdigestAgg,
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())),
+    FunctionEntry.udf("value_at_quantile",
       udf((d: Seq[Long], q: Double) =>
         if (d == null) null
-        else java.lang.Double.valueOf(valueAtQuantile(d.toArray, q))))
+        else java.lang.Double.valueOf(valueAtQuantile(d.toArray, q)))),
     // values_at_quantiles / quantile_at_value / quantiles_at_values /
     // scale_qdigest (reference: scalar/QuantileDigestFunctions.java) —
     // one digest queried per quantile; rank of a value = mass at or
@@ -111,11 +112,11 @@ object QuantileSketch {
     // KNOWN DIVERGENCE: this digest's state is integral bin counts, so
     // scale factors < 1 round unit-count bins away (the reference scales
     // double weights); factors >= 1 are exact
-    spark.udf.register("values_at_quantiles",
+    FunctionEntry.udf("values_at_quantiles",
       udf((d: Seq[Long], qs: Seq[Double]) =>
         if (d == null || qs == null) null
-        else qs.map(q => valueAtQuantile(d.toArray, q))))
-    spark.udf.register("quantile_at_value",
+        else qs.map(q => valueAtQuantile(d.toArray, q)))),
+    FunctionEntry.udf("quantile_at_value",
       udf((d: Seq[Long], v: Double) =>
         if (d == null) null
         else {
@@ -126,21 +127,21 @@ object QuantileSketch {
             val below = d.take(bin + 1).sum
             java.lang.Double.valueOf(below.toDouble / total)
           }
-        }))
-    spark.udf.register("quantiles_at_values",
+        })),
+    FunctionEntry.udf("quantiles_at_values",
       udf((d: Seq[Long], vs: Seq[Double]) =>
         if (d == null || vs == null) null
         else {
           val total = d.sum
           if (total == 0) null
           else vs.map(v => d.take(binOf(v) + 1).sum.toDouble / total)
-        }))
-    spark.udf.register("scale_qdigest",
+        })),
+    FunctionEntry.udf("scale_qdigest",
       udf((d: Seq[Long], factor: Double) =>
         if (d == null) null
         else {
           require(factor > 0, "Scale factor should be positive.")
           d.map(c => math.round(c * factor))
-        }))
-  }
+        })),
+  )
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 /** Scalar functions from the reference's catalog that Spark lacks,
   * registered as Scala UDFs (none are hot-path per-row operators in the
@@ -97,61 +98,61 @@ object ScalarPack {
     java.time.Duration.ofMillis(math.round(v * nanosPerUnit / 1e6))
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("parse_duration", parseDuration _)
-    spark.udf.register("hmac_md5",
-      (d: Array[Byte], k: Array[Byte]) => hmac("HmacMD5", d, k))
-    spark.udf.register("hmac_sha1",
-      (d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA1", d, k))
-    spark.udf.register("hmac_sha256",
-      (d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA256", d, k))
-    spark.udf.register("hmac_sha512",
-      (d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA512", d, k))
-    spark.udf.register("ngrams",
-      (xs: Seq[String], n: Int) => ngrams(xs, n))
-    spark.udf.register("combinations",
-      (xs: Seq[String], n: Int) => combinations(xs, n))
-    spark.udf.register("array_normalize",
-      (xs: Seq[java.lang.Double], p: Double) => arrayNormalize(xs, p))
-    spark.udf.register("cosine_similarity",
-      (a: Map[String, Double], b: Map[String, Double]) => cosineSimilarity(a, b))
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("parse_duration", udf(parseDuration _)),
+    FunctionEntry.udf("hmac_md5",
+      udf((d: Array[Byte], k: Array[Byte]) => hmac("HmacMD5", d, k))),
+    FunctionEntry.udf("hmac_sha1",
+      udf((d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA1", d, k))),
+    FunctionEntry.udf("hmac_sha256",
+      udf((d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA256", d, k))),
+    FunctionEntry.udf("hmac_sha512",
+      udf((d: Array[Byte], k: Array[Byte]) => hmac("HmacSHA512", d, k))),
+    FunctionEntry.udf("ngrams",
+      udf((xs: Seq[String], n: Int) => ngrams(xs, n))),
+    FunctionEntry.udf("combinations",
+      udf((xs: Seq[String], n: Int) => combinations(xs, n))),
+    FunctionEntry.udf("array_normalize",
+      udf((xs: Seq[java.lang.Double], p: Double) => arrayNormalize(xs, p))),
+    FunctionEntry.udf("cosine_similarity",
+      udf((a: Map[String, Double], b: Map[String, Double]) => cosineSimilarity(a, b))),
     // map_normalize (reference: scalar/MapNormalizeFunction.java): values
     // scaled so they sum to 1; null values ignored in the sum like the
     // reference.
-    spark.udf.register("map_normalize",
-      (m: Map[String, Double]) =>
+    FunctionEntry.udf("map_normalize",
+      udf((m: Map[String, Double]) =>
         if (m == null) null
         else {
           val total = m.values.sum
           if (total == 0) m else m.map { case (k, v) => k -> v / total }
-        })
+        })),
     // to_iso8601 (reference: DateTimeFunctions.java:244-286). Renders the
     // wall clock in the SESSION zone — Timestamp.toLocalDateTime would use
     // the JVM default zone, shifting values on a non-UTC host. Zone read
     // per call (Engine.currentZone) so SET session.timeZone takes effect.
-    spark.udf.register("to_iso8601",
-      (ts: java.sql.Timestamp) =>
+    FunctionEntry.udf("to_iso8601",
+      udf((ts: java.sql.Timestamp) =>
         if (ts == null) null
         else ts.toInstant.atZone(graft.Engine.currentZone).toLocalDateTime
-          .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME))
+          .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME))),
     // url_encode/url_decode (reference: UrlFunctions.java:151-169 — form
     // escaping: space→+, "-_.*" safe; URLDecoder semantics on decode)
-    spark.udf.register("url_encode",
-      (s: String) =>
+    FunctionEntry.udf("url_encode",
+      udf((s: String) =>
         if (s == null) null
-        else java.net.URLEncoder.encode(s, "UTF-8"))
-    spark.udf.register("url_decode",
-      (s: String) =>
+        else java.net.URLEncoder.encode(s, "UTF-8"))),
+    FunctionEntry.udf("url_decode",
+      udf((s: String) =>
         if (s == null) null
-        else java.net.URLDecoder.decode(s, "UTF-8"))
-    spark.udf.register("multimap_from_entries",
-      (entries: Seq[(String, String)]) =>
+        else java.net.URLDecoder.decode(s, "UTF-8"))),
+    FunctionEntry.udf("multimap_from_entries",
+      udf((entries: Seq[(String, String)]) =>
         if (entries == null) null
-        else entries.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) })
+        else entries.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) })),
     // hamming_distance (reference: scalar/StringFunctions.java
     // hammingDistance — codepoint-wise, throws on unequal lengths)
-    spark.udf.register("hamming_distance",
-      (a: String, b: String) =>
+    FunctionEntry.udf("hamming_distance",
+      udf((a: String, b: String) =>
         if (a == null || b == null) null
         else {
           val ca = a.codePoints.toArray
@@ -160,15 +161,15 @@ object ScalarPack {
             "The input strings to hamming_distance function must have the same length")
           java.lang.Long.valueOf(
             ca.iterator.zip(cb.iterator).count { case (x, y) => x != y }.toLong)
-        })
+        })),
     // normalize(s, form) (reference: scalar/StringFunctions.java normalize
     // — java.text.Normalizer, same forms NFC/NFD/NFKC/NFKD). The 1-arg
     // NFC default is dispatched in plans/PrestoFunctions.
-    spark.udf.register("unicode_normalize",
-      (s: String, form: String) =>
+    FunctionEntry.udf("unicode_normalize",
+      udf((s: String, form: String) =>
         if (s == null || form == null) null
         else java.text.Normalizer.normalize(
-          s, java.text.Normalizer.Form.valueOf(form.toUpperCase)))
+          s, java.text.Normalizer.Form.valueOf(form.toUpperCase)))),
 
     // JSON family glue (reference: scalar/JsonFunctions.java). Spark has
     // no JSON type — JSON values are their canonical text here (README):
@@ -187,8 +188,8 @@ object ScalarPack {
     //   json_parse        validates + canonicalizes (throws on invalid,
     //                     like the reference); json_format is the
     //                     identity on canonical text.
-    spark.udf.register("json_size_text",
-      (j: String) =>
+    FunctionEntry.udf("json_size_text",
+      udf((j: String) =>
         if (j == null) null
         else jsonTree(j) match {
           case Some(n) =>
@@ -199,7 +200,7 @@ object ScalarPack {
           // it). A string scalar whose text parses as JSON (e.g. "[1]")
           // is indistinguishable and counts as its parsed form.
           case None => java.lang.Long.valueOf(0L)
-        })
+        })),
     // a NULL value argument propagates NULL like the reference's
     // @SqlNullable parameters, never an NPE inside the predicate
     // reference UrlFunctions.java:124 urlExtractParameter: the FIRST
@@ -207,8 +208,8 @@ object ScalarPack {
     // matches wins; a present-but-valueless key (?k3&k4) yields '',
     // an absent key NULL. Spark's ParseUrl(QUERY, key) regex skips
     // valueless keys and so disagrees on both counts.
-    spark.udf.register("url_extract_parameter",
-      (url: String, name: String) => {
+    FunctionEntry.udf("url_extract_parameter",
+      udf((url: String, name: String) => {
         if (url == null || name == null) null
         else
           try {
@@ -220,16 +221,16 @@ object ScalarPack {
                 if (a.length > 1) a(1) else "" }
               .orNull
           } catch { case _: Exception => null }
-      })
-    spark.udf.register("json_array_contains_str",
-      (j: String, v: String) =>
+      })),
+    FunctionEntry.udf("json_array_contains_str",
+      udf((j: String, v: String) =>
         if (v == null) null
-        else jsonArrayContains(j, n => n.isTextual && n.asText == v))
+        else jsonArrayContains(j, n => n.isTextual && n.asText == v))),
     // lenient UTF-8 decode (reference StringFunctions.java fromUtf8):
     // each invalid byte sequence becomes the replacement string (U+FFFD
     // by default, '' drops them); never raises like Spark's ANSI decode
-    spark.udf.register("from_utf8_lenient",
-      (b: Array[Byte], repl: String) => {
+    FunctionEntry.udf("from_utf8_lenient",
+      udf((b: Array[Byte], repl: String) => {
         if (b == null || repl == null) null
         else {
           val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
@@ -245,12 +246,12 @@ object ScalarPack {
           }
           dec.decode(java.nio.ByteBuffer.wrap(b)).toString
         }
-      })
+      })),
     // token-type STRICT like the reference's overloads (JsonFunctions.
     // java: the bigint overload matches only integer tokens, the double
     // overload only floating tokens — contains('[1.0]', 1) is false)
-    spark.udf.register("json_array_contains_long",
-      (j: String, v: java.lang.Long) =>
+    FunctionEntry.udf("json_array_contains_long",
+      udf((j: String, v: java.lang.Long) =>
         if (v == null) null
         else jsonArrayContains(j,
           // canConvertToLong: an integer token beyond the long range
@@ -258,18 +259,18 @@ object ScalarPack {
           // wraps it onto small negatives (TestJsonFunctions pins the
           // overflow row false)
           n => n.isIntegralNumber && n.canConvertToLong &&
-            n.asLong == v.longValue))
-    spark.udf.register("json_array_contains_num",
-      (j: String, v: java.lang.Double) =>
+            n.asLong == v.longValue))),
+    FunctionEntry.udf("json_array_contains_num",
+      udf((j: String, v: java.lang.Double) =>
         if (v == null) null
         else jsonArrayContains(j,
-          n => n.isFloatingPointNumber && n.asDouble == v.doubleValue))
-    spark.udf.register("json_array_contains_bool",
-      (j: String, v: java.lang.Boolean) =>
+          n => n.isFloatingPointNumber && n.asDouble == v.doubleValue))),
+    FunctionEntry.udf("json_array_contains_bool",
+      udf((j: String, v: java.lang.Boolean) =>
         if (v == null) null
-        else jsonArrayContains(j, n => n.isBoolean && n.asBoolean == v.booleanValue))
-    spark.udf.register("json_array_get",
-      (j: String, i: java.lang.Long) =>
+        else jsonArrayContains(j, n => n.isBoolean && n.asBoolean == v.booleanValue))),
+    FunctionEntry.udf("json_array_get",
+      udf((j: String, i: java.lang.Long) =>
         if (j == null || i == null) null
         else jsonTree(j).flatMap { n =>
           if (!n.isArray) None
@@ -287,26 +288,26 @@ object ScalarPack {
               else Some(el.toString)
             }
           }
-        }.orNull)
+        }.orNull)),
     // the reference canonicalizes through SORTED_MAPPER — object keys
     // sort recursively (JsonFunctions.java:147; JsonUtil.java:104 "ordered
     // by key is required in Presto"), making JSON '{"a":1,"b":2}' =
     // JSON '{"b":2,"a":1}' true as plain text equality
-    spark.udf.register("json_parse",
-      (s: String) =>
+    FunctionEntry.udf("json_parse",
+      udf((s: String) =>
         if (s == null) null
         else sortKeys(jsonTree(s).getOrElse(
           throw new IllegalArgumentException(s"Cannot convert to JSON: '$s'")))
-          .toString)
+          .toString)),
     // json_format renders the CANONICAL form (the reference formats the
     // parsed JSON value, never the source spelling — TestJsonFunctions
     // pins format(JSON '["a", "b"]') = '["a","b"]'); unparseable text
     // passes through (it can only reach here via a non-JSON string)
-    spark.udf.register("json_format",
-      (s: String) =>
+    FunctionEntry.udf("json_format",
+      udf((s: String) =>
         if (s == null) null
-        else jsonTree(s).map(_.toString).getOrElse(s))
-  }
+        else jsonTree(s).map(_.toString).getOrElse(s))),
+  )
 
   private lazy val jsonMapper =
     new com.fasterxml.jackson.databind.ObjectMapper

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -128,24 +129,26 @@ object SetDigestSketch {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  def registerAll(spark: SparkSession): Unit = {
+  lazy val functions: Seq[FunctionEntry] = {
     val enc: Encoder[(Boolean, Seq[Long])] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Boolean, Seq[Long])]()
-    spark.udf.register("make_set_digest",
-      udaf(new MakeSetDigestAgg(enc), Encoders.STRING))
-    spark.udf.register("merge_set_digest", udaf(new MergeSetDigestAgg(enc),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()))
-    spark.udf.register("set_digest_cardinality",
-      udf((d: Seq[Long]) =>
-        if (d == null || d.isEmpty) null
-        else java.lang.Long.valueOf(cardinality(d))))
-    spark.udf.register("jaccard_index",
-      udf((a: Seq[Long], b: Seq[Long]) =>
-        if (a == null || b == null || a.isEmpty || b.isEmpty) null
-        else java.lang.Double.valueOf(jaccardIndex(a, b))))
-    spark.udf.register("intersection_cardinality",
-      udf((a: Seq[Long], b: Seq[Long]) =>
-        if (a == null || b == null || a.isEmpty || b.isEmpty) null
-        else java.lang.Long.valueOf(intersectionCardinality(a, b))))
+    Seq(
+      FunctionEntry.udf("make_set_digest",
+        udaf(new MakeSetDigestAgg(enc), Encoders.STRING)),
+      FunctionEntry.udf("merge_set_digest", udaf(new MergeSetDigestAgg(enc),
+        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())),
+      FunctionEntry.udf("set_digest_cardinality",
+        udf((d: Seq[Long]) =>
+          if (d == null || d.isEmpty) null
+          else java.lang.Long.valueOf(cardinality(d)))),
+      FunctionEntry.udf("jaccard_index",
+        udf((a: Seq[Long], b: Seq[Long]) =>
+          if (a == null || b == null || a.isEmpty || b.isEmpty) null
+          else java.lang.Double.valueOf(jaccardIndex(a, b)))),
+      FunctionEntry.udf("intersection_cardinality",
+        udf((a: Seq[Long], b: Seq[Long]) =>
+          if (a == null || b == null || a.isEmpty || b.isEmpty) null
+          else java.lang.Long.valueOf(intersectionCardinality(a, b)))),
+    )
   }
 }

@@ -51,15 +51,14 @@ case class WordStem(
 
 object Snowball {
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_stem", {
-        case Seq(w) =>
-          WordStem(w, org.apache.spark.sql.catalyst.expressions.Literal("en"))
-        case Seq(w, l) => WordStem(w, l)
-        case exprs => throw new IllegalArgumentException(
-          s"word_stem takes 1 or 2 arguments, got ${exprs.length}")
-      }, "built-in")
+  /** word_stem(word[, lang]): the reference's one-arg form is the
+    * ENGLISH Snowball stemmer, not Porter 1980. */
+  lazy val functions: Seq[graft.plans.FunctionEntry] = Seq(
+    graft.plans.FunctionEntry.native("word_stem", 1, 2) {
+      case Seq(w) =>
+        WordStem(w, org.apache.spark.sql.catalyst.expressions.Literal("en"))
+      case Seq(w, l) => WordStem(w, l)
+    })
 
   private val referenceLanguages = Set(
     "ca", "da", "de", "en", "es", "eu", "fi", "fr", "hu", "hy", "ir",

@@ -1,8 +1,9 @@
 package graft.functions
 
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 import org.apache.commons.math3.distribution.{BetaDistribution, BinomialDistribution, CauchyDistribution, ChiSquaredDistribution, PoissonDistribution, WeibullDistribution}
 import org.apache.commons.math3.special.Erf
-import org.apache.spark.sql.SparkSession
 
 /** Statistical CDF scalars (reference: presto-main/.../operator/scalar/
   * MathFunctions.java:760-1010 — the reference itself computes these with
@@ -101,20 +102,20 @@ object StatsCdf {
     new WeibullDistribution(a, b).inverseCumulativeProbability(p)
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("normal_cdf", normalCdf _)
-    spark.udf.register("inverse_normal_cdf", inverseNormalCdf _)
-    spark.udf.register("beta_cdf", betaCdf _)
-    spark.udf.register("inverse_beta_cdf", inverseBetaCdf _)
-    spark.udf.register("cauchy_cdf", cauchyCdf _)
-    spark.udf.register("inverse_cauchy_cdf", inverseCauchyCdf _)
-    spark.udf.register("chi_squared_cdf", chiSquaredCdf _)
-    spark.udf.register("inverse_chi_squared_cdf", inverseChiSquaredCdf _)
-    spark.udf.register("poisson_cdf", poissonCdf _)
-    spark.udf.register("inverse_poisson_cdf", inversePoissonCdf _)
-    spark.udf.register("binomial_cdf", binomialCdf _)
-    spark.udf.register("inverse_binomial_cdf", inverseBinomialCdf _)
-    spark.udf.register("weibull_cdf", weibullCdf _)
-    spark.udf.register("inverse_weibull_cdf", inverseWeibullCdf _)
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("normal_cdf", udf(normalCdf _)),
+    FunctionEntry.udf("inverse_normal_cdf", udf(inverseNormalCdf _)),
+    FunctionEntry.udf("beta_cdf", udf(betaCdf _)),
+    FunctionEntry.udf("inverse_beta_cdf", udf(inverseBetaCdf _)),
+    FunctionEntry.udf("cauchy_cdf", udf(cauchyCdf _)),
+    FunctionEntry.udf("inverse_cauchy_cdf", udf(inverseCauchyCdf _)),
+    FunctionEntry.udf("chi_squared_cdf", udf(chiSquaredCdf _)),
+    FunctionEntry.udf("inverse_chi_squared_cdf", udf(inverseChiSquaredCdf _)),
+    FunctionEntry.udf("poisson_cdf", udf(poissonCdf _)),
+    FunctionEntry.udf("inverse_poisson_cdf", udf(inversePoissonCdf _)),
+    FunctionEntry.udf("binomial_cdf", udf(binomialCdf _)),
+    FunctionEntry.udf("inverse_binomial_cdf", udf(inverseBinomialCdf _)),
+    FunctionEntry.udf("weibull_cdf", udf(weibullCdf _)),
+    FunctionEntry.udf("inverse_weibull_cdf", udf(inverseWeibullCdf _)),
+  )
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.{udaf, udf}
 
@@ -280,34 +281,34 @@ object TDigest {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("tdigest_agg", udaf(new TDigestAgg, Encoders.DOUBLE))
-    spark.udf.register("tdigest_agg_weighted",
-      udaf(new WeightedTDigestAgg, Encoders.tuple(Encoders.DOUBLE, Encoders.DOUBLE)))
-    spark.udf.register("approx_percentile_weighted",
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("tdigest_agg", udaf(new TDigestAgg, Encoders.DOUBLE)),
+    FunctionEntry.udf("tdigest_agg_weighted",
+      udaf(new WeightedTDigestAgg, Encoders.tuple(Encoders.DOUBLE, Encoders.DOUBLE))),
+    FunctionEntry.udf("approx_percentile_weighted",
       udaf(new WeightedPercentileAgg, Encoders.tuple(
-        Encoders.DOUBLE, Encoders.DOUBLE, Encoders.DOUBLE)))
-    spark.udf.register("merge_tdigest", udaf(new MergeTDigestAgg,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()))
+        Encoders.DOUBLE, Encoders.DOUBLE, Encoders.DOUBLE))),
+    FunctionEntry.udf("merge_tdigest", udaf(new MergeTDigestAgg,
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())),
     // boxed returns so a NULL digest yields SQL NULL (reference scalar
     // functions are null-propagating), not NaN
-    spark.udf.register("td_value_at_quantile",
+    FunctionEntry.udf("td_value_at_quantile",
       udf((d: Seq[Double], q: Double) =>
         if (d == null || d.isEmpty) null
-        else java.lang.Double.valueOf(valueAtQuantile(d, q))))
-    spark.udf.register("td_values_at_quantiles",
+        else java.lang.Double.valueOf(valueAtQuantile(d, q)))),
+    FunctionEntry.udf("td_values_at_quantiles",
       udf((d: Seq[Double], qs: Seq[Double]) =>
         if (d == null || d.isEmpty || qs == null) null
-        else qs.map(valueAtQuantile(d, _))))
-    spark.udf.register("td_quantile_at_value",
+        else qs.map(valueAtQuantile(d, _)))),
+    FunctionEntry.udf("td_quantile_at_value",
       udf((d: Seq[Double], x: Double) =>
         if (d == null || d.isEmpty) null
-        else java.lang.Double.valueOf(quantileAtValue(d, x))))
+        else java.lang.Double.valueOf(quantileAtValue(d, x)))),
     // scale_tdigest (reference: scalar/TDigestFunctions.java scaleTDigest
     // — every centroid weight multiplied by a positive factor; quantile
     // positions are weight-relative so values_at_quantiles is invariant,
     // but merged-digest contributions rescale)
-    spark.udf.register("scale_tdigest",
+    FunctionEntry.udf("scale_tdigest",
       udf((d: Seq[Double], factor: Double) =>
         if (d == null || d.isEmpty) null
         else {
@@ -317,12 +318,12 @@ object TDigest {
           var i = 0
           while (i < n) { out(2 + 2 * i) *= factor; i += 1 }
           out.toSeq
-        }))
+        })),
     // destructure_tdigest (reference: TDigestFunctions.java — row of
     // centroid means/weights plus compression/min/max/sum/count; our
     // digest tracks no exact min/max, so they are the extreme centroid
     // means — documented approximation of an EXPERIMENTAL accessor)
-    spark.udf.register("destructure_tdigest",
+    FunctionEntry.udf("destructure_tdigest",
       udf((d: Seq[Double]) =>
         if (d == null || d.isEmpty) null
         else {
@@ -337,6 +338,6 @@ object TDigest {
             if (means.isEmpty) Double.NaN else means.min,
             if (means.isEmpty) Double.NaN else means.max,
             sum, count)
-        }))
-  }
+        })),
+  )
 }

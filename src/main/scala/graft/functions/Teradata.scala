@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.functions.udf
 
 import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder, SignStyle}
 import java.time.temporal.ChronoField._
@@ -82,34 +83,34 @@ object Teradata {
   private def parseLocal(s: String, fmt: String): java.time.LocalDateTime =
     java.time.LocalDateTime.from(parserFor(fmt).parse(s))
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("teradata_to_char",
-      (ts: java.sql.Timestamp, fmt: String) =>
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("teradata_to_char",
+      udf((ts: java.sql.Timestamp, fmt: String) =>
         if (ts == null || fmt == null) null
         else formatterFor(fmt).format(
-          ts.toInstant.atZone(graft.Engine.currentZone).toLocalDateTime))
+          ts.toInstant.atZone(graft.Engine.currentZone).toLocalDateTime))),
 
-    spark.udf.register("teradata_to_timestamp",
-      (s: String, fmt: String) =>
+    FunctionEntry.udf("teradata_to_timestamp",
+      udf((s: String, fmt: String) =>
         if (s == null || fmt == null) null
         else java.sql.Timestamp.from(
-          parseLocal(s, fmt).atZone(graft.Engine.currentZone).toInstant))
+          parseLocal(s, fmt).atZone(graft.Engine.currentZone).toInstant))),
 
-    spark.udf.register("teradata_to_date",
-      (s: String, fmt: String) =>
+    FunctionEntry.udf("teradata_to_date",
+      udf((s: String, fmt: String) =>
         if (s == null || fmt == null) null
-        else parseLocal(s, fmt).toLocalDate)
+        else parseLocal(s, fmt).toLocalDate)),
 
     // hex of the UTF-16BE encoding, uppercase (TeradataStringFunctions
     // .char2HexInt); ASCII chars render as 00XX
-    spark.udf.register("char2hexint",
-      (s: String) =>
+    FunctionEntry.udf("char2hexint",
+      udf((s: String) =>
         if (s == null) null
         else {
           val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)
           val sb = new java.lang.StringBuilder(bytes.length * 2)
           bytes.foreach(b => sb.append(f"${b & 0xff}%02X"))
           sb.toString
-        })
-  }
+        })),
+  )
 }

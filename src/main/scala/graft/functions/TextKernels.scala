@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -33,6 +33,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracles replay unchanged.
   */
 object TextKernels {
+
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_word_shingles", 1)(a => WordShingles(a(0))),
+    FunctionEntry.native("graft_xxhash64_arr", 1)(a => XxHash64Array(a(0))),
+    FunctionEntry.native("graft_minhash_sig", 2)(a => MinHashSig(a(0), a(1))),
+    FunctionEntry.native("graft_lsh_bands", 2)(a => LshBands(a(0), a(1))),
+    FunctionEntry.native("graft_shingle_hist_text", 2)(a =>
+      ShingleHistText(a(0), a(1))),
+    FunctionEntry.native("graft_char_grams", 1)(a => CharGrams(a(0))),
+    FunctionEntry.native("graft_char_gram_set", 1)(a => CharGramSet(a(0))),
+    FunctionEntry.native("graft_word_grams", 2)(a => WordGrams(a(0), a(1))),
+  )
 
   private val Sep = UTF8String.fromString(" ")
   private val Under = UTF8String.fromString("_")
@@ -171,15 +183,17 @@ case class XxHash64Array(child: Expression) extends UnaryExpression {
   * hashInt(i, 42)?  No — array_min of an empty array is NULL; the
   * declarative form never produces one because shingles() emits ≥1
   * shingle for any non-null text, so an empty input is a contract
-  * violation and fails loudly. Null ELEMENTS are rejected at analysis:
-  * the pipeline input ([[XxHash64Array]]) is containsNull=false, and a
-  * SQL caller's null slot would otherwise unbox to 0L and hash silently
-  * differently from xxhash64's documented skip-null semantics. */
+  * violation and fails loudly. A NULL element fails the row the same
+  * way: its slot would otherwise read as 0L and hash silently
+  * differently from xxhash64's documented skip-null semantics. The
+  * pipeline input ([[XxHash64Array]]) is containsNull=false, but a SQL
+  * caller's array<bigint> (a literal, a parquet column) usually is not,
+  * so the check is per row, not per type. */
 case class MinHashSig(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-    case ArrayType(LongType, false) if right.foldable &&
+    case ArrayType(LongType, _) if right.foldable &&
         right.dataType == IntegerType => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
       "graft_minhash_sig expects (array<bigint>, literal int), got " +
@@ -198,6 +212,9 @@ case class MinHashSig(left: Expression, right: Expression)
     val inner = new Array[Long](n)
     var m = 0
     while (m < n) {
+      if (a.isNullAt(m)) throw new IllegalArgumentException(
+        s"graft_minhash_sig: NULL hash at index ${m + 1}; the hash array " +
+          "must not contain NULL elements")
       inner(m) = XXH64.hashLong(a.getLong(m), 42L)
       m += 1
     }
@@ -485,27 +502,4 @@ case class CharGrams(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TextKernelsRegistry {
-  /** Register the fused kernels as SQL-callable functions (idempotent). */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_word_shingles",
-      exprs => WordShingles(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_xxhash64_arr",
-      exprs => XxHash64Array(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSig(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bands",
-      exprs => LshBands(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hist_text",
-      exprs => ShingleHistText(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_grams",
-      exprs => CharGrams(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_gram_set",
-      exprs => CharGramSet(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_word_grams",
-      exprs => WordGrams(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
@@ -117,7 +117,6 @@ case class ToJsonText(child: Expression)
 }
 
 object ToJsonText {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_to_json", exprs => ToJsonText(exprs.head), "built-in")
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_to_json", 1)(a => ToJsonText(a.head)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -186,8 +187,8 @@ object TriviaScalars {
     def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
   }
 
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("differential_entropy",
-      udaf(DifferentialEntropyAgg, ExpressionEncoder[DiffEntropyIn]()))
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.udf("differential_entropy",
+      udaf(DifferentialEntropyAgg, ExpressionEncoder[DiffEntropyIn]())),
+  )
 }

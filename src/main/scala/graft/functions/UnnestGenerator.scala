@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -283,12 +283,9 @@ case class ZipUnnestRows(children: Seq[Expression], withOrdinality: Boolean)
 }
 
 object UnnestGenerator {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unnest", exprs => UnnestGenerator(exprs, withOrdinality = false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unnest_ord", exprs => UnnestGenerator(exprs, withOrdinality = true),
-      "built-in")
-  }
+  lazy val functions: Seq[FunctionEntry] = Seq(
+    FunctionEntry.native("graft_unnest", 1, FunctionEntry.Variadic)(
+      UnnestGenerator(_, withOrdinality = false)),
+    FunctionEntry.native("graft_unnest_ord", 1, FunctionEntry.Variadic)(
+      UnnestGenerator(_, withOrdinality = true)))
 }

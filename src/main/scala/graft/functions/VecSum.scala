@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, SparkSession}
+import graft.plans.FunctionEntry
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -62,6 +63,6 @@ object VecSum {
   /** DataFrame-side column function (no registry needed). */
   def sum(c: Column): Column = udf(c)
 
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("graft_vec_sum", udf)
+  lazy val functions: Seq[FunctionEntry] =
+    Seq(FunctionEntry.udf("graft_vec_sum", udf))
 }

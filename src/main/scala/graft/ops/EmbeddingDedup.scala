@@ -106,8 +106,6 @@ object EmbeddingDedup {
   def featurize(
       df: DataFrame, idCol: String, textCol: String,
       planes: Int, tables: Int): DataFrame = {
-    graft.functions.EmbeddingKernels.registerAll(df.sparkSession)
-    graft.functions.TextKernelsRegistry.registerAll(df.sparkSession)
     // r16: shingling + md5 histogram run FUSED in one native kernel
     // (graft_shingle_hist_text ≡ graft_shingle_hist ∘ shingles,
     // TextKernelsSpec) — no intermediate shingle-string array, no

@@ -82,7 +82,6 @@ object MinHashLSH {
   def prepare(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64): DataFrame = {
-    graft.functions.TextKernelsRegistry.registerAll(df.sparkSession)
     df.select(col(idCol).as("__id"),
         call_function("graft_word_shingles", col(textCol)).as("__sh"))
       .withColumn("__sig",

@@ -103,7 +103,6 @@ object VectorSearch {
   def annCandidates(
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       planes: Int = 8, dim: Int = 64, tables: Int = 1): DataFrame = {
-    graft.functions.EmbeddingKernels.registerAll(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("nv"))
       .withColumn("nb", bucketsOf(col("nv"), planes, dim, tables))
       .select(col("nid"), col("nv"),

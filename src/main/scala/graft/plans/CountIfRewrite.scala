@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -112,31 +111,5 @@ object ResolveReduceAgg extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions {
     case c: ReduceAggCall =>
       ReduceAgg(c.input, c.zero, c.inputFn, c.combineFn).toAggregateExpression()
-  }
-}
-
-/** Session-extension installer: `Engine.session` wires this in. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => CountIfRewrite)
-    ext.injectOptimizerRule(_ => UnnestCodegenRewrite)
-    ext.injectResolutionRule(_ => ConcatArrayElement)
-    ext.injectResolutionRule(_ => ResolveReduceAgg)
-    ext.injectResolutionRule(_ => MapEqualityRewrite)
-    ext.injectResolutionRule(_ => DoubleDivisionRewrite)
-    ext.injectResolutionRule(_ => IntegerDivisionRewrite)
-    ext.injectResolutionRule(_ => FloatCastRoundingRewrite)
-    ext.injectResolutionRule(_ => DoubleToVarcharRewrite)
-    ext.injectResolutionRule(_ => VarcharLengthCastRewrite)
-    ext.injectResolutionRule(_ => RealDecimalComparisonRewrite)
-    ext.injectResolutionRule(_ => RaisingMapSubscriptRewrite)
-    ext.injectResolutionRule(_ => RowSubscriptRewrite)
-    ext.injectResolutionRule(_ => PlainGroupByGroupingRewrite)
-    ext.injectResolutionRule(_ => NullFilterConditionRewrite)
-    ext.injectResolutionRule(_ => RuntimeLikeRewrite)
-    ext.injectResolutionRule(_ => NullMapArgsRewrite)
-    ext.injectResolutionRule(_ => ArrayJoinDoubleRewrite)
-    ext.injectResolutionRule(_ => CollectionEqualityRewrite)
-    PrestoFunctions.registerAll(ext)
   }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, CollectList, CollectSet, Count, Kurtosis, Skewness}
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, IntegerType, LongType, NullType, ShortType, StringType, TimestampType}
@@ -25,14 +23,8 @@ import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, IntegerType, 
   *     `log(` to `presto_log(`.
   */
 object PrestoFunctions {
-
-  private type FD =
-    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
-
-  private def fd(name: String)(builder: Seq[Expression] => Expression): FD =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(getClass.getName, name),
-      builder)
+  import FunctionEntry.native
+  import GraftExtensions.call
 
   private def long(e: Expression): Expression = Cast(e, LongType)
 
@@ -214,53 +206,37 @@ object PrestoFunctions {
       case _ => acc
     }
 
-  /** The registered weighted t-digest aggregate, resolved through the
-    * active session's catalog at analysis time (it is a udaf()-registered
-    * ScalaAggregator, not a constructible Catalyst class). A weight that
-    * folds to 1 degenerates to the unweighted builtin (better accuracy,
-    * same semantics). The digest interpolates in double space, so an
+  /** secure_random overload dispatch — see the secure_random entry. */
+  private def secureRandomBuilder(a: Seq[Expression]): Expression = a match {
+    case Seq() => call("graft_secure_random0")
+    case Seq(lo, hi) if isIntegralTyped(lo) && isIntegralTyped(hi) =>
+      Cast(call("graft_secure_random_long", long(lo), long(hi)), lo.dataType)
+    case Seq(lo, hi) => call("graft_secure_random_double", dbl(lo), dbl(hi))
+    case args => throw new IllegalArgumentException(
+      s"secure_random expects 0 or 2 arguments, got ${args.length}")
+  }
+
+  /** The catalog's weighted t-digest aggregate (a udaf() ScalaAggregator,
+    * not a constructible Catalyst class). A weight that folds to 1
+    * degenerates to the unweighted builtin (better accuracy, same
+    * semantics). The digest interpolates in double space, so an
     * integral-typed x is rounded back to its input type like the
     * reference's bigint-in/bigint-out overload. A percentile ARRAY rides
     * the digest-builder + td_values_at_quantiles composition — ONE
     * weighted digest queried per percentile, the reference's plan shape
     * (ApproximateWeightedPercentileAggregations array overload). */
-  /** secure_random overload dispatch — see the fd("secure_random") doc. */
-  private def secureRandomBuilder(a: Seq[Expression]): Expression = {
-    val catalog =
-      org.apache.spark.sql.SparkSession.active.sessionState.catalog
-    a match {
-      case Seq() =>
-        catalog.lookupFunction(FunctionIdentifier("graft_secure_random0"), Nil)
-      case Seq(lo, hi) if isIntegralTyped(lo) && isIntegralTyped(hi) =>
-        Cast(catalog.lookupFunction(
-          FunctionIdentifier("graft_secure_random_long"),
-          Seq(long(lo), long(hi))), lo.dataType)
-      case Seq(lo, hi) =>
-        catalog.lookupFunction(
-          FunctionIdentifier("graft_secure_random_double"),
-          Seq(dbl(lo), dbl(hi)))
-      case args => throw new IllegalArgumentException(
-        s"secure_random expects 0 or 2 arguments, got ${args.length}")
-    }
-  }
-
   private def weightedPercentile(
       x: Expression, w: Expression, p: Expression): Expression =
     if (numericValueOf(w).contains(1.0)) new ApproximatePercentile(x, p)
     else if (p.resolved && p.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]) {
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
-      val digest = catalog.lookupFunction(
-        FunctionIdentifier("tdigest_agg_weighted"),
-        Seq(Cast(x, DoubleType), Cast(w, DoubleType))) match {
+      val digest = call("tdigest_agg_weighted",
+        Cast(x, DoubleType), Cast(w, DoubleType)) match {
         case af: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction =>
           af.toAggregateExpression()
         case other => other
       }
-      val vals = catalog.lookupFunction(
-        FunctionIdentifier("td_values_at_quantiles"),
-        Seq(digest,
-          Cast(p, org.apache.spark.sql.types.ArrayType(DoubleType))))
+      val vals = call("td_values_at_quantiles",
+        digest, Cast(p, org.apache.spark.sql.types.ArrayType(DoubleType)))
       if (!isIntegralTyped(x)) vals
       else {
         val v = NamedLambdaVariable("v", DoubleType, nullable = true)
@@ -268,12 +244,10 @@ object PrestoFunctions {
           LambdaFunction(Cast(new Round(v, Literal(0)), x.dataType), Seq(v)))
       }
     } else {
-      val fn = org.apache.spark.sql.SparkSession.active.sessionState.catalog
-        .lookupFunction(
-          FunctionIdentifier("approx_percentile_weighted"),
-          // the aggregator is typed over doubles; the reference accepts
-          // bigint x and weights, so coerce here rather than in callers
-          Seq(Cast(x, DoubleType), Cast(w, DoubleType), Cast(p, DoubleType)))
+      // the aggregator is typed over doubles; the reference accepts
+      // bigint x and weights, so coerce here rather than in callers
+      val fn = call("approx_percentile_weighted",
+        Cast(x, DoubleType), Cast(w, DoubleType), Cast(p, DoubleType))
       if (!isIntegralTyped(x)) fn
       else {
         // nesting under Round hides the bare AggregateFunction from the
@@ -315,12 +289,12 @@ object PrestoFunctions {
         graft.functions.TruncatePrecision(dbl(x), Cast(nn, LongType))
     }
 
-  val all: Seq[FD] = Seq(
-    fd("try") { args => TryEval(args.head) },
+  val functions: Seq[FunctionEntry] = Seq(
+    native("try", 1) { args => TryEval(args.head) },
     // facade-internal: length-carrying varchar cast (the Dialect emits
     // graft_varchar_n(e, n, isTry) for CAST(e AS VARCHAR(n)) since
     // Spark erases the length; VarcharLengthCastRewrite lowers it)
-    fd("graft_varchar_n") { a =>
+    native("graft_varchar_n", 3) { a =>
       def lit(e: Expression): Any = e match {
         case Literal(v, _) => v
         case other => throw new IllegalArgumentException(
@@ -331,7 +305,7 @@ object PrestoFunctions {
     },
     // facade-internal: CAST(json AS <scalar>) token coercions (Dialect
     // emits graft_json_scalar(text, 'kind'); functions/JsonScalarValue)
-    fd("graft_json_scalar") {
+    native("graft_json_scalar", 2) {
       case Seq(e, Literal(kind, StringType)) =>
         graft.functions.JsonScalarValue(e, kind.toString)
       case other => throw new IllegalArgumentException(
@@ -339,17 +313,17 @@ object PrestoFunctions {
     },
     // facade-internal: UUID literal/cast canonicalizer (Dialect emits
     // graft_uuid(expr) for UUID 'x' and CAST(x AS UUID))
-    fd("graft_uuid") { a => graft.functions.UuidCanon(a.head) },
+    native("graft_uuid", 1) { a => graft.functions.UuidCanon(a.head) },
     // facade-internal: IPADDRESS/IPPREFIX literal + cast canonicalizers
     // (Dialect emits these for IPADDRESS 'x' / IPPREFIX 'x' and the
     // CAST family; functions/IpCanon)
-    fd("graft_ipaddress") { a => graft.functions.IpAddressCanon(a.head) },
-    fd("graft_ipprefix") { a => graft.functions.IpPrefixCanon(a.head) },
+    native("graft_ipaddress", 1) { a => graft.functions.IpAddressCanon(a.head) },
+    native("graft_ipprefix", 1) { a => graft.functions.IpPrefixCanon(a.head) },
     // array_except(NULL, …) returns NULL (reference: scalar/
     // ArrayExceptFunction is @SqlNullable on both args); Spark's builtin
     // rejects an untyped NULL literal at type check, so pin it to the
     // least array type and let coercion reconcile elements
-    fd("array_except") { a =>
+    native("array_except", 2) { a =>
       def arr(e: Expression): Expression = e match {
         case Literal(null, NullType) =>
           Literal.create(null, org.apache.spark.sql.types.ArrayType(NullType))
@@ -364,7 +338,7 @@ object PrestoFunctions {
     // ArrayAggregate pins the state to the zero's own type and rejects
     // the mix, so widen a narrower integral literal to the element type
     // when the array is a resolved literal
-    fd("reduce") {
+    native("reduce", 4) {
       case Seq(arrE, zero, merge, finish) =>
         val z = zero match {
           case l @ Literal(_, IntegerType) if arrE.resolved =>
@@ -378,47 +352,41 @@ object PrestoFunctions {
           case other => other
         }
         ArrayAggregate(arrE, z, merge, finish)
-      case other => throw new IllegalArgumentException(
-        s"reduce expects (array, state, merge, finish), got ${other.length} args")
     },
-    fd("bitwise_and") { a => BitwiseAnd(long(a(0)), long(a(1))) },
-    fd("bitwise_or") { a => BitwiseOr(long(a(0)), long(a(1))) },
-    fd("bitwise_xor") { a => BitwiseXor(long(a(0)), long(a(1))) },
-    fd("bitwise_not") { a => BitwiseNot(long(a(0))) },
+    native("bitwise_and", 2) { a => BitwiseAnd(long(a(0)), long(a(1))) },
+    native("bitwise_or", 2) { a => BitwiseOr(long(a(0)), long(a(1))) },
+    native("bitwise_xor", 2) { a => BitwiseXor(long(a(0)), long(a(1))) },
+    native("bitwise_not", 1) { a => BitwiseNot(long(a(0))) },
     // per-type-width shifts (reference: BitwiseFunctions.java — the
     // TINYINT/SMALLINT/INTEGER overloads wrap to the input's width; a
     // shift of 64+ is 0, never a Java mod-64 shift). Results are BIGINT
     // (the reference returns the input type; values agree).
-    fd("bitwise_left_shift") { a =>
+    native("bitwise_left_shift", 2) { a =>
       val w = bitWidthOf(a(0))
       val sh = Cast(a(1), LongType)
       val shifted = ShiftLeft(long(a(0)), Cast(a(1), IntegerType))
       If(GreaterThanOrEqual(sh, Literal(64L)), Literal(0L),
         if (w == 64) shifted else preserveSign(shifted, w))
     },
-    fd("bitwise_arithmetic_shift_right") { a =>
+    native("bitwise_arithmetic_shift_right", 2) { a =>
       ShiftRight(long(a(0)), Cast(a(1), IntegerType)) },
-    fd("bitwise_logical_shift_right") {
+    native("bitwise_logical_shift_right", 2, 3) {
       case Seq(n, s) => ShiftRightUnsigned(long(n), Cast(s, IntegerType))
       case Seq(n, s, b) =>
         maskedShift(b, ShiftRightUnsigned(long(n), Cast(s, IntegerType)),
           mask => ShiftRightUnsigned(BitwiseAnd(long(n), mask), Cast(s, IntegerType)))
-      case a => throw new IllegalArgumentException(
-        s"bitwise_logical_shift_right expects 2 or 3 arguments, got ${a.length}")
     },
     // alternate shift spellings (reference: BitwiseFunctions.java registers
     // both the *_shift_* and shift-direction-suffixed names). The legacy
     // 3-arg forms take a word size: bits=64 is the plain shift, otherwise
     // the result (left) or input (logical right) masks to 2^bits − 1.
-    fd("bitwise_shift_left") {
+    native("bitwise_shift_left", 2, 3) {
       case Seq(n, s) => ShiftLeft(long(n), Cast(s, IntegerType))
       case Seq(n, s, b) =>
         maskedShift(b, ShiftLeft(long(n), Cast(s, IntegerType)),
           mask => BitwiseAnd(ShiftLeft(long(n), Cast(s, IntegerType)), mask))
-      case a => throw new IllegalArgumentException(
-        s"bitwise_shift_left expects 2 or 3 arguments, got ${a.length}")
     },
-    fd("bitwise_right_shift") { a =>
+    native("bitwise_right_shift", 2) { a =>
       val w = bitWidthOf(a(0))
       val sh = Cast(a(1), LongType)
       val masked =
@@ -428,7 +396,7 @@ object PrestoFunctions {
         If(EqualTo(sh, Literal(0L)), long(a(0)),
           ShiftRightUnsigned(masked, Cast(a(1), IntegerType))))
     },
-    fd("bitwise_right_shift_arithmetic") { a =>
+    native("bitwise_right_shift_arithmetic", 2) { a =>
       val sh = Cast(a(1), LongType)
       If(GreaterThanOrEqual(sh, Literal(64L)),
         If(GreaterThanOrEqual(long(a(0)), Literal(0L)), Literal(0L), Literal(-1L)),
@@ -436,7 +404,7 @@ object PrestoFunctions {
     },
     // bit_count(x[, bits]) (reference: BitwiseFunctions.java bitCount —
     // 2-arg counts within an n-bit word after checking the value fits)
-    fd("bit_count") {
+    native("bit_count", 1, 2) {
       case Seq(x) => BitwiseCount(long(x))
       case Seq(x, bits) =>
         val v = long(x)
@@ -460,17 +428,17 @@ object PrestoFunctions {
     // row zip, shorter arrays NULL-padded): Spark's arrays_zip has the
     // same padding; row field names come from the inputs rather than
     // being anonymous
-    fd("zip") { a => new ArraysZip(a) },
+    native("zip", 2, FunctionEntry.Variadic) { a => new ArraysZip(a) },
 
     // lambda predicates (reference: scalar/ArrayAllMatchFunction.java,
     // ArrayAnyMatchFunction.java, ArrayNoneMatchFunction.java — same
     // three-valued NULL logic as Spark's forall/exists)
-    fd("all_match") { a => ArrayForAll(a(0), a(1)) },
-    fd("any_match") { a => ArrayExists(a(0), a(1)) },
+    native("all_match", 2) { a => ArrayForAll(a(0), a(1)) },
+    native("any_match", 2) { a => ArrayExists(a(0), a(1)) },
     // none_match(a, f) = all_match(a, x -> NOT f(x)) — identical
     // three-valued logic, and the analyzer requires the root returned for
     // a lambda-bearing call to itself be a higher-order function
-    fd("none_match") {
+    native("none_match", 2) {
       case Seq(arr, LambdaFunction(fn, args, hidden)) =>
         ArrayForAll(arr, LambdaFunction(Not(fn), args, hidden))
       case a => Not(ArrayExists(a(0), a(1)))
@@ -482,11 +450,11 @@ object PrestoFunctions {
     // regexp_extract returns NULL on no match AND on a group that did
     // not participate in the match, where Spark's builtin returns ''
     // (functions/PrestoRegexp.scala).
-    fd("regexp_extract") { a =>
+    native("regexp_extract", 2, 3) { a =>
       val idx = if (a.lengthCompare(3) == 0) a(2) else Literal(0)
       graft.functions.PrestoRegexpExtract(a(0), a(1), Cast(idx, IntegerType))
     },
-    fd("regexp_extract_all") { a =>
+    native("regexp_extract_all", 2, 3) { a =>
       val idx = if (a.lengthCompare(3) == 0) a(2) else Literal(0)
       RegExpExtractAll(a(0), a(1), idx)
     },
@@ -497,7 +465,7 @@ object PrestoFunctions {
     // .scala — Spark's builtin resolves `${name}` references to '').
     // A NULL literal argument arrives untyped and propagates NULL,
     // so pin it to string for the type contract.
-    fd("regexp_replace") { args =>
+    native("regexp_replace", 2, 3) { args =>
       def str(e: Expression): Expression =
         if (e.resolved && e.dataType == NullType) Cast(e, StringType) else e
       args match {
@@ -513,17 +481,17 @@ object PrestoFunctions {
     // SQL-defined array helpers (reference: scalar/sql/ArraySqlFunctions
     // .java), lowered to codegen'd lambda expressions once element types
     // resolve (functions/ArrayExtras.scala)
-    fd("array_sum") { a => graft.functions.ArraySumPresto(a.head) },
-    fd("array_average") { a => graft.functions.ArrayAveragePresto(a.head) },
-    fd("array_frequency") { a => graft.functions.ArrayFrequencyPresto(a.head) },
-    fd("array_duplicates") { a => graft.functions.ArrayDuplicatesPresto(a.head) },
-    fd("array_dupes") { a => graft.functions.ArrayDuplicatesPresto(a.head) },
-    fd("array_has_duplicates") { a => graft.functions.ArrayHasDuplicatesPresto(a.head) },
-    fd("array_has_dupes") { a => graft.functions.ArrayHasDuplicatesPresto(a.head) },
+    native("array_sum", 1) { a => graft.functions.ArraySumPresto(a.head) },
+    native("array_average", 1) { a => graft.functions.ArrayAveragePresto(a.head) },
+    native("array_frequency", 1) { a => graft.functions.ArrayFrequencyPresto(a.head) },
+    native("array_duplicates", 1) { a => graft.functions.ArrayDuplicatesPresto(a.head) },
+    native("array_dupes", 1) { a => graft.functions.ArrayDuplicatesPresto(a.head) },
+    native("array_has_duplicates", 1) { a => graft.functions.ArrayHasDuplicatesPresto(a.head) },
+    native("array_has_dupes", 1) { a => graft.functions.ArrayHasDuplicatesPresto(a.head) },
     // trim_array (reference: scalar/ArrayTrimFunction.java — drop n
     // elements from the end; negative n and n > size both fail loudly,
     // matching the reference's INVALID_FUNCTION_ARGUMENT)
-    fd("trim_array") { a =>
+    native("trim_array", 2) { a =>
       val n = Cast(a(1), IntegerType)
       val checked = If(
         LessThan(n, Literal(0)),
@@ -538,16 +506,14 @@ object PrestoFunctions {
     // the seed and inflate the sketch by one phantom element. A second
     // (maxStandardError) argument is accepted and ignored — this HLL is
     // fixed at p=12 (README known divergences).
-    fd("graft_approx_set_hash") { a =>
+    native("graft_approx_set_hash", 1, 2) { a =>
       If(IsNull(a.head), Literal.create(null, LongType),
         new XxHash64(Seq(a.head))) },
-    fd("truncate") {
+    native("truncate", 1, 2) {
       case Seq(x)    => truncateExpr(x, None)
       case Seq(x, n) => truncateExpr(x, Some(n))
-      case args => throw new IllegalArgumentException(
-        s"truncate expects 1 or 2 arguments, got ${args.length}")
     },
-    fd("presto_log") { a => Logarithm(dbl(a(1)), dbl(a(0))) },
+    native("presto_log", 2) { a => Logarithm(dbl(a(1)), dbl(a(0))) },
 
     // ---- Reference-replay conformance pack (round 12: semantics found
     // by replaying the reference's own scalar-test assertions, see
@@ -558,13 +524,13 @@ object PrestoFunctions {
     // (MathFunctions.java greatest/least via @SqlNullable CHECK —
     // TestMathFunctions pins it); Spark's skip nulls. The reference
     // also accepts a SINGLE argument (identity); Spark requires two.
-    fd("presto_greatest") { a =>
+    native("presto_greatest", 1, FunctionEntry.Variadic) { a =>
       if (a.lengthCompare(1) == 0) a.head
       else If(a.map(IsNull).reduceLeft(Or),
         Literal.create(null, org.apache.spark.sql.types.NullType),
         Greatest(a))
     },
-    fd("presto_least") { a =>
+    native("presto_least", 1, FunctionEntry.Variadic) { a =>
       if (a.lengthCompare(1) == 0) a.head
       else If(a.map(IsNull).reduceLeft(Or),
         Literal.create(null, org.apache.spark.sql.types.NullType),
@@ -574,12 +540,12 @@ object PrestoFunctions {
     // element (ArrayMinFunction.java/ArrayMaxFunction.java); Spark's
     // ignore null elements. A null-containing array is detected as
     // size(arr) != size(array_compact(arr)).
-    fd("presto_array_min") { a =>
+    native("presto_array_min", 1) { a =>
       If(Not(EqualTo(Size(a.head), Size(ArrayCompact(a.head)))),
         Literal.create(null, org.apache.spark.sql.types.NullType),
         ArrayMin(a.head))
     },
-    fd("presto_array_max") { a =>
+    native("presto_array_max", 1) { a =>
       If(Not(EqualTo(Size(a.head), Size(ArrayCompact(a.head)))),
         Literal.create(null, org.apache.spark.sql.types.NullType),
         ArrayMax(a.head))
@@ -593,7 +559,7 @@ object PrestoFunctions {
     // string producing ZERO parts (same reference test file). Divergence:
     // a non-positive index returns NULL here where the reference raises
     // INVALID_FUNCTION_ARGUMENT.
-    fd("presto_split_part") { a =>
+    native("presto_split_part", 3) { a =>
       val idx = Cast(a(2), IntegerType)
       val byChar = If(GreaterThan(idx, Length(a(0))),
         Literal.create(null, org.apache.spark.sql.types.StringType),
@@ -608,24 +574,20 @@ object PrestoFunctions {
     // (StringFunctions.java leftTrim/rightTrim codepoint-set overloads);
     // Spark's 2-arg builtins take (trim-chars, string) — SWAPPED. The
     // 1-arg forms agree.
-    fd("presto_ltrim") {
+    native("presto_ltrim", 1, 2) {
       case Seq(s)    => StringTrimLeft(s)
       case Seq(s, t) => StringTrimLeft(s, t)
-      case args => throw new IllegalArgumentException(
-        s"ltrim expects 1 or 2 arguments, got ${args.length}")
     },
-    fd("presto_rtrim") {
+    native("presto_rtrim", 1, 2) {
       case Seq(s)    => StringTrimRight(s)
       case Seq(s, t) => StringTrimRight(s, t)
-      case args => throw new IllegalArgumentException(
-        s"rtrim expects 1 or 2 arguments, got ${args.length}")
     },
     // replace with an EMPTY search string interleaves the replacement
     // at every character boundary (StringFunctions.java replace uses
     // the JDK contract: REPLACE('abc','','xx') = 'xxaxxbxxcxx',
     // TestStringFunctions) — Spark's builtin returns the input
     // unchanged. The 2-arg removal form and non-empty searches agree.
-    fd("presto_replace") {
+    native("presto_replace", 2, 3) {
       case Seq(s, search) => StringReplace(s, search, Literal(""))
       case Seq(s, search, rep) =>
         val interleave = If(
@@ -645,29 +607,25 @@ object PrestoFunctions {
               Literal(""), None))))
         If(EqualTo(Length(search), Literal(0)),
           interleave, StringReplace(s, search, rep))
-      case args => throw new IllegalArgumentException(
-        s"replace expects 2 or 3 arguments, got ${args.length}")
     },
     // trim 2-arg, same swapped-argument story (the Dialect trim branch
     // routes only the comma form here; the TRIM(BOTH x FROM y) grammar
     // form already agrees)
-    fd("presto_trim") {
+    native("presto_trim", 1, 2) {
       case Seq(s)    => StringTrim(s)
       case Seq(s, t) => StringTrim(s, t)
-      case args => throw new IllegalArgumentException(
-        s"trim expects 1 or 2 arguments, got ${args.length}")
     },
     // contains / array_position with an UNTYPED NULL probe return NULL
     // (ArrayFunctions.java @SqlNullable); Spark's builtins REJECT a
     // NullType argument at analysis. array_position also has the 3-arg
     // instance form (ArrayPositionFunction.java: the n-th occurrence,
     // negative n counts from the end; 0 raises).
-    fd("presto_contains") { a =>
+    native("presto_contains", 2) { a =>
       if (a(1).dataType == org.apache.spark.sql.types.NullType)
         Literal.create(null, org.apache.spark.sql.types.BooleanType)
       else ArrayContains(a(0), a(1))
     },
-    fd("presto_array_position") { a =>
+    native("presto_array_position", 2, 3) { a =>
       if (a(1).dataType == org.apache.spark.sql.types.NullType)
         Literal.create(null, LongType)
       else {
@@ -703,24 +661,20 @@ object PrestoFunctions {
     // with an occurrence count; strrpos counts occurrences from the
     // END). Spark's instr has no instance argument. A non-positive
     // instance raises like the reference's INVALID_FUNCTION_ARGUMENT.
-    fd("presto_strpos") {
+    native("presto_strpos", 2, 3) {
       case Seq(s, sub) => Cast(StringInstr(s, sub), LongType)
       case Seq(s, sub, n) => nthPosition(s, sub, n, fromEnd = false)
-      case args => throw new IllegalArgumentException(
-        s"strpos expects 2 or 3 arguments, got ${args.length}")
     },
-    fd("presto_strrpos") {
+    native("presto_strrpos", 2, 3) {
       case Seq(s, sub) =>
         nthPosition(s, sub, Literal(1), fromEnd = true)
       case Seq(s, sub, n) => nthPosition(s, sub, n, fromEnd = true)
-      case args => throw new IllegalArgumentException(
-        s"strrpos expects 2 or 3 arguments, got ${args.length}")
     },
     // array_intersect: NULL arrays propagate NULL (@SqlNullable), the
     // 1-arg form intersects an array OF arrays (ArrayIntersectFunction
     // .java both signatures), and decimal element types of different
     // scales unify like the reference's coercion.
-    fd("presto_array_intersect") { a =>
+    native("presto_array_intersect", 1, 2) { a =>
       if (a.exists(_.dataType == org.apache.spark.sql.types.NullType))
         Literal.create(null,
           a.map(_.dataType).find(_ != org.apache.spark.sql.types.NullType)
@@ -743,14 +697,14 @@ object PrestoFunctions {
         ArrayIntersect(l, r)
       }
     },
-    fd("presto_arrays_overlap") { a =>
+    native("presto_arrays_overlap", 2) { a =>
       val (l, r) = widenArrays(a(0), a(1))
       ArraysOverlap(l, r)
     },
     // width_bucket's ARRAY-of-bins form (MathFunctions.java
     // widthBucket(double, array<double>): the count of sorted bin
     // boundaries ≤ x); the 4-arg form is Spark's own builtin.
-    fd("width_bucket") {
+    native("width_bucket", 2, 4) {
       case Seq(x, bins) =>
         val b = NamedLambdaVariable("b", DoubleType, nullable = true)
         Cast(Size(ArrayFilter(
@@ -765,7 +719,7 @@ object PrestoFunctions {
     // (StringFunctions.java substr boundary contract —
     // TestStringFunctions "SUBSTR('Quadratically', -50)" → ""); Spark
     // clamps both to the whole string.
-    fd("presto_substr") { a =>
+    native("presto_substr", 2, 3) { a =>
       val s = a(0)
       val p = Cast(a(1), IntegerType)
       val empty = Or(EqualTo(p, Literal(0)),
@@ -779,7 +733,7 @@ object PrestoFunctions {
     },
     // is_nan(NULL) is NULL (@SqlNullable in MathFunctions.java isNaN);
     // Spark's isnan(NULL) is false.
-    fd("presto_is_nan") { a =>
+    native("presto_is_nan", 1) { a =>
       If(IsNull(a.head),
         Literal.create(null, org.apache.spark.sql.types.NullType),
         IsNaN(dbl(a.head)))
@@ -791,13 +745,13 @@ object PrestoFunctions {
     // the sign is split off explicitly and the magnitude lowercased.
     // Divergence: an invalid digit yields NULL (conv's behavior) where
     // the reference throws.
-    fd("to_base") { a =>
+    native("to_base", 2) { a =>
       val x = long(a(0))
       val r = Cast(a(1), IntegerType)
       val mag = Lower(Conv(Cast(Abs(x), StringType), Literal(10), r))
       If(LessThan(x, Literal(0L)), Concat(Seq(Literal("-"), mag)), mag)
     },
-    fd("from_base") { a =>
+    native("from_base", 2) { a =>
       val s = Cast(a(0), StringType)
       val r = Cast(a(1), IntegerType)
       val neg = StartsWith(s, Literal("-"))
@@ -827,7 +781,7 @@ object PrestoFunctions {
     // both as the SAME distinct aggregate makes Spark evaluate them
     // identically, where CollectSet's hash-set iteration order would
     // diverge from the distinct-rewrite's order
-    fd("set_agg") { a =>
+    native("set_agg", 1) { a =>
       CollectList(a.head).toAggregateExpression(isDistinct = true) },
     // reduce_agg(x, s0, inputFn, combineFn) (reference: presto-main/.../
     // operator/aggregation/ReduceAggregationFunction.java): the registry
@@ -836,8 +790,8 @@ object PrestoFunctions {
     // rule (CountIfRewrite.scala) swaps it for the native ReduceAgg
     // DeclarativeAggregate — constant-size state, map-side partial
     // aggregation through the user's combine lambda.
-    fd("reduce_agg") { a => ReduceAggCall(a(0), a(1), a(2), a(3)) },
-    fd("set_union") { a =>
+    native("reduce_agg", 4) { a => ReduceAggCall(a(0), a(1), a(2), a(3)) },
+    native("set_union", 1) { a =>
       // ZERO ROWS is NULL like the reference's default agg state; rows
       // that are all SQL NULL give [] (AbstractTestQueries testSetUnion
       // pins both: `values null,null,null` → array[], `… where x !=
@@ -853,29 +807,29 @@ object PrestoFunctions {
           CollectList(graft.functions.NullTypeAsArray(a.head))
             .toAggregateExpression()))))
     },
-    fd("checksum") { a => graft.functions.ChecksumAgg(a.head) },
-    fd("entropy") { a => graft.functions.EntropyAgg(a.head) },
+    native("checksum", 1) { a => graft.functions.ChecksumAgg(a.head) },
+    native("entropy", 1) { a => graft.functions.EntropyAgg(a.head) },
 
     // Datetime field functions where the NUMBERING differs (reference:
     // DateTimeFunctions.java:77 — joda dayOfWeek is ISO Monday=1, while
     // Spark's dayofweek is Sunday=1; Spark's weekday is Monday=0, so +1):
-    fd("day_of_week") { a => Add(WeekDay(a.head), Literal(1)) },
-    fd("dow") { a => Add(WeekDay(a.head), Literal(1)) },
-    fd("day_of_year") { a => DayOfYear(a.head) },
-    fd("doy") { a => DayOfYear(a.head) },
-    fd("week") { a => WeekOfYear(a.head) },
-    fd("week_of_year") { a => WeekOfYear(a.head) },
-    fd("year_of_week") { a => YearOfWeek(a.head) },
-    fd("yow") { a => YearOfWeek(a.head) },
-    fd("day_of_month") { a => DayOfMonth(Cast(a.head, DateType)) },
-    fd("last_day_of_month") { a => LastDay(Cast(a.head, DateType)) },
+    native("day_of_week", 1) { a => Add(WeekDay(a.head), Literal(1)) },
+    native("dow", 1) { a => Add(WeekDay(a.head), Literal(1)) },
+    native("day_of_year", 1) { a => DayOfYear(a.head) },
+    native("doy", 1) { a => DayOfYear(a.head) },
+    native("week", 1) { a => WeekOfYear(a.head) },
+    native("week_of_year", 1) { a => WeekOfYear(a.head) },
+    native("year_of_week", 1) { a => YearOfWeek(a.head) },
+    native("yow", 1) { a => YearOfWeek(a.head) },
+    native("day_of_month", 1) { a => DayOfMonth(Cast(a.head, DateType)) },
+    native("last_day_of_month", 1) { a => LastDay(Cast(a.head, DateType)) },
     // millisecond-of-second (reference: DateTimeFunctions.java millisecond
     // — the [0, 999] field, never negative for pre-epoch instants)
-    fd("millisecond") { a =>
+    native("millisecond", 1) { a =>
       Pmod(Cast(
         UnixMillis(Cast(a.head, TimestampType)), LongType), Literal(1000L)) },
-    fd("from_iso8601_date") { a => Cast(a.head, DateType) },
-    fd("from_iso8601_timestamp") { a => Cast(a.head, TimestampType) },
+    native("from_iso8601_date", 1) { a => Cast(a.head, DateType) },
+    native("from_iso8601_timestamp", 1) { a => Cast(a.head, TimestampType) },
 
     // at_timezone / with_timezone (reference: operator/scalar/
     // DateTimeFunctions.java — both return TIMESTAMP WITH TIME ZONE).
@@ -886,9 +840,9 @@ object PrestoFunctions {
     //   with_timezone(ts, tz) → the instant whose wall-clock in tz is ts
     // Both stay TIMESTAMP; CurrentTimeZone() keeps them in step with
     // SET spark.sql.session.timeZone like the rest of the dialect.
-    fd("at_timezone") { a =>
+    native("at_timezone", 2) { a =>
       FromUTCTimestamp(ToUTCTimestamp(a(0), CurrentTimeZone()), a(1)) },
-    fd("with_timezone") { a =>
+    native("with_timezone", 2) { a =>
       FromUTCTimestamp(ToUTCTimestamp(a(0), a(1)), CurrentTimeZone()) },
 
     // to_unixtime / from_unixtime (reference: DateTimeFunctions.java):
@@ -897,8 +851,8 @@ object PrestoFunctions {
     // TIMESTAMP (Spark's builtin formats a string). The 2- and 3-arg
     // forms return TSWTZ in the reference — narrowed per README "Time
     // zone semantics" to the wall-clock in the given zone / fixed offset.
-    fd("to_unixtime") { a => Cast(Cast(a.head, TimestampType), DoubleType) },
-    fd("from_unixtime") {
+    native("to_unixtime", 1) { a => Cast(Cast(a.head, TimestampType), DoubleType) },
+    native("from_unixtime", 1, 3) {
       case Seq(u) => SecondsToTimestamp(dbl(u))
       case Seq(u, tz) =>
         FromUTCTimestamp(
@@ -915,13 +869,11 @@ object PrestoFunctions {
           Remainder(absT, Literal(60L)))
         FromUTCTimestamp(
           ToUTCTimestamp(SecondsToTimestamp(dbl(u)), CurrentTimeZone()), zone)
-      case a => throw new IllegalArgumentException(
-        s"from_unixtime expects 1 to 3 arguments, got ${a.length}")
     },
     // localtimestamp(p): precision is accepted and ignored (Spark
     // timestamps are fixed micros); the bare no-parens keyword form is
     // rewritten by the dialect scanner.
-    fd("localtimestamp") { _ => CurrentTimestamp() },
+    native("localtimestamp", 0, 1) { _ => CurrentTimestamp() },
 
     // (Presto's 3-arg date_add/date_diff are handled in [[graft.Dialect]]:
     // Spark 4 ships its own 3-arg forms that the analyzer resolves ahead
@@ -932,12 +884,12 @@ object PrestoFunctions {
     // UrlFunctions.java) → Spark's ParseUrl with failOnError=false so a
     // malformed URL yields NULL like the reference, not an ANSI error.
     // PORT has no ParseUrl part — extracted from AUTHORITY.
-    fd("url_extract_protocol") { a => parseUrl(a.head, "PROTOCOL") },
-    fd("url_extract_host") { a => parseUrl(a.head, "HOST") },
-    fd("url_extract_path") { a => parseUrl(a.head, "PATH") },
-    fd("url_extract_query") { a => parseUrl(a.head, "QUERY") },
-    fd("url_extract_fragment") { a => parseUrl(a.head, "REF") },
-    fd("url_extract_port") { a =>
+    native("url_extract_protocol", 1) { a => parseUrl(a.head, "PROTOCOL") },
+    native("url_extract_host", 1) { a => parseUrl(a.head, "HOST") },
+    native("url_extract_path", 1) { a => parseUrl(a.head, "PATH") },
+    native("url_extract_query", 1) { a => parseUrl(a.head, "QUERY") },
+    native("url_extract_fragment", 1) { a => parseUrl(a.head, "REF") },
+    native("url_extract_port", 1) { a =>
       Cast(
         new NullIf(
           RegExpExtract(
@@ -956,7 +908,7 @@ object PrestoFunctions {
     // .java) — the 3-arg form is Catalyst's StringToMap (same contract
     // and argument order, both raise on duplicate keys); the 4-arg form
     // resolves duplicates through the lambda (functions/SplitToMapLambda).
-    fd("split_to_map") {
+    native("split_to_map", 3, 4) {
       case Seq(s, ed, kvd, f: LambdaFunction) =>
         SplitToMapLambda(s, ed, kvd, f)
       case a => StringToMap(a(0), a(1), a(2))
@@ -965,13 +917,13 @@ object PrestoFunctions {
     // infinity/nan literals and finiteness predicates (reference:
     // MathFunctions.java infinity/nan/isFinite/isInfinite; Spark has
     // isnan but no spelled constants or finiteness tests):
-    fd("infinity") { _ => Literal(Double.PositiveInfinity) },
-    fd("nan") { _ => Literal(Double.NaN) },
-    fd("is_finite") { a =>
+    native("infinity", 0) { _ => Literal(Double.PositiveInfinity) },
+    native("nan", 0) { _ => Literal(Double.NaN) },
+    native("is_finite", 1) { a =>
       val x = dbl(a.head)
       And(Not(IsNaN(x)), LessThan(Abs(x), Literal(Double.PositiveInfinity)))
     },
-    fd("is_infinite") { a =>
+    native("is_infinite", 1) { a =>
       EqualTo(Abs(dbl(a.head)), Literal(Double.PositiveInfinity))
     },
 
@@ -980,16 +932,8 @@ object PrestoFunctions {
     // the reference uses), the registered UDF counts the children of the
     // extracted text. json_array_contains dispatches on the VALUE
     // argument's type like the reference's overloads.
-    fd("json_size") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
-      catalog.lookupFunction(
-        FunctionIdentifier("json_size_text"),
-        Seq(GetJsonObject(a(0), a(1))))
-    },
-    fd("json_array_contains") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
+    native("json_size", 2) { a => call("json_size_text", GetJsonObject(a(0), a(1))) },
+    native("json_array_contains", 2) { a =>
       // the reference's overloads are TOKEN-TYPE strict
       // (JsonFunctions.java jsonArrayContains(bigint) matches only
       // VALUE_NUMBER_INT tokens, (double) only VALUE_NUMBER_FLOAT —
@@ -1004,36 +948,28 @@ object PrestoFunctions {
         else if (a(1).resolved && a(1).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
           ("json_array_contains_num", Cast(a(1), DoubleType))
         else ("json_array_contains_str", Cast(a(1), StringType))
-      catalog.lookupFunction(FunctionIdentifier(name), Seq(a(0), v))
+      call(name, a(0), v)
     },
 
     // to_utf8 / from_utf8 (reference: scalar/StringFunctions.java
     // toUtf8/fromUtf8) → Catalyst Encode/StringDecode over UTF-8; invalid
     // sequences decode to U+FFFD on both sides. normalize dispatches its
     // optional form argument (NFC default) to the registered UDF.
-    fd("to_utf8") { a => Encode(a.head, Literal("UTF-8")) },
+    native("to_utf8", 1) { a => Encode(a.head, Literal("UTF-8")) },
     // from_utf8 is LENIENT (StringFunctions.java fromUtf8: invalid
     // sequences become U+FFFD, or the caller's replacement character /
     // codepoint, '' drops them) — Spark's ANSI decode RAISES
     // MALFORMED_CHARACTER_CODING instead, so the decode runs in the
     // registered lenient UDF.
-    fd("from_utf8") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
+    native("from_utf8", 1, 2) { a =>
       val repl: Expression =
         if (a.lengthCompare(1) == 0) Literal("�")
-        else if (isIntegralTyped(a(1)))
-          catalog.lookupFunction(
-            FunctionIdentifier("presto_chr"), Seq(long(a(1))))
+        else if (isIntegralTyped(a(1))) call("presto_chr", long(a(1)))
         else Cast(a(1), StringType)
-      catalog.lookupFunction(
-        FunctionIdentifier("from_utf8_lenient"), Seq(a.head, repl))
+      call("from_utf8_lenient", a.head, repl)
     },
-    fd("normalize") { a =>
-      val form = if (a.length > 1) a(1) else Literal("NFC")
-      org.apache.spark.sql.SparkSession.active.sessionState.catalog
-        .lookupFunction(
-          FunctionIdentifier("unicode_normalize"), Seq(a.head, form))
+    native("normalize", 1, 2) { a =>
+      call("unicode_normalize", a.head, if (a.length > 1) a(1) else Literal("NFC"))
     },
 
     // Color/visualization scalars (reference: scalar/ColorFunctions.java,
@@ -1044,45 +980,22 @@ object PrestoFunctions {
     // color(x, lo, hi, low, high) both HSB-interpolating, render by
     // argument shape (1-arg boolean ✓/✗ form), bar with the documented
     // red→green defaults.
-    fd("color") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
-      a match {
-        case Seq(s) =>
-          catalog.lookupFunction(
-            FunctionIdentifier("graft_color_parse"), Seq(Cast(s, StringType)))
-        case Seq(f, lo, hi) =>
-          catalog.lookupFunction(
-            FunctionIdentifier("graft_color_interp"),
-            Seq(dbl(f), long(lo), long(hi)))
-        case Seq(x, lo, hi, lc, hc) =>
-          catalog.lookupFunction(
-            FunctionIdentifier("graft_color_interp"),
-            Seq(Divide(Subtract(dbl(x), dbl(lo)), Subtract(dbl(hi), dbl(lo))),
-              long(lc), long(hc)))
-        case args => throw new IllegalArgumentException(
-          s"color expects 1, 3, or 5 arguments, got ${args.length}")
-      }
+    native("color", 1, 5) {
+      case Seq(s) => call("graft_color_parse", Cast(s, StringType))
+      case Seq(f, lo, hi) => call("graft_color_interp", dbl(f), long(lo), long(hi))
+      case Seq(x, lo, hi, lc, hc) =>
+        call("graft_color_interp",
+          Divide(Subtract(dbl(x), dbl(lo)), Subtract(dbl(hi), dbl(lo))),
+          long(lc), long(hc))
+      case args => throw new IllegalArgumentException(
+        s"color expects 1, 3, or 5 arguments, got ${args.length}")
     },
-    fd("rgb") { a =>
-      org.apache.spark.sql.SparkSession.active.sessionState.catalog
-        .lookupFunction(FunctionIdentifier("graft_color_rgb"),
-          Seq(long(a(0)), long(a(1)), long(a(2))))
+    native("rgb", 3) { a =>
+      call("graft_color_rgb", long(a(0)), long(a(1)), long(a(2)))
     },
-    fd("render") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
-      a match {
-        case Seq(b) =>
-          catalog.lookupFunction(
-            FunctionIdentifier("graft_color_render_bool"), Seq(b))
-        case Seq(v, c) =>
-          catalog.lookupFunction(
-            FunctionIdentifier("graft_color_render"),
-            Seq(Cast(v, StringType), long(c)))
-        case args => throw new IllegalArgumentException(
-          s"render expects 1 or 2 arguments, got ${args.length}")
-      }
+    native("render", 1, 2) {
+      case Seq(b) => call("graft_color_render_bool", b)
+      case Seq(v, c) => call("graft_color_render", Cast(v, StringType), long(c))
     },
     // secure_random / secure_rand (reference: scalar/MathFunctions.java
     // :699-797): 0-arg → double in [0,1); 2-arg → same type as the
@@ -1091,8 +1004,8 @@ object PrestoFunctions {
     // tinyint/smallint/integer/bigint overloads); anything else runs in
     // double. The UDFs are registered asNondeterministic with a real
     // per-thread SecureRandom (functions/MiscExtras.scala).
-    fd("secure_random") { a => secureRandomBuilder(a) },
-    fd("secure_rand") { a => secureRandomBuilder(a) },
+    native("secure_random", 0, 2) { a => secureRandomBuilder(a) },
+    native("secure_rand", 0, 2) { a => secureRandomBuilder(a) },
 
     // Polymorphic merge(sketch) (reference: aggregation/MergeFunction —
     // one name across HyperLogLog / qdigest / tdigest / KHyperLogLog).
@@ -1101,8 +1014,7 @@ object PrestoFunctions {
     // distinct Spark types (binary / array<bigint> / array<double> /
     // array<struct>). SetDigest keeps merge_set_digest, same as the
     // reference.
-    fd("merge") { a =>
-      require(a.length == 1, s"merge expects 1 argument, got ${a.length}")
+    native("merge", 1) { a =>
       val name = a.head.dataType match {
         case org.apache.spark.sql.types.BinaryType => "merge_hll"
         case org.apache.spark.sql.types.ArrayType(
@@ -1114,21 +1026,17 @@ object PrestoFunctions {
         case dt => throw new IllegalArgumentException(
           s"merge: not a sketch state type: ${dt.simpleString}")
       }
-      org.apache.spark.sql.SparkSession.active.sessionState.catalog
-        .lookupFunction(FunctionIdentifier(name), a)
+      call(name, a: _*)
     },
 
-    fd("bar") { a =>
-      val catalog =
-        org.apache.spark.sql.SparkSession.active.sessionState.catalog
+    native("bar", 2, 4) { a =>
       val (lo, hi) = a match {
         case Seq(_, _) => (Literal(0xFF0000L), Literal(0x00FF00L))
         case Seq(_, _, lc, hc) => (long(lc), long(hc))
         case args => throw new IllegalArgumentException(
           s"bar expects 2 or 4 arguments, got ${args.length}")
       }
-      catalog.lookupFunction(FunctionIdentifier("graft_color_bar"),
-        Seq(dbl(a(0)), long(a(1)), lo, hi))
+      call("graft_color_bar", dbl(a(0)), long(a(1)), lo, hi)
     },
 
     // approx_percentile under the reference's overload set (reference:
@@ -1144,7 +1052,7 @@ object PrestoFunctions {
     // 4-arg weighted form's accuracy argument is accepted and ignored —
     // the t-digest compression is fixed, like the reference's qdigest
     // accuracy floor.
-    fd("approx_percentile") {
+    native("approx_percentile", 2, 4) {
       case Seq(x, p) => new ApproximatePercentile(x, p)
       case Seq(x, w, p) if !isPercentageShape(w) => weightedPercentile(x, w, p)
       case Seq(x, p, acc) => new ApproximatePercentile(x, p, sparkAccuracy(acc))
@@ -1162,14 +1070,14 @@ object PrestoFunctions {
     // algebraically from Spark's value k and n:
     //   presto = (n−1)·((n+1)(k+3) − 3(n−1)) / ((n−2)(n−3)),  NULL if n<4
     // Composed from two Catalyst aggregates + arithmetic — stays codegen.
-    fd("skewness") { a =>
+    native("skewness", 1) { a =>
       val x = dbl(a.head)
       If(
         LessThan(Count(x).toAggregateExpression(), Literal(3L)),
         Literal(null, DoubleType),
         new Skewness(x).toAggregateExpression())
     },
-    fd("kurtosis") { a =>
+    native("kurtosis", 1) { a =>
       val x = dbl(a.head)
       val n = Cast(Count(x).toAggregateExpression(), DoubleType)
       val k = new Kurtosis(x).toAggregateExpression()
@@ -1187,24 +1095,22 @@ object PrestoFunctions {
 
     // Session/introspection trivia scalars (see graft.functions.
     // TriviaScalars for semantics + reference files):
-    fd("typeof") { a => graft.functions.TriviaScalars.TypeOfPresto(a.head) },
-    fd("parse_presto_data_size") { a =>
+    native("typeof", 1) { a => graft.functions.TriviaScalars.TypeOfPresto(a.head) },
+    native("parse_presto_data_size", 1) { a =>
       graft.functions.TriviaScalars.ParsePrestoDataSize(a.head) },
 
     // wilson_interval_lower/upper (reference: operator/scalar/
     // WilsonInterval.java) — pure Catalyst arithmetic, fully codegen'd:
     //   (p̂ + z²/2n ± z·sqrt(p̂(1−p̂)/n + z²/4n²)) / (1 + z²/n)
-    fd("wilson_interval_lower") { a => wilsonInterval(a(0), a(1), a(2), -1) },
-    fd("wilson_interval_upper") { a => wilsonInterval(a(0), a(1), a(2), 1) },
+    native("wilson_interval_lower", 3) { a => wilsonInterval(a(0), a(1), a(2), -1) },
+    native("wilson_interval_upper", 3) { a => wilsonInterval(a(0), a(1), a(2), 1) },
 
     // Canonical orderable form of a map — sorted entry array (reference:
     // presto-main/.../operator/scalar/MapEqualOperator.java defines map
     // equality; Spark cannot GROUP BY / DISTINCT a map column, so the
     // documented shim is GROUP BY map_canon(m), which is equality-
     // equivalent: two maps are equal iff their sorted entry lists are).
-    fd("map_canon") { a => new SortArray(MapEntries(a.head)) },
+    native("map_canon", 1) { a => new SortArray(MapEntries(a.head)) },
   )
 
-  def registerAll(ext: SparkSessionExtensions): Unit =
-    all.foreach(ext.injectFunction)
 }

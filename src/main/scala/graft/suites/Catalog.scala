@@ -1,7 +1,6 @@
 package graft.suites
 
 import graft.{Engine, Qdef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Function-catalog completion corpus: the reference functions landed in
@@ -14,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Catalog {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.Engine.registerFunctions(s)
-    Tables.load(s, dir, name)
-  }
-
   val defs: Seq[Qdef] = Seq(
 
     // checksum (reference: ChecksumAggregationFunction.java): the value is
@@ -28,7 +22,7 @@ object Catalog {
     Qdef(
       "k01_checksum",
       "SELECT true AS stable_ok, true AS sensitive_ok") { (s, dir) =>
-      val li = t(s, dir, "lineitem")
+      val li = Tables.load(s, dir, "lineitem")
       val c1 = li.agg(expr("checksum(l_extendedprice)").as("c1"))
       val c2 = li.repartition(64, col("l_partkey"))
         .agg(expr("checksum(l_extendedprice)").as("c2"))
@@ -51,7 +45,7 @@ object Catalog {
         |  FROM orders GROUP BY o_orderstatus, o_orderpriority)
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("c"))
         .groupBy("o_orderstatus")
@@ -74,7 +68,7 @@ object Catalog {
         |    AS all_statuses
         |  FROM lineitem) u
         |ORDER BY g.l_returnflag""".stripMargin) { (s, dir) =>
-      val perGroup = t(s, dir, "lineitem")
+      val perGroup = Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr("set_agg(l_linestatus)").as("st"))
         .select(
@@ -99,7 +93,7 @@ object Catalog {
         |  SELECT o_orderstatus || ':' ||
         |    string_agg(o_orderpriority, ',' ORDER BY o_orderpriority) AS kv
         |  FROM orders GROUP BY o_orderstatus)""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .agg(expr("multimap_agg(o_orderstatus, o_orderpriority)").as("m"))
         .select(concat_ws(";",
           array_sort(expr(
@@ -115,7 +109,7 @@ object Catalog {
     Qdef(
       "k05_numeric_histogram",
       "SELECT true AS buckets_ok, true AS weight_ok, true AS mean_ok") { (s, dir) =>
-      val ord = t(s, dir, "orders")
+      val ord = Tables.load(s, dir, "orders")
       val h = ord.agg(
         expr("numeric_histogram(10L, o_totalprice)").as("h"),
         count(lit(1)).cast("double").as("n"),
@@ -140,7 +134,7 @@ object Catalog {
         |  concat('87aa7cdea5ef619d4ff0b4241a1d6cb02379f4e2ce4ec2787ad0b305',
         |         '45e17cdedaa833b7d6b8a702038b274eaea3f4e4be9d914eeb61f1702e696c203a126854')
         |    AS h_sha512""".stripMargin) { (s, dir) =>
-      t(s, dir, "region").limit(1)
+      Tables.load(s, dir, "region").limit(1)
         .select(
           lower(hex(expr(
             "hmac_md5(CAST('Hi There' AS BINARY), unhex('0b0b0b0b0b0b0b0b0b0b0b0b0b0b0b0b'))")))
@@ -168,7 +162,7 @@ object Catalog {
         |  '0.6,0.8' AS normalized,
         |  'a:1,b:2' AS smap,
         |  'a:1|2,b:3' AS mm""".stripMargin) { (s, dir) =>
-      t(s, dir, "region").limit(1)
+      Tables.load(s, dir, "region").limit(1)
         .select(
           concat_ws(",", expr(
             "transform(ngrams(array('a','b','c','d'), 2), g -> concat_ws('_', g))"))
@@ -220,7 +214,7 @@ object Catalog {
         |JOIN norms n1 ON p.id1 = n1.doc_id
         |JOIN norms n2 ON p.id2 = n2.doc_id
         |ORDER BY p.id1, p.id2""".stripMargin) { (s, dir) =>
-      val tf = t(s, dir, "documents")
+      val tf = Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 4)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w")
@@ -247,7 +241,7 @@ object Catalog {
         |FROM orders
         |GROUP BY o_orderpriority, o_orderstatus
         |ORDER BY m_key""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .select(expr(
           "map('status', o_orderstatus, 'prio', o_orderpriority)").as("m"))
         .groupBy(expr("map_canon(m)").as("mc"))
@@ -278,7 +272,6 @@ object Catalog {
         |  ('sky', 'sky'), ('troubled', 'troubl')
         |) AS t(word, stemmed)
         |ORDER BY word""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       val words = Seq(
         "caresses", "ponies", "ties", "cats", "feed", "agreed", "plastered",
         "motoring", "hopping", "falling", "hissing", "fizzed", "filing",
@@ -313,7 +306,6 @@ object Catalog {
         |  ('fi', 'edeltäjien', 'edeltäj')
         |) AS t(lang, word, stemmed)
         |ORDER BY lang, word""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       val rows = Seq(
         ("sv", "klubbarna"), ("sv", "skrattade"), ("sv", "verkligt"),
         ("sv", "husens"),
@@ -346,7 +338,6 @@ object Catalog {
         |  ('copiii', 'copii'), ('zise', 'zis')
         |) AS t(word, stemmed)
         |ORDER BY word""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       val words = Seq(
         "copilului", "florile", "capabile", "durabilitate",
         "comunicativitate", "contribuţiune", "acţiunile", "lucrează",
@@ -953,12 +944,12 @@ object Catalog {
       def canon(c: String): org.apache.spark.sql.Column = expr(
         s"array_join(array_sort(transform(map_entries($c), " +
           s"e -> concat(e.key, '=', CAST(e.value AS STRING)))), ',')")
-      val per = t(s, dir, "orders")
+      val per = Tables.load(s, dir, "orders")
         .groupBy(col("o_orderstatus").as("st"), col("o_orderpriority").as("p"))
         .agg(count(lit(1)).as("c"), min(col("o_orderkey")).as("mk"))
-      val h = t(s, dir, "orders").groupBy(col("o_orderstatus").as("st"))
+      val h = Tables.load(s, dir, "orders").groupBy(col("o_orderstatus").as("st"))
         .agg(expr("histogram(o_orderpriority)").as("hm"))
-      val am = t(s, dir, "orders").groupBy(col("o_orderstatus").as("st2"))
+      val am = Tables.load(s, dir, "orders").groupBy(col("o_orderstatus").as("st2"))
         .agg(expr("approx_most_frequent(3, o_orderpriority, 8)").as("tm"))
       val ma = per.groupBy(col("st").as("st3"))
         .agg(expr("map_agg(p, CAST(mk AS STRING))").as("mm"))

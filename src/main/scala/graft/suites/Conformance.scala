@@ -127,7 +127,6 @@ object Conformance {
         |  CAST(NULL AS DOUBLE) AS td_p50,
         |  CAST(NULL AS DOUBLE) AS qd_p50
         |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       t(s, dir, "orders").filter(col("o_orderkey") < 0)
         .agg(
           expr("checksum(o_totalprice)").as("cksum"),

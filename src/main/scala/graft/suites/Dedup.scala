@@ -170,7 +170,6 @@ object Dedup {
         |FROM documents
         |ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 16)
         |LIMIT 10""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       t(s, dir, "documents")
         .repartition(64)
         .agg(expr("bottom_k_sample(CAST(doc_id AS STRING), 10L)").as("sample"))
@@ -276,7 +275,6 @@ object Dedup {
         |FROM documents
         |ORDER BY substr(md5('graft-r9:' || CAST(doc_id AS VARCHAR)), 1, 16)
         |LIMIT 12""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       t(s, dir, "documents")
         .repartition(64)
         .agg(expr("reservoir_sample(CAST(doc_id AS STRING), 12L, 'graft-r9')")

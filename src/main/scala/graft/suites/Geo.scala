@@ -43,7 +43,6 @@ object Geo {
         |     + power((s_suppkey * 13) % 100 - 50.0, 2)) AS dist_c
         |FROM supplier
         |ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "supplier")
         .selectExpr(
           "s_suppkey",
@@ -68,7 +67,6 @@ object Geo {
         |  count(*) FILTER (WHERE abs((c_custkey * 3) % 101 - 50)
         |    + abs((c_custkey * 11) % 101 - 50) > 50) AS n_outside
         |FROM customer""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       val diamond = "POLYGON ((50 0, 100 50, 50 100, 0 50, 50 0))"
       t(s, dir, "customer")
         .selectExpr(
@@ -95,7 +93,6 @@ object Geo {
         |    + sqrt(power(n_nationkey % 5, 2) + power(n_nationkey % 7 + 5, 2)) AS border_len
         |FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "nation")
         .selectExpr(
           "n_nationkey",
@@ -160,7 +157,6 @@ object Geo {
         | AND (c_custkey * 11) % 101 < (n_nationkey * 11) % 50 + 9
         |GROUP BY n_nationkey
         |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       val rects = t(s, dir, "nation").selectExpr(
         "n_nationkey",
         """concat('POLYGON ((',
@@ -207,7 +203,6 @@ object Geo {
         |  || CAST(tx % 2 + 2 * (ty % 2) AS VARCHAR) AS quadkey
         |FROM txy
         |ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "part")
         .selectExpr(
           "p_partkey",
@@ -237,7 +232,6 @@ object Geo {
         |        * cos(radians((p_partkey * 29) % 360 - 180 + 0.3) - radians(-74.0))) AS km
         |FROM part
         |ORDER BY p_partkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "part")
         .selectExpr(
           "p_partkey",
@@ -334,7 +328,6 @@ object Geo {
         |  d.dissolved
         |FROM hulls h JOIN dis d ON h.nk = d.nk
         |ORDER BY s_nationkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "supplier")
         .selectExpr("s_nationkey", "s_suppkey % 50 AS x")
         .groupBy(col("s_nationkey"))
@@ -364,7 +357,6 @@ object Geo {
         |WHERE power((s_suppkey * 7) % 100 - (c_custkey * 3) % 101, 2)
         |    + power((s_suppkey * 13) % 100 - (c_custkey * 11) % 101, 2) <= 25
         |ORDER BY s_suppkey, c_custkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       val sup = t(s, dir, "supplier").selectExpr(
         "s_suppkey",
         "CAST((s_suppkey * 7) % 100 AS DOUBLE) AS sx",
@@ -408,7 +400,6 @@ object Geo {
         |  count(*) FILTER (WHERE abs((c_custkey * 3) % 101 - 50)
         |    + abs((c_custkey * 11) % 101 - 50) > 50) AS n_disjoint
         |FROM customer""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       val diamond = "POLYGON ((50 0, 100 50, 50 100, 0 50, 50 0))"
       t(s, dir, "customer")
         .selectExpr(
@@ -460,7 +451,6 @@ object Geo {
         |    - greatest(0, (7 * n_nationkey) % 30 - 5)) > 0 AS interiors_meet
         |FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
-      Engine.registerFunctions(s)
       t(s, dir, "nation")
         .selectExpr(
           "n_nationkey",

@@ -1,7 +1,6 @@
 package graft.suites
 
 import graft.{Qdef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** presto-ml + presto-i18n corpus (reference: presto-ml/.../MLFunctions.java,
@@ -23,11 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Ml {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.Engine.registerFunctions(s)
-    Tables.load(s, dir, name)
-  }
-
   val defs: Seq[Qdef] = Seq(
 
     // Train-as-an-aggregate, per group: the fitted single-feature
@@ -44,7 +38,7 @@ object Ml {
         |FROM lineitem
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
+      Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(expr("learn_regressor(l_extendedprice, features(l_quantity))").as("m"))
         .selectExpr(
@@ -63,7 +57,7 @@ object Ml {
     Qdef(
       "ml02_classifier_recovery",
       "SELECT true AS bigint_acc_ok, true AS varchar_acc_ok, true AS two_classes") { (s, dir) =>
-      val docs = t(s, dir, "documents")
+      val docs = Tables.load(s, dir, "documents")
         .selectExpr(
           "CASE WHEN n_chars >= 200 THEN 1L ELSE 0L END AS label",
           "CASE WHEN n_chars >= 200 THEN 'long' ELSE 'short' END AS vlabel",
@@ -121,7 +115,7 @@ object Ml {
         |         '' ORDER BY label) AS report
         |FROM per_label, tot
         |GROUP BY correct, total""".stripMargin) { (s, dir) =>
-      t(s, dir, "documents")
+      Tables.load(s, dir, "documents")
         .filter(col("doc_id") < 40)
         .selectExpr(
           "CAST(doc_id % 3 AS STRING) AS truth",
@@ -138,7 +132,7 @@ object Ml {
     Qdef(
       "ml04_regress_apply",
       "SELECT true AS preds_close, true AS libsvm_model_identical, CAST(1 AS BIGINT) AS models") { (s, dir) =>
-      val li = t(s, dir, "lineitem")
+      val li = Tables.load(s, dir, "lineitem")
       val models = li.agg(
         expr("learn_regressor(l_extendedprice, features(l_quantity, l_discount))").as("m"),
         expr("learn_libsvm_regressor(l_extendedprice, features(l_quantity, l_discount), 'C=1,kernel=linear')").as("ml"))
@@ -196,7 +190,6 @@ object Ml {
         |FROM (SELECT 1 AS id UNION ALL SELECT 2 UNION ALL SELECT 3
         |      UNION ALL SELECT 4) v
         |ORDER BY id""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       import s.implicits._
       // reference vectors (TestMyanmarFunctions.java:36-52): U+1095 (Zawgyi
       // glyph block); a Zawgyi sentence using visible-asat U+1039 +

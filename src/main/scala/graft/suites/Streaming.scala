@@ -176,7 +176,6 @@ object Streaming {
         |FROM events
         |GROUP BY event_type
         |ORDER BY event_type""".stripMargin) { (s, dir) =>
-      graft.Engine.registerFunctions(s)
       val stream = StreamingOps.streamEvents(s, dir)
         .groupBy(col("event_type"))
         .agg(expr("tdigest_agg(value)").as("td"))

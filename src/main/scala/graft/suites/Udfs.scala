@@ -2,21 +2,13 @@ package graft.suites
 
 import graft.{Engine, Qdef, Tables}
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Registered-function corpus (SURVEY §2.11): typed Aggregator UDAFs and
-  * scalar UDFs registered on the session and invoked THROUGH SQL — the
-  * same path a user of Engine.sql gets.
+  * scalar UDFs from the session's function catalog, invoked THROUGH SQL
+  * — the same path a user of Engine.sql gets.
   */
 object Udfs {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // the full catalog in one call — per-family lists here would drift
-    // from what Engine.session gives a real user
-    graft.Engine.registerFunctions(s)
-    Tables.load(s, dir, name)
-  }
 
   val defs: Seq[Qdef] = Seq(
 
@@ -31,7 +23,7 @@ object Udfs {
         |  FROM orders GROUP BY 1, 2)
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .selectExpr("o_orderstatus", "map(o_orderpriority, 1L) AS m")
         .groupBy("o_orderstatus")
         .agg(expr("map_union_sum(m)").as("merged"))
@@ -50,7 +42,7 @@ object Udfs {
         |FROM lineitem
         |GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
+      Tables.load(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(round(expr("geometric_mean(l_extendedprice)"), 4).as("geo_price"))
         .orderBy("l_returnflag")
@@ -65,7 +57,7 @@ object Udfs {
         |FROM part
         |GROUP BY 1
         |ORDER BY stemmed""".stripMargin) { (s, dir) =>
-      t(s, dir, "part")
+      Tables.load(s, dir, "part")
         .selectExpr("word_stem_lite(p_name) AS stemmed")
         .groupBy("stemmed")
         .agg(count(lit(1)).as("cnt"))
@@ -82,7 +74,7 @@ object Udfs {
       """SELECT DISTINCT l_returnflag, true AS card_ok
         |FROM lineitem
         |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
+      val li = Tables.load(s, dir, "lineitem")
       val perGroup = li.groupBy("l_returnflag", "l_linestatus")
         .agg(expr("approx_set_agg(xxhash64(l_partkey))").as("hll"))
       val merged = perGroup.groupBy("l_returnflag")
@@ -103,7 +95,7 @@ object Udfs {
       "c05_qdigest_merge",
       """SELECT true AS p50_ok, true AS p90_ok
         |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      val ord = t(s, dir, "orders")
+      val ord = Tables.load(s, dir, "orders")
       val perStatus = ord.groupBy("o_orderstatus")
         .agg(expr("qdigest_agg(o_totalprice)").as("qd"))
       val merged = perStatus
@@ -129,7 +121,7 @@ object Udfs {
       "c06_tdigest_merge",
       """SELECT true AS p50_ok, true AS p90_ok, true AS p99_ok, true AS inv_ok
         |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      val ord = t(s, dir, "orders")
+      val ord = Tables.load(s, dir, "orders")
       val perStatus = ord.groupBy("o_orderstatus")
         .agg(expr("tdigest_agg(o_totalprice)").as("td"))
       val merged = perStatus
@@ -161,7 +153,7 @@ object Udfs {
     Qdef(
       "c10_weighted_percentile",
       """SELECT true AS wp50_ok, true AS wp90_ok FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      val ord = t(s, dir, "orders")
+      val ord = Tables.load(s, dir, "orders")
         .select(col("o_totalprice").as("x"),
           (col("o_orderkey") % 3 + 1).cast("double").as("w"))
       val est = Engine.sql(s, dir,
@@ -194,7 +186,7 @@ object Udfs {
       "c07_set_digest",
       """SELECT true AS merge_ok, true AS card_ok, true AS inter_ok, true AS jac_ok
         |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      val toks = t(s, dir, "documents")
+      val toks = Tables.load(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"), col("lang"),
           explode(split(col("text"), " ")).as("tok"))
@@ -241,7 +233,7 @@ object Udfs {
       "c08_khyperloglog",
       """SELECT true AS merge_ok, true AS card_ok, true AS dist_ok, true AS reid_ok
         |FROM (SELECT 1) one""".stripMargin) { (s, dir) =>
-      val ord = t(s, dir, "orders")
+      val ord = Tables.load(s, dir, "orders")
         .select((col("o_custkey") % 3000).cast("string").as("x"),
           col("o_orderpriority").as("y"), col("o_orderstatus"))
       val direct = ord.agg(expr("khyperloglog_agg(x, y)").as("d"))
@@ -303,7 +295,7 @@ object Udfs {
         |  round(i / 8.0, 6) AS thr
         |FROM m, tot
         |ORDER BY i""".stripMargin) { (s, dir) =>
-      val d = t(s, dir, "orders").select(
+      val d = Tables.load(s, dir, "orders").select(
         ((col("o_orderkey") % 16).cast("double") / 16.0).as("pred"),
         (col("o_orderstatus") === "F").as("label"))
       d.agg(

@@ -19,6 +19,20 @@ class FacadeSpec extends AnyFunSuite {
   private def one(sql: String): Any =
     Engine.sql(spark, dir, sql).collect()(0).get(0)
 
+  test("Engine.sql fails loudly on a session built without GraftExtensions") {
+    // a second session on the same context, without the extension
+    val bare = org.apache.spark.sql.SparkSession.builder().create()
+    val e = intercept[IllegalStateException](Engine.sql(bare, dir, "SELECT 1"))
+    assert(e.getMessage.contains("graft.plans.GraftExtensions"), e.getMessage)
+  }
+
+  test("Engine.session keeps a master already set in conf") {
+    import org.apache.spark.SparkConf
+    assert(Engine.masterFor(
+      new SparkConf(false).set("spark.master", "local[3]"), cores = 8) == "local[3]")
+    assert(Engine.masterFor(new SparkConf(false), cores = 8) == "local[8]")
+  }
+
   test("custom aggregates resolve through bare Engine.sql") {
     assert(one("SELECT cardinality(map_union_sum(m)) FROM (SELECT map(ARRAY['a'], ARRAY[1L]) AS m)") == 1)
     assert(one("SELECT round(geometric_mean(x), 4) FROM (VALUES (2.0), (8.0)) t(x)")

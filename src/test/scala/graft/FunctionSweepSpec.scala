@@ -93,7 +93,6 @@ class FunctionSweepSpec extends AnyFunSuite {
 
   test("every reference function name resolves or is documented-deferred") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     val reg = s.sessionState.functionRegistry
     val unresolved = referenceNames.filterNot { n =>
       val t = Dialect.functionAliases.getOrElse(n, n)

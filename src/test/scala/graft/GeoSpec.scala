@@ -151,7 +151,6 @@ class GeoSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   test("geospatial scalars through SQL") {
-    Engine.registerFunctions(spark)
     val row = spark.sql(
       """SELECT
         |  st_astext(st_point(1, 2)) AS wkt,
@@ -176,7 +175,6 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("null geometry inputs propagate NULL through the scalar surface") {
-    Engine.registerFunctions(spark)
     val row = spark.sql(
       """SELECT st_astext(CAST(NULL AS STRING)) AS a,
         |       st_distance(CAST(NULL AS STRING), 'POINT (0 0)') AS b,
@@ -298,7 +296,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("accessor arrays, flatten, envelope expansion through SQL") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     def one(sql: String): Any = s.sql(sql).collect()(0).get(0)
     assert(one("SELECT st_points('LINESTRING (0 0, 1 1)')") ===
       Seq("POINT (0 0)", "POINT (1 1)"))
@@ -336,7 +333,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("convex_hull_agg and the geometry_union family through SQL") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     def one(sql: String): Any = s.sql(sql).collect()(0).get(0)
     // hull of scattered points; interior points vanish
     assert(one("""SELECT convex_hull_agg(g) FROM (VALUES
@@ -472,7 +468,6 @@ class GeoSpec extends AnyFunSuite {
     assert(dissolved.length < GeoFunctions.geometryToBingTiles(p(parentPoly), 6).length)
     // SQL surface
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     val n = s.sql(s"SELECT size(geometry_to_dissolved_bing_tiles('$parentPoly', 6))")
       .collect()(0).getInt(0)
     assert(n === dissolved.length)
@@ -480,7 +475,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("ST_LineString array constructor and its fail-loud inputs") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     def one(sql: String): Any = s.sql(sql).collect()(0).get(0)
     assert(one("SELECT st_linestring(array('POINT (0 0)', 'POINT (1 1)', 'POINT (2 0)'))") ===
       "LINESTRING (0 0, 1 1, 2 0)")
@@ -490,7 +484,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("ST_Buffer point approximation: properties, not vertices") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     def one(sql: String): Any = s.sql(sql).collect()(0).get(0)
     // envelope = center +- d; contains the center; area within the
     // inscribed-32-gon band of pi*d^2
@@ -561,7 +554,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("spatial_partitioning aggregate is partitioning-invariant; scalars assign") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     import s.implicits._
     val pts = (1 to 400).map { i =>
       (s"POINT (${(i * 7) % 100} ${(i * 13) % 100})", 8)
@@ -607,7 +599,6 @@ class GeoSpec extends AnyFunSuite {
     assert(GeoFunctions.de9im(p("POINT (1 1)"), p("POINT (1 1)")) === "0FFFFFFF2")
     // pattern matching through SQL: within = T*F**F***
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     def one(sql: String): Any = s.sql(sql).collect()(0).get(0)
     assert(one(s"SELECT st_relate('POINT (5 5)', '$box', 'T*F**F***')") === true)
     assert(one(s"SELECT st_relate('POINT (10 5)', '$box', 'T*F**F***')") === false)
@@ -630,7 +621,6 @@ class GeoSpec extends AnyFunSuite {
 
   test("chained geo scalars pass intermediates by reference (intern cache)") {
     val s = TestSpark.spark
-    Engine.registerFunctions(s)
     import s.implicits._
     // 3-deep chain over 500 DISTINCT per-row geometries plus one
     // constant operand: without the intern table this parses ~3 WKTs

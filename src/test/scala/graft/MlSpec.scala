@@ -12,10 +12,8 @@ import org.apache.spark.sql.functions._
   */
 class MlSpec extends AnyFunSuite with QueryAssertions {
 
-  private def session = { Engine.registerFunctions(spark); spark }
-
   test("learn_regressor recovers an exact linear law") {
-    val s = session
+    val s = spark
     import s.implicits._
     // y = 2x + 1 exactly: least squares must recover [2, 1] to fp exactness
     val df = (1 to 20).map(i => (i.toDouble, 2.0 * i + 1.0)).toDF("x", "y")
@@ -28,7 +26,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("training state merges across partitionings (1 vs 7 partitions)") {
-    val s = session
+    val s = spark
     import s.implicits._
     val rows = (1 to 200).map { i =>
       (i.toDouble % 13, Map(0L -> i.toDouble, 1L -> math.sin(i.toDouble)))
@@ -47,7 +45,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("classifier recovers a separable rule; labels sorted; classify applies") {
-    val s = session
+    val s = spark
     import s.implicits._
     val df = (1 to 100)
       .map(i => (if (i > 50) 9L else 2L, Map(0L -> i.toDouble)))
@@ -63,7 +61,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("classify/regress fail loud on the wrong model kind") {
-    val s = session
+    val s = spark
     import s.implicits._
     val df = (1 to 10).map(i => (i.toDouble, Map(0L -> i.toDouble))).toDF("y", "f")
     val reg = df.agg(expr("learn_regressor(y, f)").as("m"))
@@ -75,7 +73,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("feature keys beyond the dense cap fail loud") {
-    val s = session
+    val s = spark
     import s.implicits._
     val df = Seq((1.0, Map(5000L -> 1.0))).toDF("y", "f")
     val ex = intercept[Exception] {
@@ -87,7 +85,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("negative feature keys fail loud on the APPLY side too") {
-    val s = session
+    val s = spark
     import s.implicits._
     val df = (1 to 10).map(i => (i.toDouble, Map(0L -> i.toDouble))).toDF("y", "f")
     val reg = df.agg(expr("learn_regressor(y, f)").as("m"))
@@ -101,7 +99,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("feature keys beyond the trained dimension fail loud at scoring time") {
-    val s = session
+    val s = spark
     import s.implicits._
     // trained on features {0}; scoring a row with feature 5 must not
     // silently drop it (a truncated prediction with no signal)
@@ -118,7 +116,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("malformed libsvm params fail loud; valid params are ignored") {
-    val s = session
+    val s = spark
     import s.implicits._
     val df = (1 to 10).map(i => (i.toDouble, Map(0L -> i.toDouble))).toDF("y", "f")
     val ok = df.agg(
@@ -135,7 +133,7 @@ class MlSpec extends AnyFunSuite with QueryAssertions {
   }
 
   test("evaluate_classifier_predictions formats the reference summary exactly") {
-    val s = session
+    val s = spark
     import s.implicits._
     // same deterministic rule as corpus ml03, counts verified against both
     // Java %.2f and C printf (EvaluateClassifierPredictionsAggregation

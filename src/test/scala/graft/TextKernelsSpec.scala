@@ -66,6 +66,19 @@ class TextKernelsSpec extends QueryAssertions {
     }
   }
 
+  test("graft_minhash_sig takes a nullable array<bigint>, failing a NULL element") {
+    // CAST(... AS ARRAY<BIGINT>) types the literal containsNull = true
+    val hs = spark.sql(
+      "SELECT 1L AS doc_id, CAST(array(11, -22, 33) AS ARRAY<BIGINT>) AS __hs")
+    assertColsEqual(hs, call_function("graft_minhash_sig", col("__hs"), lit(8)),
+      MinHashLSH.signature(col("__hs"), 8), "minhash_sig(nullable literal)")
+    // analysis accepts the array; the row with a NULL fails when it runs
+    val e = intercept[Exception](spark.sql(
+      "SELECT graft_minhash_sig(array(11L, CAST(NULL AS BIGINT), 33L), 8)").collect())
+    assert(e.getMessage.contains("graft_minhash_sig: NULL hash at index 2"),
+      e.getMessage)
+  }
+
   test("graft_lsh_bands equals the banded xxhash64 transform") {
     val numHashes = 64
     val rowsPerBand = 2
