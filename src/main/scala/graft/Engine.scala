@@ -16,7 +16,9 @@ object Engine {
   /** Build a session with [[graft.plans.GraftExtensions]] (the resolution
     * rules and the whole function catalog), configured the way a large
     * cluster job would be: AQE on (runtime re-plan, skew-join splitting,
-    * dynamic coalesce), `shufflePartitions` shuffle partitions, UTC. The
+    * dynamic coalesce), `shufflePartitions` shuffle partitions, UTC,
+    * and generated code compiled once per JVM and shared by every clone
+    * of the session (see the two codegen settings below). The
     * master is the one already set in conf (spark-submit), else
     * `local[cores]`. The defaults suit a 32-core host; pass the host's
     * core count elsewhere.
@@ -44,6 +46,24 @@ object Engine {
       // tens of MB; a deployment with multi-KB buffers re-tunes this.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "32768")
+      // Spark's JVM-wide cache of compiled generated classes, keyed by
+      // (context class loader, code body), holds 100 entries by default
+      // and evicts the least recently used. One perfbench `pipelines`
+      // pass needs 110 bodies, so cycled through 100 entries every
+      // lookup missed and each pass compiled them all again. A full
+      // graft.Verify run (308 entries) needs 2 670 keys when nothing is
+      // evicted; 4096 holds that with room to spare. Static: it takes
+      // effect for the session that starts the JVM's SparkContext.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Artifact isolation (Spark's default) gives every session UUID
+      // its own executor class loader. Tasks run under that loader, so
+      // each clone session — one per stream start (StreamExecution),
+      // one per small statement (SmallStatement.route) — missed the
+      // cache above and compiled its task-side projections, joiners and
+      // orderings again. The engine adds no per-session jar or
+      // artifact. The trade: an artifact added to one session becomes
+      // visible to every other session that also runs with isolation off.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // ANSI error semantics — Spark 4's own default, pinned explicitly
       // because the engine RELIES on it in two ways: (1) the reference
       // raises on division by zero / numeric overflow (presto-main/.../
@@ -114,10 +134,6 @@ object Engine {
     java.time.ZoneId.of(
       org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
 
-  /** Per-session prepared-statement store for PREPARE / EXECUTE …
-    * USING / DEALLOCATE PREPARE (reference: SqlBase.g4:131-133; the
-    * reference keeps these in the client session the same way). Weak
-    * keys so a discarded session's statements are collectable. */
   /** Escape a Scala string for embedding in a Spark SQL single-quoted
     * literal: backslashes first (Spark's default literal parser treats
     * them as escapes), then quote doubling. */
@@ -145,6 +161,10 @@ object Engine {
       }
   }
 
+  /** Per-session prepared-statement store for PREPARE / EXECUTE …
+    * USING / DEALLOCATE PREPARE (reference: SqlBase.g4:131-133; the
+    * reference keeps these in the client session the same way). Weak
+    * keys so a discarded session's statements are collectable. */
   private val preparedFor = new SessionStore[String]
 
   /** Fail on a session built without [[graft.plans.GraftExtensions]]: it
@@ -158,13 +178,6 @@ object Engine {
           "use Engine.session, or set " +
           "spark.sql.extensions=graft.plans.GraftExtensions")
 
-  /** Register the parquet catalog and run a query through Spark SQL after
-    * the dialect shim. This is the reference's `POST /v1/statement`
-    * equivalent: SQL in, DataFrame (result cursor) out. PREPARE /
-    * EXECUTE … USING / DEALLOCATE PREPARE are handled here (the store is
-    * session state, not translation): PREPARE and DEALLOCATE return a
-    * one-row acknowledgment frame like the reference's OK result.
-    */
   private val ExplainAnalyzeRe =
     "(?is)^\\s*EXPLAIN\\s+ANALYZE(\\s+VERBOSE)?\\b(.*)$".r
 
@@ -182,6 +195,13 @@ object Engine {
 
   def prestoDialectActive: Boolean = prestoDialect.get()
 
+  /** Register the parquet catalog and run a query through Spark SQL after
+    * the dialect shim. This is the reference's `POST /v1/statement`
+    * equivalent: SQL in, DataFrame (result cursor) out. PREPARE /
+    * EXECUTE … USING / DEALLOCATE PREPARE are handled here (the store is
+    * session state, not translation): PREPARE and DEALLOCATE return a
+    * one-row acknowledgment frame like the reference's OK result.
+    */
   def sql(spark: SparkSession, dir: String, query: String): DataFrame =
     sql(spark, dir, query, smallPath = true)
 

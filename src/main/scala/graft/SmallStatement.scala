@@ -24,6 +24,14 @@ import org.apache.spark.sql.internal.SQLConf
   * caller's session, so every `SET` the caller made is seen and the
   * caller's own conf is never touched. The returned DataFrame's
   * `sparkSession` is that clone.
+  *
+  * The clone shares the executor class loader, and with it Spark's
+  * JVM-wide cache of generated code, with its parent: the code generated
+  * inside tasks (the partial aggregate's row joiner, orderings) is
+  * compiled once and reused by every later statement. That holds only
+  * because `graft.Engine.session` turns artifact isolation off
+  * (`spark.sql.artifact.isolation.enabled=false`); with it on, each clone
+  * gets its own class loader and compiles that code again.
   */
 object SmallStatement {
 
