@@ -15,15 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object ApproxMostFrequent {
 
-  /** Top-k keys by frequency with deterministic key tiebreak. */
-  def topK(df: DataFrame, key: Column, k: Int, capacity: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = df.groupBy(key.as("k")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("cnt").desc, col("k"))
-    counts
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") <= math.min(k, capacity))
-      .select(col("k"), col("cnt"))
+  /** Top-k keys by frequency with deterministic key tiebreak. A sort +
+    * limit plans as per-partition top-n results merged in one step
+    * (TakeOrderedAndProject), so no stage collapses the counts to one
+    * partition the way an unpartitioned rank window would. */
+  def topK(df: DataFrame, key: Column, k: Int, capacity: Int): DataFrame =
+    df.groupBy(key.as("k")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("k"))
-  }
+      .limit(math.min(k, capacity))
 }

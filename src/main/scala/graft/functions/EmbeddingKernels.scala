@@ -91,8 +91,6 @@ object EmbeddingKernels {
       "vector, planes, tables[, dim]"),
     FunctionEntry.native("graft_pack_ints", 2)(a => PackInts(a(0), a(1))),
     FunctionEntry.native("graft_sig_match", 3)(a => SigMatch(a(0), a(1), a(2))),
-    FunctionEntry.native("graft_sig_keep", 4)(a =>
-      SigKeep(a(0), a(1), a(2), a(3))),
     FunctionEntry.native("graft_lsh_probe_keys", 2)(a =>
       LshProbeKeys(a(0), a(1))),
     FunctionEntry.native("graft_key_in_set", 2)(a =>
@@ -491,114 +489,24 @@ case class SigMatch(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** graft_sig_keep(sig1, sig2, rowTable, params): the fused keep/drop
-  * decision for one matched candidate row — equivalent to evaluating
-  * [[SigMatch]] and then testing `firstAgreeingTable == rowTable AND
-  * agreeCount >= minAgree AND totalBitHamming <= hMax`, but with the
-  * two structural EARLY EXITS that composition cannot express:
-  *  - hamming accumulates monotonically, so the row is dead the moment
-  *    the running total crosses hMax — a random pair (the overwhelming
-  *    bulk: the 40× stress point feeds 1.38e9 matched rows into this
-  *    decision to keep 3.8e5) accrues ~planes/2 bits per table and
-  *    exits ~1/3 early;
-  *  - an agreeing table BEFORE rowTable means some earlier-table row
-  *    canonically owns the pair — exit without scanning the rest.
-  * `params` packs (width | minAgree<<8 | hMax<<16) into one literal.
-  * The boolean returned is bit-for-bit the composed form's — only
-  * evaluation ORDER changes — so the declarative DuckDB oracle for
-  * d07_embedding_near_dup replays unchanged (pinned by the spec's
-  * equivalence sweep against SigMatch). */
-case class SigKeep(
-    first: Expression, second: Expression,
-    third: Expression, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (BinaryType, BinaryType, IntegerType) if fourth.foldable &&
-          fourth.dataType == IntegerType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_sig_keep expects (binary, binary, int, literal params), got $other")
-    }
-
-  private lazy val params = EmbeddingKernels.foldableInt(fourth, "params")
-  private lazy val width = {
-    val w = params & 0xFF
-    require(w == 2 || w == 4, s"pack width must be 2 or 4, got $w")
-    w
-  }
-  private lazy val minAgree = (params >> 8) & 0xFF
-  private lazy val hMax = params >>> 16
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_sig_keep"
-
-  def compute(b1: Array[Byte], b2: Array[Byte], rowT: Int): Boolean = {
-    val n = math.min(b1.length, b2.length) / width
-    val w = width
-    val cap = hMax
-    var h = 0
-    var agree = 0
-    var agreedAtRow = false
-    var t = 0
-    while (t < n) {
-      val s1 =
-        if (w == 2) (b1(2 * t) & 0xFF) | ((b1(2 * t + 1) & 0xFF) << 8)
-        else (b1(4 * t) & 0xFF) | ((b1(4 * t + 1) & 0xFF) << 8) |
-          ((b1(4 * t + 2) & 0xFF) << 16) | ((b1(4 * t + 3) & 0xFF) << 24)
-      val s2 =
-        if (w == 2) (b2(2 * t) & 0xFF) | ((b2(2 * t + 1) & 0xFF) << 8)
-        else (b2(4 * t) & 0xFF) | ((b2(4 * t + 1) & 0xFF) << 8) |
-          ((b2(4 * t + 2) & 0xFF) << 16) | ((b2(4 * t + 3) & 0xFF) << 24)
-      val ht = Integer.bitCount(s1 ^ s2)
-      h += ht
-      if (h > cap) return false
-      if (ht <= 1) {
-        if (t < rowT) return false // an earlier table owns this pair
-        if (t == rowT) agreedAtRow = true
-        agree += 1
-      }
-      t += 1
-    }
-    agreedAtRow && agree >= minAgree
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sigKeep", this, classOf[SigKeep].getName)
-    nullSafeCodeGen(ctx, ev,
-      (a, b, c, _) => s"${ev.value} = $ref.compute($a, $b, $c);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond,
-      third = newThird, fourth = newFourth)
-}
-
 /** graft_lsh_probe_keys(sigs, params): the candidate join's per-document
-  * key array in ONE kernel call — own-bucket keys plus the requested
-  * 1-bit multiprobe flips across all tables, packed as
-  * (table << planes) | bucket. Replaces the r16 two-level
-  * posexplode(__sigs) → explode(array(own ± flips)) probe expansion
-  * (one Generate instead of two, no (table, bucket) intermediate rows).
-  * `params` packs planes | mode << 8:
+  * key array in ONE kernel call, packed as (table << planes) | bucket
+  * (one Generate, no (table, bucket) intermediate rows). `params` packs
+  * planes | side << 8:
   *
-  *  - mode 0 — own + ALL planes 1-bit flips per table (the r16 probe
-  *    set: tables·(1+planes) keys);
-  *  - mode 1 — own + ZERO-bit flips only (halved multiprobe, r17): a
+  *  - side 1 — the probe side: own + ZERO-bit flips per table. A
   *    hamming-1 pair differs in exactly one bit position, so exactly
-  *    one side holds a 0 there and probes INTO the other's cell —
-  *    every hamming≤1 pair still collides in every agreeing table,
-  *    while the probe fan-out drops from 1+planes to 1+zeros(bucket)
-  *    (≈ 1+planes/2 expected: buckets are uniform hash bits). The
-  *    keep kernels' direction rules own the exactly-once guarantee
-  *    (see [[SigKeepRouted]]'s `halved` flag);
-  *  - mode 2 — own keys only (the build side: tables keys).
+  *    one doc holds a 0 there and probes INTO the other's cell — every
+  *    hamming≤1 pair still collides in every agreeing table, while the
+  *    probe fan-out is 1+zeros(bucket) (≈ 1+planes/2: buckets are
+  *    uniform hash bits) instead of 1+planes for all flips. The keep
+  *    kernel ([[SigKeepRouted]]) relies on this one-direction shape to
+  *    keep each pair exactly once;
+  *  - side 2 — the build side: own keys only (tables keys).
+  *
+  * Any other side value fails: flipping ONE-bits as well would emit
+  * both directions of a hamming-1 pair, which the keep kernel would
+  * then report twice.
   */
 case class LshProbeKeys(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -618,10 +526,11 @@ case class LshProbeKeys(left: Expression, right: Expression)
     require(p > 0 && p <= 30, s"planes must be in [1, 30], got $p")
     p
   }
-  private lazy val mode = {
+  private lazy val probeSide = {
     val m = (params >> 8) & 0xFF
-    require(m >= 0 && m <= 2, s"probe mode must be 0, 1 or 2, got $m")
-    m
+    require(m == 1 || m == 2, "graft_lsh_probe_keys side must be 1 " +
+      s"(probe: own + zero-bit flips) or 2 (build: own keys), got $m")
+    m == 1
   }
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -630,53 +539,30 @@ case class LshProbeKeys(left: Expression, right: Expression)
   def compute(sigs: ArrayData): ArrayData = {
     val tables = sigs.numElements()
     val p = planes
-    val out = mode match {
-      case 2 =>
-        val a = new Array[Int](tables)
-        var t = 0
-        while (t < tables) {
-          a(t) = (t << p) | sigs.getInt(t)
-          t += 1
+    val probe = probeSide
+    var n = tables
+    if (probe) {
+      var t0 = 0
+      while (t0 < tables) {
+        n += p - Integer.bitCount(sigs.getInt(t0))
+        t0 += 1
+      }
+    }
+    val out = new Array[Int](n)
+    var k = 0
+    var t = 0
+    while (t < tables) {
+      val b = sigs.getInt(t)
+      val base = t << p
+      out(k) = base | b; k += 1
+      if (probe) {
+        var j = 0
+        while (j < p) {
+          if (((b >> j) & 1) == 0) { out(k) = base | (b | (1 << j)); k += 1 }
+          j += 1
         }
-        a
-      case 0 =>
-        val a = new Array[Int](tables * (1 + p))
-        var k = 0
-        var t = 0
-        while (t < tables) {
-          val b = sigs.getInt(t)
-          val base = t << p
-          a(k) = base | b; k += 1
-          var j = 0
-          while (j < p) {
-            a(k) = base | (b ^ (1 << j)); k += 1
-            j += 1
-          }
-          t += 1
-        }
-        a
-      case _ => // mode 1: own + zero-bit flips
-        var n = 0
-        var t0 = 0
-        while (t0 < tables) {
-          n += 1 + p - Integer.bitCount(sigs.getInt(t0))
-          t0 += 1
-        }
-        val a = new Array[Int](n)
-        var k = 0
-        var t = 0
-        while (t < tables) {
-          val b = sigs.getInt(t)
-          val base = t << p
-          a(k) = base | b; k += 1
-          var j = 0
-          while (j < p) {
-            if (((b >> j) & 1) == 0) { a(k) = base | (b | (1 << j)); k += 1 }
-            j += 1
-          }
-          t += 1
-        }
-        a
+      }
+      t += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
@@ -737,71 +623,63 @@ case class KeyInSortedSet(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** graft_sig_keep_routed(sig1, sig2, routed, hotKeys, params): the
-  * occupancy-cap-aware generalization of [[SigKeep]] — the keep/drop
-  * decision for one matched candidate row when routes through
-  * over-occupied (table, bucket) cells have been SUPPRESSED (their build
-  * rows and probe keys dropped by [[KeyInSortedSet]] filters).
+/** graft_sig_keep_routed(sig1, sig2, routed, hotKeys, params): the fused
+  * keep/drop decision for one matched candidate row of the embedding
+  * dedup join — equivalent to evaluating [[SigMatch]] and testing
+  * `agreeCount >= minAgree AND totalBitHamming <= hMax AND this row is
+  * the pair's canonical owner`, with the structural EARLY EXITS that
+  * composition cannot express:
+  *  - hamming accumulates monotonically, so the row is dead the moment
+  *    the running total crosses hMax — a random pair (the bulk: the 40×
+  *    stress point feeds 1.38e9 matched rows into this decision to keep
+  *    3.8e5) accrues ~planes/2 bits per table and exits ~1/3 early;
+  *  - an existing route at an agreeing table BEFORE rowTable means an
+  *    earlier-table row owns the pair — exit without scanning the rest.
   *
-  * Why the co-design is needed (BASELINE.md round 14, the 100× probe):
-  * natural-text hashed-TF vectors share a cone, so some sign-LSH cells
-  * stay dense at any corpus size — per-(table,bucket) occupancy at 100×
-  * averaged the geometry target 16.9 but p99 = 143 / max = 1812, making
-  * Σocc² (= matched candidate rows) ~4× the uniform model. Capping
-  * occupancy removes that skew tail, but under [[SigKeep]]'s canonical
-  * rule — "the FIRST agreeing table owns the pair" — suppressing the
-  * first agreeing table's route loses the pair even when other tables
-  * found it. This kernel moves the suppression check INTO the canonical
-  * choice: both docs' per-table buckets are already in the packed
-  * signatures, so route liveness is computable per row from the same
-  * foldable hot-key set the filters used, costing zero extra shuffled
-  * bytes.
-  *
-  * PRECONDITION: both join sides were filtered by the SAME hot set this
-  * kernel carries — a matched row therefore certifies hamming(rowT) ≤ 1
-  * and that the build doc's bucket at rowT is live, which the kernel
-  * exploits to decide the bulk case (a random pair agreeing only in its
-  * own table, probe id smaller) with zero hot-set searches. Rows
-  * violating the precondition (never produced by EmbeddingDedup) may be
-  * kept in the wrong direction.
+  * The row universe it decides over (built by EmbeddingDedup): the
+  * probe side emits own + ZERO-bit flip keys ([[LshProbeKeys]] side 1),
+  * the build side own keys only, and routes through over-occupied
+  * (table, bucket) cells in `hotKeys` are dropped on BOTH sides by the
+  * same [[KeyInSortedSet]] filter. At a hamming-1 table the pair's
+  * buckets differ in one bit, so exactly ONE direction's row exists —
+  * the one whose probe doc holds the 0 (it probes into the 1-holder's
+  * cell), and it exists iff that cell is live. At a hamming-0 table
+  * both docs share one cell and both directions exist iff it is live.
   *
   * Decision (row = probe doc P ⋈ build doc B at table rowT):
   *  - agreement = #tables with bucket-hamming ≤ 1 (signature-only, hot
-  *    or not) must reach minAgree; total bit-hamming must stay ≤ hMax —
-  *    both exactly [[SigKeep]]'s contract, same early exits;
-  *  - the canonical table t* is the FIRST agreeing table where at least
-  *    one doc's bucket is live (a pair with no live route anywhere
-  *    produces no rows at all — consistently unreported);
-  *  - within t*, the canonical row direction is build = the larger
-  *    doc-id when ITS bucket at t* is live (the [[SigKeep]] convention:
-  *    id1 < id2), else build = the smaller (whose bucket must then be
-  *    live by t*'s definition) — exactly one row per pair survives, and
-  *    the surviving direction's probe key (hamming ≤ 1 into a live
-  *    bucket) and build row both exist under the filters.
+  *    or not) must reach minAgree; total bit-hamming must stay ≤ hMax;
+  *  - the canonical table t* is the FIRST agreeing table with an
+  *    existing route (a pair with none produces no rows at all —
+  *    consistently unreported);
+  *  - within t*: a hamming-1 row is the table's unique direction and
+  *    owns the pair outright; at hamming 0 the owner is the row whose
+  *    build doc is the larger id (id1 < id2). Exactly one row per pair
+  *    survives; the caller normalizes it with least/greatest.
   *
-  * With an EMPTY hot set (and `halved` off) this reduces bit-for-bit to
-  * `SigKeep(...) AND id1 < id2` (t* = first agreeing table, larger
-  * always live), pinned by the equivalence property in
-  * SigKeepRoutedSpec. `routed` packs (rowTable << 1) | (id1 < id2);
-  * `params` packs width | minAgree<<8 | hMax<<16 | planes<<32 |
-  * halved<<40 as one bigint literal (planes sizes the
-  * (table << planes) | bucket key the hot set is expressed in).
+  * Why suppression needs the routed rule (BASELINE.md round 14, the
+  * 100× probe): natural-text hashed-TF vectors share a cone, so some
+  * sign-LSH cells stay dense at any corpus size — per-(table,bucket)
+  * occupancy at 100× averaged the geometry target 16.9 but p99 = 143 /
+  * max = 1812, making Σocc² (= matched candidate rows) ~4× the uniform
+  * model. Capping occupancy removes that tail; moving the liveness
+  * check INTO the canonical choice keeps every pair that still has a
+  * live agreeing route. Both docs' per-table buckets are already in the
+  * packed signatures, so liveness costs zero extra shuffled bytes.
   *
-  * The `halved` flag (r17) declares that the probe side emitted
-  * ZERO-BIT flips only ([[LshProbeKeys]] mode 1): at a hamming-1 table
-  * the pair's buckets differ in exactly one bit, so exactly ONE
-  * direction's probe row exists — the one whose probe doc holds the 0
-  * (it probes into the 1-holder's cell). The route-existence tests
-  * change accordingly: at a hamming-1 table the only route is through
-  * the 1-holder's cell (live(thatCell) decides — the other doc's cell
-  * is unreachable), at a hamming-0 table both docs share one cell and
-  * both directions exist as before. At t == rowT a hamming-1 row IS
-  * the unique direction, so it owns the pair outright; hamming-0 keeps
-  * the id1 < id2 convention. Exactly-once survives unchanged
-  * (SigKeepRoutedSpec simulates the halved row universe), and with an
-  * empty hot set the halved form keeps exactly [[SigKeep]]'s pair set
-  * (every agreeing table still surfaces ≥ 1 row; only the surviving
-  * DIRECTION can differ, normalized by least/greatest after the join). */
+  * PRECONDITION: a matched row certifies hamming(rowT) ≤ 1 and that the
+  * build doc's bucket at rowT is live; the kernel exploits it to decide
+  * the bulk case (a random pair agreeing only in its own table, probe
+  * id smaller) with zero hot-set searches. Rows violating it (never
+  * produced by EmbeddingDedup) may be kept in the wrong direction.
+  *
+  * With an empty hot set the kept rows are exactly the composed
+  * `SigMatch` filters (first agreeing table == rowT, minAgree, hMax)
+  * gated by `id1 < id2` at hamming-0 rows — pinned by the equivalence
+  * sweeps in EmbeddingKernelsSpec and SigKeepRoutedSpec. `routed` packs
+  * (rowTable << 1) | (id1 < id2); `params` packs width | minAgree<<8 |
+  * hMax<<16 | planes<<32 as one bigint literal (planes sizes the
+  * (table << planes) | bucket key the hot set is expressed in). */
 case class SigKeepRouted(
     first: Expression, second: Expression, third: Expression,
     fourth: Expression, fifth: Expression)
@@ -838,7 +716,6 @@ case class SigKeepRouted(
     require(p > 0 && p <= 30, s"planes must be in [1, 30], got $p")
     p
   }
-  private lazy val halved = ((params >> 40) & 1L) == 1L
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_sig_keep_routed"
@@ -846,16 +723,12 @@ case class SigKeepRouted(
   private def live(t: Int, bucket: Int): Boolean =
     java.util.Arrays.binarySearch(hot, (t << planes) | bucket) < 0
 
-  /** Does ANY probe row exist for this pair at agreeing table t (the
-    * canonical-owner scan's existence test)? Under full multiprobe both
-    * directions route through (s1's cell, s2's cell) — any live one
-    * reaches. Under halved probes a hamming-1 table has ONE direction,
-    * through the 1-holder's cell. Hamming-0 tables share a single cell
-    * either way. Only called when anyHot. */
+  /** Does ANY row exist for this pair at agreeing table t (the
+    * canonical-owner scan's existence test)? A hamming-0 table routes
+    * through the shared cell, a hamming-1 table only through the
+    * 1-holder's cell. Only called when anyHot. */
   private def routeExists(t: Int, s1: Int, s2: Int): Boolean =
-    if (s1 == s2) live(t, s1)
-    else if (!halved) live(t, s1) || live(t, s2)
-    else live(t, if ((s1 & (s1 ^ s2)) != 0) s1 else s2)
+    live(t, if ((s1 & (s1 ^ s2)) != 0) s1 else s2)
 
   private def unpack(b: Array[Byte], t: Int): Int =
     if (width == 2) (b(2 * t) & 0xFF) | ((b(2 * t + 1) & 0xFF) << 8)
@@ -869,20 +742,18 @@ case class SigKeepRouted(
     val w = width
     val cap = hMax
     val anyHot = hot.length > 0
-    // Fast own-table pre-check (r17): the BULK matched row is a random
-    // pair meeting at its own table (hamming 0) in the wrong direction —
-    // under the legacy pipeline an external `id1 < id2` filter killed it
-    // before the kernel, but the routed form decides direction here, so
-    // without this check every such row pays the full accumulation loop.
-    // The ownership decision at rowT does not depend on the other
-    // tables, so evaluating it FIRST is a pure evaluation-order change:
-    // a row that cannot own the pair at its own table returns false
-    // either way (the loop's t == rowT branch or its h > cap exit both
-    // yield false). Halved hamming-1 rows own outright and skip this.
+    // Fast own-table pre-check: the BULK matched row is a random pair
+    // meeting at its own table (hamming 0) in the wrong direction; the
+    // kernel decides direction, so without this check every such row
+    // pays the full accumulation loop. The ownership decision at rowT
+    // does not depend on the other tables, so evaluating it FIRST is a
+    // pure evaluation-order change: a row that cannot own the pair at
+    // its own table returns false either way (the loop's t == rowT
+    // branch or its h > cap exit both yield false). Hamming-1 rows own
+    // outright and skip this.
     if (!probeSmaller && rowT < n) {
       val s1r = unpack(b1, rowT)
-      val s2r = unpack(b2, rowT)
-      if (!(halved && s1r != s2r) && !(anyHot && !live(rowT, s1r)))
+      if (s1r == unpack(b2, rowT) && !(anyHot && !live(rowT, s1r)))
         return false
     }
     var h = 0
@@ -919,17 +790,16 @@ case class SigKeepRouted(
             // no reachable live route here: not a valid canonical
             // table, keep looking
           } else if (t == rowT) {
-            // the canonical direction. Halved probes: a hamming-1 row
-            // is the table's UNIQUE direction — owning it outright is
-            // what keeps the pair exactly-once (the opposite direction
-            // was never emitted). Hamming-0 (and the full-probe mode)
-            // keep the conventions: id1 < id2 when both directions
-            // exist; otherwise build = larger id iff the larger id's
-            // bucket here is live (sig1 is always the PROBE doc's,
-            // sig2 the BUILD doc's; probeSmaller says which id is
-            // larger; live2 = true by the precondition).
+            // the canonical direction. A hamming-1 row is the table's
+            // UNIQUE direction — owning it outright is what keeps the
+            // pair exactly-once (the opposite direction was never
+            // emitted). Hamming 0: id1 < id2 when both directions exist;
+            // otherwise build = larger id iff the larger id's bucket
+            // here is live (sig1 is always the PROBE doc's, sig2 the
+            // BUILD doc's; probeSmaller says which id is larger; live2 =
+            // true by the precondition).
             owned =
-              if (halved && (s1 != s2)) true // unique direction
+              if (s1 != s2) true // unique direction
               else if (probeSmaller) true // larger = build, live here
               else anyHot && !live(t, s1) // larger = probe: owned iff hot
             if (!owned) return false // decision is final: not this row

@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   *    broadcast sign-matrix join whose intermediate row count was
   *    counts×tables.
   *  - Candidates come from a self-equi-join on (table, lshBucket) with
-  *    1-bit multiprobe expansion on the probe side; never all pairs.
-  *    Expected scan fraction ~ tables*(1+planes)/2^planes. Both join
+  *    zero-bit multiprobe expansion on the probe side; never all pairs.
+  *    Expected scan fraction ~ tables*(1+planes/2)/2^planes. Both join
   *    sides carry the document's PACKED full signature vector (4 bytes
   *    per table), so each matched row decides its own fate map-side via
   *    EmbeddingKernels.SigMatch: agreement = #tables within hamming 1
@@ -72,13 +72,9 @@ object EmbeddingDedup {
     * smallint — at larger corpora raise it together with `planes`. */
   val Dim = 256
 
-  /** One narrow pass per document: (__id, __v dense smallint counts,
-    * __sigs per-table LSH buckets, __sigp the packed signature payload).
-    * No shuffle — the whole featurization is expressions inside one
-    * whole-stage-codegen projection. */
   /** Bytes per packed signature entry: bucket ids fit 2 bytes through
     * 16 planes (n ≈ 1M docs under the geometry rule) — the probe side
-    * replicates the payload (1+planes)× per table, so the width is the
+    * replicates the payload (1+planes/2)× per table, so the width is the
     * single biggest lever on the candidate join's shuffle. */
   private def packWidth(planes: Int): Int = if (planes <= 16) 2 else 4
 
@@ -103,6 +99,10 @@ object EmbeddingDedup {
     math.min(b, math.ceil(b * (f0 + 5 * sigma)).toInt)
   }
 
+  /** One narrow pass per document: (__id, __v dense smallint counts,
+    * __sigs per-table LSH buckets, __sigp the packed signature payload).
+    * No shuffle — the whole featurization is expressions inside one
+    * whole-stage-codegen projection. */
   def featurize(
       df: DataFrame, idCol: String, textCol: String,
       planes: Int, tables: Int): DataFrame = {
@@ -123,6 +123,28 @@ object EmbeddingDedup {
         call_function("graft_pack_ints",
           col("__sigs"), lit(packWidth(planes))).as("__sigp"))
   }
+
+  /** Arming threshold for the occupancy cap: suppression engages only
+    * when over-cap cells carry at least this share of Σocc² (= matched
+    * candidate rows — the decision kernel's input). Below it the skew
+    * tail cannot repay the routed kernel's per-row liveness checks, and
+    * the pipeline runs with an empty hot set: no suppression filters and
+    * no liveness searches (the profile pass itself — one compact
+    * aggregation — is always paid when a cap is requested; it is what
+    * makes the decision data-driven).
+    * Measured over-cap Σocc² shares on the stress corpus under the
+    * geometry rule's cap (128): 0.233 at 10×, 0.392 at 40×, 0.575 at
+    * 100×. The threshold is set from INTERLEAVED same-session A/Bs
+    * (ProbeCapAB, modes alternating, per-leg canaries — the round-14
+    * cross-artifact comparisons that suggested a thin-tail loss did not
+    * survive interleaving): at 10× the three modes are indistinguishable
+    * at the host noise floor (medians uncapped 5.7 / capped 6.7 within a
+    * 5.3–7.3 within-mode spread), at 40× the capped form WINS both
+    * interleavings (34.7/35.0 vs 43.9/39.6), at 100× it wins 2.2×
+    * (91–121 s vs 144–208) — pair retention 1.0000 in every leg of
+    * every mode. 0.30 disarms only the one scale point where the win is
+    * not established, keeping the measured 40×/100× wins armed. */
+  val DefaultArmShare = 0.30
 
   /** All pairs (id1 < id2, cosine) with embedding cosine >= minCosine.
     * Output columns: id1, id2, cosine (rounded to 6 dp).
@@ -147,28 +169,11 @@ object EmbeddingDedup {
     * to exact verification. Recall within the LSH candidate set is then
     * exact (no ~3·10⁻⁷ at-threshold tail) at the cost the 40× stress
     * measured (9.2 GB of sub-threshold vector traffic) — for callers
-    * whose contract is "the LSH tables decide, never an estimate". */
-  /** Arming threshold for the occupancy cap: suppression engages only
-    * when over-cap cells carry at least this share of Σocc² (= matched
-    * candidate rows — the decision kernel's input). Below it the skew
-    * tail cannot repay the routed kernel's per-row liveness checks, and
-    * the pipeline runs the plain [[graft.functions.SigKeep]] form (the
-    * profile pass itself — one compact aggregation — is always paid when
-    * a cap is requested; it is what makes the decision data-driven).
-    * Measured over-cap Σocc² shares on the stress corpus under the
-    * geometry rule's cap (128): 0.233 at 10×, 0.392 at 40×, 0.575 at
-    * 100×. The threshold is set from INTERLEAVED same-session A/Bs
-    * (ProbeCapAB, modes alternating, per-leg canaries — the round-14
-    * cross-artifact comparisons that suggested a thin-tail loss did not
-    * survive interleaving): at 10× the three modes are indistinguishable
-    * at the host noise floor (medians uncapped 5.7 / capped 6.7 within a
-    * 5.3–7.3 within-mode spread), at 40× the capped form WINS both
-    * interleavings (34.7/35.0 vs 43.9/39.6), at 100× it wins 2.2×
-    * (91–121 s vs 144–208) — pair retention 1.0000 in every leg of
-    * every mode. 0.30 disarms only the one scale point where the win is
-    * not established, keeping the measured 40×/100× wins armed. */
-  val DefaultArmShare = 0.30
-
+    * whose contract is "the LSH tables decide, never an estimate".
+    *
+    * `maxOccupancy > 0` requests the occupancy cap (see
+    * [[occupancyCapFor]]); it arms only when the over-cap cells carry at
+    * least `minHotShare` of Σocc² ([[occupancyProfile]]). */
   def nearDuplicates(
       df: DataFrame, idCol: String, textCol: String, minCosine: Double,
       planes: Int = 8, tables: Int = 8,
@@ -276,18 +281,17 @@ object EmbeddingDedup {
   /** LSH candidates -> exact-cosine verification, all decisions before
     * the verify join taken map-side (see the object scaladoc).
     *
+    * Every matched row is decided by [[graft.functions.SigKeepRouted]].
     * A non-empty `hot` set (sorted packed (table,bucket) keys from
-    * [[hotKeys]]) switches the pipeline to its OCCUPANCY-CAPPED form:
-    * routes through over-occupied cells are dropped on both join sides
-    * (probe keys and build rows — the same [[graft.functions
-    * .KeyInSortedSet]] predicate, so a route fully exists or fully
-    * doesn't), and the keep decision moves to [[graft.functions
-    * .SigKeepRouted]], whose canonical-owner rule is suppression-aware:
-    * the pair is owned by its first agreeing table WITH A LIVE ROUTE,
-    * in the direction whose build row survived. A pair is lost only if
-    * EVERY agreeing table's routes are hot — for true near-dups (which
-    * agree in most tables) a vanishing tail, bounded in the
-    * SigKeepRoutedSpec property. */
+    * [[hotKeys]]) makes it the OCCUPANCY-CAPPED form: routes through
+    * over-occupied cells are dropped on both join sides (probe keys and
+    * build rows — the same [[graft.functions.KeyInSortedSet]]
+    * predicate, so a route fully exists or fully doesn't), and the
+    * kernel's canonical-owner rule is suppression-aware: the pair is
+    * owned by its first agreeing table WITH A LIVE ROUTE. A pair is
+    * lost only if EVERY agreeing table's routes are hot — for true
+    * near-dups (which agree in most tables) a vanishing tail, bounded in
+    * the SigKeepRoutedSpec property. */
   private def pairsFrom(
       base: DataFrame, minCosine: Double,
       planes: Int, tables: Int, estimateFilter: Boolean = true,
@@ -301,47 +305,27 @@ object EmbeddingDedup {
     def dropHot(df: DataFrame): DataFrame =
       if (hot.isEmpty) df
       else df.filter(!call_function("graft_key_in_set", col("__k"), hotLit))
-    // 1-bit multiprobe on the probe side only. r17: ZERO-BIT flips only
-    // (graft_lsh_probe_keys mode 1): a hamming-1 pair differs in
-    // exactly one bit, so exactly one side holds a 0 there and probes
-    // into the other's cell — every hamming≤1 pair still collides in
-    // every agreeing table while the probe fan-out (the candidate
-    // join's dominant shuffle at stress scale: rows × payload) drops
-    // from 1+planes to 1+zeros ≈ 1+planes/2 per (doc, table). The keep
-    // kernels' direction rules make each pair survive exactly once
-    // (halved flag; see SigKeepRouted's scaladoc).
-    //
-    // Default = GEOMETRY-ADAPTIVE (`auto`): halving pays when probe
-    // volume is the candidate stage's wall, which grows with the
-    // geometry (rows · tables · planes/2 · payload) — interleaved A/B
-    // (ProbeProbeMode, OPTIMIZATION_r17.md): planes 12/16 (10×) 3.1 vs
-    // 3.5 s, planes 14/23 (40×) 14.0 vs 22.2 s for the halved form;
-    // but at the headline 1× geometry (planes 8, a 9-key probe set and
-    // a latency-bound sub-second stage) the legacy form's external
-    // `id1 < id2` pre-filter is the cheaper decision and halving
-    // measured ~0.1 s SLOWER (1.11 vs 0.97 medians over 6 interleaved
-    // rounds). The rule planes >= 10 puts the switch inside the
-    // measured gap; `graft.d07.probeMode = zero|all` pins either form
-    // for probes.
-    val halved = base.sparkSession.conf
-      .get("graft.d07.probeMode", "auto") match {
-      case "all" => false
-      case "zero" => true
-      case _ => planes >= 10
-    }
-    val probeMode = if (halved) 1 else 0
+    // One candidate path at every geometry: the probe side emits own +
+    // ZERO-bit flip keys (graft_lsh_probe_keys side 1), the build side
+    // own keys only. A hamming-1 pair differs in exactly one bit, so
+    // exactly one side holds a 0 there and probes into the other's cell
+    // — every hamming≤1 pair collides in every agreeing table, while the
+    // probe fan-out (the candidate join's dominant shuffle at stress
+    // scale: rows × payload) is 1+zeros ≈ 1+planes/2 per (doc, table)
+    // instead of 1+planes. graft_sig_keep_routed knows that only one
+    // direction exists at a hamming-1 table and keeps each pair once.
     val probes = dropHot(base.select(col("__id").as("id1"),
       col("__sigp").as("__sp1"),
       explode(call_function("graft_lsh_probe_keys",
-        col("__sigs"), lit(planes | (probeMode << 8)))).as("__k")))
+        col("__sigs"), lit(planes | (1 << 8)))).as("__k")))
     val build = dropHot(base.select(col("__id").as("id2"),
       col("__sigp").as("__sp2"),
       explode(call_function("graft_lsh_probe_keys",
         col("__sigs"), lit(planes | (2 << 8)))).as("__k")))
     // Per (pair, table) at most one probe can match (the build side's
     // bucket is a single value and the probe set is distinct), so a
-    // matched row exists for table t iff the pair's buckets are within
-    // hamming 1 there — which is exactly what graft_sig_match counts
+    // matched row exists for table t (in at least one direction) iff the
+    // pair's buckets are within hamming 1 there — what graft_sig_match counts
     // across ALL tables from the rows' packed signatures. agreement >= 2
     // (when tables >= 4) kills hash-accident candidates before any dense
     // vector ships; `this row's table == the canonical first agreeing
@@ -350,7 +334,7 @@ object EmbeddingDedup {
     // generation and verification.
     //
     // The build side is HINTED to a shuffled hash join: it is n·tables
-    // compact rows against n·tables·(1+planes) probe rows — the default
+    // compact rows against n·tables·(1+planes/2) probe rows — the default
     // sort-merge join SORTS the big probe side, which is pure overhead
     // (40× stress: 119 GB of sort spill); hashing the small build side
     // lets probes stream through unsorted.
@@ -358,75 +342,50 @@ object EmbeddingDedup {
     val hMax =
       if (estimateFilter) hammingCap(minCosine, planes, tables)
       else planes * tables
-    // both kernels carry hMax in a 16-bit params field; reachable only
+    // the kernel carries hMax in a 16-bit params field; reachable only
     // with estimateFilter=false on a geometry far outside the planes +
     // log2(tables) <= 31 deployments (e.g. 8 planes × 2^23 tables) —
     // fail loudly instead of silently truncating the field
     require(hMax <= 0xFFFF,
-      s"hamming cap $hMax does not fit the kernels' 16-bit params field " +
+      s"hamming cap $hMax does not fit the kernel's 16-bit params field " +
         s"(planes=$planes, tables=$tables)")
-    // the keep/drop decision is ONE fused kernel call (graft_sig_keep =
-    // graft_sig_match + the three filters, same boolean, plus the early
-    // exits composition cannot express — see functions/EmbeddingKernels
-    // .SigKeep). This row-decision is the pipeline's CPU center: the 40×
-    // stress point runs it on 1.38e9 matched rows to keep 3.8e5.
-    //
-    // r17: under halved probes the canonical owner row's direction is
-    // bucket-bit-determined at hamming-1 tables (only one direction was
-    // emitted), so the id ordering moves INTO the kernel for the
-    // uncapped form too — graft_sig_keep_routed with an EMPTY hot set
-    // and the halved flag, pair normalized after. The legacy full-probe
-    // mode keeps the r16 graft_sig_keep + id1 < id2 form bit-for-bit.
-    val cands =
-      if (hot.isEmpty && !halved)
-        probes
-          .join(build.hint("shuffle_hash"), Seq("__k"))
-          .filter(col("id1") < col("id2") &&
-            call_function("graft_sig_keep", col("__sp1"), col("__sp2"),
-              shiftright(col("__k"), planes),
-              lit(width | (minAgree << 8) | (hMax << 16))))
-          .select("id1", "id2")
-      else {
-        // routed form (capped, halved, or both): the canonical owner
-        // row may have id1 > id2 (when the larger id's route at the
-        // canonical table is hot, or when the hamming-1 direction goes
-        // the other way), so the id ordering moves INTO the kernel
-        // (`routed` carries it) and the surviving pair is normalized
-        // after. Self-matches (exact key, id1 == id2) are excluded
-        // here — the kernel's direction rule alone would let them
-        // through. Fields widen through Long shifts (an Int-packed
-        // intermediate would sign-extend past bit 31 once hMax reaches
-        // 0x8000).
-        val params = width.toLong | (minAgree.toLong << 8) |
-          (hMax.toLong << 16) | (planes.toLong << 32) |
-          ((if (halved) 1L else 0L) << 40)
-        val routed = shiftleft(shiftright(col("__k"), planes), 1) +
-          when(col("id1") < col("id2"), 1).otherwise(0)
-        probes
-          .join(build.hint("shuffle_hash"), Seq("__k"))
-          .filter(col("id1") =!= col("id2") &&
-            call_function("graft_sig_keep_routed", col("__sp1"),
-              col("__sp2"), routed, hotLit, lit(params)))
-          .select(least(col("id1"), col("id2")).as("id1"),
-            greatest(col("id1"), col("id2")).as("id2"))
-      }
-    // verify-join strategy (r16 A/B knob): the shuffle_hash hint was
-    // copied from the candidate join, where it is load-bearing (SMJ
-    // would sort the giant probe side). Here it also FORCES both
-    // vector-attach joins through exchanges — the (id1, id2, __v1)
-    // intermediate then carries one dense vector PER PAIR through a
-    // second exchange (measured 163 MB at sf0.1 for 155k candidates).
-    // Un-hinted, AQE broadcasts the base side when it fits and the
-    // whole verify chain collapses into the candidate stage.
-    val verifyHint = base.sparkSession.conf
-      .get("graft.d07.verifyHint", "none")
-    def hinted(df: DataFrame): DataFrame =
-      if (verifyHint == "none") df else df.hint(verifyHint)
+    // the keep/drop decision is ONE fused kernel call
+    // (graft_sig_keep_routed = graft_sig_match + the agreement, hamming
+    // and canonical-owner filters, plus the early exits composition
+    // cannot express). This row-decision is the pipeline's CPU center:
+    // the 40× stress point runs it on 1.38e9 matched rows to keep 3.8e5.
+    // The canonical owner row may have id1 > id2 (a hamming-1 table has
+    // only the direction whose probe holds the 0; under a cap, the
+    // larger id's route may be hot), so the id ordering lives INSIDE the
+    // kernel (`routed` carries it) and the surviving pair is normalized
+    // after. Self-matches (exact key, id1 == id2) are excluded here —
+    // the kernel's direction rule alone would let them through. Fields
+    // widen through Long shifts (an Int-packed intermediate would
+    // sign-extend past bit 31 once hMax reaches 0x8000).
+    val params = width.toLong | (minAgree.toLong << 8) |
+      (hMax.toLong << 16) | (planes.toLong << 32)
+    val routed = shiftleft(shiftright(col("__k"), planes), 1) +
+      when(col("id1") < col("id2"), 1).otherwise(0)
+    val cands = probes
+      .join(build.hint("shuffle_hash"), Seq("__k"))
+      .filter(col("id1") =!= col("id2") &&
+        call_function("graft_sig_keep_routed", col("__sp1"),
+          col("__sp2"), routed, hotLit, lit(params)))
+      .select(least(col("id1"), col("id2")).as("id1"),
+        greatest(col("id1"), col("id2")).as("id2"))
+    // the verify joins carry no hint: the shuffle_hash hint above is
+    // load-bearing for the candidate join (SMJ would sort the giant probe
+    // side), but on the vector-attach joins it FORCED both through
+    // exchanges — the (id1, id2, __v1) intermediate then carried one
+    // dense vector PER PAIR through a second exchange (163 MB at sf0.1
+    // for 155k candidates). Un-hinted, AQE broadcasts the base side when
+    // it fits and the whole verify chain collapses into the candidate
+    // stage; past broadcast reach it plans sort-merge joins, which won
+    // both interleaved 100× rounds against forced shuffle_hash
+    // (OPTIMIZATION_r17.md §1; a wash at 40×).
     cands
-      .join(hinted(base.select(col("__id").as("id1"), col("__v").as("__v1"))),
-        "id1")
-      .join(hinted(base.select(col("__id").as("id2"), col("__v").as("__v2"))),
-        "id2")
+      .join(base.select(col("__id").as("id1"), col("__v").as("__v1")), "id1")
+      .join(base.select(col("__id").as("id2"), col("__v").as("__v2")), "id2")
       .withColumn("cosine", VectorSearch.cosine(col("__v1"), col("__v2")))
       .filter(col("cosine") >= minCosine)
       .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))

@@ -33,34 +33,24 @@ class EmbeddingKernelsSpec extends QueryAssertions {
       "kernel histogram diverged from the declarative formula")
   }
 
-  test("graft_lsh_probe_keys: mode 0 equals the r16 expression keys, " +
-      "mode 1 keeps own + zero-bit flips, mode 2 keeps own keys") {
+  test("graft_lsh_probe_keys: side 1 keeps own + zero-bit flips, side 2 " +
+      "keeps own keys, and every all-flip collision survives") {
     val (planes, tables) = (6, 3)
     val base = EmbeddingDedup.featurize(docs.limit(50), "doc_id", "text",
       planes, tables).persist()
     try {
-      def kernelKeys(mode: Int) = base.select(col("__id"),
+      def kernelKeys(side: Int) = base.select(col("__id"),
         explode(call_function("graft_lsh_probe_keys",
-          col("__sigs"), lit(planes | (mode << 8)))).as("k"))
-      // the r16 probe expression: per (table, bucket), own + ALL flips
-      val exprKeys = base
-        .select(col("__id"), posexplode(col("__sigs")).as(Seq("t", "lsh")))
-        .select(col("__id"), explode(array(
-          (shiftleft(col("t"), planes) + col("lsh")) +: (0 until planes)
-            .map(j => shiftleft(col("t"), planes) +
-              col("lsh").bitwiseXOR(lit(1 << j))): _*)).as("k"))
-      assert(exprKeys.exceptAll(kernelKeys(0)).isEmpty &&
-        kernelKeys(0).exceptAll(exprKeys).isEmpty,
-        "mode 0 diverged from the r16 probe expression")
-      // mode 2: exactly the own-bucket keys
+          col("__sigs"), lit(planes | (side << 8)))).as("k"))
+      // side 2: exactly the own-bucket keys
       val ownKeys = base
         .select(col("__id"), posexplode(col("__sigs")).as(Seq("t", "lsh")))
         .select(col("__id"),
           (shiftleft(col("t"), planes) + col("lsh")).as("k"))
       assert(ownKeys.exceptAll(kernelKeys(2)).isEmpty &&
         kernelKeys(2).exceptAll(ownKeys).isEmpty,
-        "mode 2 diverged from the own-bucket keys")
-      // mode 1: own keys + flips that SET a zero bit (driver-side
+        "side 2 diverged from the own-bucket keys")
+      // side 1: own keys + flips that SET a zero bit (collected
       // reference reconstruction per row)
       val got = kernelKeys(1).collect()
         .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
@@ -74,18 +64,40 @@ class EmbeddingKernelsSpec extends QueryAssertions {
           }
         }.map(k => (id, k))
       }.sorted.toSeq
-      assert(got == want, "mode 1 diverged from the zero-bit reference")
-      // and mode 1 still finds every hamming<=1 pair: for any two
-      // buckets differing in exactly one bit, exactly one side's flip
-      // set contains the other's own key (checked exhaustively over the
-      // 6-plane bucket space)
-      for (b1 <- 0 until (1 << planes); j <- 0 until planes) {
-        val b2 = b1 ^ (1 << j)
-        val oneProbesTwo = ((b1 >> j) & 1) == 0 // b1 holds the 0
-        val twoProbesOne = ((b2 >> j) & 1) == 0
-        assert(oneProbesTwo != twoProbesOne,
-          s"exactly one direction must exist for $b1 vs $b2")
+      assert(got == want, "side 1 diverged from the zero-bit reference")
+      // the r16 all-flip probe expression (own + every 1-bit flip per
+      // table) as the reference for reach: every (doc, doc, table) it
+      // makes collide — i.e. every hamming<=1 table of every pair — must
+      // collide under zero-bit keys in at least one direction
+      val allFlip = base
+        .select(col("__id"), posexplode(col("__sigs")).as(Seq("t", "lsh")))
+        .select(col("__id"), explode(array(
+          (shiftleft(col("t"), planes) + col("lsh")) +: (0 until planes)
+            .map(j => shiftleft(col("t"), planes) +
+              col("lsh").bitwiseXOR(lit(1 << j))): _*)).as("k"))
+      def collisions(probe: org.apache.spark.sql.DataFrame) =
+        probe.select(col("__id").as("p"), col("k"))
+          .join(ownKeys.select(col("__id").as("b"), col("k")), "k")
+          .filter(col("p") =!= col("b"))
+          .select(col("p"), col("b"), shiftright(col("k"), planes).as("t"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val reach = collisions(allFlip)
+      val zero = collisions(kernelKeys(1))
+      assert(reach.nonEmpty, "fixture produced no hamming<=1 collisions")
+      val lost = reach.filterNot { case (p, b, t) =>
+        zero.contains((p, b, t)) || zero.contains((b, p, t))
       }
+      assert(lost.isEmpty, s"zero-bit keys lost ${lost.size} collisions, " +
+        s"e.g. ${lost.take(3)}")
+      assert(zero.subsetOf(reach), "zero-bit keys collide beyond hamming 1")
+      // any other side value fails loudly
+      val e = intercept[Exception](base.select(call_function(
+        "graft_lsh_probe_keys", col("__sigs"), lit(planes))).collect())
+      def chain(t: Throwable): List[String] =
+        if (t == null) Nil else t.getMessage :: chain(t.getCause)
+      assert(chain(e).exists(m => m != null &&
+        m.contains("graft_lsh_probe_keys side must be 1")),
+        s"expected the side error, got: ${e.getMessage}")
     } finally base.unpersist(blocking = false)
   }
 
@@ -224,44 +236,65 @@ class EmbeddingKernelsSpec extends QueryAssertions {
       s"featurization must not shuffle:\n${plan.take(2000)}")
   }
 
-  test("graft_sig_keep equals graft_sig_match + the three filters " +
-      "on a randomized signature sweep") {
-    // 5 000 random (sig1, sig2, rowTable) triples at the 40×-stress
-    // geometry (14 planes × 23 tables, 2-byte packing, minAgree 2,
-    // hMax from the 5σ rule), seeded for reproducibility. The fused
-    // kernel may only change evaluation ORDER, never the boolean.
+  test("graft_sig_keep_routed with an empty hot set equals " +
+      "graft_sig_match + the three filters on a randomized signature sweep") {
+    // 5 000 random (sig1, sig2, rowTable, probeSmaller) rows at the
+    // 40×-stress geometry (14 planes × 23 tables, 2-byte packing,
+    // minAgree 2, hMax from the 5σ rule), seeded for reproducibility.
+    // The fused kernel may only change evaluation ORDER, never the
+    // boolean: first agreeing table == rowTable, agreement >= minAgree,
+    // hamming <= hMax, and the id ordering (probeSmaller) decides the
+    // direction at hamming-0 rows — a hamming-1 row is its table's only
+    // direction and owns the pair either way.
     val planes = 14
     val tables = 23
     val minAgree = 2
     val hMax = graft.ops.EmbeddingDedup.hammingCap(0.8, planes, tables)
-    val params = 2 | (minAgree << 8) | (hMax << 16)
-    // biased generator: ~half the pairs share most buckets (agreement-
-    // rich region) so the first-table/minAgree branches actually fire
+    val params = (2 | (minAgree << 8) | (hMax << 16)).toLong |
+      (planes.toLong << 32)
+    // biased generator: per table a third of the buckets are equal, a
+    // third one bit apart and a third random, so the first-table,
+    // minAgree and hamming-1 direction branches all fire
     val rows = spark.range(5000).select(
       expr(s"""transform(sequence(0, ${tables - 1}), t ->
         CAST(pmod(hash(id, t, 1), ${1 << planes}) AS INT))""").as("s1raw"),
       expr(s"""transform(sequence(0, ${tables - 1}), t ->
-        CAST(IF(pmod(hash(id, t, 7), 2) = 0,
-          pmod(hash(id, t, 1), ${1 << planes}),
-          pmod(hash(id, t, 2), ${1 << planes})) AS INT))""").as("s2raw"),
-      expr(s"CAST(pmod(hash(id, 3), $tables) AS INT)").as("rowT"))
+        CAST(CASE pmod(hash(id, t, 7), 3)
+          WHEN 0 THEN pmod(hash(id, t, 1), ${1 << planes})
+          WHEN 1 THEN pmod(hash(id, t, 1), ${1 << planes}) ^
+            shiftleft(1, pmod(hash(id, t, 5), $planes))
+          ELSE pmod(hash(id, t, 2), ${1 << planes}) END AS INT))""")
+        .as("s2raw"),
+      expr(s"CAST(pmod(hash(id, 3), $tables) AS INT)").as("rowT"),
+      expr("pmod(hash(id, 11), 2) = 0").as("probeSmaller"))
       .select(
         call_function("graft_pack_ints", col("s1raw"), lit(2)).as("p1"),
         call_function("graft_pack_ints", col("s2raw"), lit(2)).as("p2"),
-        col("rowT"))
+        expr("bit_count(element_at(s1raw, rowT + 1) ^ " +
+          "element_at(s2raw, rowT + 1)) = 1").as("ham1"),
+        col("rowT"), col("probeSmaller"))
     val cmp = rows.select(
-      call_function("graft_sig_keep", col("p1"), col("p2"), col("rowT"),
-        lit(params)).as("fused"),
+      call_function("graft_sig_keep_routed", col("p1"), col("p2"),
+        shiftleft(col("rowT"), 1) + when(col("probeSmaller"), 1).otherwise(0),
+        typedlit(Array.empty[Int]), lit(params)).as("fused"),
       call_function("graft_sig_match", col("p1"), col("p2"), lit(2))
-        .as("m"), col("rowT"))
+        .as("m"), col("rowT"), col("ham1"), col("probeSmaller"))
       .select(col("fused"),
         (col("m").bitwiseAND(lit(255)) === col("rowT") &&
           shiftright(col("m"), 8).bitwiseAND(lit(255)) >= minAgree &&
-          shiftright(col("m"), 16) <= hMax).as("composed"))
-    assert(cmp.filter(col("fused") =!= col("composed")).count() == 0)
-    // the sweep must exercise both outcomes
-    assert(cmp.filter(col("fused")).count() > 0, "no keep cases generated")
-    assert(cmp.filter(!col("fused")).count() > 0, "no drop cases generated")
+          shiftright(col("m"), 16) <= hMax &&
+          (col("probeSmaller") || col("ham1"))).as("composed"),
+        col("ham1"), col("probeSmaller"))
+      .persist()
+    try {
+      assert(cmp.filter(col("fused") =!= col("composed")).count() == 0)
+      // the sweep must exercise both outcomes, and the hamming-1 row that
+      // owns its pair against the id ordering
+      assert(cmp.filter(col("fused")).count() > 0, "no keep cases generated")
+      assert(cmp.filter(!col("fused")).count() > 0, "no drop cases generated")
+      assert(cmp.filter(col("fused") && col("ham1") && !col("probeSmaller"))
+        .count() > 0, "no hamming-1 reverse-direction keeps generated")
+    } finally cmp.unpersist(blocking = false)
   }
 
   test("histogram overflow fails loudly instead of wrapping") {

@@ -327,6 +327,20 @@ class PlanSpec extends QueryAssertions {
     assert(!plan.contains("CartesianProduct"), "all-pairs join would sink at scale")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       "candidates must come from the (table, lshBucket) equi join")
+    // the oracle's sf0.01 geometry runs the one candidate path the stress
+    // legs run: zero-bit probe keys decided by the routed keep kernel
+    assert(plan.contains("graft_lsh_probe_keys") &&
+      plan.contains("graft_sig_keep_routed") &&
+      !plan.contains("graft_sig_keep("),
+      s"d07 must plan zero-bit probes + graft_sig_keep_routed:\n${plan.take(3000)}")
+  }
+
+  test("e04: approx-most-frequent top-k is a bounded sort, not a global window") {
+    // an unpartitioned rank window moves every count to one partition;
+    // sort + limit merges per-partition top-n results instead
+    val plan = planOf(run("e04_approx_most_frequent"))
+    assert(plan.contains("TakeOrderedAndProject") && !plan.contains("Window"),
+      plan.take(2000))
   }
 
   test("j09/j10: as-of and range joins avoid nested-loop plans") {

@@ -63,16 +63,14 @@ object ProbeD07 {
       println(s"    distinct vectors in bucket: ${nv.getLong(0)}")
     }
 
-    def keyOf(t: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      shiftleft(t, planes) + b
-    val probes = assign.select(col("__id").as("id1"),
-      col("__sigp").as("__sp1"),
-      explode(array(
-        keyOf(col("__t"), col("__lsh")) +: (0 until planes)
-          .map(j => keyOf(col("__t"),
-            col("__lsh").bitwiseXOR(lit(1 << j)))): _*)).as("__k"))
-    val build = assign.select(col("__id").as("id2"),
-      col("__sigp").as("__sp2"), keyOf(col("__t"), col("__lsh")).as("__k"))
+    // the pipeline's candidate join sides: own + zero-bit flip keys on
+    // the probe side, own keys on the build side
+    def keys(side: Int) = explode(call_function("graft_lsh_probe_keys",
+      col("__sigs"), lit(planes | (side << 8)))).as("__k")
+    val probes = base.select(col("__id").as("id1"),
+      col("__sigp").as("__sp1"), keys(1))
+    val build = base.select(col("__id").as("id2"),
+      col("__sigp").as("__sp2"), keys(2))
 
     val matched = timed("candidate join COUNT only")(
       probes.select("__k").join(build.select("__k").hint("shuffle_hash"), Seq("__k"))
@@ -81,13 +79,16 @@ object ProbeD07 {
 
     val minAgree = if (tables >= 4) 2 else 1
     val hMax = 62 // representative cap; exact value immaterial for timing
-    val survivors = timed("join + sig_keep decision")(
+    val params = 2L | (minAgree.toLong << 8) | (hMax.toLong << 16) |
+      (planes.toLong << 32)
+    val survivors = timed("join + keep decision")(
       probes.join(build.hint("shuffle_hash"), Seq("__k"))
-        .filter(col("id1") < col("id2") &&
-          call_function("graft_sig_keep", col("__sp1"), col("__sp2"),
-            shiftright(col("__k"), planes),
-            lit(2 | (minAgree << 8) | (hMax << 16))))
-        .select("id1", "id2").count())
+        .filter(col("id1") =!= col("id2") &&
+          call_function("graft_sig_keep_routed", col("__sp1"), col("__sp2"),
+            shiftleft(shiftright(col("__k"), planes), 1) +
+              when(col("id1") < col("id2"), 1).otherwise(0),
+            typedlit(Array.empty[Int]), lit(params)))
+        .count())
     println(s"  survivors = $survivors")
 
     val uncapped = timed("full nearDuplicates")(

@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dump the d07x pipeline's plans at a given stress scale and verify-hint
-  * mode — the committed evidence for the r17 verify-join pinning (r16
-  * verdict #1: the A/B never ran past 10× and the strategy past broadcast
-  * reach was unpinned).
+/** Dump the d07x pipeline's plans at a given stress scale — the
+  * committed evidence for which join strategies the candidate and
+  * verify joins get past broadcast reach.
   *
-  * args: <scale> <hint: none|shuffle_hash|auto> <outPrefix>
-  *       [probeMode: zero|all (default: session default)]
+  * args: <scale> <outPrefix>
   *
   * Writes:
   *  - <outPrefix>.txt           — explain("formatted") of the composed
@@ -16,19 +14,15 @@ import org.apache.spark.sql.functions._
   *  - <outPrefix>_executed.txt  — the final AQE executedPlan after one
   *                                noop run (where the verify-join
   *                                strategy decision is visible)
-  * and prints the pair count (result identity across modes: the hint
-  * changes join STRATEGY only, never the pair set).
+  * and prints the pair count.
   */
 object ProbeD07Plans {
   def main(args: Array[String]): Unit = {
     val scale = args(0).toInt
-    val hint = args(1)
-    val outPrefix = args(2)
+    val outPrefix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Engine.session(cores = cpus, shufflePartitions = cpus)
-    if (hint != "auto") spark.conf.set("graft.d07.verifyHint", hint)
-    if (args.length > 3) spark.conf.set("graft.d07.probeMode", args(3))
     val docs = Tables.load(spark, sfDir, "documents")
     val (input, p, t, cap) =
       if (scale <= 1) (docs, 8, 8, 0)
@@ -39,7 +33,7 @@ object ProbeD07Plans {
         val (pp, tt) = graft.ops.ScaleStress.geometryFor(nK)
         (docsK, pp, tt, graft.ops.EmbeddingDedup.occupancyCapFor(nK, pp))
       }
-    println(s"[d07plans] scale=$scale hint=$hint planes=$p tables=$t cap=$cap")
+    println(s"[d07plans] scale=$scale planes=$p tables=$t cap=$cap")
     val df = graft.ops.EmbeddingDedup.nearDuplicates(input, "doc_id", "text",
       0.8, planes = p, tables = t, materialize = false, maxOccupancy = cap)
     def dump(path: String, text: String): Unit = {

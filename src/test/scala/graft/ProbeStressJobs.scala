@@ -20,11 +20,9 @@ object ProbeStressJobs {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Engine.session(cores = cpus, shufflePartitions = cpus)
-    sys.env.get("SPARK_GRAFT_D07_PROBEMODE")
-      .foreach(m => spark.conf.set("graft.d07.probeMode", m))
     val docs = Tables.load(spark, sfDir, "documents")
     // legName "d07_headline" profiles the 1× corpus entry shape (no
-    // multiply, default geometry) — for probe-mode fixed-cost hunts
+    // multiply, default geometry) — for fixed-cost hunts
     val leg: () => org.apache.spark.sql.DataFrame =
       if (legName == "d07_headline") { () =>
         graft.ops.EmbeddingDedup.nearDuplicates(docs, "doc_id", "text", 0.8)

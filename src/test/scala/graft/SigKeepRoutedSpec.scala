@@ -1,21 +1,22 @@
 package graft
 
-import graft.functions.{KeyInSortedSet, SigKeepRouted}
+import graft.functions.{KeyInSortedSet, SigKeepRouted, SigMatch}
 import graft.ops.EmbeddingDedup
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
-/** The occupancy-capped embedding-dedup path (EmbeddingDedup
-  * maxOccupancy > 0): the suppression-aware keep kernel
-  * (functions/EmbeddingKernels.SigKeepRouted), the hot-cell membership
-  * predicate (KeyInSortedSet), and the pipeline-level containment /
-  * recall contracts. The design these pin (BASELINE.md round 14, the
-  * 100× probe): natural-text cone skew makes per-cell occupancy p99/max
-  * grow while the mean stays at the geometry target, so candidate rows
-  * (Σocc²) run ~4× the uniform model; capping cells co-designed with
-  * the canonical-owner rule removes the tail without losing pairs that
-  * still have any live agreeing route.
+/** The embedding-dedup keep kernel (functions/EmbeddingKernels
+  * .SigKeepRouted) over the zero-bit probe row universe, with and
+  * without suppressed cells; the hot-cell membership predicate
+  * (KeyInSortedSet); and the occupancy-capped pipeline's (EmbeddingDedup
+  * maxOccupancy > 0) containment / recall contracts. The design these
+  * pin (BASELINE.md round 14, the 100× probe): natural-text cone skew
+  * makes per-cell occupancy p99/max grow while the mean stays at the
+  * geometry target, so candidate rows (Σocc²) run ~4× the uniform
+  * model; capping cells co-designed with the canonical-owner rule
+  * removes the tail without losing pairs that still have any live
+  * agreeing route.
   */
 class SigKeepRoutedSpec extends QueryAssertions {
 
@@ -47,126 +48,61 @@ class SigKeepRoutedSpec extends QueryAssertions {
         (rowT << 1) | (if (probeSmaller) 1 else 0))
   }
 
-  test("empty hot set: routed kernel == graft_sig_keep AND id1 < id2 " +
-      "on a randomized signature sweep") {
-    // the same biased generator as the SigKeep equivalence sweep, plus a
-    // random probeSmaller bit: with no suppressed cells the routed form
-    // must reduce bit-for-bit to the canonical-first-table kernel gated
-    // by the id ordering
-    val planes = 14
-    val tables = 23
-    val minAgree = 2
-    val hMax = EmbeddingDedup.hammingCap(0.8, planes, tables)
-    val params = 2 | (minAgree << 8) | (hMax << 16)
-    val paramsL = params.toLong | (planes.toLong << 32)
-    val rows = spark.range(5000).select(
-      expr(s"""transform(sequence(0, ${tables - 1}), t ->
-        CAST(pmod(hash(id, t, 1), ${1 << planes}) AS INT))""").as("s1raw"),
-      expr(s"""transform(sequence(0, ${tables - 1}), t ->
-        CAST(IF(pmod(hash(id, t, 7), 2) = 0,
-          pmod(hash(id, t, 1), ${1 << planes}),
-          pmod(hash(id, t, 2), ${1 << planes})) AS INT))""").as("s2raw"),
-      expr(s"CAST(pmod(hash(id, 3), $tables) AS INT)").as("rowT"),
-      expr("pmod(hash(id, 11), 2) = 0").as("probeSmaller"))
-      .select(
-        call_function("graft_pack_ints", col("s1raw"), lit(2)).as("p1"),
-        call_function("graft_pack_ints", col("s2raw"), lit(2)).as("p2"),
-        col("rowT"), col("probeSmaller"))
-    val cmp = rows.select(
-      call_function("graft_sig_keep_routed", col("p1"), col("p2"),
-        shiftleft(col("rowT"), 1) +
-          when(col("probeSmaller"), 1).otherwise(0),
-        typedlit(Array.empty[Int]), lit(paramsL)).as("routed"),
-      (call_function("graft_sig_keep", col("p1"), col("p2"), col("rowT"),
-        lit(params)) && col("probeSmaller")).as("legacy"))
-    assert(cmp.filter(col("routed") =!= col("legacy")).count() == 0)
-    assert(cmp.filter(col("routed")).count() > 0, "no keep cases generated")
-    assert(cmp.filter(!col("routed")).count() > 0, "no drop cases generated")
-  }
-
-  test("exactly-once ownership under suppression: every simulated pair " +
-      "survives once iff it keeps a live agreeing route") {
-    // Direct simulation of the join's row universe for random pairs and
-    // a random hot set: a row (probe P, build B, table t) exists iff
-    // hamming(t) <= 1 and B's bucket at t is live (the KeyInSortedSet
-    // filters drop the build row AND the probe key by the same cell).
-    // The kernel must keep EXACTLY ONE existing row for a reportable
-    // pair (agree >= minAgree, hamming <= hMax, >= 1 live route) and
-    // ZERO rows otherwise.
-    val planes = 6
+  test("empty hot set: routed kernel equals graft_sig_match + the three " +
+      "filters, 4-byte packing at the 1x geometry") {
+    // the interpreted compute path against the composed SigMatch
+    // decision: first agreeing table == rowT, agreement >= minAgree,
+    // hamming <= hMax, and the probeSmaller gate (id1 < id2) at hamming-0
+    // rows — a hamming-1 row is its table's only direction under
+    // zero-bit probes and owns the pair either way
+    val planes = 8
     val tables = 8
     val minAgree = 2
-    val hMax = planes * tables // isolate the routing logic from the cap
-    val rnd = new scala.util.Random(20260816L)
+    val hMax = EmbeddingDedup.hammingCap(0.8, planes, tables)
+    val keep = routedKernel(Array.empty[Int], planes, minAgree, hMax, width = 4)
+    val sigMatch = SigMatch(Literal(Array.empty[Byte]),
+      Literal(Array.empty[Byte]), Literal(4))
+    val rnd = new scala.util.Random(20260821L)
     val nBuckets = 1 << planes
-    val hot = (0 until nBuckets * tables)
-      .filter(_ => rnd.nextInt(5) == 0).map(identity).toArray
-    val keep = routedKernel(hot, planes, minAgree, hMax)
-    val hotSet = hot.toSet
-    def live(t: Int, b: Int) = !hotSet.contains((t << planes) | b)
-    var reportable = 0
-    var unreachable = 0
-    var filteredOut = 0
-    for (_ <- 0 until 4000) {
-      // near-dup-biased: ~60% of tables agree exactly, some at hamming 1
+    var kept, dropped, reverseKept = 0
+    for (_ <- 0 until 5000) {
       val s1 = Array.fill(tables)(rnd.nextInt(nBuckets))
-      val s2 = s1.zipWithIndex.map { case (b, _) =>
-        rnd.nextInt(10) match {
-          case 0 | 1 | 2 => rnd.nextInt(nBuckets) // disagree (usually)
-          case 3 | 4 => b ^ (1 << rnd.nextInt(planes)) // hamming 1
-          case _ => b // exact
-        }
-      }
-      val agreeTables = (0 until tables).filter(t =>
-        Integer.bitCount(s1(t) ^ s2(t)) <= 1)
-      val agree = agreeTables.size
-      val totalH = (0 until tables).map(t =>
-        Integer.bitCount(s1(t) ^ s2(t))).sum
-      // the row universe: both directions per agreeing table, gated on
-      // the BUILD side's cell liveness. probeSmaller says id1 < id2;
-      // direction A = (probe smaller, build larger) carries (s1=smaller,
-      // s2=larger); direction B the reverse. WLOG doc1 is the smaller id.
-      val survivors = agreeTables.flatMap { t =>
-        val dirA = if (live(t, s2(t)))
-          Some(keep(s1, s2, t, true)) else None
-        val dirB = if (live(t, s1(t)))
-          Some(keep(s2, s1, t, false)) else None
-        Seq(dirA, dirB).flatten.filter(identity)
-      }.size
-      val hasLiveRoute = agreeTables.exists(t =>
-        live(t, s1(t)) || live(t, s2(t)))
-      val expected =
-        if (agree >= minAgree && totalH <= hMax && hasLiveRoute) 1 else 0
-      assert(survivors == expected,
-        s"pair with agree=$agree totalH=$totalH liveRoute=$hasLiveRoute " +
-          s"survived $survivors times (expected $expected)\n" +
+      val s2 = s1.map(b => rnd.nextInt(3) match {
+        case 0 => b
+        case 1 => b ^ (1 << rnd.nextInt(planes))
+        case _ => rnd.nextInt(nBuckets)
+      })
+      val rowT = rnd.nextInt(tables)
+      val probeSmaller = rnd.nextBoolean()
+      val m = sigMatch.compute(pack(s1, 4), pack(s2, 4))
+      val ham1 = Integer.bitCount(s1(rowT) ^ s2(rowT)) == 1
+      val composed = (m & 0xFF) == rowT && ((m >> 8) & 0xFF) >= minAgree &&
+        (m >>> 16) <= hMax && (probeSmaller || ham1)
+      val got = keep(s1, s2, rowT, probeSmaller)
+      assert(got == composed,
+        s"rowT=$rowT probeSmaller=$probeSmaller got=$got\n" +
           s"s1=${s1.mkString(",")}\ns2=${s2.mkString(",")}")
-      if (expected == 1) reportable += 1
-      else if (agree >= minAgree && totalH <= hMax) unreachable += 1
-      else filteredOut += 1
+      if (got) kept += 1 else dropped += 1
+      if (got && ham1 && !probeSmaller) reverseKept += 1
     }
-    // the sweep must exercise all three regimes
-    assert(reportable > 100, s"only $reportable reportable pairs generated")
-    assert(unreachable > 0, "no all-routes-hot pairs generated")
-    assert(filteredOut > 0, "no agreement-filtered pairs generated")
+    assert(kept > 0 && dropped > 0, s"kept=$kept dropped=$dropped")
+    assert(reverseKept > 0, "no hamming-1 reverse-direction keeps generated")
   }
 
   test("halved probes, empty hot set: exactly one direction survives " +
       "per reportable pair on a randomized signature sweep") {
-    // r17 zero-bit multiprobe: the row universe at a hamming-1 table
-    // has ONE direction (the 0-holder probes into the 1-holder's cell);
+    // zero-bit multiprobe: the row universe at a hamming-1 table has
+    // ONE direction (the 0-holder probes into the 1-holder's cell);
     // hamming-0 tables have both. With no suppression the kernel must
     // keep exactly one existing row iff the pair is reportable
-    // (agree >= minAgree, hamming <= hMax) — the PAIR SET equals
-    // graft_sig_keep's, only the surviving direction may differ.
+    // (agree >= minAgree, hamming <= hMax).
     val planes = 6
     val tables = 8
     val minAgree = 2
     val hMax = EmbeddingDedup.hammingCap(0.8, planes, tables)
     val rnd = new scala.util.Random(20260819L)
     val nBuckets = 1 << planes
-    val keepHalved = routedKernelHalved(Array.empty[Int], planes, minAgree, hMax)
-    val keepLegacy = routedKernel(Array.empty[Int], planes, minAgree, hMax)
+    val keep = routedKernel(Array.empty[Int], planes, minAgree, hMax)
     var reportable = 0
     for (_ <- 0 until 4000) {
       val s1 = Array.fill(tables)(rnd.nextInt(nBuckets))
@@ -181,29 +117,22 @@ class SigKeepRoutedSpec extends QueryAssertions {
         Integer.bitCount(s1(t) ^ s2(t)) <= 1)
       val totalH = (0 until tables).map(t =>
         Integer.bitCount(s1(t) ^ s2(t))).sum
-      // halved row universe (doc1 = smaller id = sigs s1): at hamming 0
+      // the row universe (doc1 = smaller id = sigs s1): at hamming 0
       // both directions exist; at hamming 1 only the direction whose
       // PROBE holds the 0 at the differing bit
       val survivors = agreeTables.flatMap { t =>
         val diff = s1(t) ^ s2(t)
         val dirA = // probe = doc1 (smaller): exists iff doc1 holds the 0
           if (diff == 0 || (s1(t) & diff) == 0)
-            Some(keepHalved(s1, s2, t, true)) else None
+            Some(keep(s1, s2, t, true)) else None
         val dirB = // probe = doc2 (larger)
           if (diff == 0 || (s2(t) & diff) == 0)
-            Some(keepHalved(s2, s1, t, false)) else None
+            Some(keep(s2, s1, t, false)) else None
         Seq(dirA, dirB).flatten.filter(identity)
       }.size
-      // reportability must equal the legacy (full-probe) kernel's: the
-      // legacy universe keeps the id1<id2 direction at the first
-      // agreeing table
-      val legacyKept = agreeTables.exists(t => keepLegacy(s1, s2, t, true))
       val expected = if (agreeTables.size >= minAgree && totalH <= hMax) 1 else 0
       assert(survivors == expected,
         s"halved pair survived $survivors times (expected $expected)\n" +
-          s"s1=${s1.mkString(",")}\ns2=${s2.mkString(",")}")
-      assert((survivors == 1) == legacyKept,
-        s"halved pair set diverged from legacy\n" +
           s"s1=${s1.mkString(",")}\ns2=${s2.mkString(",")}")
       if (expected == 1) reportable += 1
     }
@@ -212,7 +141,7 @@ class SigKeepRoutedSpec extends QueryAssertions {
 
   test("halved probes under suppression: exactly-once ownership in the " +
       "halved row universe") {
-    // the halved analog of the full-probe simulation: rows at hamming-1
+    // the join's row universe under a random hot set: rows at hamming-1
     // tables exist only in the 0-holder→1-holder direction AND when the
     // 1-holder's cell is live; hamming-0 rows exist in both directions
     // when the shared cell is live. The kernel must keep exactly one
@@ -224,13 +153,12 @@ class SigKeepRoutedSpec extends QueryAssertions {
     val hMax = planes * tables
     val rnd = new scala.util.Random(20260820L)
     val nBuckets = 1 << planes
-    // denser hot set than the full-probe sweep: a halved route dies when
-    // ONE cell is hot (vs both), but reaching "every agreeing table
-    // dead" still needs ~hotRate^agree — at 1/5 the 4000-pair sweep
-    // produced zero such pairs, so the regime went unexercised
+    // a dense hot set: reaching "every agreeing table dead" needs
+    // ~hotRate^agree — at 1/5 the 4000-pair sweep produced zero such
+    // pairs, so the regime went unexercised
     val hot = (0 until nBuckets * tables)
       .filter(_ => rnd.nextInt(2) == 0).map(identity).toArray
-    val keep = routedKernelHalved(hot, planes, minAgree, hMax)
+    val keep = routedKernel(hot, planes, minAgree, hMax)
     val hotSet = hot.toSet
     def live(t: Int, b: Int) = !hotSet.contains((t << planes) | b)
     var reportable = 0
@@ -279,39 +207,6 @@ class SigKeepRoutedSpec extends QueryAssertions {
     }
     assert(reportable > 100, s"only $reportable reportable pairs generated")
     assert(unreachable > 0, "no all-routes-hot pairs generated")
-  }
-
-  test("pipeline: halved probes produce the identical pair set to the " +
-      "r16 full-probe mode, capped and uncapped") {
-    def pairs(mode: String, cap: Int): Seq[String] = {
-      spark.conf.set("graft.d07.probeMode", mode)
-      try EmbeddingDedup
-        .nearDuplicates(docs, "doc_id", "text", 0.8,
-          maxOccupancy = cap, minHotShare = 0.0)
-        .orderBy("id1", "id2").collect().map(_.toString).toSeq
-      finally spark.conf.unset("graft.d07.probeMode")
-    }
-    val allUncapped = pairs("all", 0)
-    assert(pairs("zero", 0) == allUncapped,
-      "uncapped: zero-bit probes diverged from full probes")
-    assert(allUncapped.nonEmpty)
-    // cap 12 engages the routed path inside the fixture's occupancy
-    // tail (the regime the 100× stress runs in)
-    val allCapped = pairs("all", 12)
-    assert(pairs("zero", 12) == allCapped,
-      "capped: zero-bit probes diverged from full probes")
-  }
-
-  private def routedKernelHalved(hot: Array[Int], planes: Int, minAgree: Int,
-      hMax: Int, width: Int = 2): (Array[Int], Array[Int], Int, Boolean) => Boolean = {
-    val params = (width | (minAgree << 8) | (hMax << 16)).toLong |
-      (planes.toLong << 32) | (1L << 40)
-    val k = SigKeepRouted(
-      Literal(Array.empty[Byte]), Literal(Array.empty[Byte]), Literal(0),
-      Literal.create(hot, ArrayType(IntegerType)), Literal(params))
-    (s1, s2, rowT, probeSmaller) =>
-      k.compute(pack(s1, width), pack(s2, width),
-        (rowT << 1) | (if (probeSmaller) 1 else 0))
   }
 
   test("graft_key_in_set equals array_contains on a randomized sweep " +
@@ -363,22 +258,22 @@ class SigKeepRoutedSpec extends QueryAssertions {
       .nearDuplicates(docs, "doc_id", "text", 0.8)
       .orderBy("id1", "id2").collect().map(_.toString).toSeq
     // a cap above the fixture's max occupancy: the hot set comes back
-    // EMPTY and pairsFrom falls back to the uncapped branch — this pins
-    // the fallback wiring (cap requested, nothing hot, same plan)
+    // EMPTY and pairsFrom builds the uncapped plan — this pins the
+    // fallback wiring (cap requested, nothing hot, same plan)
     val loose = EmbeddingDedup
       .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 1000000)
       .orderBy("id1", "id2").collect().map(_.toString).toSeq
     assert(loose == uncapped,
       s"loose cap diverged: ${loose.size} vs ${uncapped.size}")
     // cap 33 marks ONLY the fixture's single occ-34 cell hot, so the
-    // ROUTED branch is engaged (non-empty hot set, SigKeepRouted
-    // deciding every candidate) — and with one hot cell and minAgree 2,
+    // suppression filters and liveness checks engage (non-empty hot
+    // set) — and with one hot cell and minAgree 2,
     // equality with the uncapped pairs is GUARANTEED by the math: a
     // reportable pair has >= 2 agreeing tables and one cell can
     // suppress routes in only one of them, so a live canonical route
     // always remains. This is the pipeline-level pin of the routed
     // path's empty-suppression-effect correctness (the loose-cap case
-    // above never reaches the routed kernel).
+    // above never searches a hot set).
     val routedEq = EmbeddingDedup
       .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 33,
         minHotShare = 0.0)
@@ -450,31 +345,15 @@ class SigKeepRoutedSpec extends QueryAssertions {
         EmbeddingDedup.occupancyProfile(base, 8, 12, armShare = share12 + 0.01)
       assert(declined.isEmpty && shareSame == share12)
       // and the pipeline-level wiring: a requested cap whose share sits
-      // below minHotShare must build the UNCAPPED plan. r17: the
-      // geometry-adaptive probe default keeps the fixture's planes-8
-      // pipeline on the legacy full-probe form (graft_sig_keep, no
-      // routed kernel), while probeMode=zero builds the halved form
-      // (routed kernel, EMPTY hot set — still no suppression filters)
+      // below minHotShare must build the UNCAPPED plan — the routed
+      // kernel with an EMPTY hot set, no suppression filters
       val disarmed = EmbeddingDedup
         .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 12,
           materialize = false, minHotShare = share12 + 0.01)
         .queryExecution.analyzed.toString
-      assert(disarmed.contains("graft_sig_keep") &&
-        !disarmed.contains("graft_sig_keep_routed") &&
+      assert(disarmed.contains("graft_sig_keep_routed") &&
         !disarmed.contains("graft_key_in_set"),
-        "below-threshold share must fall back to the r16 uncapped plan " +
-          "at the fixture geometry (auto → full probes at planes 8)")
-      spark.conf.set("graft.d07.probeMode", "zero")
-      try {
-        val disarmedZero = EmbeddingDedup
-          .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 12,
-            materialize = false, minHotShare = share12 + 0.01)
-          .queryExecution.analyzed.toString
-        assert(disarmedZero.contains("graft_sig_keep_routed") &&
-          !disarmedZero.contains("graft_key_in_set"),
-          "zero mode must build the halved uncapped plan (routed kernel, " +
-            "no suppression filters)")
-      } finally spark.conf.unset("graft.d07.probeMode")
+        "below-threshold share must build the uncapped plan")
     } finally base.unpersist(blocking = false)
   }
 }
