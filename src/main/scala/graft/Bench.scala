@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 
 /** Benchmark runner following BASELINE.md's protocol (adopted from the
   * reference: presto-benchto-benchmarks/src/main/resources/benchmarks/
@@ -13,32 +14,150 @@ object Bench {
   private val Prewarm = 2
   private val Measured = 6
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** One headline query's measured runs: min, median, max and the
+    * median planning share. */
+  private[graft] final case class Headline(
+      name: String, min: Double, med: Double, max: Double, planning: Double)
 
-  /** The streaming block as (full, compact) JSON objects: one
-    * `name: [min, med, max]` entry per timed entry, then the total and
-    * the canary pairs. An empty `rows` (every entry failed) still gives
-    * valid JSON. */
-  private[graft] def streamBlockJson(
-      rows: Seq[(String, Double, Double, Double)],
-      canary: (Double, Double), canaryMulti: (Double, Double)): (String, String) = {
-    val full = rows.map { case (k, mn, md, mx) => s"${jstr(k)}:[$mn,$md,$mx]" } ++ Seq(
-      s""""total_med":${rows.map(_._3).sum}""",
-      s""""cpu_canary_sec":[${canary._1},${canary._2}]""",
-      s""""cpu_canary_multi_sec":[${canaryMulti._1},${canaryMulti._2}]""")
-    def r3s(d: Double): Double = math.rint(d * 1000) / 1000
-    val compact = rows.map { case (k, _, md, _) => s"${jstr(k)}:${r3s(md)}" }
-    (full.mkString("{", ",", "}"), compact.mkString("{", ",", "}"))
+  /** One stress leg's measured runs (sorted), the ledger rows of those
+    * runs and the leg's canary pairs before and after. */
+  private[graft] final case class Leg(
+      runs: Seq[Double], jobs: Seq[JobRow],
+      pre: (Double, Double), post: (Double, Double))
+
+  /** What a stress block measured besides its legs' timings. */
+  private[graft] final case class StressFacts(
+      scale: Int, rows: Long, geometry: (Int, Int),
+      lshPairs1x: Long, lshPairsScaled: Long,
+      d07xCap: Int, d07xHotCells: Int, d07xHotShare: Double,
+      ivfRows: Long, ivfGeometry: (Int, Int), ivfRecall: Double,
+      ivfScanFrac: Double, ivfLegSec: (Double, Double, Double),
+      canaryPre: (Double, Double), canaryPost: (Double, Double))
+
+  private def nums(ds: Double*): JArray = JArray(ds.map(JDouble(_)).toList)
+  private def strs(ss: Seq[String]): JArray = JArray(ss.map(JString(_)).toList)
+  private def minMedMax(sorted: Seq[Double]): JValue =
+    if (sorted.isEmpty) JNull
+    else nums(sorted.head, sorted(sorted.size / 2), sorted.last)
+  private def canaries(pre: (Double, Double), post: (Double, Double),
+      single: String, multi: String): List[JField] =
+    List(single -> nums(pre._1, post._1), multi -> nums(pre._2, post._2))
+
+  /** The streaming block: one `name: [min, med, max]` entry per timed
+    * entry, then the total and the canary pairs. */
+  private[graft] def streamBlock(rows: Seq[(String, Seq[Double])],
+      pre: (Double, Double), post: (Double, Double)): JObject =
+    JObject(rows.map { case (k, runs) => k -> minMedMax(runs) }.toList ++
+      List("total_med" -> JDouble(rows.map { case (_, r) => r(r.size / 2) }.sum)) ++
+      canaries(pre, post, "cpu_canary_sec", "cpu_canary_multi_sec"))
+
+  /** One stress block: an entry per leg (timings, canaries, and shuffle
+    * and spill bytes summed from the ledger rows of its measured runs),
+    * then the block's audit facts. */
+  private[graft] def stressBlock(legs: Seq[(String, Leg)], retried: Seq[String],
+      f: StressFacts): JObject = {
+    val legFields = legs.toList.map { case (name, l) =>
+      def sum(g: JobRow => Long) = JLong(l.jobs.map(g).sum)
+      name -> JObject(List("sec_min_med_max" -> minMedMax(l.runs)) ++
+        canaries(l.pre, l.post, "canary_sec", "canary_multi_sec") ++ List(
+        "shuffle_write_bytes" -> sum(_.shuffleWrite),
+        "shuffle_read_bytes" -> sum(_.shuffleRead),
+        "mem_spill_bytes" -> sum(_.memSpill),
+        "disk_spill_bytes" -> sum(_.diskSpill)))
+    }
+    def ratio(perScale: Int) =
+      if (f.lshPairs1x == 0) -1.0
+      else f.lshPairsScaled.toDouble / f.lshPairs1x / perScale
+    JObject(legFields ++ List(
+      "d07x_cap" -> JInt(f.d07xCap), "d07x_hot_cells" -> JInt(f.d07xHotCells),
+      "d07x_hot_share" -> JDouble(f.d07xHotShare),
+      // null, not a fabricated false, when the profile errored — the
+      // arming decision was never computed
+      "d07x_cap_armed" -> (if (f.d07xHotShare < 0) JNull else JBool(
+        f.d07xHotShare >= graft.ops.EmbeddingDedup.DefaultArmShare)),
+      "ivf_rows" -> JLong(f.ivfRows), "ivf_lists" -> JInt(f.ivfGeometry._1),
+      "ivf_nprobe" -> JInt(f.ivfGeometry._2),
+      "ivf_recall_at5" -> JDouble(f.ivfRecall), "ivf_scan_frac" -> JDouble(f.ivfScanFrac),
+      "ivf_train_sec" -> JDouble(f.ivfLegSec._1), "ivf_index_sec" -> JDouble(f.ivfLegSec._2),
+      "ivf_search_sec" -> JDouble(f.ivfLegSec._3), "stress_retried" -> strs(retried),
+      "scale" -> JInt(f.scale), "rows" -> JLong(f.rows),
+      "planes" -> JInt(f.geometry._1), "tables" -> JInt(f.geometry._2),
+      "lsh_pairs_1x" -> JLong(f.lshPairs1x), "lsh_pairs_scaled" -> JLong(f.lshPairsScaled),
+      "lsh_pair_ratio" -> JDouble(ratio(1)),
+      "lsh_pair_ratio_per_scale" -> JDouble(ratio(f.scale))) ++
+      canaries(f.canaryPre, f.canaryPost, "cpu_canary_sec", "cpu_canary_multi_sec"))
   }
+
+  /** The full artifact written to BENCH.json. */
+  private[graft] def artifact(results: Seq[Headline],
+      errors: Seq[(String, String)], sfDir: String, retried: Seq[String],
+      streaming: JObject, stress10x: JObject, stressHi: JObject,
+      canaryPre: (Double, Double), canaryPost: (Double, Double)): JObject = {
+    def perQuery(g: Headline => JValue) = JObject(results.toList.map(r => r.name -> g(r)))
+    JObject(List(
+      "metric" -> JString("total"), "value" -> JDouble(results.map(_.med).sum),
+      "unit" -> JString("sec"), "queries" -> perQuery(r => JDouble(r.med)),
+      "planning_sec" -> perQuery(r => JDouble(r.planning)),
+      "errors" -> JObject(errors.toList.map { case (k, v) => k -> JString(v) }),
+      "sf" -> JString(sfDir),
+      "total_min" -> JDouble(results.map(_.min).sum),
+      "spread_min_med_max" -> perQuery(r => nums(r.min, r.med, r.max)),
+      "retried" -> strs(retried),
+      "streaming" -> streaming,
+      "stress_10x" -> stress10x, "stress_hi" -> stressHi,
+      "available_processors" -> JInt(Runtime.getRuntime.availableProcessors),
+      // -1.0 if unavailable
+      "load_average" -> JDouble(java.lang.management.ManagementFactory
+        .getOperatingSystemMXBean.getSystemLoadAverage)) ++
+      canaries(canaryPre, canaryPost, "cpu_canary_sec", "cpu_canary_multi_sec"))
+  }
+
+  /** The one-line stdout summary of `full`: headline medians, errors,
+    * canaries and each streaming median, rounded to ms, plus the path of
+    * the full artifact. No spread, planning or stress maps. */
+  private[graft] def headlineLine(full: JObject, artifactPath: String): JObject = {
+    def r3(v: JValue): JValue = v match {
+      case JDouble(d) => JDouble(math.rint(d * 1000) / 1000)
+      case JArray(xs) => JArray(xs.map(r3))
+      case JObject(fs) => JObject(fs.map { case (k, x) => k -> r3(x) })
+      case x => x
+    }
+    val streaming = JObject(full \ "streaming" match {
+      case JObject(fs) => fs.collect { case (k, JArray(List(_, med, _))) => k -> r3(med) }
+      case _ => Nil
+    })
+    def keep(ks: String*) = ks.toList.map(k => k -> r3(full \ k))
+    JObject(keep("metric", "value", "unit", "queries", "errors", "sf",
+        "total_min", "retried") ++ List("streaming" -> streaming) ++
+      keep("cpu_canary_sec", "cpu_canary_multi_sec") ++
+      List("artifact" -> JString(artifactPath)))
+  }
+
+  /** The spread rule (BASELINE.md), for headline queries and stress legs
+    * alike: sorted runs whose median exceeds 2× their min (the median
+    * itself was measured through interference — BENCH_r10's d05 at a
+    * 3.7× spread, round 13's recorded d05x at 3.3–96.6 s) or whose
+    * max exceeds 4× it (BENCH_r11's ds03 hid a 4.99 s outlier behind a
+    * clean-looking 1.10 s median) are re-measured once, at the END of
+    * their block (the box has often drained by then), and the retried
+    * names ship in the artifact. */
+  private def contaminated(sorted: Seq[Double]): Boolean = sorted.nonEmpty &&
+    (sorted(sorted.size / 2) > 2 * sorted.head || sorted.last > 4 * sorted.head)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Engine.session(cores = cpus, shufflePartitions = cpus)
+    val sc = spark.sparkContext
+    val ledger = JobLedger.install(sc)
 
     val defs = SparkEntry.benchDefs
     var errors = List.empty[(String, String)]
+    def recordError(name: String, e: Throwable): Unit =
+      // one error entry per query — repeated failures would otherwise
+      // emit duplicate JSON keys
+      if (!errors.exists(_._1 == name))
+        errors ::= (name, Option(e.getMessage).getOrElse(e.getClass.getName))
 
     // Materialize through the noop sink, not count(): under count()
     // Catalyst prunes every column the final projection computes, so a
@@ -47,34 +166,29 @@ object Bench {
     // discards them — write-path overhead without any I/O.
     //
     // Returns (total, planning): DataFrame construction is EAGERLY
-    // analyzed (Dataset.ofRows asserts analysis), so the first leg
-    // times parse + analysis — where every injected resolution rule
-    // runs — and the remainder is optimize + physical planning +
-    // execution. Round-12 showed a ~60-160 ms short-query adder after
-    // ~10 new rules landed; this split makes "rules tax vs host noise"
-    // an artifact fact instead of a guess. Operators whose CONSTRUCTION
-    // embeds execution (eager localCheckpoints, bounded collects —
-    // d02/d05/d07/d09/v04) report that wall through graft.ExecTimer;
-    // subtracting it keeps planning_sec meaning one thing for all
-    // queries (it read ≈ total for those five through round 14).
+    // analyzed (Dataset.ofRows asserts analysis), so the first leg times
+    // parse + analysis — where every injected resolution rule runs.
+    // Construction that runs jobs (eager localCheckpoints, bounded
+    // collects — d02/d05/d07/d09/v04) has them tagged in the ledger, and
+    // planning is the construction wall minus the UNION of their
+    // [start, end] intervals; the driver-side planning of those eager
+    // actions counts as planning.
+    val constructTag = "bench.construct"
     def timeOnce(q: Qdef): Option[(Double, Double)] = {
-      ExecTimer.drainSec() // discard anything a previous scope leaked
+      val w0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       try {
-        val df = q.run(spark, sfDir)
+        val df = JobLedger.tagged(sc, constructTag)(q.run(spark, sfDir))
         val t1 = System.nanoTime()
-        val embeddedExec = ExecTimer.drainSec()
+        val w1 = System.currentTimeMillis()
         df.write.format("noop").mode("overwrite").save()
-        Some(((System.nanoTime() - t0) / 1e9,
-          math.max(0.0, (t1 - t0) / 1e9 - embeddedExec)))
+        val total = (System.nanoTime() - t0) / 1e9
+        val eagerMs = JobLedger.unionMs(
+          ledger.take(constructTag).map(r => (r.startMs, r.endMs)), w0, w1)
+        Some((total, math.max(0.0, (t1 - t0) / 1e9 - eagerMs / 1e3)))
       }
-      catch {
-        case e: Throwable =>
-          // one error entry per query — repeated failures would otherwise
-          // emit duplicate JSON keys
-          if (!errors.exists(_._1 == q.name))
-            errors ::= (q.name, Option(e.getMessage).getOrElse(e.getClass.getName))
-          None
+      catch { case e: Throwable =>
+        ledger.take(constructTag); recordError(q.name, e); None
       }
     }
 
@@ -84,57 +198,38 @@ object Bench {
     // multi-core leg makes the multi-core-only throttle (1.3–1.7× on
     // untouched queries at a 1.1× single ratio, BASELINE.md round-15
     // host-state note) self-flagging instead of folklore.
-    def cpuCanary(): Double = Measure.cpuCanary()
-    val (canaryPre, canaryPreM) = Measure.canaryPair()
+    val canaryPre = Measure.canaryPair()
 
-    // (name, min, median, max, planningMedian): the spread is the
-    // contention detector — on a quiet box min≈median; a loaded box shows
-    // median/min ratios of 2-3× on queries whose code didn't change, so a
-    // slow total self-flags as environment rather than reading as a
-    // regression.
-    def measure(q: Qdef): Option[(String, Double, Double, Double, Double)] = {
+    // min/median/max: the spread is the contention detector — on a
+    // quiet box min≈median; a loaded box shows median/min ratios of 2-3×
+    // on queries whose code didn't change, so a slow total self-flags as
+    // environment rather than reading as a regression.
+    def measure(q: Qdef): Option[Headline] = {
       (1 to Prewarm).foreach(_ => timeOnce(q))
       val pairs = (1 to Measured).flatMap(_ => timeOnce(q))
       if (pairs.isEmpty) None
       else {
         val runs = pairs.map(_._1).sorted
         val plans = pairs.map(_._2).sorted
-        Some((q.name, runs.head, runs(runs.size / 2), runs.last,
+        Some(Headline(q.name, runs.head, runs(runs.size / 2), runs.last,
           plans(plans.size / 2)))
       }
     }
-    val firstPass: Seq[(String, Double, Double, Double, Double)] =
-      defs.flatMap(measure)
+    val firstPass = defs.flatMap(measure)
 
-    // Contention retry (BASELINE.md "spread rule"): a median/min spread
-    // above 2× means the median was measured through interference, not
-    // the query — BENCH_r10 recorded d05 at a 3.7× spread whose context
-    // previously lived only in prose. Re-measure those queries once at
-    // the END of the suite (the box has often drained by then) and
-    // record the CLEANER of the two runs; the retried names ship in the
-    // artifact so a judge can see which medians are second-pass.
-    // Two triggers: median/min > 2× (the median itself was measured
-    // through interference) and max/min > 4× (BENCH_r11's ds03 carried a
-    // 4.99 s outlier behind a clean-looking 1.10 s median on a load-6.3
-    // host — the re-measure either replaces it with a clean triple or
-    // confirms the spread is real).
-    val needRetry = firstPass.filter { case (_, mn, med, mx, _) =>
-      med > 2 * mn || mx > 4 * mn }
-    val retried = needRetry.map(_._1)
+    // contention retry: the lower-median pass ships
+    val retried = firstPass.filter(r => contaminated(Seq(r.min, r.med, r.max)))
+      .map(_.name)
     val byName = defs.map(q => q.name -> q).toMap
-    val retryPass = needRetry.flatMap { case (name, _, _, _, _) => measure(byName(name)) }
-      .map(r => r._1 -> r).toMap
+    val retryPass = retried.flatMap(n => measure(byName(n))).map(r => r.name -> r).toMap
     val results = firstPass.map { r =>
-      retryPass.get(r._1) match {
-        case Some(r2) if r2._3 < r._3 => r2
-        case _ => r
-      }
+      retryPass.get(r.name).filter(_.med < r.med).getOrElse(r)
     }
-    val (canaryPost, canaryPostM) = Measure.canaryPair()
+    val canaryPost = Measure.canaryPair()
 
     // ---- streaming block (round-17, verdict #2): the r16 streaming
     // optimizations (checkpoint-checksum writer off, input-sized state
-    // partitions) were builder-probe-measured only — the bench had no
+    // partitions) were measured only by one-off probes — the bench had no
     // streaming legs, so no driver artifact could confirm them or catch
     // a regression. ADDITIONS-ONLY: the headline `queries` map and
     // `value` total are untouched (streaming medians ride in their own
@@ -143,165 +238,81 @@ object Bench {
     // each entry replays a small fixture end-to-end — the headline
     // 2+6 protocol would double the bench wall for no extra signal.
     // SPARK_GRAFT_STREAM_BENCH=0 skips the block.
-    val (streamFullJson, streamCompactJson) =
-      if (sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH", "1") == "0")
-        ("{}", "{}")
+    val streaming =
+      if (sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH", "1") == "0") JObject()
       else {
-        val (sPre, sPreM) = Measure.canaryPair()
+        val sPre = Measure.canaryPair()
         val sRows = SparkEntry.streamingDefs.flatMap { q =>
           timeOnce(q) // prewarm
           val runs = (1 to 3).flatMap(_ => timeOnce(q)).map(_._1).sorted
-          if (runs.isEmpty) None
-          else Some((q.name, runs.head, runs(runs.size / 2), runs.last))
+          if (runs.isEmpty) None else Some(q.name -> runs)
         }
-        val (sPost, sPostM) = Measure.canaryPair()
-        streamBlockJson(sRows, (sPre, sPost), (sPreM, sPostM))
+        streamBlock(sRows, sPre, Measure.canaryPair())
       }
 
-    val qs = results.map { case (k, _, med, _, _) => s"${jstr(k)}:$med" }
-      .mkString("{", ",", "}")
-    val spread = results
-      .map { case (k, mn, med, mx, _) => s"${jstr(k)}:[$mn,$med,$mx]" }
-      .mkString("{", ",", "}")
-    val planning = results
-      .map { case (k, _, _, _, pl) => s"${jstr(k)}:$pl" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._3).sum
-    val totalMin = results.map(_._2).sum
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val loadAvg = osBean.getSystemLoadAverage // -1.0 if unavailable
-    val procs = Runtime.getRuntime.availableProcessors
-    val retriedJson = retried.map(jstr).mkString("[", ",", "]")
-
-    // ---- 10× scale-stress of the dedup/ANN pillar (round-10 plan #3):
-    // the corpus is multiplied 10× with disjoint replica shingle spaces
+    // ---- scale-stress of the dedup/ANN pillar (round-10 plan #3): the
+    // corpus is multiplied with disjoint replica shingle spaces
     // (ops/ScaleStress), materialized once so the timings measure the
-    // OPERATORS, then each pipeline runs 1 prewarm + 3 measured passes
+    // OPERATORS, then each leg runs 1 prewarm + 3 measured passes
     // (lighter than the headline protocol — these are minutes-scale
-    // inputs; BASELINE.md documents the deviation) with per-query
-    // shuffle-write/read and spill bytes captured from stage metrics.
+    // inputs; BASELINE.md documents the deviation) with shuffle and
+    // spill bytes read from the ledger rows of the measured runs.
     // The LSH contract rides along: candidate pairs at 10× must stay
     // ~linear vs 1× (quadratic growth = a hot-bucket/clique failure).
-    // Stage events are delivered asynchronously — flush before reading
-    // or resetting listener counters (shared plumbing: graft.Measure).
-    def flushListenerBus(): Unit =
-      Measure.flushListenerBus(spark.sparkContext)
-
-    def runStressBlock(scale: Int): String = {
+    def runStressBlock(scale: Int): JObject = {
       val docs = Tables.load(spark, sfDir, "documents")
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val docsK = graft.ops.ScaleStress.multiplyDocs(docs, scale).persist(lvl)
-      val rowsK = docsK.count()
+      val legs = new graft.ops.ScaleStress.Legs(
+        docs, Tables.load(spark, sfDir, "embeddings"), scale)
       val pairs1x = graft.ops.ScaleStress.lshCandidateCount(docs)
-      val pairsKx = graft.ops.ScaleStress.lshCandidateCount(docsK)
-      val geom = graft.ops.ScaleStress.geometryFor(rowsK)
+      val pairsKx = graft.ops.ScaleStress.lshCandidateCount(legs.docs)
+      val geom = legs.geometry
       // Per-block canary pair: the headline canaries bracket the whole
       // suite, but the stress block runs minutes later — its own pair
       // lets a contended stress number (BENCH_r11's d07x 60.7 s vs
       // 39.4 s drained) be normalized without guessing host state.
-      val (cPre, cPreM) = Measure.canaryPair()
-      // ANN leg of the stress block: the embeddings corpus multiplied by
-      // the same scale through per-replica orthogonal shifts, indexed
-      // with the continuous √n-lists geometry; recall@5 and the scanned
-      // fraction are computed once (outside the timed loop) so the
-      // sublinear-scan claim is auditable next to the timing.
-      val embK = graft.ops.ScaleStress
-        .multiplyEmbeddings(Tables.load(spark, sfDir, "embeddings"), scale)
-        .persist(lvl)
-      val embRows = embK.count()
-      val (ivfLists, ivfNprobe) = graft.ops.ScaleStress.ivfGeometryFor(embRows)
+      val cPre = Measure.canaryPair()
+      // ANN leg: recall@5 and the scanned fraction are computed once
+      // (outside the timed loop) so the sublinear-scan claim is
+      // auditable next to the timing.
+      val (ivfLists, ivfNprobe) = legs.ivfGeometry
       val (ivfRecall, ivfScanFrac) =
-        try graft.ops.ScaleStress.ivfQuality(embK, ivfLists, ivfNprobe)
-        catch { case e: Throwable =>
-          errors ::= ("v04x_ivf_quality",
-            Option(e.getMessage).getOrElse(e.getClass.getName))
-          (-1.0, -1.0)
-        }
+        try graft.ops.ScaleStress.ivfQuality(legs.emb, ivfLists, ivfNprobe)
+        catch { case e: Throwable => recordError("v04x_ivf_quality", e); (-1.0, -1.0) }
       // one-pass per-leg breakdown (train / index / search) so the train
       // leg's scale behavior is an artifact fact, not a share of the
       // end-to-end median
-      val (ivfTrainSec, ivfIndexSec, ivfSearchSec) =
-        try graft.ops.ScaleStress.ivfLegTimings(embK, ivfLists, ivfNprobe)
-        catch { case e: Throwable =>
-          errors ::= ("v04x_ivf_legs",
-            Option(e.getMessage).getOrElse(e.getClass.getName))
-          (-1.0, -1.0, -1.0)
-        }
-      val allPipelines = graft.ops.ScaleStress.pipelines(docsK, Some(geom)) :+
-        ("v04x_ivf" -> (() =>
-          graft.ops.ScaleStress.ivfPipeline(embK, ivfLists, ivfNprobe)))
-      // one measured pass of a stress pipeline: prewarm + 3 runs with
-      // stage-metric capture. Each leg carries its OWN canary pair
-      // (round-14 verdict #2: a uniformly-slow host window passed the
-      // per-leg spread rule — BENCH_r14_hi100_capped's d02x/d05x read
-      // ~1.6× another artifact's on pipelines the change didn't touch,
-      // and only the block-level pair hinted at it); with per-leg pairs
+      val ivfLegSec =
+        try graft.ops.ScaleStress.ivfLegTimings(legs.emb, ivfLists, ivfNprobe)
+        catch { case e: Throwable => recordError("v04x_ivf_legs", e); (-1.0, -1.0, -1.0) }
+      // one measured pass of a stress leg: prewarm + 3 runs tagged in
+      // the ledger. Each leg carries its OWN canary pair (round-14
+      // verdict #2: a uniformly-slow host window passed the per-leg
+      // spread rule — BENCH_r14_hi100_capped's d02x/d05x read ~1.6×
+      // another artifact's on pipelines the change didn't touch, and
+      // only the block-level pair hinted at it); with per-leg pairs
       // every cross-artifact leg comparison is canary-attributable.
-      def measurePipeline(name: String,
-          build: () => org.apache.spark.sql.DataFrame)
-          : (Seq[Double], StressMetrics, ((Double, Double), (Double, Double))) = {
-        val m = new StressMetrics
-        spark.sparkContext.addSparkListener(m)
+      def measureLeg(name: String): Leg = {
+        val tag = s"bench.stress/$name"
         def once(): Option[Double] = {
           val t0 = System.nanoTime()
           try {
-            build().write.format("noop").mode("overwrite").save()
+            legs.build(name).write.format("noop").mode("overwrite").save()
             Some((System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable =>
-              if (!errors.exists(_._1 == name))
-                errors ::= (name,
-                  Option(e.getMessage).getOrElse(e.getClass.getName))
-              None
-          }
+          } catch { case e: Throwable => recordError(name, e); None }
         }
         once() // prewarm
-        flushListenerBus() // prewarm's stage events must land before reset
-        m.reset()
-        val legPre = Measure.canaryPair()
-        val runs = (1 to 3).flatMap(_ => once()).sorted
-        val legPost = Measure.canaryPair()
-        flushListenerBus() // last run's stage events must land before read
-        spark.sparkContext.removeSparkListener(m)
-        (runs, m, (legPre, legPost))
+        val pre = Measure.canaryPair()
+        val runs = JobLedger.tagged(sc, tag)((1 to 3).flatMap(_ => once())).sorted
+        val post = Measure.canaryPair()
+        Leg(runs, ledger.take(tag), pre, post)
       }
-      // Spread rule, same contract as the headline suite (round-13
-      // VERDICT: the driver's d05x once recorded a 3.3–96.6 s spread and
-      // d02x a 5× contaminated median with no self-defense): legs whose
-      // median > 2× min or max > 4× min re-measure ONCE at the end of the
-      // block, the cleaner (lower max) run ships, and the retried names
-      // are recorded so second-pass numbers are visible in the artifact.
-      val firstPass2 = allPipelines.map { case (name, build) =>
-        (name, build, measurePipeline(name, build)) }
-      def contaminated(runs: Seq[Double]): Boolean =
-        runs.nonEmpty &&
-          (runs(runs.size / 2) > 2 * runs.head || runs.last > 4 * runs.head)
-      val stressRetried = firstPass2.collect {
-        case (name, _, (runs, _, _)) if contaminated(runs) => name }
-      val finalRuns = firstPass2.map { case (name, build, first @ (runs, _, _)) =>
-        val best =
-          if (!contaminated(runs)) first
-          else {
-            val second = measurePipeline(name, build)
-            if (second._1.nonEmpty &&
-                (runs.isEmpty || second._1.last < runs.last)) second
-            else first
-          }
-        (name, best)
-      }
-      val entries = finalRuns.map {
-        case (name, (runs, m, ((cA, cAM), (cB, cBM)))) =>
-        val timing =
-          if (runs.isEmpty) "null"
-          else s"[${runs.head},${runs(runs.size / 2)},${runs.last}]"
-        s"${jstr(name)}:{" +
-          s""""sec_min_med_max":$timing,""" +
-          s""""canary_sec":[$cA,$cB],""" +
-          s""""canary_multi_sec":[$cAM,$cBM],""" +
-          s""""shuffle_write_bytes":${m.shuffleWrite.get},""" +
-          s""""shuffle_read_bytes":${m.shuffleRead.get},""" +
-          s""""mem_spill_bytes":${m.memSpill.get},""" +
-          s""""disk_spill_bytes":${m.diskSpill.get}}"""
+      // contention retry: the lower-max pass ships
+      val firstLegs = graft.ops.ScaleStress.LegNames.map(n => n -> measureLeg(n))
+      val stressRetried = firstLegs.collect { case (n, l) if contaminated(l.runs) => n }
+      val finalLegs = firstLegs.map { case (name, first) =>
+        lazy val second = measureLeg(name)
+        name -> (if (contaminated(first.runs) && second.runs.nonEmpty &&
+          second.runs.last < first.runs.last) second else first)
       }
       // the occupancy cap's audit facts (round 14, extended round 15):
       // the cap value the geometry rule derives at this scale, how many
@@ -309,63 +320,39 @@ object Bench {
       // whether the adaptive rule ARMED suppression at this scale — so a
       // cone-density regression (hot-cell blowup), a silently-disengaged
       // cap, or a wrong arming decision is visible in the artifact, not
-      // only in probe logs. One extra featurize+aggregate pass, AFTER
+      // only in Profile output. One extra featurize+aggregate pass, AFTER
       // every timed leg.
-      val d07xCap = graft.ops.EmbeddingDedup.occupancyCapFor(rowsK, geom._1)
+      val d07xCap = graft.ops.EmbeddingDedup.occupancyCapFor(legs.rows, geom._1)
       val (d07xHotCells, d07xHotShare) = try {
         val (keys, share) = graft.ops.EmbeddingDedup.occupancyProfile(
           graft.ops.EmbeddingDedup.featurize(
-            docsK, "doc_id", "text", geom._1, geom._2),
+            legs.docs, "doc_id", "text", geom._1, geom._2),
           geom._1, d07xCap, armShare = 0.0)
         (keys.length, share)
-      } catch { case e: Throwable =>
-        errors ::= ("d07x_hot_cells",
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-        (-1, -1.0)
-      }
-      // "null" (JSON), not a fabricated false, when the profile errored —
-      // the arming decision was never computed
-      val d07xCapArmed =
-        if (d07xHotShare < 0) "null"
-        else (d07xHotShare >= graft.ops.EmbeddingDedup.DefaultArmShare).toString
-      val (cPost, cPostM) = Measure.canaryPair()
-      docsK.unpersist(blocking = false)
-      embK.unpersist(blocking = false)
-      (entries :+
-        s""""d07x_cap":$d07xCap,"d07x_hot_cells":$d07xHotCells,""" +
-        s""""d07x_hot_share":$d07xHotShare,"d07x_cap_armed":$d07xCapArmed""" :+
-        s""""ivf_rows":$embRows,"ivf_lists":$ivfLists,""" +
-        s""""ivf_nprobe":$ivfNprobe,"ivf_recall_at5":$ivfRecall,""" +
-        s""""ivf_scan_frac":$ivfScanFrac,""" +
-        s""""ivf_train_sec":$ivfTrainSec,"ivf_index_sec":$ivfIndexSec,""" +
-        s""""ivf_search_sec":$ivfSearchSec""" :+
-        s""""stress_retried":${stressRetried.map(jstr).mkString("[", ",", "]")}""" :+
-        s""""scale":$scale,"rows":$rowsK,"planes":${geom._1},"tables":${geom._2},""" +
-        s""""lsh_pairs_1x":$pairs1x,"lsh_pairs_scaled":$pairsKx,""" +
-        s""""lsh_pair_ratio":${
-          if (pairs1x == 0) -1.0 else pairsKx.toDouble / pairs1x},""" +
-        s""""lsh_pair_ratio_per_scale":${
-          if (pairs1x == 0) -1.0 else pairsKx.toDouble / pairs1x / scale},""" +
-        s""""cpu_canary_sec":[$cPre,$cPost],""" +
-        s""""cpu_canary_multi_sec":[$cPreM,$cPostM]""")
-        .mkString("{", ",", "}")
+      } catch { case e: Throwable => recordError("d07x_hot_cells", e); (-1, -1.0) }
+      val cPost = Measure.canaryPair()
+      legs.release()
+      stressBlock(finalLegs, stressRetried, StressFacts(scale, legs.rows, geom,
+        pairs1x, pairsKx, d07xCap, d07xHotCells, d07xHotShare, legs.embRows,
+        legs.ivfGeometry, ivfRecall, ivfScanFrac, ivfLegSec, cPre, cPost))
     }
 
-    val stressJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") == "0") "{}"
+    val stress10x =
+      if (sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") == "0") JObject()
       else runStressBlock(10)
     // Opt-in deep-scale point (e.g. SPARK_GRAFT_STRESS_HI=40): verifies
     // the planes ≈ log2(n/16) geometry rule holds CONTINUOUSLY, not just
     // at 10×. Off by default so the driver's bench stays bounded.
-    val stressHiJson = sys.env.get("SPARK_GRAFT_STRESS_HI") match {
+    val stressHi = sys.env.get("SPARK_GRAFT_STRESS_HI") match {
       case Some(s) if s.matches("[0-9]+") && s.toInt > 1 => runStressBlock(s.toInt)
-      case _ => "{}"
+      case _ => JObject()
     }
 
-    // errs is rendered AFTER the stress block so stress pipeline failures
-    // (appended to `errors` inside runStressBlock) reach the artifact.
-    val errs = errors.reverse
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    // errors are rendered AFTER the stress block so stress leg failures
+    // (recorded inside runStressBlock) reach the artifact.
+    val full = artifact(results, errors.reverse, sfDir, retried, streaming,
+      stress10x, stressHi, canaryPre, canaryPost)
+    val fullJson = compact(full)
 
     // The full artifact goes to a FILE; stdout carries one COMPACT
     // headline line. Round-15's driver record was `parsed: null` because
@@ -373,8 +360,6 @@ object Bench {
     // the driver's 2 000-char stdout capture tail — the compact line
     // (queries + errors + canaries, no spread/planning/stress maps)
     // stays well under that bound, and the file keeps everything.
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"planning_sec":$planning,"errors":$errs,"sf":${jstr(sfDir)},"total_min":$totalMin,"spread_min_med_max":$spread,"retried":$retriedJson,"streaming":$streamFullJson,"stress_10x":$stressJson,"stress_hi":$stressHiJson,"available_processors":$procs,"load_average":$loadAvg,"cpu_canary_sec":[$canaryPre,$canaryPost],"cpu_canary_multi_sec":[$canaryPreM,$canaryPostM]}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     try {
       val w = new java.io.PrintWriter(outPath, "UTF-8")
@@ -383,46 +368,8 @@ object Bench {
       System.err.println(s"BENCH.json write failed: ${e.getMessage}")
       System.err.println(fullJson) // the full artifact must survive somewhere
     }
-    def r3(d: Double): Double = math.rint(d * 1000) / 1000
-    val qsCompact = results.map { case (k, _, med, _, _) => s"${jstr(k)}:${r3(med)}" }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsCompact,"errors":$errs,"sf":${jstr(sfDir)},"total_min":${r3(totalMin)},"retried":$retriedJson,"streaming":$streamCompactJson,"cpu_canary_sec":[${r3(canaryPre)},${r3(canaryPost)}],"cpu_canary_multi_sec":[${r3(canaryPreM)},${r3(canaryPostM)}],"artifact":${jstr(new java.io.File(outPath).getAbsolutePath)}}""")
-    // SPARK_GRAFT_RULE_TIMES=1: per-rule planning attribution (Spark's
-    // own RuleExecutor ledger, accumulated across the whole suite) to
-    // STDERR so the stdout artifact stays one JSON line. This is how the
-    // round-14 drift investigation found ResolveDataSource (parquet
-    // schema re-inference) at 87% of total rule time — keep it cheap to
-    // re-run.
-    if (sys.env.get("SPARK_GRAFT_RULE_TIMES").contains("1"))
-      System.err.println(
-        org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent())
+    println(compact(headlineLine(full, new java.io.File(outPath).getAbsolutePath)))
+    ledger.close()
     spark.stop()
-  }
-
-  /** Accumulates executor shuffle/spill bytes across completed stages —
-    * the stress entries report them so a 10× run's shuffle growth is an
-    * artifact fact, not a guess. */
-  private final class StressMetrics
-      extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new AtomicLong
-    val shuffleRead = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    def reset(): Unit = {
-      shuffleWrite.set(0); shuffleRead.set(0); memSpill.set(0); diskSpill.set(0)
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) {
-        shuffleWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(
-          tm.shuffleReadMetrics.remoteBytesRead + tm.shuffleReadMetrics.localBytesRead)
-        memSpill.addAndGet(tm.memoryBytesSpilled)
-        diskSpill.addAndGet(tm.diskBytesSpilled)
-      }
-    }
   }
 }

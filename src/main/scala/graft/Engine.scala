@@ -71,12 +71,11 @@ object Engine {
       // exactly, with TRY(...) null-on-error in both engines (corpus
       // n07); (2) the ConcatArrayElement resolution rule needs ANSI
       // coercion to keep `ARRAY[1] || 2` un-stringified (see its
-      // COUPLING note). `SET SESSION ansi_errors = false` opts a
-      // session into Spark's legacy NULL-on-error arithmetic;
-      // SPARK_GRAFT_ANSI=false starts the whole session that way (for
-      // corpus-wide experiments, not for production use).
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
+      // COUPLING note). `SET SESSION ansi_errors = false` (or
+      // spark.conf.set) opts one session into Spark's legacy
+      // NULL-on-error arithmetic; a corpus-wide experiment runs
+      // `graft.Profile ab <regex> --conf spark.sql.ansi.enabled=true,false`.
+      .config("spark.sql.ansi.enabled", "true")
       // events.parquet stores TIMESTAMP(NANOS); read as long, converted in
       // Tables.load (Spark has no nanos timestamp type).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -85,15 +84,14 @@ object Engine {
       // store commit through ChecksumCheckpointFileManager.awaitResult —
       // a thread dump of st05 showed all 32 join tasks parked there
       // (132 task-run-seconds vs 2.1 CPU-seconds in one micro-batch),
-      // and the interleaved A/B (ProbeStreamChecksum) measured st05
-      // 8.3 → 4.9 s, st02 3.65 → 2.6, st01 1.58 → 1.27 with it off.
-      // Off restores the ≤4.0 checkpoint durability semantics (the
-      // checksum only adds corruption DETECTION); a deployment that
-      // wants the extra check re-enables it with
-      // SPARK_GRAFT_STREAM_CHECKSUM=true (or per session) — the trade
-      // is documented in BASELINE.md's streaming-durability note.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHECKSUM", "false"))
+      // and the interleaved A/B (OPTIMIZATION_r16.md §10, item 1)
+      // measured st05 8.3 → 4.9 s, st02 3.65 → 2.6, st01 1.58 → 1.27
+      // with it off. Off restores the ≤4.0 checkpoint durability
+      // semantics (the checksum only adds corruption DETECTION); a
+      // deployment that wants the extra check re-enables it per session
+      // (spark.conf.set) — the trade is documented in BASELINE.md's
+      // streaming-durability note.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       // NOTE on string literals: Presto's are standard SQL ('' doubling
       // only; backslash is an ordinary character — SqlBase.g4 STRING
       // rule). The facade preserves that inside translation

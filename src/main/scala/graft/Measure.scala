@@ -1,10 +1,10 @@
 package graft
 
-/** Shared measurement plumbing for Bench and the diagnostic probes —
-  * one definition of the CPU-canary protocol and the listener-bus
-  * flush, so a protocol change (or a Spark-version change to the
-  * private[spark] listenerBus surface) lands everywhere at once instead
-  * of silently diverging across artifact producers. */
+/** Shared measurement plumbing for Bench, Profile, JobLedger and the
+  * perfbench harness — one definition of the CPU-canary protocol and the
+  * listener-bus flush, so a protocol change (or a Spark-version change
+  * to the private[spark] listenerBus surface) lands everywhere at once
+  * instead of silently diverging across artifact producers. */
 object Measure {
 
   /** How many threads the multi-core canary runs. 8 is enough to sit

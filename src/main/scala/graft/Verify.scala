@@ -1,28 +1,14 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Failures are
   * LOUD: every query that throws is recorded in `<outDir>/_failed.json`
   * (name → message) so a shrinking corpus can't read as an all-clear.
   */
 object Verify {
-
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def jsonObj(m: Iterable[(String, String)]): String =
-    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
 
   /** Run every query, parquet-dump the successes, and ALWAYS write
     * `_failed.json` (empty object when all pass). Returns the failures so
@@ -42,7 +28,11 @@ object Verify {
         Some(name -> String.valueOf(e.getMessage))
       }
     }.toMap
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), jsonObj(failed))
+    // json4s escapes quotes, backslashes and every control char: a tab
+    // or CR in a message (or in hand-written oracle SQL) must not make
+    // the comparer's json.load fail and zero the correctness record
+    Files.writeString(Paths.get(s"$outDir/_failed.json"),
+      Serialization.write(failed)(DefaultFormats))
     failed
   }
 
@@ -60,7 +50,8 @@ object Verify {
     val spark = Engine.session(cores = cpus, shufflePartitions = cpus)
     runAll(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      jsonObj(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
+      Serialization.write(SparkEntry.oracleSql.filter(kv => keep(kv._1)))(
+        DefaultFormats))
     spark.stop()
   }
 }

@@ -28,19 +28,13 @@ object DupComponents {
     *         edges are absent — callers left-join and coalesce to self.
     */
   def components(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    // the whole iterative section is embedded execution, not planning —
-    // ExecTimer scopes let Bench's construction-vs-execution split hold
-    // for iterative operators too (timed scopes are re-entrant; only the
-    // outermost contributes)
-    val edges = graft.ExecTimer.timed(
-      pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-        .distinct()
-        .localCheckpoint()) // reused every round — materialize once
-    var labels = graft.ExecTimer.timed(
-      edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-        .localCheckpoint())
+    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .distinct()
+      .localCheckpoint() // reused every round — materialize once
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+      .localCheckpoint()
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -54,13 +48,11 @@ object DupComponents {
       val viaNeighbor = edges.join(labels, col("src") === col("node"))
         .select(col("dst").as("node"), col("lbl"),
           lit(null).cast("long").as("own"))
-      val next = graft.ExecTimer.timed(
-        labels.select(col("node"), col("lbl"), col("lbl").as("own"))
-          .union(viaNeighbor)
-          .groupBy("node").agg(min("lbl").as("lbl"), min("own").as("own"))
-          .localCheckpoint())
-      changed = graft.ExecTimer.timed(
-        next.filter(col("lbl") < col("own")).count())
+      val next = labels.select(col("node"), col("lbl"), col("lbl").as("own"))
+        .union(viaNeighbor)
+        .groupBy("node").agg(min("lbl").as("lbl"), min("own").as("own"))
+        .localCheckpoint()
+      changed = next.filter(col("lbl") < col("own")).count()
       labels = next.select("node", "lbl")
       iter += 1
     }

@@ -135,9 +135,10 @@ object EmbeddingDedup {
     * Measured over-cap Σocc² shares on the stress corpus under the
     * geometry rule's cap (128): 0.233 at 10×, 0.392 at 40×, 0.575 at
     * 100×. The threshold is set from INTERLEAVED same-session A/Bs
-    * (ProbeCapAB, modes alternating, per-leg canaries — the round-14
-    * cross-artifact comparisons that suggested a thin-tail loss did not
-    * survive interleaving): at 10× the three modes are indistinguishable
+    * (BASELINE.md round 15 and BENCH_r15_ab10/ab40/ab100.json: modes
+    * alternating, per-leg canaries — the round-14 cross-artifact
+    * comparisons that suggested a thin-tail loss did not survive
+    * interleaving): at 10× the three modes are indistinguishable
     * at the host noise floor (medians uncapped 5.7 / capped 6.7 within a
     * 5.3–7.3 within-mode spread), at 40× the capped form WINS both
     * interleavings (34.7/35.0 vs 43.9/39.6), at 100× it wins 2.2×
@@ -202,12 +203,10 @@ object EmbeddingDedup {
     try {
       val hot =
         if (maxOccupancy > 0)
-          graft.ExecTimer.timed(
-            occupancyProfile(cached, planes, maxOccupancy, minHotShare))._1
+          occupancyProfile(cached, planes, maxOccupancy, minHotShare)._1
         else Array.empty[Int]
-      graft.ExecTimer.timed(
-        pairsFrom(cached, minCosine, planes, tables, estimateFilter, hot)
-          .localCheckpoint(eager = true))
+      pairsFrom(cached, minCosine, planes, tables, estimateFilter, hot)
+        .localCheckpoint(eager = true)
     } finally cached.unpersist(blocking = false)
   }
 

@@ -103,12 +103,11 @@ object IvfIndex {
     // genuinely needs, and which is then the train's only full corpus
     // pass besides the sample filter itself.
     val capI = math.min(cap, Int.MaxValue - 1L).toInt
-    val over = graft.ExecTimer.timed(
-      c0.select(lit(1).as("__one")).limit(capI + 1).count()) > cap
+    val over = c0.select(lit(1).as("__one")).limit(capI + 1).count() > cap
     val c =
       if (!over) c0
       else {
-        val n = graft.ExecTimer.timed(c0.count())
+        val n = c0.count()
         // top 60 bits of the md5 hex, compared lexicographically (the
         // hex alphabet is order-preserving): keep ≈ cap/n of the space
         val thresh = (cap.toDouble / n * math.pow(2, 60)).toLong
@@ -119,9 +118,7 @@ object IvfIndex {
           .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
         // the sample is ≈cap rows — bounded, so materializing it is the
         // bounded-model contour, not a corpus copy
-        if (materialize)
-          graft.ExecTimer.timed(sampled.localCheckpoint(eager = true))
-        else sampled
+        if (materialize) sampled.localCheckpoint(eager = true) else sampled
       }
     var centroids = c
       .orderBy("__h").limit(k)
@@ -143,9 +140,7 @@ object IvfIndex {
       // per-iteration barrier: iteration i+1's assignment must not drag
       // iteration i's sample pass along in its lineage
       centroids =
-        if (materialize)
-          graft.ExecTimer.timed(updated.localCheckpoint(eager = true))
-        else updated
+        if (materialize) updated.localCheckpoint(eager = true) else updated
     }
     centroids
   }
@@ -166,9 +161,9 @@ object IvfIndex {
     * smallest cluster id via struct ordering, exactly like the min_by
     * form did. */
   private def assignTo(c: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = graft.ExecTimer.timed(centroids
+    val cents = centroids
       .select(col("cluster").cast("int"), col("centroid"))
-      .collect())
+      .collect()
       .map(r => (r.getInt(0),
         r.getAs[scala.collection.Seq[Float]](1).toArray))
       .sortBy(_._1)
@@ -210,9 +205,7 @@ object IvfIndex {
       corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")), centroids)
       .select(col("__id").as("nid"), col("__v").as("nv"),
         col("__cluster").as("ncluster"))
-    if (materialize)
-      graft.ExecTimer.timed(assigned.localCheckpoint(eager = true))
-    else assigned
+    if (materialize) assigned.localCheckpoint(eager = true) else assigned
   }
 
   /** Probe the `nprobe` nearest lists per query and return exact-cosine

@@ -158,9 +158,7 @@ object MinHashLSH {
       // explicit lifecycle. materialize = false skips it and returns the
       // raw composed plan — the checkpointed frame's executed plan is just
       // an RDD scan, useless for plan-shape tests.
-      if (materialize)
-        graft.ExecTimer.timed(pairs.localCheckpoint(eager = true))
-      else pairs
+      if (materialize) pairs.localCheckpoint(eager = true) else pairs
     } finally prepared.unpersist(blocking = false)
   }
 }

@@ -64,54 +64,70 @@ object ScaleStress {
     (planes, tables)
   }
 
-  /** The four stress pipelines over a (pre-materialized) documents
-    * frame — the same public operators the corpus entries d02/d05/d07/
-    * d09 run, so a stress regression IS an operator regression. The
-    * embedding pipeline's LSH geometry comes from [[geometryFor]] unless
-    * overridden. */
-  def pipelines(docs: DataFrame,
-      geometry: Option[(Int, Int)] = None): Seq[(String, () => DataFrame)] = {
-    // counted ONCE, lazily, on first use (cached partitions — callers
-    // persist docs first), so no TIMED leg pays a corpus pass for the
-    // geometry or the occupancy cap, and a caller that never builds the
-    // d07x thunk (e.g. enumerating pipeline names) pays nothing
-    lazy val n = docs.count()
-    Seq(
-    "d02x_minhash" -> (() =>
-      MinHashLSH.nearDuplicates(docs, "doc_id", "text", 0.5)),
-    "d05x_training_pipeline" -> (() => {
-      val quality = docs
-        .withColumn("n_words", size(split(col("text"), " ")))
-        .filter(col("n_words").between(20, 100))
-      val dupes = MinHashLSH.nearDuplicates(quality, "doc_id", "text", 0.5)
-        .select(col("id2").as("drop_id")).distinct()
-      quality.join(dupes, col("doc_id") === col("drop_id"), "left_anti")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").cast("bigint").as("total_chars"))
-    }),
-    // The stress run SCALES THE LSH GEOMETRY with the corpus: the first
-    // stress measurement ran the 1× defaults (8 planes = 256 fixed
-    // buckets) and caught quadratic candidate growth — bucket occupancy
-    // rose 10×, candidate pairs ~100×, 22 GB of spill, 103 s. The
-    // [[geometryFor]] rule fixes it continuously: planes ~ log2(n/16)
-    // holds occupancy, tables rise to hold ≥99% recall.
-    "d07x_embedding" -> (() => {
-      val (p, t) = geometry.getOrElse(geometryFor(n))
-      // the occupancy CAP rides along with the geometry rule: the rule
+  /** Names of the timed stress legs, in the order they run. */
+  val LegNames: Seq[String] = Seq("d02x_minhash", "d05x_training_pipeline",
+    "d07x_embedding", "d09x_components", "v04x_ivf")
+
+  /** Every timed stress leg at one scale over the 1× `docs1x` and `emb1x`
+    * fixtures: the same public operators the corpus entries d02/d05/d07/
+    * d09/v04 run, so a stress regression IS an operator regression. Each
+    * input is multiplied, persisted and counted once, on first use — no
+    * TIMED leg pays a corpus pass for its geometry, and a caller that
+    * builds only dedup legs never multiplies the embeddings. */
+  final class Legs(docs1x: DataFrame, emb1x: DataFrame, scale: Int) {
+    private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    private var persisted = List.empty[DataFrame]
+    private def persist(df: DataFrame): DataFrame = {
+      persisted ::= df.persist(lvl); df
+    }
+    lazy val docs: DataFrame = persist(multiplyDocs(docs1x, scale))
+    lazy val rows: Long = docs.count()
+    lazy val geometry: (Int, Int) = geometryFor(rows)
+    lazy val emb: DataFrame = persist(multiplyEmbeddings(emb1x, scale))
+    lazy val embRows: Long = emb.count()
+    lazy val ivfGeometry: (Int, Int) = ivfGeometryFor(embRows)
+
+    /** The leg's DataFrame, built fresh (a timed run includes every
+      * eager job its construction starts). */
+    def build(name: String): DataFrame = name match {
+      case "d02x_minhash" => MinHashLSH.nearDuplicates(docs, "doc_id", "text", 0.5)
+      case "d05x_training_pipeline" =>
+        val quality = docs
+          .withColumn("n_words", size(split(col("text"), " ")))
+          .filter(col("n_words").between(20, 100))
+        val dupes = MinHashLSH.nearDuplicates(quality, "doc_id", "text", 0.5)
+          .select(col("id2").as("drop_id")).distinct()
+        quality.join(dupes, col("doc_id") === col("drop_id"), "left_anti")
+          .groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum("n_chars").cast("bigint").as("total_chars"))
+      // The stress run SCALES THE LSH GEOMETRY with the corpus: the first
+      // stress measurement ran the 1× defaults (8 planes = 256 fixed
+      // buckets) and caught quadratic candidate growth — bucket occupancy
+      // rose 10×, candidate pairs ~100×, 22 GB of spill, 103 s. The
+      // [[geometryFor]] rule fixes it continuously: planes ~ log2(n/16)
+      // holds occupancy, tables rise to hold ≥99% recall.
+      // The occupancy CAP rides along with the geometry rule: the rule
       // holds the MEAN occupancy, the cap cuts the cone-skew TAIL that
-      // the 100× probe measured at Σocc² ≈ 4× uniform (p99 143 / max
-      // 1812 against a mean of 16.9) — matched candidate rows through a
-      // cell grow as occ², so the tail was carrying ~3/4 of the
-      // decision kernel's input while holding ≪1% of true-pair routes
-      EmbeddingDedup.nearDuplicates(docs, "doc_id", "text", 0.8,
-        planes = p, tables = t,
-        maxOccupancy = EmbeddingDedup.occupancyCapFor(n, p))
-    }),
-    "d09x_components" -> (() =>
-      DupComponents.components(
-        MinHashLSH.nearDuplicates(docs, "doc_id", "text", 0.5)
-          .select(col("id1").as("a"), col("id2").as("b")))))
+      // the 100× run measured at Σocc² ≈ 4× uniform (p99 143 / max 1812
+      // against a mean of 16.9) — matched candidate rows through a cell
+      // grow as occ², so the tail was carrying ~3/4 of the decision
+      // kernel's input while holding ≪1% of true-pair routes.
+      case "d07x_embedding" =>
+        val (p, t) = geometry
+        EmbeddingDedup.nearDuplicates(docs, "doc_id", "text", 0.8,
+          planes = p, tables = t,
+          maxOccupancy = EmbeddingDedup.occupancyCapFor(rows, p))
+      case "d09x_components" =>
+        DupComponents.components(
+          MinHashLSH.nearDuplicates(docs, "doc_id", "text", 0.5)
+            .select(col("id1").as("a"), col("id2").as("b")))
+      case "v04x_ivf" => ivfPipeline(emb, ivfGeometry._1, ivfGeometry._2)
+      case n => throw new IllegalArgumentException(
+        s"no stress leg named $n (legs: ${LegNames.mkString(", ")})")
+    }
+
+    def release(): Unit = persisted.foreach(_.unpersist(blocking = false))
   }
 
   /** LSH candidate-pair count for the linearity check (the contract:

@@ -199,8 +199,9 @@ object TextAnalysis {
       // explode): the profile subtree reads only the even docs, the test
       // branch only the odd — vs the original shape where both branches
       // exploded the WHOLE corpus and filtered after. Deliberately NO
-      // materialization barrier: an interleaved A/B (ProbeX06) measured
-      // the eager-checkpoint variant SLOWER (3.6 vs 2.5 s) — the barrier
+      // materialization barrier: an interleaved A/B (BASELINE.md round
+      // 15, "x06 one-pass grams", variant a) measured the
+      // eager-checkpoint variant SLOWER (3.6 vs 2.5 s) — the barrier
       // serializes the two halves' explodes, which the lazy composition
       // overlaps across cores inside one job; the langs branch's
       // re-derivation of the profile subtree is parallel slack, not
@@ -228,7 +229,8 @@ object TextAnalysis {
         .select(col("plang"), col("g"))
       // Dedup BEFORE the profile join, exactly like the oracle: the
       // join-first-then-countDistinct alternative measured 1.7× SLOWER
-      // interleaved (ProbeX06) — common grams match several languages'
+      // interleaved (BASELINE.md round 15, "x06 one-pass grams", variant
+      // b) — common grams match several languages'
       // profiles, so joining non-deduped grams fans the aggregate input
       // out by up to |langs| before any dedup can bite.
       // r16: the dedup moved INTO the row (graft_char_gram_set emits

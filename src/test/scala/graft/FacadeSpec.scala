@@ -33,6 +33,20 @@ class FacadeSpec extends AnyFunSuite {
     assert(Engine.masterFor(new SparkConf(false), cores = 8) == "local[8]")
   }
 
+  test("Engine.session pins ANSI on and the checkpoint checksum off; a session may flip either") {
+    val checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    assert(spark.conf.get(checksum) == "false")
+    val s = spark.newSession()
+    Engine.sql(s, dir, "SET SESSION ansi_errors = false").collect()
+    assert(Engine.sql(s, dir, "SELECT 1 / 0").collect()(0).isNullAt(0))
+    s.conf.set(checksum, "true")
+    assert(s.conf.get(checksum) == "true")
+    // the caller's session is untouched, and still raises
+    assert(spark.conf.get(checksum) == "false")
+    intercept[Exception](Engine.sql(spark, dir, "SELECT 1 / 0").collect())
+  }
+
   test("custom aggregates resolve through bare Engine.sql") {
     assert(one("SELECT cardinality(map_union_sum(m)) FROM (SELECT map(ARRAY['a'], ARRAY[1L]) AS m)") == 1)
     assert(one("SELECT round(geometric_mean(x), 4) FROM (VALUES (2.0), (8.0)) t(x)")

@@ -34,4 +34,16 @@ class VerifySpec extends QueryAssertions {
     assert(failed.isEmpty)
     assert(Files.readString(Paths.get(s"$out/_failed.json")) == "{}")
   }
+
+  test("_failed.json round-trips names and messages with quotes, backslashes and control chars") {
+    val out = Files.createTempDirectory("graft_verify_esc").toString
+    val nasty = "a \"q\" \\ b\tc\u0001d"
+    val queries = Map[String, (SparkSession, String) => DataFrame](
+      s"bad$nasty" -> ((_, _) => throw new IllegalStateException(nasty)))
+    Verify.runAll(spark, sfDir, out, queries)
+    import org.json4s._
+    val parsed = org.json4s.jackson.JsonMethods.parse(
+      Files.readString(Paths.get(s"$out/_failed.json")))
+    assert(parsed == JObject(s"bad$nasty" -> JString(nasty)))
+  }
 }
