@@ -271,19 +271,6 @@ object Bench {
       // lets a contended stress number (BENCH_r11's d07x 60.7 s vs
       // 39.4 s drained) be normalized without guessing host state.
       val cPre = Measure.canaryPair()
-      // ANN leg: recall@5 and the scanned fraction are computed once
-      // (outside the timed loop) so the sublinear-scan claim is
-      // auditable next to the timing.
-      val (ivfLists, ivfNprobe) = legs.ivfGeometry
-      val (ivfRecall, ivfScanFrac) =
-        try graft.ops.ScaleStress.ivfQuality(legs.emb, ivfLists, ivfNprobe)
-        catch { case e: Throwable => recordError("v04x_ivf_quality", e); (-1.0, -1.0) }
-      // one-pass per-leg breakdown (train / index / search) so the train
-      // leg's scale behavior is an artifact fact, not a share of the
-      // end-to-end median
-      val ivfLegSec =
-        try graft.ops.ScaleStress.ivfLegTimings(legs.emb, ivfLists, ivfNprobe)
-        catch { case e: Throwable => recordError("v04x_ivf_legs", e); (-1.0, -1.0, -1.0) }
       // one measured pass of a stress leg: prewarm + 3 runs tagged in
       // the ledger. Each leg carries its OWN canary pair (round-14
       // verdict #2: a uniformly-slow host window passed the per-leg
@@ -330,6 +317,17 @@ object Bench {
           geom._1, d07xCap, armShare = 0.0)
         (keys.length, share)
       } catch { case e: Throwable => recordError("d07x_hot_cells", e); (-1, -1.0) }
+      // the ANN audit, also after every timed leg (so its walls are warm):
+      // one train + index, timed per leg (train / index / search) so the
+      // train leg's scale behavior is an artifact fact, not a share of the
+      // end-to-end median, plus recall@5 and the scanned fraction so the
+      // sublinear-scan claim is auditable next to the timing
+      val (ivfRecall, ivfScanFrac, ivfLegSec) =
+        try graft.ops.ScaleStress.ivfAudit(legs.emb, legs.ivfGeometry._1,
+          legs.ivfGeometry._2)
+        catch { case e: Throwable =>
+          recordError("v04x_ivf_audit", e); (-1.0, -1.0, (-1.0, -1.0, -1.0))
+        }
       val cPost = Measure.canaryPair()
       legs.release()
       stressBlock(finalLegs, stressRetried, StressFacts(scale, legs.rows, geom,

@@ -100,33 +100,44 @@ object Profile {
     }.nonEmpty
   }
 
-  /** Write each target's plans under `outDir`; returns the names whose
-    * plans (any action's) hold a window with an empty partition spec. */
-  def plans(spark: SparkSession, targets: Seq[Target], outDir: java.io.File): Seq[String] = {
-    outDir.mkdirs()
+  /** Run `body` and return its value with the final physical plan of
+    * every action it ran on `spark` (name, executedPlan), in order —
+    * construction-time barriers included: `localCheckpoint` runs as an
+    * action of that name, so its plan is the one the operator ships. */
+  def actionPlans[T](spark: SparkSession)(body: => T): (T, Seq[(String, SparkPlan)]) = {
     val actions = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
     val capture = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         actions.synchronized(actions += f -> qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(capture)
+    try {
+      val out = body
+      Measure.flushListenerBus(spark.sparkContext)
+      (out, actions.synchronized(actions.toVector))
+    } finally spark.listenerManager.unregister(capture)
+  }
+
+  /** Write each target's plans under `outDir`; returns the names whose
+    * plans (any action's) hold a window with an empty partition spec. */
+  def plans(spark: SparkSession, targets: Seq[Target], outDir: java.io.File): Seq[String] = {
+    outDir.mkdirs()
     def write(name: String, text: String): Unit =
       java.nio.file.Files.writeString(new java.io.File(outDir, name).toPath, text)
-    spark.listenerManager.register(capture)
-    try targets.filter { t =>
+    targets.filter { t =>
       // printed first, so Spark's own planning warnings that follow in
       // the log belong to this target
       println(s"[plans] ${t.name}")
-      val df = t.build()
-      write(s"${t.name}.txt", df.queryExecution.explainString(FormattedMode))
-      df.write.format("noop").mode("overwrite").save()
-      Measure.flushListenerBus(spark.sparkContext)
-      val ran = actions.synchronized { val a = actions.toVector; actions.clear(); a }
+      val (_, ran) = actionPlans(spark) {
+        val df = t.build()
+        write(s"${t.name}.txt", df.queryExecution.explainString(FormattedMode))
+        df.write.format("noop").mode("overwrite").save()
+      }
       write(s"${t.name}_executed.txt",
         ran.map { case (f, p) => s"== $f ==\n$p" }.mkString("\n"))
       ran.exists { case (_, p) => PlanWalk.hasGlobalWindow(p) }
     }.map(_.name)
-    finally spark.listenerManager.unregister(capture)
   }
 
   /** Parse `args` and run one mode on `spark`. */

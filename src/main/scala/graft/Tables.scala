@@ -80,16 +80,21 @@ object Tables {
       .getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
     val schema = schemaCache.getOrElseUpdate((dir, name, nanosConf),
       spark.read.parquet(path).schema)
-    // events.ts has shipped as parquet TIMESTAMP(NANOS) — which Spark's
-    // vectorized reader only accepts as a raw long (nanosAsLong, set in
-    // Engine.session) — and as TIMESTAMP(MICROS, isAdjustedToUTC=false),
-    // which Spark infers as TIMESTAMP_NTZ. Normalize both to a plain
-    // TimestampType `ts` so every downstream operator (including
-    // withWatermark, which rejects NTZ event time) sees one type. The
-    // session TZ is pinned UTC (Engine.session), so the NTZ→instant cast
-    // is value-preserving.
     val df = spark.read.schema(schema).parquet(path)
-    if (name == "events") df.schema("ts").dataType match {
+    if (name == "events") eventsTs(df) else df
+  }
+
+  /** The one `events.ts` normalization, for the batch table and the
+    * stream alike. events.ts has shipped as parquet TIMESTAMP(NANOS) —
+    * which Spark's vectorized reader only accepts as a raw long
+    * (nanosAsLong, set in Engine.session) — and as TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false), which Spark infers as TIMESTAMP_NTZ.
+    * Normalize both to a plain TimestampType `ts` so every downstream
+    * operator (including withWatermark, which rejects NTZ event time)
+    * sees one type. The session TZ is pinned UTC (Engine.session), so
+    * the NTZ→instant cast is value-preserving. */
+  private[graft] def eventsTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
       // `div` (integral division) — col/1000L would go through double and
       // lose exactness past 2^53 epoch-nanos.
       case org.apache.spark.sql.types.LongType =>
@@ -98,8 +103,6 @@ object Tables {
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-    else df
-  }
 
   /** Register all tables as temp views so `spark.sql` works too.
     * Memoized per (session, dir) — Engine.sql calls this on EVERY

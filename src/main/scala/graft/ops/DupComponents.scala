@@ -22,12 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object DupComponents {
 
+  /** Round budget; duplicate-cluster diameters are tiny, so a chain
+    * that needs more is a malformed pair graph. */
+  private val MaxIters = 50
+
   /** @param pairs undirected edges, columns (a, b)
     * @return (node, rep) for every node appearing in `pairs`, where rep
     *         is the minimum node id of its component. Nodes with no
     *         edges are absent — callers left-join and coalesce to self.
     */
-  def components(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+  def components(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
@@ -37,7 +41,7 @@ object DupComponents {
       .localCheckpoint()
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < maxIters) {
+    while (changed > 0 && iter < MaxIters) {
       // r16 (guide §2.4, remove shuffles outright): the node's OWN label
       // rides through the min-aggregation as a second column (own is
       // non-null on exactly the one labels row per node, null on
@@ -57,11 +61,11 @@ object DupComponents {
       iter += 1
     }
     // Fail loud rather than return partially-propagated labels: a chain
-    // longer than maxIters would otherwise yield wrong cluster
+    // longer than MaxIters would otherwise yield wrong cluster
     // representatives silently.
     require(changed == 0,
-      s"DupComponents did not converge in $maxIters rounds " +
-        s"($changed labels still changing) — raise maxIters")
+      s"DupComponents did not converge in $MaxIters rounds " +
+        s"($changed labels still changing)")
     labels.select(col("node"), col("lbl").as("rep"))
   }
 }

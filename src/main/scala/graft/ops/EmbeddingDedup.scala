@@ -160,39 +160,15 @@ object EmbeddingDedup {
     * (8 planes/8 tables at ≤5k docs → 12 planes/16 tables at 50k; see
     * ops/ScaleStress for the worked trade-off).
     *
-    * `materialize = false` skips the persist + eager localCheckpoint and
-    * returns the raw composed plan — for plan-shape tests only (the
-    * checkpointed frame's executed plan is just an RDD scan, which would
-    * make a no-cartesian assertion vacuous).
-    *
-    * `estimateFilter = false` disables the 5σ hamming-estimate pre-verify
-    * filter, shipping EVERY agreement-passing candidate's dense vectors
-    * to exact verification. Recall within the LSH candidate set is then
-    * exact (no ~3·10⁻⁷ at-threshold tail) at the cost the 40× stress
-    * measured (9.2 GB of sub-threshold vector traffic) — for callers
-    * whose contract is "the LSH tables decide, never an estimate".
-    *
     * `maxOccupancy > 0` requests the occupancy cap (see
     * [[occupancyCapFor]]); it arms only when the over-cap cells carry at
     * least `minHotShare` of Σocc² ([[occupancyProfile]]). */
   def nearDuplicates(
       df: DataFrame, idCol: String, textCol: String, minCosine: Double,
       planes: Int = 8, tables: Int = 8,
-      materialize: Boolean = true,
-      estimateFilter: Boolean = true,
       maxOccupancy: Int = 0,
       minHotShare: Double = DefaultArmShare): DataFrame = {
     val base = featurize(df, idCol, textCol, planes, tables)
-    if (!materialize) {
-      // plan-shape mode still honors the cap: the occupancy profile is
-      // an eager side job (it must be — suppression needs global
-      // occupancy), but the RETURNED frame stays the raw composed plan
-      val hot =
-        if (maxOccupancy > 0)
-          occupancyProfile(base, planes, maxOccupancy, minHotShare)._1
-        else Array.empty[Int]
-      return pairsFrom(base, minCosine, planes, tables, estimateFilter, hot)
-    }
     // One persist backs everything downstream: the featurized frame
     // feeds both candidate-join sides and both verify-join vector
     // lookups — without it each consumer recomputes the shingle+kernel
@@ -205,7 +181,7 @@ object EmbeddingDedup {
         if (maxOccupancy > 0)
           occupancyProfile(cached, planes, maxOccupancy, minHotShare)._1
         else Array.empty[Int]
-      pairsFrom(cached, minCosine, planes, tables, estimateFilter, hot)
+      pairsFrom(cached, minCosine, planes, tables, hot)
         .localCheckpoint(eager = true)
     } finally cached.unpersist(blocking = false)
   }
@@ -293,8 +269,7 @@ object EmbeddingDedup {
     * the SigKeepRoutedSpec property. */
   private def pairsFrom(
       base: DataFrame, minCosine: Double,
-      planes: Int, tables: Int, estimateFilter: Boolean = true,
-      hot: Array[Int] = Array.empty): DataFrame = {
+      planes: Int, tables: Int, hot: Array[Int]): DataFrame = {
     val width = packWidth(planes)
     // (table, bucket) packed into ONE int join key: t·2^planes + bucket
     // — 4 bytes instead of 8 on every probe-side row.
@@ -338,13 +313,11 @@ object EmbeddingDedup {
     // (40× stress: 119 GB of sort spill); hashing the small build side
     // lets probes stream through unsorted.
     val minAgree = if (tables >= 4) 2 else 1
-    val hMax =
-      if (estimateFilter) hammingCap(minCosine, planes, tables)
-      else planes * tables
-    // the kernel carries hMax in a 16-bit params field; reachable only
-    // with estimateFilter=false on a geometry far outside the planes +
-    // log2(tables) <= 31 deployments (e.g. 8 planes × 2^23 tables) —
-    // fail loudly instead of silently truncating the field
+    val hMax = hammingCap(minCosine, planes, tables)
+    // the kernel carries hMax in a 16-bit params field; a geometry with
+    // planes·tables past 0xFFFF sign bits (far outside the planes +
+    // log2(tables) <= 31 deployments) could overflow it — fail loudly
+    // instead of silently truncating the field
     require(hMax <= 0xFFFF,
       s"hamming cap $hMax does not fit the kernel's 16-bit params field " +
         s"(planes=$planes, tables=$tables)")

@@ -46,7 +46,10 @@ object IvfIndex {
   private def sqDist(a: String, b: String) =
     expr(s"graft_dot($a, $a) - 2 * graft_dot($a, $b) + graft_dot($b, $b)")
 
-  /** Train k centroids with `iters` Lloyd passes over a BOUNDED
+  /** Lloyd passes per [[train]]. */
+  private val Iters = 2
+
+  /** Train k centroids with [[Iters]] Lloyd passes over a BOUNDED
     * deterministic sample. Returns a k-row frame (cluster, centroid)
     * where centroid is Array[Float]; only these k rows are collected.
     *
@@ -60,7 +63,7 @@ object IvfIndex {
     * by a MAP-SIDE md5-threshold filter (md5 hex is uniform, so keeping
     * hashes lexicographically below cap/n of the space yields ≈cap
     * rows) — no sort, no TakeOrdered single-partition bottleneck — and
-    * is eagerly checkpointed when it engages, so the `iters` passes
+    * is eagerly checkpointed when it engages, so the Lloyd passes
     * re-read ~cap bounded rows, not the corpus. Seeds are the k
     * smallest md5 within the sample; every centroid component is
     * rounded to 6 dp after each update so shuffle-order float jitter
@@ -76,32 +79,27 @@ object IvfIndex {
     * localCheckpoint of the k bounded rows — the same lifecycle as
     * [[MinHashLSH.nearDuplicates]] / [[EmbeddingDedup.nearDuplicates]];
     * a 100-TB pipeline writes them to reliable storage instead). Without
-    * the barrier the returned frame's lineage holds `iters` full
-    * assignment passes, and EVERY downstream consumer (index, each probe,
-    * each search) silently re-executes the whole training — a ~(iters ×
+    * the barrier the returned frame's lineage holds every full
+    * assignment pass, and EVERY downstream consumer (index, each probe,
+    * each search) silently re-executes the whole training — a ~(passes ×
     * consumers)× multiplier on the most expensive stage at scale. With it,
     * training runs exactly once: one sample pass per iteration, k rows
     * checkpointed, and consumers see a constant-size leaf.
-    * `materialize = false` keeps the raw composed plan for plan-shape
-    * assertions (a checkpointed frame's executed plan is just an RDD scan,
-    * which would make them vacuous). `sampleCap = 0` means the auto rule
-    * max(256·k, 10⁵); specs pass a small cap to exercise the sampled
-    * path at fixture scale. */
+    * `sampleCap = 0` means the auto rule max(256·k, 10⁵); specs pass a
+    * small cap to exercise the sampled path at fixture scale. */
   def train(
       corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 2, materialize: Boolean = true,
-      sampleCap: Long = 0L): DataFrame = {
+      k: Int, sampleCap: Long = 0L): DataFrame = {
     val c0 = corpus
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__h", md5(col("__id").cast("string")))
     val cap = if (sampleCap > 0) sampleCap else math.max(256L * k, 100000L)
     // Bounded over-cap probe instead of an unconditional full count(): a
     // zero-column LocalLimit scan stops after cap+1 rows, so a bounded
-    // corpus (every n ≤ cap caller, and the materialize=false plan-shape
-    // path) answers in O(cap) work regardless of corpus size. Only an
-    // over-cap corpus pays the full count — which the threshold fraction
-    // genuinely needs, and which is then the train's only full corpus
-    // pass besides the sample filter itself.
+    // corpus (every n ≤ cap caller) answers in O(cap) work regardless
+    // of corpus size. Only an over-cap corpus pays the full count —
+    // which the threshold fraction genuinely needs, and which is then
+    // the train's only full corpus pass besides the sample filter itself.
     val capI = math.min(cap, Int.MaxValue - 1L).toInt
     val over = c0.select(lit(1).as("__one")).limit(capI + 1).count() > cap
     val c =
@@ -118,14 +116,14 @@ object IvfIndex {
           .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
         // the sample is ≈cap rows — bounded, so materializing it is the
         // bounded-model contour, not a corpus copy
-        if (materialize) sampled.localCheckpoint(eager = true) else sampled
+        sampled.localCheckpoint(eager = true)
       }
     var centroids = c
       .orderBy("__h").limit(k)
       .select(
         (row_number().over(Window.orderBy("__h")) - 1).as("cluster"),
         col("__v").cast("array<float>").as("centroid"))
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until Iters) {
       val assigned = assignTo(c, centroids)
       val updated = assigned
         .groupBy(col("__cluster").as("cluster"))
@@ -139,8 +137,7 @@ object IvfIndex {
             .as("centroid"))
       // per-iteration barrier: iteration i+1's assignment must not drag
       // iteration i's sample pass along in its lineage
-      centroids =
-        if (materialize) updated.localCheckpoint(eager = true) else updated
+      centroids = updated.localCheckpoint(eager = true)
     }
     centroids
   }
@@ -194,19 +191,18 @@ object IvfIndex {
 
   /** The inverted file: (id, vec, cluster) — cluster is the partition /
     * bucketing key a 100-TB layout would persist by (see the PlanSpec
-    * partitioned-write test). `materialize = true` ends in the same eager
-    * localCheckpoint barrier as [[train]], so callers probing the index
-    * more than once (recall + scan-fraction branches, repeated searches)
-    * pay the assignment pass exactly once. */
+    * partitioned-write test). It ends in the same eager localCheckpoint
+    * barrier as [[train]], so callers probing the index more than once
+    * (recall + scan-fraction branches, repeated searches) pay the
+    * assignment pass exactly once. */
   def index(
       corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, materialize: Boolean = false): DataFrame = {
-    val assigned = assignTo(
+      centroids: DataFrame): DataFrame =
+    assignTo(
       corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")), centroids)
       .select(col("__id").as("nid"), col("__v").as("nv"),
         col("__cluster").as("ncluster"))
-    if (materialize) assigned.localCheckpoint(eager = true) else assigned
-  }
+      .localCheckpoint(eager = true)
 
   /** Probe the `nprobe` nearest lists per query and return exact-cosine
     * top-k within them — the [[VectorSearch.cosineTopK]] output shape
@@ -215,26 +211,18 @@ object IvfIndex {
       queries: DataFrame, idCol: String, vecCol: String,
       indexed: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val probeW = Window.partitionBy("qid")
-      .orderBy(col("__qdist"), col("cluster"))
-    val probed = q.crossJoin(broadcast(centroids))
-      .withColumn("__qdist", sqDist("qv", "centroid"))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cluster"))
-    val scored = probed
-      .join(indexed, col("cluster") === col("ncluster") && col("qid") =!= col("nid"))
-      .withColumn("score", VectorSearch.cosine(col("qv"), col("nv")))
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid"))
-    scored
+    candidates(queries, idCol, vecCol, indexed, centroids, nprobe)
+      .withColumn("score", VectorSearch.cosine(col("qv"), col("nv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("nid"),
         round(col("score"), 4).as("score"))
   }
 
-  /** Candidate lists without scoring (for scan-fraction bounds). */
+  /** Candidate lists without scoring (qid, qv, nid, nv): each query
+    * against every vector of its `nprobe` nearest lists. [[search]]
+    * scores these; alone they bound the scan fraction. */
   def candidates(
       queries: DataFrame, idCol: String, vecCol: String,
       indexed: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {

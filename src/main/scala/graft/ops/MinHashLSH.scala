@@ -20,6 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLSH {
 
+  /** Signature length. rows=2 → 32 bands; the miss probability for a
+    * true Jaccard-0.8 pair is (1-0.8²)^32 ≈ 7e-15 — deterministic in
+    * practice, and fixed seeds make reruns identical. 64 hashes (not
+    * 128) because the extra 32 bands buy nothing below the 1e-14 miss
+    * floor while doubling signature compute and band-shuffle bytes —
+    * the cost that scales with corpus size. */
+  private val NumHashes = 64
+
+  /** Signature rows per LSH band. */
+  private val RowsPerBand = 2
+
   /** Distinct word n-gram shingles of a text column. Out-of-range
     * positions pad with '' so 1-2-word documents still shingle.
     *
@@ -79,33 +90,21 @@ object MinHashLSH {
     * scan (d07 2.8–3.3 s spread vs 1.6–2.1 s unspread; x06 3.0 vs 1.7 —
     * OPTIMIZATION_r16.md). persist() still pins the result for the
     * multiple downstream consumers. */
-  def prepare(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64): DataFrame = {
+  def prepare(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     df.select(col(idCol).as("__id"),
         call_function("graft_word_shingles", col(textCol)).as("__sh"))
       .withColumn("__sig",
         call_function("graft_minhash_sig",
-          call_function("graft_xxhash64_arr", col("__sh")), lit(numHashes)))
+          call_function("graft_xxhash64_arr", col("__sh")), lit(NumHashes)))
       .select("__id", "__sh", "__sig")
       .persist()
   }
 
   /** Candidate near-dup pairs from a prepare()d frame: docs sharing at
-    * least one LSH band. rows=2 with numHashes=64 → 32 bands; the miss
-    * probability for a true Jaccard-0.8 pair is (1-0.8²)^32 ≈ 7e-15 —
-    * deterministic in practice, and fixed seeds make reruns identical.
-    * 64 hashes (not 128) is the prepare() default because the extra 32
-    * bands buy nothing below the 1e-14 miss floor while doubling
-    * signature compute and band-shuffle bytes — the cost that scales
-    * with corpus size. The band count derives from the ACTUAL signature
-    * length (graft_lsh_bands reads size(__sig)), so there is no
-    * numHashes parameter to drift out of sync with prepare()'s
-    * (ADVICE r16: the old parameter was dead — a mismatched value
-    * silently changed nothing). */
-  def candidatePairs(
-      prepared: DataFrame,
-      rowsPerBand: Int = 2): DataFrame = {
+    * least one LSH band. The band count derives from the ACTUAL signature
+    * length (graft_lsh_bands reads size(__sig)), so it cannot drift out
+    * of sync with prepare()'s [[NumHashes]]. */
+  def candidatePairs(prepared: DataFrame): DataFrame = {
     // band keys through the native kernel (bit-identical to the
     // transform/named_struct/xxhash64 expression it replaced —
     // TextKernelsSpec pins it; the expression form evaluated the
@@ -113,7 +112,7 @@ object MinHashLSH {
     val bands = prepared.select(
       col("__id"),
       explode(call_function("graft_lsh_bands",
-        col("__sig"), lit(rowsPerBand))).as("b"))
+        col("__sig"), lit(RowsPerBand))).as("b"))
       .select(col("__id"), col("b.band_idx"), col("b.band_val"))
     // One shuffle on the band key, then pairs expand WITHIN each bucket —
     // vs a band self-join this drops a whole shuffle side, and the
@@ -138,9 +137,8 @@ object MinHashLSH {
     * reuses the persisted shingle sets. */
   def nearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, numHashes: Int = 64,
-      materialize: Boolean = true): DataFrame = {
-    val prepared = prepare(df, idCol, textCol, numHashes)
+      threshold: Double = 0.5): DataFrame = {
+    val prepared = prepare(df, idCol, textCol)
     try {
       val cands = candidatePairs(prepared)
       val left = prepared.select(col("__id").as("id1"), col("__sh").as("sh1"))
@@ -155,10 +153,8 @@ object MinHashLSH {
       // signature frame can be released before returning — a persist with
       // no matching release leaks a cached copy per invocation. At 100 TB
       // this eager step is a checkpoint to reliable storage with the same
-      // explicit lifecycle. materialize = false skips it and returns the
-      // raw composed plan — the checkpointed frame's executed plan is just
-      // an RDD scan, useless for plan-shape tests.
-      if (materialize) pairs.localCheckpoint(eager = true) else pairs
+      // explicit lifecycle.
+      pairs.localCheckpoint(eager = true)
     } finally prepared.unpersist(blocking = false)
   }
 }

@@ -2,8 +2,12 @@ package graft.ops
 
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming plumbing for the `events` table (SURVEY §2.10).
@@ -18,37 +22,14 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingOps {
 
   /** `events` as a stream: same schema + ts normalization as Tables.load
-    * (nanos-as-long → micros; TIMESTAMP_NTZ → TimestampType — watermarks
-    * reject NTZ event time, and the session TZ is pinned UTC so the cast
-    * is value-preserving), via the file stream source. */
+    * ([[graft.Tables.eventsTs]]), via the file stream source. */
   def streamEvents(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    // record the replayed input's size for the state-partition sizing
-    // rule in runToCompletion. Through the Hadoop FileSystem API (not
-    // java.io.File, which silently returns 0 off the local filesystem —
-    // ADVICE/verdict r16 #5): getContentSummary aggregates a directory
-    // listing too, so an hdfs://… or s3a://… events source sizes the
-    // same way. Failure degrades to the un-sized fallback, never breaks
-    // the stream.
-    val len = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-    if (len > 0) spark.conf.set("graft.stream.inputBytes", len.toString)
-    val schema = spark.read.parquet(path).schema
+    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // The file stream source wants a directory; narrow it to the events
     // file with a glob filter.
-    val raw = spark.readStream.schema(schema)
+    graft.Tables.eventsTs(spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+      .parquet(dir))
   }
 
   /** Stateful-shuffle sizing from the replayed input's size (r16, the
@@ -69,29 +50,49 @@ object StreamingOps {
       math.min(byInput, 32 * spark.sparkContext.defaultParallelism))
   }
 
+  /** Bytes behind the file stream sources in `df`'s own analyzed plan
+    * (each distinct path + glob filter once), or 0 when it reads none.
+    * Through the Hadoop FileSystem API (not java.io.File, which silently
+    * returns 0 off the local filesystem): getContentSummary aggregates a
+    * directory listing too, so an hdfs://… or s3a://… source sizes the
+    * same way. A source that cannot be sized counts 0 — it degrades to
+    * the un-sized fallback, never breaks the stream. */
+  private[graft] def streamInputBytes(df: DataFrame): Long = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    df.queryExecution.analyzed.collect { case r: StreamingRelation =>
+      val opts = CaseInsensitiveMap(r.dataSource.options)
+      (opts.get("path"), opts.get("pathGlobFilter"))
+    }.distinct.collect { case (Some(path), glob) =>
+      try {
+        val dir = new Path(path)
+        val fs = dir.getFileSystem(conf)
+        val files = glob match {
+          case Some(g) => Option(fs.globStatus(new Path(dir, g))).toSeq.flatten.map(_.getPath)
+          case None => Seq(dir).filter(fs.exists)
+        }
+        files.map(fs.getContentSummary(_).getLength).sum
+      } catch { case NonFatal(_) => 0L }
+    }.sum
+  }
+
   /** Run a streaming query to completion over the available data and
     * return the final result (memory sink; complete mode for
     * aggregations, append for joins/projections). The stateful shuffle
-    * is sized by [[statePartitionsFor]] from the input size recorded by
-    * [[streamEvents]] (shuffle-partition conf is read at stream START,
-    * so it is set for the stream's lifetime and restored after — the
-    * corpus runs one query at a time, so no concurrent planner sees
-    * the temporary value). */
+    * is sized by [[statePartitionsFor]] from [[streamInputBytes]]
+    * (shuffle-partition conf is read at stream START, so it is set for
+    * the stream's lifetime and restored after — the corpus runs one
+    * query at a time, so no concurrent planner sees the temporary
+    * value). A stream with no sized file source keeps the session's
+    * partition count. */
   def runToCompletion(
       df: DataFrame, spark: SparkSession,
       mode: String = "complete"): DataFrame = {
     val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     val partKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(partKey)
-    // consume-once: clear the size marker as soon as it is read so a
-    // later stream NOT built by streamEvents (which would re-set it)
-    // cannot inherit a stale value (ADVICE r16 #3)
-    val inputBytes = spark.conf.getOption("graft.stream.inputBytes")
-    inputBytes.foreach(_ => spark.conf.unset("graft.stream.inputBytes"))
-    inputBytes.foreach { bytes =>
-      spark.conf.set(partKey,
-        statePartitionsFor(spark, bytes.toLong).toString)
-    }
+    val inputBytes = streamInputBytes(df)
+    if (inputBytes > 0)
+      spark.conf.set(partKey, statePartitionsFor(spark, inputBytes).toString)
     try {
       val q = df.writeStream
         .format("memory")

@@ -92,8 +92,7 @@ object Similarity {
       // and scan-fraction branches below — without this, each of the four
       // consumers would re-run assignment AND training from scratch
       val centroids = IvfIndex.train(emb, "vec_id", "embedding", k = 16)
-      val indexed = IvfIndex.index(emb, "vec_id", "embedding", centroids,
-        materialize = true)
+      val indexed = IvfIndex.index(emb, "vec_id", "embedding", centroids)
       val cands = IvfIndex.candidates(
         queries, "vec_id", "embedding", indexed, centroids, nprobe = 8)
       val approx = IvfIndex.search(

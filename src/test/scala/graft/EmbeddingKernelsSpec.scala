@@ -214,21 +214,6 @@ class EmbeddingKernelsSpec extends QueryAssertions {
       s"pair sets diverged: got ${got.size}, brute ${brute.size}")
   }
 
-  test("estimateFilter=false (exact-verify mode) preserves the pair set") {
-    // The 5-sigma hamming-estimate prefilter admits a ~3e-7 at-threshold
-    // miss tail; estimateFilter=false is the contractual opt-out that
-    // verifies every agreement-passing candidate on dense vectors. At
-    // the fixture corpus the two modes must report the IDENTICAL pairs
-    // (the tail is probabilistic headroom, not an expected divergence).
-    val filtered = EmbeddingDedup.nearDuplicates(docs, "doc_id", "text", 0.8)
-      .orderBy("id1", "id2").collect().map(_.toString).toSeq
-    val exact = EmbeddingDedup.nearDuplicates(docs, "doc_id", "text", 0.8,
-        estimateFilter = false)
-      .orderBy("id1", "id2").collect().map(_.toString).toSeq
-    assert(exact.nonEmpty && exact == filtered,
-      s"modes diverged: exact ${exact.size}, filtered ${filtered.size}")
-  }
-
   test("featurization is a narrow plan: zero exchanges before the self-join") {
     val base = EmbeddingDedup.featurize(docs, "doc_id", "text", 8, 8)
     val plan = base.queryExecution.executedPlan.toString

@@ -250,25 +250,29 @@ class PlanSpec extends QueryAssertions {
   }
 
   test("d02: LSH near-dup plan has no cartesian product") {
-    // materialize = false: the production path localCheckpoints, whose
-    // executed plan is an RDD scan — asserting on that would be vacuous
-    val plan = planOf(ops.MinHashLSH.nearDuplicates(
-      Tables.load(spark, sfDir, "documents"), "doc_id", "text", 0.5,
-      materialize = false))
-    assert(!plan.contains("CartesianProduct"), "all-pairs join would sink at scale")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      "near-dup candidates must come from the band-key equi join")
+    // the plan that ships: the verified-pair barrier's own executed plan
+    val (_, plans) = checkpointPlans(ops.MinHashLSH.nearDuplicates(
+      Tables.load(spark, sfDir, "documents"), "doc_id", "text", 0.5))
+    assert(plans.exists(_.contains("graft_lsh_bands")), plans.mkString("\n"))
+    plans.foreach { plan =>
+      assert(!plan.contains("CartesianProduct"), "all-pairs join would sink at scale")
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        "near-dup candidates must come from the band-key equi join")
+    }
   }
 
   test("IVF layout: probing inverted lists is a partition-pruned scan") {
     import org.apache.spark.sql.functions._
     val emb = Tables.load(spark, sfDir, "embeddings")
-    // materialize = false, as in the d02/d07 plan tests: a checkpointed
-    // centroid leaf has no stats, which starves the DPP benefit heuristic
-    // this test exercises; production probes read the PERSISTED lists
-    val centroids = ops.IvfIndex.train(emb, "vec_id", "embedding", k = 16,
-      materialize = false)
-    val indexed = ops.IvfIndex.index(emb, "vec_id", "embedding", centroids)
+    val ((centroids, indexed), barriers) = checkpointPlans {
+      val c = ops.IvfIndex.train(emb, "vec_id", "embedding", k = 16)
+      (c, ops.IvfIndex.index(emb, "vec_id", "embedding", c))
+    }
+    // the index barrier assigns map-side: the nearest-list kernel over
+    // the corpus scan, no exchange
+    assert(barriers.exists(p =>
+      p.contains("graft_nearest_list") && p.contains("Scan parquet") &&
+        !p.contains("Exchange")), barriers.mkString("\n"))
     // the 100-TB layout: inverted lists persisted partitioned BY CLUSTER,
     // so an nprobe search reads only the probed lists off storage
     val out = java.nio.file.Files.createTempDirectory("graft_ivf").toString
@@ -285,7 +289,9 @@ class PlanSpec extends QueryAssertions {
     // hasSelectivePredicate demands a likely-selective Filter on the
     // probe side: an orderBy().limit() spelling has none and would skip
     // DPP (the pre-r13 train plan only passed here via the size(v)>0
-    // filter InferFiltersFromGenerate added under its posexplode).
+    // filter InferFiltersFromGenerate added under its posexplode). The
+    // centroids are train's checkpointed leaf: its LogicalRDD keeps the
+    // origin plan's stats, so the DPP benefit heuristic still fires.
     val probed = centroids
       .withColumn("d", expr(
         "graft_dot(centroid, centroid)")) // any derived ranking works here
@@ -304,8 +310,7 @@ class PlanSpec extends QueryAssertions {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
     val centroids = ops.IvfIndex.train(emb, "vec_id", "embedding", k = 16)
-    val indexed = ops.IvfIndex.index(emb, "vec_id", "embedding", centroids,
-      materialize = true)
+    val indexed = ops.IvfIndex.index(emb, "vec_id", "embedding", centroids)
     val plan = planOf(ops.IvfIndex.search(
       queries, "vec_id", "embedding", indexed, centroids, k = 5, nprobe = 8))
     // train checkpointed its k rows and index checkpointed the inverted
@@ -319,20 +324,23 @@ class PlanSpec extends QueryAssertions {
   }
 
   test("d07: embedding near-dup candidates come from the LSH equi join") {
-    // materialize = false: the checkpointed production frame's plan is
-    // just an RDD scan, which would make these assertions vacuous
-    val plan = planOf(ops.EmbeddingDedup.nearDuplicates(
-      Tables.load(spark, sfDir, "documents"), "doc_id", "text", 0.8,
-      materialize = false))
-    assert(!plan.contains("CartesianProduct"), "all-pairs join would sink at scale")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      "candidates must come from the (table, lshBucket) equi join")
-    // the oracle's sf0.01 geometry runs the one candidate path the stress
-    // legs run: zero-bit probe keys decided by the routed keep kernel
-    assert(plan.contains("graft_lsh_probe_keys") &&
-      plan.contains("graft_sig_keep_routed") &&
-      !plan.contains("graft_sig_keep("),
-      s"d07 must plan zero-bit probes + graft_sig_keep_routed:\n${plan.take(3000)}")
+    // the plan that ships: the pair barrier's own executed plan, which
+    // reads the persisted features
+    val (_, plans) = checkpointPlans(ops.EmbeddingDedup.nearDuplicates(
+      Tables.load(spark, sfDir, "documents"), "doc_id", "text", 0.8))
+    plans.foreach { plan =>
+      assert(!plan.contains("CartesianProduct"), "all-pairs join would sink at scale")
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        "candidates must come from the (table, lshBucket) equi join")
+      // the oracle's sf0.01 geometry runs the one candidate path the
+      // stress legs run: zero-bit probe keys decided by the routed keep
+      // kernel
+      assert(plan.contains("graft_lsh_probe_keys") &&
+        plan.contains("graft_sig_keep_routed") &&
+        !plan.contains("graft_sig_keep(") && plan.contains("InMemoryTableScan"),
+        s"d07 must plan zero-bit probes + graft_sig_keep_routed over the " +
+          s"persisted features:\n${plan.take(3000)}")
+    }
   }
 
   test("e04: approx-most-frequent top-k is a bounded sort, not a global window") {

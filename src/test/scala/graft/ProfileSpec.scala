@@ -46,6 +46,12 @@ class ProfileSpec extends QueryAssertions {
     assert(m.getMessage.contains("usage: Profile"))
   }
 
+  test("actionPlans captures d02's localCheckpoint barrier plan, no cartesian") {
+    val (_, barriers) = checkpointPlans(graft.ops.MinHashLSH.nearDuplicates(
+      Tables.load(spark, sf, "documents"), "doc_id", "text", 0.5))
+    assert(barriers.forall(!_.contains("CartesianProduct")), barriers.mkString("\n"))
+  }
+
   test("plans names an entry whose plan holds an unpartitioned window") {
     import org.apache.spark.sql.expressions.{Window, WindowSpec}
     import org.apache.spark.sql.functions.{col, row_number}

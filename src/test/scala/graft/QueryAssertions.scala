@@ -44,6 +44,18 @@ trait QueryAssertions extends AnyFunSuite {
     assert(a == e, s"\n[$hint]\nactual  : ${a.take(5)}\nexpected: ${e.take(5)}")
   }
 
+  /** Run `body` and return its value with the final plans of the eager
+    * `localCheckpoint` barriers it ran — the plans a dedup/ANN operator
+    * ships. Fails when there is none, so a shape assertion over them
+    * cannot pass vacuously. */
+  def checkpointPlans[T](body: => T): (T, Seq[String]) = {
+    val (out, ran) = Profile.actionPlans(spark)(body)
+    val plans = ran.collect { case ("localCheckpoint", p) => p.toString }
+    assert(plans.nonEmpty,
+      s"no localCheckpoint plan captured; actions: ${ran.map(_._1).mkString(", ")}")
+    (out, plans)
+  }
+
   /** DataFrame program vs its oracle SQL through Engine.sql. */
   def assertQuery(q: Qdef, dir: String = sfDir): Unit = {
     val df = q.run(spark, dir)

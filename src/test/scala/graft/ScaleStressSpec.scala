@@ -109,8 +109,7 @@ class ScaleStressSpec extends QueryAssertions {
       "a 100-row cap over the fixture corpus must change the quantizer")
     // the sampled quantizer still supports the v04 recall floor
     val queries = emb.filter(col("vec_id") < 5)
-    val indexed = IvfIndex.index(emb, "vec_id", "embedding", c1,
-      materialize = true)
+    val indexed = IvfIndex.index(emb, "vec_id", "embedding", c1)
     val exact = VectorSearch.cosineTopK(queries, emb, "vec_id", "embedding", 5)
       .select(col("qid").as("eqid"), col("nid").as("enid"))
     val approx = IvfIndex.search(queries, "vec_id", "embedding", indexed, c1,
@@ -129,7 +128,10 @@ class ScaleStressSpec extends QueryAssertions {
     try {
       val rows = mult.count()
       val (lists, nprobe) = ScaleStress.ivfGeometryFor(rows)
-      val (recall, scanFrac) = ScaleStress.ivfQuality(mult, lists, nprobe)
+      val (recall, scanFrac, (train, index, search)) =
+        ScaleStress.ivfAudit(mult, lists, nprobe)
+      assert(train > 0 && index > 0 && search > 0,
+        s"leg walls must be measured: $train / $index / $search")
       assert(recall >= 0.5,
         s"recall@5 collapsed under the scaled geometry: $recall")
       assert(scanFrac <= 2.5 * nprobe.toDouble / lists,

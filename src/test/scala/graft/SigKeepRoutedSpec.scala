@@ -274,22 +274,17 @@ class SigKeepRoutedSpec extends QueryAssertions {
     // always remains. This is the pipeline-level pin of the routed
     // path's empty-suppression-effect correctness (the loose-cap case
     // above never searches a hot set).
-    val routedEq = EmbeddingDedup
+    val (routedDf, shape) = checkpointPlans(EmbeddingDedup
       .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 33,
-        minHotShare = 0.0)
-      .orderBy("id1", "id2").collect().map(_.toString).toSeq
+        minHotShare = 0.0))
+    val routedEq = routedDf.orderBy("id1", "id2").collect().map(_.toString).toSeq
     assert(routedEq == uncapped,
       s"routed path with one hot cell diverged: ${routedEq.size} vs ${uncapped.size}")
-    // plan-shape mode honors the cap too: the returned (un-checkpointed)
-    // plan must carry the routed kernel and the hot-key filters, not
-    // silently fall back to the uncapped form
-    val shape = EmbeddingDedup
-      .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 33,
-        materialize = false, minHotShare = 0.0)
-      .queryExecution.analyzed.toString
-    assert(shape.contains("graft_sig_keep_routed") &&
-      shape.contains("graft_key_in_set"),
-      "materialize=false with a cap must build the routed plan")
+    // the armed cap's barrier plan carries the routed kernel and the
+    // hot-key filters, not a silent fallback to the uncapped form
+    assert(shape.exists(p => p.contains("graft_sig_keep_routed") &&
+      p.contains("graft_key_in_set")),
+      s"an armed cap must build the routed plan:\n${shape.mkString("\n")}")
     // a cap INSIDE the fixture's occupancy tail (mean 2.9 / p99 13 /
     // max 34 measured at 500 docs × 8 planes): the 13–34-occ cone cells
     // go hot — the exact regime the cap targets at 100× — while the
@@ -306,17 +301,6 @@ class SigKeepRoutedSpec extends QueryAssertions {
     assert(uncapped.nonEmpty &&
       tight.size.toDouble / uncapped.size >= 0.95,
       s"tight cap lost too many pairs: ${tight.size} of ${uncapped.size}")
-    // the cap composes with exact-verify mode (estimateFilter=false):
-    // the hamming-estimate prefilter and the occupancy routing are
-    // independent switches, and disabling the estimate must not change
-    // the capped pair set at the fixture (same contract the uncapped
-    // modes pin in EmbeddingKernelsSpec)
-    val tightExact = EmbeddingDedup
-      .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 12,
-        estimateFilter = false, minHotShare = 0.0)
-      .orderBy("id1", "id2").collect().map(_.toString).toSeq
-    assert(tightExact == tight,
-      s"capped exact-verify diverged: ${tightExact.size} vs ${tight.size}")
   }
 
   test("adaptive arming: suppression engages only when over-cap cells " +
@@ -347,13 +331,12 @@ class SigKeepRoutedSpec extends QueryAssertions {
       // and the pipeline-level wiring: a requested cap whose share sits
       // below minHotShare must build the UNCAPPED plan — the routed
       // kernel with an EMPTY hot set, no suppression filters
-      val disarmed = EmbeddingDedup
+      val (_, disarmed) = checkpointPlans(EmbeddingDedup
         .nearDuplicates(docs, "doc_id", "text", 0.8, maxOccupancy = 12,
-          materialize = false, minHotShare = share12 + 0.01)
-        .queryExecution.analyzed.toString
-      assert(disarmed.contains("graft_sig_keep_routed") &&
-        !disarmed.contains("graft_key_in_set"),
-        "below-threshold share must build the uncapped plan")
+          minHotShare = share12 + 0.01))
+      assert(disarmed.exists(_.contains("graft_sig_keep_routed")) &&
+        !disarmed.exists(_.contains("graft_key_in_set")),
+        s"below-threshold share must build the uncapped plan:\n${disarmed.mkString("\n")}")
     } finally base.unpersist(blocking = false)
   }
 }
