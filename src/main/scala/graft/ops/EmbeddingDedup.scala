@@ -246,21 +246,14 @@ object EmbeddingDedup {
     } finally counts.unpersist(blocking = false)
   }
 
-  /** Over-occupied (table, bucket) cells as sorted packed keys,
-    * unconditionally (no arming threshold) — the audit/probe entry
-    * point; the pipeline itself goes through [[occupancyProfile]]. */
-  private[graft] def hotKeys(
-      base: DataFrame, planes: Int, cap: Int): Array[Int] =
-    occupancyProfile(base, planes, cap, armShare = 0.0)._1
-
   /** LSH candidates -> exact-cosine verification, all decisions before
     * the verify join taken map-side (see the object scaladoc).
     *
     * Every matched row is decided by [[graft.functions.SigKeepRouted]].
     * A non-empty `hot` set (sorted packed (table,bucket) keys from
-    * [[hotKeys]]) makes it the OCCUPANCY-CAPPED form: routes through
-    * over-occupied cells are dropped on both join sides (probe keys and
-    * build rows — the same [[graft.functions.KeyInSortedSet]]
+    * [[occupancyProfile]]) makes it the OCCUPANCY-CAPPED form: routes
+    * through over-occupied cells are dropped on both join sides (probe
+    * keys and build rows — the same [[graft.functions.KeyInSortedSet]]
     * predicate, so a route fully exists or fully doesn't), and the
     * kernel's canonical-owner rule is suppression-aware: the pair is
     * owned by its first agreeing table WITH A LIVE ROUTE. A pair is

@@ -24,7 +24,9 @@ class JobLedgerSpec extends QueryAssertions {
         graft.ops.DupComponents.components(pairs))
       val w1 = System.currentTimeMillis()
       val jobs = ledger.take("spec.construct")
-      assert(jobs.size >= 2, jobs)
+      // one job per propagation round after the first: round 2 lowers
+      // 3's label, round 3 changes nothing
+      assert(jobs.size == 2, jobs)
       assert(jobs.exists(_.tasks > 0), jobs)
       assert(JobLedger.unionMs(jobs.map(j => (j.startMs, j.endMs))) <= w1 - w0)
       // the tag ended with the scope: running the result adds no rows

@@ -226,12 +226,12 @@ class SigKeepRoutedSpec extends QueryAssertions {
     assert(k.eval(null) == true)
   }
 
-  test("hotKeys returns exactly the over-cap cells") {
+  test("occupancyProfile with no arming share returns exactly the over-cap cells") {
     val base = EmbeddingDedup.featurize(docs, "doc_id", "text", 8, 8)
       .persist()
     try {
       val cap = 4
-      val got = EmbeddingDedup.hotKeys(base, 8, cap).toSet
+      val got = EmbeddingDedup.occupancyProfile(base, 8, cap, armShare = 0.0)._1.toSet
       val want = base
         .select(posexplode(col("__sigs")).as(Seq("t", "lsh")))
         .select((shiftleft(col("t"), 8) + col("lsh")).as("k"))
