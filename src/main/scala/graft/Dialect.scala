@@ -1321,7 +1321,7 @@ object Dialect {
     * Returns the replacement text and the index past the CAST call, or
     * None for every cast this rewrite does not own. */
   private def rewriteJsonCast(
-      q: String, open: Int, isTry: Boolean = false): Option[(String, Int)] = {
+      q: String, open: Int, isTry: Boolean): Option[(String, Int)] = {
     val (args, after) = parseParenArgs(q, open).getOrElse(return None)
     // CAST has one logical argument, but the generic comma split doesn't
     // know angle-bracket type nesting (MAP<BIGINT, BIGINT> — '<' is also

@@ -38,12 +38,15 @@ object Engine {
       // the SQL TEXT before parsing — the reference has no such
       // substitution surface, so turn it off
       .config("spark.sql.variable.substitute", "false")
-      // ObjectHashAggregate (typed Aggregators: vec_sum, sketches) falls
-      // back to SORT-based aggregation after this many distinct keys per
-      // partition — the 128 default turns a k-group centroid update into
-      // a full sort of every partition once k > 128 (the √n IVF rule
-      // crosses that at n ≈ 16k rows). 32k entries of array buffers is
-      // tens of MB; a deployment with multi-KB buffers re-tunes this.
+      // ObjectHashAggregate, which runs every typed Aggregator in the
+      // catalog (tdigest_agg, qdigest_agg, approx_set_agg, khyperloglog_agg,
+      // set-digest and HLL merges, map_union_sum, histogram,
+      // approx_most_frequent, the samplers), falls back to SORT-based
+      // aggregation after this many distinct keys per partition. The
+      // 128 default turns a grouped sketch build into a full sort of
+      // every partition once a partition sees more than 128 groups.
+      // 32k entries of sketch buffers is tens of MB; a deployment with
+      // multi-KB buffers re-tunes this.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "32768")
       // Spark's JVM-wide cache of compiled generated classes, keyed by
@@ -116,11 +119,6 @@ object Engine {
     * spark-submit --master), else `local[cores]`. */
   private[graft] def masterFor(conf: SparkConf, cores: Int): String =
     conf.getOption("spark.master").getOrElse(s"local[$cores]")
-
-  /** The session's SQL time zone (spark.sql.session.timeZone), as the
-    * zone wall-clock date functions must render/parse in. */
-  def sessionZone(spark: SparkSession): java.time.ZoneId =
-    java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
 
   /** The session zone of the QUERY being evaluated right now, for use
     * inside UDF bodies: SQLConf.get is thread-local on the driver and
@@ -574,7 +572,7 @@ object Engine {
         (if (ranged(f.dataType)) max(c).cast("string")
          else lit(null).cast("string")).as(s"__hi$i"))
     } :+ count(lit(1)).cast("double").as("__total")
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
     val total = row.getAs[Double]("__total")
     def d(n: String): java.lang.Double =
       if (row.isNullAt(row.fieldIndex(n))) null

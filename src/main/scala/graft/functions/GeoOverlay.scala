@@ -40,9 +40,6 @@ package graft.functions
 object GeoOverlay {
   import GeoFunctions._
 
-  private def invalid(msg: String): Nothing =
-    throw new IllegalArgumentException(msg)
-
   // ------------------------------------------------------------ geometry
 
   private def segLen(a: Pt, b: Pt): Double = Math.hypot(b.x - a.x, b.y - a.y)

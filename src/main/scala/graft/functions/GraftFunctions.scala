@@ -202,10 +202,8 @@ object GraftFunctions {
       if (r._3.isEmpty) null
       else r._3.toSeq.sortBy { case (k, c) => (-c, k) }.take(math.max(r._1, 0)).toMap
     def bufferEncoder: Encoder[(Int, Int, Map[String, Long])] = enc
-    def outputEncoder: Encoder[Map[String, Long]] = {
-      implicit val lEnc: Encoder[Long] = Encoders.scalaLong
+    def outputEncoder: Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    }
   }
 
   /** Presto numeric_histogram(buckets, x) → map(double, double)
@@ -385,16 +383,12 @@ object GraftFunctions {
   }
 
   lazy val functions: Seq[FunctionEntry] = {
-    val mapEnc: Encoder[Map[String, Long]] = {
-      implicit val strEnc: Encoder[String] = Encoders.STRING
+    val mapEnc: Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    }
     val strMapEnc: Encoder[Map[String, String]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, String]]()
-    val amfEnc: Encoder[(Int, Int, Map[String, Long])] = {
-      implicit val m: Encoder[Map[String, Long]] = mapEnc
+    val amfEnc: Encoder[(Int, Int, Map[String, Long])] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Int, Int, Map[String, Long])]()
-    }
     val multimapEnc: Encoder[Map[String, Seq[String]]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Seq[String]]]()
     val bkEnc: Encoder[(Int, Seq[(Long, String)])] =

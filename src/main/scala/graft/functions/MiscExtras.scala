@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.time.{Instant, ZoneId}
+import java.time.Instant
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * constant per row, so dropping it preserves the argmin) — where the k
   * centroids arrive FLATTENED row-major in one literal float array and
   * their squared norms in a companion double array. This is the
-  * assignment kernel of [[graft.ops.IvfIndex]]: one primitive loop of
-  * k·dim multiply-adds per row inside whole-stage codegen.
+  * assignment kernel of [[graft.ops.IvfIndex.index]]: one primitive loop
+  * of k·dim multiply-adds per row inside whole-stage codegen
+  * ([[NearestList.argmin]], which training calls directly).
   *
   * It replaces an aggregate() HOF over an array-of-structs literal that
   * computed the same argmin: semantically identical, but the HOF paid a
@@ -54,7 +55,30 @@ case class NearestList(
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_list"
 
-  def compute(v: ArrayData): Int = {
+  def compute(v: ArrayData): Int = NearestList.argmin(flat, norms, v)
+
+  override protected def nullSafeEval(v: Any, f: Any, nn: Any): Any =
+    compute(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearestList", this, classOf[NearestList].getName)
+    nullSafeCodeGen(ctx, ev, (v, _, _) => s"${ev.value} = $ref.compute($v);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object NearestList {
+
+  /** Index of the centroid nearest to `v` among the k = `norms.length`
+    * centroids laid out row-major in `flat`: argmin over c of
+    * ‖c‖² − 2·(c · v), the first minimum on ties; -1 when k = 0. The
+    * one kernel behind the expression and [[graft.ops.IvfIndex.train]]'s
+    * Lloyd passes. */
+  def argmin(flat: Array[Float], norms: Array[Double], v: ArrayData): Int = {
     val k = norms.length
     if (k == 0) return -1
     val dim = flat.length / k
@@ -77,21 +101,6 @@ case class NearestList(
     bi
   }
 
-  override protected def nullSafeEval(v: Any, f: Any, nn: Any): Any =
-    compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nearestList", this, classOf[NearestList].getName)
-    nullSafeCodeGen(ctx, ev, (v, _, _) => s"${ev.value} = $ref.compute($v);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object NearestList {
   lazy val functions: Seq[FunctionEntry] = Seq(
     FunctionEntry.native("graft_nearest_list", 3)(a => NearestList(a(0), a(1), a(2))))
 }

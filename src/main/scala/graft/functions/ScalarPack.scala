@@ -337,12 +337,6 @@ object ScalarPack {
       case other => other
     }
 
-  /** Element rendered as JSON text: containers/strings via toString
-    * (strings keep quotes — the reference returns JSON type), scalars
-    * canonical. */
-  private def nodeText(n: com.fasterxml.jackson.databind.JsonNode): String =
-    n.toString
-
   private def jsonArrayContains(
       j: String,
       pred: com.fasterxml.jackson.databind.JsonNode => Boolean): java.lang.Boolean =

@@ -837,7 +837,7 @@ object Snowball {
     def stem(word0: String): String = {
       // prelude: acute → grave; i/u between vowels marked as consonants;
       // u after q marked
-      var w0 = word0
+      val w0 = word0
         .replace('á', 'à').replace('é', 'è')
         .replace('í', 'ì').replace('ó', 'ò')
         .replace('ú', 'ù')
@@ -982,7 +982,7 @@ object Snowball {
     def stem(word0: String): String = {
       // prelude: ß → ss; German2's ae/oe/ue → umlaut (not after q, and
       // not 'ue' in a vowel run like 'aue'); u/y between vowels marked
-      var w0 = word0.replace("ß", "ss")
+      val w0 = word0.replace("ß", "ss")
       val b = new StringBuilder
       var i = 0
       while (i < w0.length) {
@@ -1577,7 +1577,7 @@ object Snowball {
         case Some("seen") =>
           val stem = w.dropRight(4)
           if (endsLV(stem)) { w = stem; endingRemoved = true }
-        case Some(suf @ ("a" | "ä")) =>
+        case Some("a" | "ä") =>
           // preceded by cv: a non-vowel then a vowel
           val p = w.length - 2
           if (p >= 1 && isV(w(p)) && !isV(w(p - 1))) {

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import graft.plans.FunctionEntry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
@@ -49,11 +47,6 @@ object TextKernels {
   private val Sep = UTF8String.fromString(" ")
   private val Under = UTF8String.fromString("_")
   private val Empty = UTF8String.fromString("")
-
-  private val md5Local = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("MD5")
-  }
 
   /** Distinct word-trigram shingles of a text, first-occurrence order —
     * the exact value of [[graft.ops.MinHashLSH.shingles]]'s expression

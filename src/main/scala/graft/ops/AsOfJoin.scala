@@ -51,7 +51,7 @@ object AsOfJoin {
     val leftCols = l.columns.filterNot(r.columns.contains)
     val rAligned = leftCols.foldLeft(r)((df, c) =>
       df.withColumn(c, lit(null).cast(l.schema(c).dataType)))
-      .select(l.columns.map(col): _*)
+      .select(l.columns.toIndexedSeq.map(col): _*)
 
     val w = Window.partitionBy(keyCols: _*)
       .orderBy(col("__ts"), col("__side"))
@@ -62,6 +62,6 @@ object AsOfJoin {
 
     val payloadOut = rightPayload.map(c =>
       col("__match").getField(c).as(s"asof_$c"))
-    matched.select(left.columns.map(col) ++ payloadOut: _*)
+    matched.select(left.columns.toIndexedSeq.map(col) ++ payloadOut: _*)
   }
 }

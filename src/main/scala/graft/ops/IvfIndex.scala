@@ -1,8 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.NearestList
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
+
+import scala.collection.immutable.ArraySeq
 
 /** IVF (inverted-file) approximate nearest neighbor — the second ANN
   * path next to [[VectorSearch.annTopK]]'s sign-LSH: a coarse k-means
@@ -11,28 +17,22 @@ import org.apache.spark.sql.functions._
   * exact cosine inside them. Scan fraction ≈ nprobe/k on balanced lists
   * (the classic IVF-Flat layout of the FAISS line of work).
   *
-  * Everything is expressed as DataFrame ops that survive 100 TB:
-  *  - Training iterates Lloyd's algorithm over a BOUNDED deterministic
-  *    sample (≈ max(256·k, 10⁵) rows — see [[train]]; 256·n flops total
-  *    under the √n lists rule, vs n^1.5 for full-corpus Lloyd) with the
-  *    k centroids embedded as FLAT LITERAL arrays — assignment is a
-  *    MAP-SIDE codegen argmin kernel ([[graft.functions.NearestList]]:
-  *    zero exchange, rows stay n; see [[assignTo]] for the n×k-row
-  *    broadcast-join design the 40× stress run retired), the update an
-  *    element-wise [[graft.functions.VecSum]]
-  *    aggregate (k·dim shuffled values; the posexplode-by-dimension
-  *    update it replaced exchanged sample·dim ROWS). Only the k centroid
-  *    rows ever reach the driver (the same bounded-model contour as
+  *  - Training ([[train]]) runs deterministic Lloyd passes over a
+  *    BOUNDED sample with the k centroids held on the driver; each pass
+  *    is one Spark job that Catalyst never plans. Only centroids ever
+  *    reach the driver (the same bounded-model contour as
   *    [[VectorSearch.planeSigns]]), never the corpus.
-  *  - Init and iteration are DETERMINISTIC: seeds are the k vectors
-  *    with the smallest md5(id) in the sample, and every centroid
-  *    component is rounded to 6 dp after each update so shuffle-order
-  *    float jitter cannot flip assignments between runs.
+  *  - Indexing ([[index]]) embeds the trained centroids as flat literal
+  *    arrays in the `graft_nearest_list` codegen kernel: one map-side
+  *    pass over the corpus, no exchange.
   *  - Search is one plan: query → nprobe nearest centroids (broadcast
   *    k rows + rank window) → equi-join on the cluster id against the
   *    assigned corpus → exact cosine → top-k window. Each corpus vector
   *    lives in exactly ONE list, so no candidate dedup is needed
   *    (unlike multi-table LSH).
+  *
+  * A NULL vector fails [[train]] and [[index]] with a message naming the
+  * vector column; it is never filed into a list.
   *
   * The reference has no ANN operator (its nearest relative is
   * cosine_similarity over sparse maps, presto-main/.../operator/scalar/
@@ -49,42 +49,45 @@ object IvfIndex {
   /** Lloyd passes per [[train]]. */
   private val Iters = 2
 
+  private val CentroidSchema = StructType(Seq(
+    StructField("cluster", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(FloatType, containsNull = false),
+      nullable = false)))
+
+  private def nullVector(vecCol: String): String =
+    s"IvfIndex: NULL vector in column '$vecCol'"
+
   /** Train k centroids with [[Iters]] Lloyd passes over a BOUNDED
-    * deterministic sample. Returns a k-row frame (cluster, centroid)
-    * where centroid is Array[Float]; only these k rows are collected.
+    * deterministic sample. Returns a local k-row frame
+    * (cluster INT, centroid ARRAY<FLOAT>).
     *
     * Lloyd runs on ≈ max(256·k, 10⁵) rows, not the corpus — the
     * standard IVF training recipe (k-means quality needs O(points per
     * centroid), and 256/centroid is the classic FAISS default). With
     * the √n lists rule this makes training 256·k² = 256·n flops —
-    * LINEAR in corpus size — where full-corpus Lloyd is n·k = n^1.5
-    * (measured before this change: 3.7 s @10× → 27.5 s @40×, right on
-    * the n·√n curve; catastrophic at 10⁹ vectors). The sample is chosen
-    * by a MAP-SIDE md5-threshold filter (md5 hex is uniform, so keeping
-    * hashes lexicographically below cap/n of the space yields ≈cap
-    * rows) — no sort, no TakeOrdered single-partition bottleneck — and
-    * is eagerly checkpointed when it engages, so the Lloyd passes
-    * re-read ~cap bounded rows, not the corpus. Seeds are the k
-    * smallest md5 within the sample; every centroid component is
-    * rounded to 6 dp after each update so shuffle-order float jitter
-    * cannot flip assignments between runs — training is fully
-    * DETERMINISTIC given the ids.
+    * LINEAR in corpus size — where full-corpus Lloyd is n·k = n^1.5. The
+    * sample is chosen by a MAP-SIDE md5-threshold filter (md5 hex is
+    * uniform, so keeping hashes lexicographically below cap/n of the
+    * space yields ≈cap rows) and is eagerly checkpointed when it
+    * engages, so the passes re-read ~cap bounded rows, not the corpus.
     *
-    * The centroid update aggregates with [[graft.functions.VecSum]]
-    * (element-wise array sum, map-side combinable): the update shuffles
-    * k·dim partial values instead of the sample·dim rows the previous
-    * posexplode-by-dimension design exchanged.
+    * Jobs: the bounded over-cap probe, the seed take (the k smallest
+    * md5(id), numbered 0..k-1 on the driver), then one job per Lloyd
+    * pass (plus the sample's count and barrier when the cap engages).
+    * A pass reads the vectors through the one plan built before the
+    * loop; each partition assigns its rows to the nearest centroid
+    * ([[graft.functions.NearestList.argmin]]) and emits (cluster →
+    * double sums, n) partials, `reduceByKey` brings them to at most k
+    * rows, and the driver divides and rounds each component like
+    * Spark's `round(x / n, 6)` before narrowing to float, so
+    * shuffle-order float jitter cannot flip an assignment between runs.
+    * Ties go to the smallest cluster id; a cluster whose list empties
+    * drops out and the survivors keep their ids. Training is fully
+    * DETERMINISTIC given the ids. A NULL vector fails the pass.
     *
-    * Every Lloyd pass ends in a MATERIALIZATION BARRIER (an eager
-    * localCheckpoint of the k bounded rows — the same lifecycle as
-    * [[MinHashLSH.nearDuplicates]] / [[EmbeddingDedup.nearDuplicates]];
-    * a 100-TB pipeline writes them to reliable storage instead). Without
-    * the barrier the returned frame's lineage holds every full
-    * assignment pass, and EVERY downstream consumer (index, each probe,
-    * each search) silently re-executes the whole training — a ~(passes ×
-    * consumers)× multiplier on the most expensive stage at scale. With it,
-    * training runs exactly once: one sample pass per iteration, k rows
-    * checkpointed, and consumers see a constant-size leaf.
+    * The result is a LocalRelation: consumers see a constant-size leaf
+    * with no training lineage, and its size statistics let the join
+    * planner broadcast it (and dynamic partition pruning fire on it).
     * `sampleCap = 0` means the auto rule max(256·k, 10⁵); specs pass a
     * small cap to exercise the sampled path at fixture scale. */
   def train(
@@ -94,14 +97,17 @@ object IvfIndex {
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__h", md5(col("__id").cast("string")))
     val cap = if (sampleCap > 0) sampleCap else math.max(256L * k, 100000L)
-    // Bounded over-cap probe instead of an unconditional full count(): a
-    // zero-column LocalLimit scan stops after cap+1 rows, so a bounded
-    // corpus (every n ≤ cap caller) answers in O(cap) work regardless
-    // of corpus size. Only an over-cap corpus pays the full count —
-    // which the threshold fraction genuinely needs, and which is then
-    // the train's only full corpus pass besides the sample filter itself.
+    // Bounded over-cap probe instead of an unconditional full count():
+    // each partition of a zero-column scan stops after cap+1 rows, so a
+    // bounded corpus (every n ≤ cap caller) answers in O(cap) work per
+    // split regardless of corpus size, in one job. Only an over-cap
+    // corpus pays the full count — which the threshold fraction
+    // genuinely needs, and which is then the train's only full corpus
+    // pass besides the sample filter itself.
     val capI = math.min(cap, Int.MaxValue - 1L).toInt
-    val over = c0.select(lit(1).as("__one")).limit(capI + 1).count() > cap
+    val over = c0.select(lit(1)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator(rows.take(capI + 1).size.toLong))
+      .fold(0L)(_ + _) > cap
     val c =
       if (!over) c0
       else {
@@ -118,88 +124,121 @@ object IvfIndex {
         // bounded-model contour, not a corpus copy
         sampled.localCheckpoint(eager = true)
       }
-    var centroids = c
-      .orderBy("__h").limit(k)
-      .select(
-        (row_number().over(Window.orderBy("__h")) - 1).as("cluster"),
-        col("__v").cast("array<float>").as("centroid"))
-    for (_ <- 0 until Iters) {
-      val assigned = assignTo(c, centroids)
-      val updated = assigned
-        .groupBy(col("__cluster").as("cluster"))
-        .agg(graft.functions.VecSum.sum(col("__v").cast("array<float>"))
-            .as("__sum"),
-          count(lit(1)).as("__n"))
-        // 6-dp rounding: shuffle-order float jitter in the double sums
-        // must not be able to flip a near-tie assignment between runs
-        .select(col("cluster"),
-          transform(col("__sum"), x => round(x / col("__n"), 6).cast("float"))
-            .as("centroid"))
-      // per-iteration barrier: iteration i+1's assignment must not drag
-      // iteration i's sample pass along in its lineage
-      centroids = updated.localCheckpoint(eager = true)
-    }
-    centroids
+    // sort + limit collects in md5 order, which numbers the seeds
+    var cents = c.orderBy("__h").limit(k)
+      .select(col("__v").cast("array<float>")).collect().zipWithIndex
+      .map { case (r, i) =>
+        require(!r.isNullAt(0), nullVector(vecCol))
+        (i, r.getSeq[Float](0).toArray)
+      }
+    require(cents.nonEmpty, "IvfIndex.train needs a non-empty corpus")
+    val rows = c.select(col("__v").cast("array<float>")).queryExecution.toRdd
+    for (_ <- 0 until Iters) cents = lloydPass(rows, vecCol, cents)
+    corpus.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cents.map { case (id, v) =>
+        Row(id, ArraySeq.unsafeWrapArray(v)) }: _*),
+      CentroidSchema)
   }
 
-  /** Nearest-centroid assignment, MAP-SIDE: the k centroids are
-    * collected (k bounded rows — the same driver-size contract as the
-    * trained model itself) and embedded as a LITERAL array, so each
-    * corpus row computes its argmin in one codegen'd HOF pass over k
-    * structs. The first design broadcast-JOINED the centroid frame and
-    * min_by-grouped the n×k result — same flops, but it MATERIALIZED
-    * and shuffled n×k rows carrying two dense vectors each; the 40×
-    * ANN stress run measured what that does (80 000 × 283 ≈ 23 M
-    * ~600-byte rows → 2.4 GB of spill, 78 s). Map-side, rows stay n
-    * and assignment needs no exchange at all. Per-centroid squared
-    * norms ride in the literal so the squared distance costs ONE dot
-    * product per (row, centroid): ‖c−v‖² = ‖c‖² − 2c·v + ‖v‖², with
-    * ‖v‖² hoisted out of the per-centroid lambda. Ties break to the
-    * smallest cluster id via struct ordering, exactly like the min_by
-    * form did. */
-  private def assignTo(c: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = centroids
-      .select(col("cluster").cast("int"), col("centroid"))
-      .collect()
-      .map(r => (r.getInt(0),
-        r.getAs[scala.collection.Seq[Float]](1).toArray))
-      .sortBy(_._1)
-    require(cents.nonEmpty, "assignTo needs at least one centroid")
-    // the k centroids ride as TWO FLAT literal primitive arrays (row-major
-    // floats + squared norms) into the graft_nearest_list codegen kernel:
-    // one primitive k·dim multiply-add loop per row, where the previous
-    // aggregate()-HOF form paid a struct access + nested-ArrayData view +
-    // lambda dispatch per centroid (measured ~3× slower on the 40× stress
-    // train leg). ‖v‖² is dropped from the distance entirely: it is
-    // constant per row, so argmin(‖c‖² − 2c·v) = argmin(‖c−v‖²). The
-    // kernel's strict `<` keeps the FIRST minimum and the literal is
-    // sorted by cluster id — ties break to the smallest cluster, exactly
-    // like the min_by(struct(d, cl)) form. Surviving cluster ids need not
-    // be consecutive after a Lloyd pass drops an emptied list, so the
-    // argmin INDEX maps back through a companion id literal.
+  /** The k (id, centroid) pairs, sorted by id, as the nearest-list
+    * kernel's operands: row-major floats zero-padded to the widest
+    * centroid, and the squared norms. */
+  private def pack(cents: Array[(Int, Array[Float])]): (Array[Float], Array[Double]) = {
     val dim = cents.map(_._2.length).max
     val flat = new Array[Float](cents.length * dim)
     cents.zipWithIndex.foreach { case ((_, v), i) =>
       System.arraycopy(v, 0, flat, i * dim, v.length)
     }
-    val norms = cents.map(_._2.foldLeft(0.0)((s, x) => s + x.toDouble * x))
+    (flat, cents.map(_._2.foldLeft(0.0)((s, x) => s + x.toDouble * x)))
+  }
+
+  /** One Lloyd pass, one job: assign each vector to its nearest centroid
+    * and return the new centroids of the non-empty clusters, sorted by
+    * id. Sums are doubles over float components, a shorter vector adding
+    * zero to the tail; their merge order across partitions follows the
+    * shuffle, which the 6-dp rounding absorbs. */
+  private def lloydPass(
+      rows: RDD[InternalRow], vecCol: String,
+      cents: Array[(Int, Array[Float])]): Array[(Int, Array[Float])] = {
+    val (flat, norms) = pack(cents)
     val ids = cents.map(_._1)
+    val k = ids.length
+    def add(into: Array[Double], from: Array[Double]): Array[Double] = {
+      val out = if (into.length >= from.length) into
+        else java.util.Arrays.copyOf(into, from.length)
+      var d = 0
+      while (d < from.length) { out(d) += from(d); d += 1 }
+      out
+    }
+    rows.mapPartitions { it =>
+      val sums = Array.fill(k)(Array.emptyDoubleArray)
+      val ns = new Array[Long](k)
+      it.foreach { r =>
+        if (r.isNullAt(0)) throw new IllegalArgumentException(nullVector(vecCol))
+        val v = r.getArray(0)
+        val c = NearestList.argmin(flat, norms, v)
+        val n = v.numElements()
+        if (sums(c).length < n) sums(c) = java.util.Arrays.copyOf(sums(c), n)
+        val s = sums(c)
+        var d = 0
+        while (d < n) { s(d) += v.getFloat(d); d += 1 }
+        ns(c) += 1
+      }
+      (0 until k).iterator.filter(ns(_) > 0).map(c => (ids(c), (sums(c), ns(c))))
+    }.reduceByKey((a, b) => (add(a._1, b._1), a._2 + b._2),
+        math.min(k, rows.sparkContext.defaultParallelism))
+      .collect()
+      .sortBy(_._1)
+      .map { case (id, (s, n)) => (id, s.map(x => round6(x / n).toFloat)) }
+  }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP over the decimal
+    * rendering of x, NaN and infinities unchanged. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Nearest-centroid assignment, MAP-SIDE: the centroids (k bounded
+    * rows of a local frame) are embedded as two flat literal arrays —
+    * row-major floats and squared norms — in the `graft_nearest_list`
+    * codegen kernel, so each corpus row computes its argmin in one
+    * primitive k·dim loop with no exchange. (A broadcast join of the
+    * centroids min_by-grouped over n×k rows measured 2.4 GB of spill at
+    * 40×; an aggregate() HOF over a struct literal ran ~3× slower.)
+    * Surviving cluster ids need not be consecutive after a Lloyd pass
+    * drops an emptied list, so the argmin INDEX maps back through a
+    * companion id literal; the literal is sorted by id and the kernel
+    * keeps the first minimum, so ties break to the smallest cluster. A
+    * NULL vector raises an error naming `vecCol`. */
+  private def assignTo(
+      c: DataFrame, vecCol: String, centroids: DataFrame): DataFrame = {
+    val cents = centroids
+      .select(col("cluster").cast("int"), col("centroid"))
+      .collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+    require(cents.nonEmpty, "assignTo needs at least one centroid")
+    val (flat, norms) = pack(cents)
     val idx = call_function("graft_nearest_list",
       col("__v").cast("array<float>"), typedlit(flat), typedlit(norms))
-    c.withColumn("__cluster", element_at(typedlit(ids), idx + lit(1)))
+    c.withColumn("__cluster",
+      when(col("__v").isNull, raise_error(lit(nullVector(vecCol))))
+        .otherwise(element_at(typedlit(cents.map(_._1)), idx + lit(1))))
   }
 
   /** The inverted file: (id, vec, cluster) — cluster is the partition /
     * bucketing key a 100-TB layout would persist by (see the PlanSpec
-    * partitioned-write test). It ends in the same eager localCheckpoint
-    * barrier as [[train]], so callers probing the index more than once
+    * partitioned-write test). It ends in an eager localCheckpoint
+    * barrier, so callers probing the index more than once
     * (recall + scan-fraction branches, repeated searches) pay the
     * assignment pass exactly once. */
   def index(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame): DataFrame =
     assignTo(
-      corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")), centroids)
+      corpus.select(col(idCol).as("__id"), col(vecCol).as("__v")), vecCol,
+      centroids)
       .select(col("__id").as("nid"), col("__v").as("nv"),
         col("__cluster").as("ncluster"))
       .localCheckpoint(eager = true)

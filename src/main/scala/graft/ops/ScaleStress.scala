@@ -225,8 +225,9 @@ object ScaleStress {
     * end-to-end number, then recall@5 against the exact brute-force
     * top-5 and the max per-query scanned fraction of the corpus — what
     * makes the sublinear-scan claim auditable (a fast index with silent
-    * recall collapse is not a result). train() and index() end in eager
-    * checkpoints, so their call wall IS their execution wall; search is
+    * recall collapse is not a result). train() collects its centroids
+    * and index() ends in an eager checkpoint, so their call wall IS their
+    * execution wall; search is
     * forced through the noop sink. Returns (recall, scanFrac, (train,
     * index, search) seconds). */
   def ivfAudit(emb: DataFrame, lists: Int,

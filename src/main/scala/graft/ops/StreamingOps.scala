@@ -172,7 +172,7 @@ object StreamingOps {
     * pattern: per-microbatch exactly-once file commits). */
   def runToParquet(df: DataFrame, outDir: String): Unit = {
     val q = df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("append").parquet(outDir)
       }
       .outputMode("append")

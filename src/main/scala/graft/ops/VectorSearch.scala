@@ -71,7 +71,7 @@ object VectorSearch {
     * plane, dimension); EmbeddingKernelsSpec pins kernel ≡ this). */
   def bucketOf(vec: Column, signs: Array[Array[Double]]): Column = {
     val bits = signs.zipWithIndex.map { case (plane, j) =>
-      val planeLit = array(plane.map(lit): _*)
+      val planeLit = array(plane.toIndexedSeq.map(lit): _*)
       val d = expr(
         s"aggregate(zip_with(${vec.toString}, ${planeLit.toString}, " +
           "(p, q) -> CAST(p AS DOUBLE) * q), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")

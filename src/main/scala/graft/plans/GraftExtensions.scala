@@ -41,7 +41,7 @@ object GraftExtensions {
   lazy val functions: Seq[FunctionEntry] = {
     import graft.functions._
     Seq(PrestoFunctions.functions, DotProductFloat.functions,
-      VecSum.functions, NearestList.functions, EmbeddingKernels.functions,
+      NearestList.functions, EmbeddingKernels.functions,
       TextKernels.functions, GraftFunctions.functions, Snowball.functions,
       ScalarPack.functions, HyperLogLog.functions, QuantileSketch.functions,
       TDigest.functions, SetDigestSketch.functions,

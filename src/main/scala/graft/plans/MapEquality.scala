@@ -146,12 +146,12 @@ object DoubleDivisionRewrite extends Rule[LogicalPlan] {
     // try_multiply, …): those subtrees implement a Spark API contract
     // (NULL-on-error), not user-written division
     case rr: RuntimeReplaceable => rr
-    case d @ Divide(l, r, mode)
-        if mode != EvalMode.TRY && d.resolved &&
+    case d @ Divide(l, r, ctx)
+        if ctx.evalMode != EvalMode.TRY && d.resolved &&
           d.dataType == DoubleType && (floatRooted(l) || floatRooted(r)) =>
       graft.functions.IeeeDivide(rw(l), rw(r))
-    case d @ Divide(l, r, mode)
-        if mode != EvalMode.TRY && d.resolved && d.dataType == FloatType =>
+    case d @ Divide(l, r, ctx)
+        if ctx.evalMode != EvalMode.TRY && d.resolved && d.dataType == FloatType =>
       Cast(graft.functions.IeeeDivide(
         Cast(rw(l), DoubleType), Cast(rw(r), DoubleType)), FloatType)
     case other => other.mapChildren(rw)
@@ -204,8 +204,8 @@ object IntegerDivisionRewrite extends Rule[LogicalPlan] {
   private def rw(e: Expression): Expression = e match {
     case t: TryEval => t
     case rr: RuntimeReplaceable => rr
-    case d @ Divide(l, r, mode)
-        if mode != EvalMode.TRY && d.resolved && d.dataType == DoubleType &&
+    case d @ Divide(l, r, ctx)
+        if ctx.evalMode != EvalMode.TRY && d.resolved && d.dataType == DoubleType &&
           integral.contains(rootType(l)) && integral.contains(rootType(r)) =>
       val lt = rootType(l); val rt = rootType(r)
       val wide = if (integral.indexOf(lt) >= integral.indexOf(rt)) lt else rt

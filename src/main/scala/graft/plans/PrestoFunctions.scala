@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, CollectList, CollectSet, Count, Kurtosis, Skewness}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, CollectList, Count, Kurtosis, Skewness}
 import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, IntegerType, LongType, NullType, ShortType, StringType, TimestampType}
 
 /** Presto functions Spark lacks, injected as NATIVE Catalyst expression

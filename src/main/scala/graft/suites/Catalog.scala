@@ -271,7 +271,7 @@ object Catalog {
         |  ('fizzed', 'fizz'), ('filing', 'file'), ('happy', 'happi'),
         |  ('sky', 'sky'), ('troubled', 'troubl')
         |) AS t(word, stemmed)
-        |ORDER BY word""".stripMargin) { (s, dir) =>
+        |ORDER BY word""".stripMargin) { (s, _) =>
       val words = Seq(
         "caresses", "ponies", "ties", "cats", "feed", "agreed", "plastered",
         "motoring", "hopping", "falling", "hissing", "fizzed", "filing",
@@ -305,7 +305,7 @@ object Catalog {
         |  ('fi', 'taloissa', 'talo'), ('fi', 'talot', 'talo'),
         |  ('fi', 'edeltäjien', 'edeltäj')
         |) AS t(lang, word, stemmed)
-        |ORDER BY lang, word""".stripMargin) { (s, dir) =>
+        |ORDER BY lang, word""".stripMargin) { (s, _) =>
       val rows = Seq(
         ("sv", "klubbarna"), ("sv", "skrattade"), ("sv", "verkligt"),
         ("sv", "husens"),
@@ -337,7 +337,7 @@ object Catalog {
         |  ('mergeam', 'merg'), ('cântaţi', 'cânt'),
         |  ('copiii', 'copii'), ('zise', 'zis')
         |) AS t(word, stemmed)
-        |ORDER BY word""".stripMargin) { (s, dir) =>
+        |ORDER BY word""".stripMargin) { (s, _) =>
       val words = Seq(
         "copilului", "florile", "capabile", "durabilitate",
         "comunicativitate", "contribuţiune", "acţiunile", "lucrează",

@@ -84,7 +84,7 @@ object Conformance {
         |  substr(s, 2, 3) AS mid,
         |  reverse(s) AS rev
         |FROM (VALUES ('héllo'), ('über'), ('naïve'), ('日本語abc')) AS t(s)
-        |ORDER BY s""".stripMargin) { (s, dir) =>
+        |ORDER BY s""".stripMargin) { (s, _) =>
       import s.implicits._
       Seq("héllo", "über", "naïve", "日本語abc").toDF("s")
         .select(
@@ -171,7 +171,7 @@ object Conformance {
           if (r.head.isNullAt(0)) "NULL" else r.head.get(0).toString
         } catch {
           case st: org.apache.spark.SparkThrowable
-            if st.getErrorClass != null => st.getErrorClass
+            if st.getCondition != null => st.getCondition
           case e: Throwable => e.getClass.getSimpleName
         }
       val prev = s.conf.get("spark.sql.ansi.enabled", "true")

@@ -76,7 +76,7 @@ object Extras {
         |  SELECT 'https://example.com/search?q=spark&lang=en' AS url
         |  UNION ALL SELECT 'http://data.org/docs/index.html?q=dedup'
         |  UNION ALL SELECT 'https://host.io/a/b/c') urls
-        |ORDER BY url""".stripMargin) { (s, dir) =>
+        |ORDER BY url""".stripMargin) { (s, _) =>
       import s.implicits._
       Seq("https://example.com/search?q=spark&lang=en",
         "http://data.org/docs/index.html?q=dedup",

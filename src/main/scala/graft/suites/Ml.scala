@@ -189,7 +189,7 @@ object Ml {
         |  END AS norm
         |FROM (SELECT 1 AS id UNION ALL SELECT 2 UNION ALL SELECT 3
         |      UNION ALL SELECT 4) v
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+        |ORDER BY id""".stripMargin) { (s, _) =>
       import s.implicits._
       // reference vectors (TestMyanmarFunctions.java:36-52): U+1095 (Zawgyi
       // glyph block); a Zawgyi sentence using visible-asat U+1039 +

@@ -87,10 +87,10 @@ object Similarity {
       val queries = emb.filter(col("vec_id") < 5)
       val exact = VectorSearch.cosineTopK(queries, emb, "vec_id", "embedding", 5)
         .select(col("qid").as("eqid"), col("nid").as("enid"))
-      // train ends in a k-row checkpoint (no Lloyd lineage downstream);
+      // train returns a local k-row frame (no Lloyd lineage downstream);
       // the inverted file is materialized ONCE and shared by the recall
       // and scan-fraction branches below — without this, each of the four
-      // consumers would re-run assignment AND training from scratch
+      // consumers would re-run assignment from scratch
       val centroids = IvfIndex.train(emb, "vec_id", "embedding", k = 16)
       val indexed = IvfIndex.index(emb, "vec_id", "embedding", centroids)
       val cands = IvfIndex.candidates(

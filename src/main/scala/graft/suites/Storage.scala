@@ -208,7 +208,7 @@ object Storage {
         |FROM gen
         |WHERE o_orderkey <= 50000
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
+        |ORDER BY o_orderpriority""".stripMargin) { (s, _) =>
       s.read.format("graft-tpch")
         .option("rows", "60000").option("splits", "16").load()
         .filter(col("o_orderkey") <= 50000)

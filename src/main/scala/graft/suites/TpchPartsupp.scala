@@ -1,6 +1,6 @@
 package graft.suites
 
-import graft.{Engine, Qdef, Tables}
+import graft.{Qdef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 

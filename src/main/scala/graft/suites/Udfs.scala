@@ -1,7 +1,6 @@
 package graft.suites
 
 import graft.{Engine, Qdef, Tables}
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Registered-function corpus (SURVEY §2.11): typed Aggregator UDAFs and

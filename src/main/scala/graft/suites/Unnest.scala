@@ -22,7 +22,7 @@ object Unnest {
       "u01_values",
       """SELECT id, name, id * 2 AS doubled
         |FROM (VALUES (1, 'alpha'), (2, 'beta'), (3, 'gamma')) AS t(id, name)
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+        |ORDER BY id""".stripMargin) { (s, _) =>
       import s.implicits._
       Seq((1, "alpha"), (2, "beta"), (3, "gamma")).toDF("id", "name")
         .withColumn("doubled", col("id") * 2)
@@ -70,7 +70,7 @@ object Unnest {
     // explode(sequence()); DuckDB: generate_series).
     Qdef.duckOnly(
       "u04_sequence",
-      """SELECT CAST(unnest(generate_series(1, 10)) AS BIGINT) AS x""") { (s, dir) =>
+      """SELECT CAST(unnest(generate_series(1, 10)) AS BIGINT) AS x""") { (s, _) =>
       s.range(1, 11).select(col("id").as("x"))
     },
 

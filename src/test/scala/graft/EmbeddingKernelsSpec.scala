@@ -113,7 +113,7 @@ class EmbeddingKernelsSpec extends QueryAssertions {
     val viaSql = (0 until tables).map { t =>
       val signs = VectorSearch.planeSigns(planes, EmbeddingDedup.Dim, t)
       val bucket = (0 until planes).map { j =>
-        val planeLit = array(signs(j).map(lit): _*)
+        val planeLit = array(signs(j).toIndexedSeq.map(lit): _*)
         val dot = expr(s"aggregate(zip_with(__v, ${planeLit.toString}, " +
           "(c, s) -> CAST(c AS DOUBLE) * s), CAST(0 AS DOUBLE), (a, x) -> a + x)")
         when(dot > 0, lit(1 << j)).otherwise(lit(0))

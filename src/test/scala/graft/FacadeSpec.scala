@@ -578,6 +578,23 @@ class FacadeSpec extends AnyFunSuite {
     assert(one("SELECT length(current_user) > 0") == true)
   }
 
+  test("IEEE division rewrite leaves a TRY-mode divide alone") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Divide, EvalMode, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    def rewritten(mode: EvalMode.Value) =
+      graft.plans.DoubleDivisionRewrite(Project(
+        Seq(Alias(Divide(Literal(1.0), Literal(0.0), mode), "q")()),
+        OneRowRelation())).expressions.head
+    // TRY promises NULL on a zero divisor; ieeedivide would give Infinity
+    val kept = rewritten(EvalMode.TRY)
+    assert(kept.collectFirst { case d: Divide => d.evalContext.evalMode }
+      .contains(EvalMode.TRY), kept)
+    assert(kept.eval(null) == null, kept)
+    val ieee = rewritten(EvalMode.ANSI)
+    assert(ieee.exists(_.isInstanceOf[graft.functions.IeeeDivide]), ieee)
+    assert(ieee.eval(null) == Double.PositiveInfinity, ieee)
+  }
+
   test("json pack: size/contains/get/parse semantics") {
     assert(one("SELECT json_size('{\"a\": {\"b\": 1, \"c\": 2}}', '$.a')") == 2L)
     assert(one("SELECT json_size('{\"a\": [9]}', '$.a')") == 1L)
@@ -1039,7 +1056,6 @@ class FacadeSpec extends AnyFunSuite {
 
   test("materialized view: partition-scoped refresh picks up base changes") {
     def ddl(sql: String): Unit = { Engine.sql(spark, dir, sql).collect(); () }
-    import org.apache.spark.sql.functions._
     val base = java.nio.file.Files.createTempDirectory("graft_mv_base").toString
     val s = spark
     import s.implicits._

@@ -528,7 +528,7 @@ class GeoSpec extends AnyFunSuite {
 
   test("KDB tree: median splits, leaf coverage, partition assignment") {
     import graft.functions.KdbSpatial
-    import graft.functions.KdbSpatial.{Rect, Leaf}
+    import graft.functions.KdbSpatial.Rect
     // 8 unit squares in a row: partitionCount 4 -> >= 4 leaves, each
     // holding <= ceil(8/4)=2 samples; every query point lands in >= 1 leaf
     val rects = (0 until 8).map(i => Rect(i * 10, 0, i * 10 + 1, 1))

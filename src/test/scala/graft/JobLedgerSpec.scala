@@ -35,4 +35,22 @@ class JobLedgerSpec extends QueryAssertions {
       assert(ledger.take("spec.construct").isEmpty)
     } finally ledger.close()
   }
+
+  test("IVF train + index run one job per Lloyd pass") {
+    val sc = spark.sparkContext
+    val sf = new java.io.File(sfDir).getParent + "/sf0.01"
+    val emb = Tables.load(spark, sf, "embeddings")
+    val ledger = JobLedger.install(sc)
+    try {
+      val indexed = JobLedger.tagged(sc, "spec.ivf") {
+        val centroids = graft.ops.IvfIndex.train(emb, "vec_id", "embedding", k = 16)
+        graft.ops.IvfIndex.index(emb, "vec_id", "embedding", centroids)
+      }
+      // the over-cap probe, the seed take, 2 Lloyd passes, the index
+      // barrier; reading the local centroid frame starts none
+      val jobs = ledger.take("spec.ivf")
+      assert(jobs.size == 5, jobs)
+      assert(indexed.count() == 500)
+    } finally ledger.close()
+  }
 }

@@ -72,7 +72,6 @@ class MultimodalSpec extends AnyFunSuite {
   test("perceptual hash: gradient bits, clamp at 16, degenerate images") {
     val spark = TestSpark.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // 3 full rows of 16: sums 16*'a', 16*'b', 16*'a' -> bits "10"
     val txts = Seq(
       (1L, "a" * 16 + "b" * 16 + "a" * 16),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions (the optimizer-test layer of SURVEY §5,
   * mirroring the reference's plan matchers in presto-main/.../sql/planner/

@@ -35,6 +35,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * numeric cells (float summation order across engines).
   */
 class ReferenceQueriesSpec extends AnyFunSuite {
+  import ReferenceQueriesSpec.Case
 
   private val TinyDir = "/root/testdata/sf0.01"
 
@@ -97,10 +98,6 @@ class ReferenceQueriesSpec extends AnyFunSuite {
     val got = rows.toSeq.map(_.toSeq.map(canonCell).mkString("\u0001"))
     if (ordered) got else got.sorted
   }
-
-  private final case class Case(file: String, method: String, sql: String,
-      ordered: Boolean, mode: String, nRows: Int, nCols: Int,
-      expected: Seq[String])
 
   private lazy val corpus: Vector[Case] = {
     val dec = java.util.Base64.getDecoder
@@ -235,4 +232,10 @@ class ReferenceQueriesSpec extends AnyFunSuite {
     assert(ok >= 1155,
       s"pass floor broken: $ok of ${corpus.size}\n${failures.take(30).mkString("\n")}")
   }
+}
+
+object ReferenceQueriesSpec {
+  private final case class Case(file: String, method: String, sql: String,
+      ordered: Boolean, mode: String, nRows: Int, nCols: Int,
+      expected: Seq[String])
 }

@@ -107,6 +107,19 @@ class ScaleStressSpec extends QueryAssertions {
     val full = IvfIndex.train(emb, "vec_id", "embedding", k = 16)
     assert(centroidMap(c1) != centroidMap(full),
       "a 100-row cap over the fixture corpus must change the quantizer")
+    // neither the shuffle partition count nor the input's split count
+    // changes a centroid, sampled or not
+    def trainedAt(parts: Int, inputParts: Option[Int], sampleCap: Long) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val e = Tables.load(s, sfDir, "embeddings")
+      centroidMap(IvfIndex.train(inputParts.fold(e)(e.repartition(_)),
+        "vec_id", "embedding", k = 16, sampleCap = sampleCap))
+    }
+    for ((parts, input) <- Seq((1, None), (7, None), (7, Some(5)))) {
+      assert(trainedAt(parts, input, cap) == centroidMap(c1), (parts, input))
+      assert(trainedAt(parts, input, 0L) == centroidMap(full), (parts, input))
+    }
     // the sampled quantizer still supports the v04 recall floor
     val queries = emb.filter(col("vec_id") < 5)
     val indexed = IvfIndex.index(emb, "vec_id", "embedding", c1)
@@ -119,6 +132,23 @@ class ScaleStressSpec extends QueryAssertions {
     val total = exact.count()
     assert(total > 0 && hits.toDouble / total >= 0.5,
       s"recall@5 with sample-trained centroids collapsed: $hits/$total")
+  }
+
+  test("IVF: a NULL vector fails train and index, naming the vector column") {
+    import graft.ops.IvfIndex
+    val holed = emb.withColumn("embedding",
+      when(col("vec_id") === 7L, lit(null)).otherwise(col("embedding")))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    val want = "NULL vector in column 'embedding'"
+    val inTrain = intercept[Exception](
+      IvfIndex.train(holed, "vec_id", "embedding", k = 16))
+    assert(messages(inTrain).contains(want), messages(inTrain))
+    val centroids = IvfIndex.train(emb, "vec_id", "embedding", k = 16)
+    val inIndex = intercept[Exception](
+      IvfIndex.index(holed, "vec_id", "embedding", centroids))
+    assert(messages(inIndex).contains(want), messages(inIndex))
   }
 
   test("IVF stress quality: recall@5 holds and the scan is a bounded " +

@@ -94,16 +94,13 @@ class SketchSpec extends AnyFunSuite {
     assert(centroids > 10 && centroids <= 2 * TDigest.Compression.toInt,
       s"$centroids centroids vs compression ${TDigest.Compression}")
     // median of a standard normal ≈ 0 within loose digest error
-    assert(math.abs(TDigest.valueAtQuantile(digest, 0.5)) < 0.05)
+    assert(math.abs(TDigest.valueAtQuantile(digest.toIndexedSeq, 0.5)) < 0.05)
   }
 
   test("approx_most_frequent: space-saving eviction keeps state bounded and overestimates") {
     import graft.functions.GraftFunctions
-    val enc = {
-      implicit val m = org.apache.spark.sql.Encoders.kryo[Map[String, Long]]
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(Int, Int, Map[String, Long])]()
-    }
+    val enc = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder[(Int, Int, Map[String, Long])]()
     val agg = new GraftFunctions.ApproxMostFrequentAgg(enc)
     // 10 distinct keys, capacity 4: state never exceeds 4 entries
     var state = agg.zero
@@ -124,11 +121,8 @@ class SketchSpec extends AnyFunSuite {
 
   test("approx_most_frequent merge preserves the overestimate guarantee under eviction") {
     import graft.functions.GraftFunctions
-    val enc = {
-      implicit val m = org.apache.spark.sql.Encoders.kryo[Map[String, Long]]
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(Int, Int, Map[String, Long])]()
-    }
+    val enc = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder[(Int, Int, Map[String, Long])]()
     val agg = new GraftFunctions.ApproxMostFrequentAgg(enc)
     // two full partials over DISJOINT keys at capacity 2: a sum-then-
     // truncate merge would discard the evicted keys' mass entirely and
@@ -159,11 +153,8 @@ class SketchSpec extends AnyFunSuite {
 
   test("approx_most_frequent rejects non-positive buckets/capacity loudly") {
     import graft.functions.GraftFunctions
-    val enc = {
-      implicit val m = org.apache.spark.sql.Encoders.kryo[Map[String, Long]]
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(Int, Int, Map[String, Long])]()
-    }
+    val enc = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder[(Int, Int, Map[String, Long])]()
     val agg = new GraftFunctions.ApproxMostFrequentAgg(enc)
     val e1 = intercept[IllegalArgumentException](agg.reduce(agg.zero, (3, "x", 0)))
     assert(e1.getMessage.contains("capacity"))
