@@ -73,14 +73,20 @@ object Tables {
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, String, String), org.apache.spark.sql.types.StructType]
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    tuneScans(spark, dir)
-    val path = s"$dir/$name.parquet"
+  /** The footer schema of table `name` under `dir`, inferred once per
+    * (dir, table, nanosAsLong) — the one lookup behind [[load]] and
+    * [[graft.ops.StreamingOps.streamEvents]]. */
+  def schemaOf(spark: SparkSession, dir: String, name: String)
+      : org.apache.spark.sql.types.StructType = {
     val nanosConf = spark.conf
       .getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
-    val schema = schemaCache.getOrElseUpdate((dir, name, nanosConf),
-      spark.read.parquet(path).schema)
-    val df = spark.read.schema(schema).parquet(path)
+    schemaCache.getOrElseUpdate((dir, name, nanosConf),
+      spark.read.parquet(s"$dir/$name.parquet").schema)
+  }
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    tuneScans(spark, dir)
+    val df = spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
     if (name == "events") eventsTs(df) else df
   }
 

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * form preserved. Both array arguments must be foldable (they are the
   * bounded trained model — the same k-rows-on-the-driver contract as the
   * HOF literal); the flattened floats are extracted once per executor,
-  * not per row.
+  * not per row. A vector with a NULL component or of another length
+  * than the centroids fails, naming the function and the element.
   *
   * The reference has no ANN operator (nearest relative:
   * presto-main/.../operator/scalar/MathFunctions.java cosine_similarity);
@@ -55,7 +56,8 @@ case class NearestList(
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_nearest_list"
 
-  def compute(v: ArrayData): Int = NearestList.argmin(flat, norms, v)
+  def compute(v: ArrayData): Int =
+    NearestList.argmin(flat, norms, v, "graft_nearest_list: vector")
 
   override protected def nullSafeEval(v: Any, f: Any, nn: Any): Any =
     compute(v.asInstanceOf[ArrayData])
@@ -77,20 +79,31 @@ object NearestList {
     * centroids laid out row-major in `flat`: argmin over c of
     * ‖c‖² − 2·(c · v), the first minimum on ties; -1 when k = 0. The
     * one kernel behind the expression and [[graft.ops.IvfIndex.train]]'s
-    * Lloyd passes. */
-  def argmin(flat: Array[Float], norms: Array[Double], v: ArrayData): Int = {
+    * Lloyd passes. A `v` with a NULL component, or with a length other
+    * than the centroids' dim, fails with `what` leading the message: it
+    * is checked once, before the k·dim loop, so it is never scored as
+    * zeros or as a prefix. */
+  def argmin(flat: Array[Float], norms: Array[Double], v: ArrayData, what: String): Int = {
     val k = norms.length
     if (k == 0) return -1
     val dim = flat.length / k
-    val n = math.min(dim, v.numElements())
+    if (v.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"$what has ${v.numElements()} components, the centroids $dim")
+    var d = 0
+    while (d < dim) {
+      if (v.isNullAt(d))
+        throw new IllegalArgumentException(s"$what has a NULL component at element ${d + 1}")
+      d += 1
+    }
     var best = Double.MaxValue
     var bi = -1
     var c = 0
     while (c < k) {
       var s = 0.0
       val base = c * dim
-      var d = 0
-      while (d < n) {
+      d = 0
+      while (d < dim) {
         s += flat(base + d).toDouble * v.getFloat(d)
         d += 1
       }

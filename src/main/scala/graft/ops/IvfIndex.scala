@@ -32,7 +32,10 @@ import scala.collection.immutable.ArraySeq
   *    (unlike multi-table LSH).
   *
   * A NULL vector fails [[train]] and [[index]] with a message naming the
-  * vector column; it is never filed into a list.
+  * vector column; so does, in [[train]], a vector with a NULL component
+  * or of another length than the centroids, which [[index]] fails in
+  * `graft_nearest_list` with the element's position. None is ever filed
+  * into a list.
   *
   * The reference has no ANN operator (its nearest relative is
   * cosine_similarity over sparse maps, presto-main/.../operator/scalar/
@@ -83,7 +86,8 @@ object IvfIndex {
     * shuffle-order float jitter cannot flip an assignment between runs.
     * Ties go to the smallest cluster id; a cluster whose list empties
     * drops out and the survivors keep their ids. Training is fully
-    * DETERMINISTIC given the ids. A NULL vector fails the pass.
+    * DETERMINISTIC given the ids. A NULL vector or component, or a
+    * vector of another length, fails the pass.
     *
     * The result is a LocalRelation: consumers see a constant-size leaf
     * with no training lineage, and its size statistics let the join
@@ -154,34 +158,34 @@ object IvfIndex {
 
   /** One Lloyd pass, one job: assign each vector to its nearest centroid
     * and return the new centroids of the non-empty clusters, sorted by
-    * id. Sums are doubles over float components, a shorter vector adding
-    * zero to the tail; their merge order across partitions follows the
-    * shuffle, which the 6-dp rounding absorbs. */
+    * id. Sums are doubles over float components; their merge order
+    * across partitions follows the shuffle, which the 6-dp rounding
+    * absorbs. A NULL vector, a NULL component or a length other than
+    * the centroids' fails the pass, naming `vecCol`. */
   private def lloydPass(
       rows: RDD[InternalRow], vecCol: String,
       cents: Array[(Int, Array[Float])]): Array[(Int, Array[Float])] = {
     val (flat, norms) = pack(cents)
     val ids = cents.map(_._1)
     val k = ids.length
+    val dim = flat.length / k
+    val what = s"IvfIndex: vector in column '$vecCol'"
     def add(into: Array[Double], from: Array[Double]): Array[Double] = {
-      val out = if (into.length >= from.length) into
-        else java.util.Arrays.copyOf(into, from.length)
       var d = 0
-      while (d < from.length) { out(d) += from(d); d += 1 }
-      out
+      while (d < dim) { into(d) += from(d); d += 1 }
+      into
     }
     rows.mapPartitions { it =>
-      val sums = Array.fill(k)(Array.emptyDoubleArray)
+      val sums = new Array[Array[Double]](k)
       val ns = new Array[Long](k)
       it.foreach { r =>
         if (r.isNullAt(0)) throw new IllegalArgumentException(nullVector(vecCol))
         val v = r.getArray(0)
-        val c = NearestList.argmin(flat, norms, v)
-        val n = v.numElements()
-        if (sums(c).length < n) sums(c) = java.util.Arrays.copyOf(sums(c), n)
+        val c = NearestList.argmin(flat, norms, v, what)
+        if (sums(c) == null) sums(c) = new Array[Double](dim)
         val s = sums(c)
         var d = 0
-        while (d < n) { s(d) += v.getFloat(d); d += 1 }
+        while (d < dim) { s(d) += v.getFloat(d); d += 1 }
         ns(c) += 1
       }
       (0 until k).iterator.filter(ns(_) > 0).map(c => (ids(c), (sums(c), ns(c))))
@@ -210,7 +214,8 @@ object IvfIndex {
     * drops an emptied list, so the argmin INDEX maps back through a
     * companion id literal; the literal is sorted by id and the kernel
     * keeps the first minimum, so ties break to the smallest cluster. A
-    * NULL vector raises an error naming `vecCol`. */
+    * NULL vector raises an error naming `vecCol`; the kernel fails a
+    * NULL component or a wrong length itself. */
   private def assignTo(
       c: DataFrame, vecCol: String, centroids: DataFrame): DataFrame = {
     val cents = centroids

@@ -22,12 +22,12 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingOps {
 
   /** `events` as a stream: same schema + ts normalization as Tables.load
-    * ([[graft.Tables.eventsTs]]), via the file stream source. */
+    * ([[graft.Tables.eventsTs]]), via the file stream source; the schema
+    * is [[graft.Tables.schemaOf]]'s, so a stream start infers nothing. */
   def streamEvents(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // The file stream source wants a directory; narrow it to the events
     // file with a glob filter.
-    graft.Tables.eventsTs(spark.readStream.schema(schema)
+    graft.Tables.eventsTs(spark.readStream.schema(graft.Tables.schemaOf(spark, dir, "events"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir))
   }

@@ -53,4 +53,17 @@ class JobLedgerSpec extends QueryAssertions {
       assert(indexed.count() == 500)
     } finally ledger.close()
   }
+
+  test("a second st01 run starts one construction job, its micro-batch") {
+    val sc = spark.sparkContext
+    val st01 = SparkEntry.streamingDefs.find(_.name == "st01_tumbling_window").get
+    st01.run(spark, sfDir).collect()
+    val ledger = JobLedger.install(sc)
+    try {
+      JobLedger.tagged(sc, "spec.st01")(st01.run(spark, sfDir))
+      // the events schema is cached (Tables.schemaOf): no footer job
+      val jobs = ledger.take("spec.st01")
+      assert(jobs.size == 1, jobs)
+    } finally ledger.close()
+  }
 }

@@ -47,6 +47,11 @@ class ScaleStressSpec extends QueryAssertions {
 
   private def emb = Tables.load(spark, sfDir, "embeddings")
 
+  /** Every message down `t`'s cause chain. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
   test("multiplyEmbeddings: kx rows, unique ids, orthogonal per-replica " +
       "transforms (norms exactly preserved, cross-replica copies shifted)") {
     val k = 5
@@ -138,9 +143,6 @@ class ScaleStressSpec extends QueryAssertions {
     import graft.ops.IvfIndex
     val holed = emb.withColumn("embedding",
       when(col("vec_id") === 7L, lit(null)).otherwise(col("embedding")))
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString(" | ")
     val want = "NULL vector in column 'embedding'"
     val inTrain = intercept[Exception](
       IvfIndex.train(holed, "vec_id", "embedding", k = 16))
@@ -149,6 +151,28 @@ class ScaleStressSpec extends QueryAssertions {
     val inIndex = intercept[Exception](
       IvfIndex.index(holed, "vec_id", "embedding", centroids))
     assert(messages(inIndex).contains(want), messages(inIndex))
+  }
+
+  test("IVF: a NULL component or a short vector fails train and index") {
+    import graft.ops.IvfIndex
+    val sf = Tables.load(spark, new java.io.File(sfDir).getParent + "/sf0.01", "embeddings")
+    val centroids = IvfIndex.train(sf, "vec_id", "embedding", k = 16)
+    val dim = sf.select(size(col("embedding"))).first().getInt(0)
+    val bad = Seq(
+      "transform(embedding, (x, i) -> IF(i = 0, CAST(NULL AS FLOAT), x))" ->
+        "has a NULL component at element 1",
+      "slice(embedding, 1, size(embedding) - 1)" ->
+        s"has ${dim - 1} components, the centroids $dim")
+    bad.foreach { case (vec, want) =>
+      val holed = sf.withColumn("embedding",
+        when(col("vec_id") === 7L, expr(vec)).otherwise(col("embedding")))
+      val inTrain = messages(intercept[Exception](
+        IvfIndex.train(holed, "vec_id", "embedding", k = 16)))
+      assert(inTrain.contains(s"IvfIndex: vector in column 'embedding' $want"), inTrain)
+      val inIndex = messages(intercept[Exception](
+        IvfIndex.index(holed, "vec_id", "embedding", centroids)))
+      assert(inIndex.contains(s"graft_nearest_list: vector $want"), inIndex)
+    }
   }
 
   test("IVF stress quality: recall@5 holds and the scan is a bounded " +
