@@ -348,4 +348,20 @@ class DialectSpec extends AnyFunSuite {
     val i = Engine.translate("SELECT * FROM t CROSS JOIN UNNEST(t.rs) AS u(a, b, c)")
     assert(i.contains("LATERAL VIEW graft_unnest(t.rs) u AS a, b, c"), i)
   }
+
+  test("enum members resolve in the quoted-key form and never inside literals") {
+    val enums = Map("g.c.mood" ->
+      Dialect.EnumDef("bigint", Seq("HAPPY" -> "0", "CURIOUS" -> "-2")))
+    assert(Dialect.substituteEnums("SELECT g.c.mood.\"curious\"", enums)
+      == "SELECT CAST(-2 AS BIGINT)")
+    assert(Dialect.substituteEnums("SELECT 'g.c.mood.HAPPY', g.c.mood.happy", enums)
+      == "SELECT 'g.c.mood.HAPPY', CAST(0 AS BIGINT)")
+  }
+
+  test("comments inside UNNEST arguments drop out of the generator call") {
+    // each comment becomes one space; the -- comment takes its newline
+    assert(Engine.translate("SELECT x FROM t CROSS JOIN UNNEST(a -- first\n" +
+        "|| b, c /* second */|| d) AS u(x, y)")
+      == "SELECT x FROM t LATERAL VIEW graft_unnest(a  || b, c  || d) u AS x, y")
+  }
 }
