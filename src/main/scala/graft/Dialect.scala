@@ -43,7 +43,20 @@ import scala.collection.mutable
   *     unspecified case falls through to *_NULLS_LAST), while Spark
   *     defaults ASC to NULLS FIRST.
   *
-  * Single-quoted literals (with '' escapes) are never rewritten.
+  * Lexical grammar. [[opaqueEnd]] is the one place that decides where a
+  * statement's opaque units lie (SqlBase.g4 STRING, QUOTED_IDENTIFIER,
+  * BACKQUOTED_IDENTIFIER, SIMPLE_COMMENT, BRACKETED_COMMENT): a `'…'`
+  * literal (`''` escapes a quote), a `"…"` identifier (`""`), a `` `…` ``
+  * identifier (``` `` ```), a `--` comment up to its newline and a
+  * `/* … */` comment. An unterminated unit runs to the end of the text.
+  * Every pass that walks the statement text steps over units with it
+  * (or maps only the code between them with [[mapCode]]), so no
+  * keyword, `?` placeholder or paren inside a unit is ever read as code;
+  * each pass keeps only the handling of a unit that is its own (the main
+  * rewrite turns `"…"` into backticks, argument capture drops comments).
+  * Literal content is never rewritten. Only the scans that re-read
+  * already emitted output to find an operand (`operandStart`,
+  * `atTzOperandStart`, `leftOperandStart`) keep their own quote rules.
   */
 object Dialect {
 
@@ -129,17 +142,41 @@ object Dialect {
   private val numericTypedLiterals =
     Set("tinyint", "smallint", "integer", "bigint", "real", "double", "boolean")
 
-  /** Index just past a single-quoted literal starting at `start`
-    * (q(start) == '\''), honoring '' escapes. */
-  private def literalEnd(q: String, start: Int): Int = {
-    var i = start + 1
-    while (i < q.length) {
-      if (q(i) == '\'') {
-        if (i + 1 < q.length && q(i + 1) == '\'') i += 2
-        else return i + 1
-      } else i += 1
+  /** Index just past the opaque unit (object doc) that starts at `i`, or
+    * `i` when code starts there. The unit's kind is `q(i)`. */
+  private def opaqueEnd(q: String, i: Int): Int =
+    if (i >= q.length) i
+    else q(i) match {
+      case c @ ('\'' | '"' | '`') =>
+        var j = i + 1
+        var end = -1
+        while (j < q.length && end < 0)
+          if (q(j) != c) j += 1
+          else if (j + 1 < q.length && q(j + 1) == c) j += 2
+          else end = j + 1
+        if (end < 0) q.length else end
+      case '-' if q.startsWith("--", i) =>
+        q.indexOf('\n', i) match { case -1 => q.length; case e => e }
+      case '/' if q.startsWith("/*", i) =>
+        q.indexOf("*/", i + 2) match { case -1 => q.length; case e => e + 2 }
+      case _ => i
     }
-    q.length
+
+  /** True for a unit (at its start `i`) that is a comment. */
+  private def isComment(q: String, i: Int): Boolean = q(i) == '-' || q(i) == '/'
+
+  /** `f` applied to each maximal code span of `q`; the opaque units
+    * between the spans are copied verbatim. */
+  private def mapCode(q: String)(f: String => String): String = {
+    val out = new StringBuilder
+    var start = 0
+    var i = 0
+    while (i < q.length) {
+      val e = opaqueEnd(q, i)
+      if (e == i) i += 1
+      else { out.append(f(q.substring(start, i))).append(q.substring(i, e)); start = e; i = e }
+    }
+    out.append(f(q.substring(start))).toString
   }
 
   private def nextNonSpace(q: String, from: Int): Int = {
@@ -181,7 +218,8 @@ object Dialect {
     var forPos = -1
     while (i < arg.length) {
       val c = arg(i)
-      if (c == '\'') i = literalEnd(arg, i)
+      val e = opaqueEnd(arg, i)
+      if (e > i) i = e
       else {
         if (c == '(' || c == '[') depth += 1
         else if (c == ')' || c == ']') depth -= 1
@@ -347,14 +385,14 @@ object Dialect {
     if (!w2.equalsIgnoreCase("zone")) return None
     val k3 = nextNonSpace(q, e2)
     if (k3 < q.length && q(k3) == '\'') {
-      val end = literalEnd(q, k3)
+      val end = opaqueEnd(q, k3)
       Some((q.substring(k3, end), end))
     } else {
       val (w3, e3) = word(k3)
       if (!w3.equalsIgnoreCase("interval")) return None
       val k4 = nextNonSpace(q, e3)
       if (k4 >= q.length || q(k4) != '\'') return None
-      val end = literalEnd(q, k4)
+      val end = opaqueEnd(q, k4)
       val k5 = nextNonSpace(q, end); val (w5, e5) = word(k5)
       if (!w5.equalsIgnoreCase("hour")) return None
       val k6 = nextNonSpace(q, e5); val (w6, e6) = word(k6)
@@ -504,35 +542,19 @@ object Dialect {
     var i = 0
     while (i < q.length) {
       val c = q(i)
-      if (c == '-' && i + 1 < q.length && q(i + 1) == '-') {
-        // -- comment: copy to end of line verbatim (an apostrophe inside
-        // a comment must not open a "literal" and desync the scan)
-        val j = q.indexOf('\n', i) match { case -1 => q.length; case e => e }
-        out.append(q.substring(i, j)); i = j
-      } else if (c == '/' && i + 1 < q.length && q(i + 1) == '*') {
-        val e = q.indexOf("*/", i + 2)
-        val j = if (e == -1) q.length else e + 2
-        out.append(q.substring(i, j)); i = j
-      } else if (c == '\'') {
-        val j = literalEnd(q, i)
-        if (stack.nonEmpty && stack.head.kind == 'p' && stack.head.args == 1) {
-          val body = q.substring(i + 1, j - 1)
-          out.append('\'').append(quoteRegexLiteral(body)).append('\'')
-        } else out.append(preserveBackslashes(q.substring(i, j)))
-        i = j
-      } else if (c == '"') {
-        // double-quoted identifier ("" escapes a quote) → backticks
-        var j = i + 1
-        val ident = new StringBuilder
-        var done = false
-        while (j < q.length && !done) {
-          if (q(j) == '"') {
-            if (j + 1 < q.length && q(j + 1) == '"') { ident.append('"'); j += 2 }
-            else { done = true; j += 1 }
-          } else { ident.append(q(j)); j += 1 }
-        }
-        out.append('`').append(ident.toString.replace("`", "``")).append('`')
-        i = j
+      val e = opaqueEnd(q, i)
+      if (e > i) {
+        val unit = q.substring(i, e)
+        out.append(c match {
+          case '\'' if stack.nonEmpty && stack.head.kind == 'p' && stack.head.args == 1 =>
+            "'" + quoteRegexLiteral(unit.substring(1, unit.length - 1)) + "'"
+          case '\'' => preserveBackslashes(unit)
+          case '"' => // "" escapes a quote; Spark quotes identifiers in backticks
+            "`" + unit.substring(1).stripSuffix("\"").replace("\"\"", "\"")
+              .replace("`", "``") + "`"
+          case _ => unit
+        })
+        i = e
       } else if (c.isLetter || c == '_') {
         var j = i
         while (j < q.length && isWordChar(q(j))) j += 1
@@ -560,7 +582,7 @@ object Dialect {
           // (IpAddressOperators castFromVarcharToIpAddress — compressed
           // lowercase v6, dotted quad for v4/v4-mapped, masked network
           // form for prefixes; functions/IpCanon)
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           out.append(if (lower == "ipaddress") "graft_ipaddress("
             else "graft_ipprefix(")
             .append(q.substring(k, end)).append(')')
@@ -575,7 +597,7 @@ object Dialect {
           // and VARCHAR 'x' is Presto's plain varchar literal spelling
           // (AbstractTestQueries testCoercions) — Spark has no STRING
           // typed-literal form, so only the literal survives
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           out.append(preserveBackslashes(q.substring(k, end)))
           i = end
         } else if (lower == "json" && k < q.length && q(k) == '\'') {
@@ -585,7 +607,7 @@ object Dialect {
           // failure is a runtime error). Outside the recognized CAST
           // positions (rewriteJsonCast consumes the literal directly),
           // lower to json_parse so invalid text raises — and TRY catches
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           out.append("json_parse(")
             .append(preserveBackslashes(q.substring(k, end))).append(')')
           i = end
@@ -593,7 +615,7 @@ object Dialect {
           // UUID 'x' validates + canonicalizes to lowercase text at
           // runtime (UuidOperators castFromVarcharToUuid — the facade
           // narrows UUID to its canonical string; functions/UuidCanon)
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           out.append("graft_uuid(")
             .append(q.substring(k, end)).append(')')
           i = end
@@ -608,7 +630,7 @@ object Dialect {
           // Presto numeric typed literals — TINYINT '7', BIGINT '-8',
           // REAL '1.5' (SqlBase.g4 typeConstructor); Spark only has the
           // DATE/TIMESTAMP/INTERVAL forms, so these become CASTs
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           out.append("CAST(").append(q.substring(k, end))
             .append(" AS ").append(lower.toUpperCase).append(')')
           i = end
@@ -622,7 +644,7 @@ object Dialect {
           // MONTH literals (INTERVAL '124-30' YEAR TO MONTH = 126-6,
           // IntervalYearMonthType); Spark's parser requires month < 12,
           // so canonicalize the literal text up front
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           val lit = q.substring(k + 1, end - 1).trim
           val qual = "(?is)^\\s*year\\s+to\\s+month".r
             .findFirstMatchIn(q.substring(end))
@@ -643,7 +665,7 @@ object Dialect {
           // Presto accepts seconds-less zone-qualified timestamp literals
           // (`TIMESTAMP '2012-10-31 01:00 UTC'`); Spark's parser wants
           // seconds before a zone suffix — splice in ':00'
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           val lit = q.substring(k + 1, end - 1)
           tsMinutesZone.findFirstMatchIn(lit) match {
             case Some(m) =>
@@ -912,7 +934,7 @@ object Dialect {
         } else if (lower == "decimal" && k < q.length && q(k) == '\'') {
           // Presto typed literal DECIMAL 'd.dd' (SqlBase.g4 primaryExpression
           // typeConstructor) → CAST with precision/scale read off the text.
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           val body = q.substring(k + 1, end - 1).trim
           val digits = body.count(_.isDigit)
           val scale = body.indexOf('.') match {
@@ -948,7 +970,7 @@ object Dialect {
           var h2 = j2 + 9
           while (h2 < q.length && q(h2).isWhitespace) h2 += 1
           if (h2 < q.length && q(h2) == '\'') {
-            val end = literalEnd(q, h2)
+            val end = opaqueEnd(q, h2)
             out.append("CAST(").append(q.substring(h2, end))
               .append(" AS DOUBLE)")
             i = end
@@ -986,7 +1008,7 @@ object Dialect {
           // identically by both engines → pattern left untouched.
           var j = k
           while (j < q.length && q(j).isWhitespace) j += 1
-          val end = literalEnd(q, j)
+          val end = opaqueEnd(q, j)
           val lit = q.substring(j, end)
           var h = end
           while (h < q.length && q(h).isWhitespace) h += 1
@@ -1035,8 +1057,7 @@ object Dialect {
           val emptyEscape = hasEscape && {
             var g = h + 6
             while (g < q.length && q(g).isWhitespace) g += 1
-            g + 1 < q.length && q(g) == '\'' && q(g + 1) == '\'' &&
-              (g + 2 >= q.length || q(g + 2) != '\'')
+            g < q.length && q(g) == '\'' && opaqueEnd(q, g) == g + 2
           }
           out.append("LIKE ")
           // each source backslash needs FOUR in the emitted text: the
@@ -1145,7 +1166,7 @@ object Dialect {
           // millis). Named-zone TIMESTAMP '.. America/X' literals need
           // no rewrite — Spark parses them to the correct instant under
           // the same session-zone rendering narrowing.
-          val end = literalEnd(q, k)
+          val end = opaqueEnd(q, k)
           val body = q.substring(k + 1, end - 1).trim
           val TzTime = "(\\d{1,2}:\\d{2}(?::\\d{2}(?:\\.\\d+)?)?)\\s*([+-]\\d{2}:\\d{2})".r
           val ZoneNameTime =
@@ -1185,7 +1206,7 @@ object Dialect {
           // identifier. Only fires when the first argument is a quoted
           // literal, so Spark's 2-arg day-based date_add stays untouched.
           val m = nextNonSpace(q, k + 1)
-          val end = literalEnd(q, m)
+          val end = opaqueEnd(q, m)
           val unit = q.substring(m + 1, end - 1).toUpperCase
           out.append(if (lower == "date_add") "timestampadd(" else "timestampdiff(")
             .append(unit)
@@ -1334,7 +1355,8 @@ object Dialect {
     var depth = 0
     while (i2 < argText.length) {
       val c = argText(i2)
-      if (c == '\'') i2 = literalEnd(argText, i2)
+      val e = opaqueEnd(argText, i2)
+      if (e > i2) i2 = e
       else if (c == '(' || c == '[') { depth += 1; i2 += 1 }
       else if (c == ')' || c == ']') { depth -= 1; i2 += 1 }
       else if (depth == 0 && (c == 'a' || c == 'A') &&
@@ -1620,7 +1642,8 @@ object Dialect {
     var depth = 0
     while (i < text.length) {
       val c = text(i)
-      if (c == '\'') i = literalEnd(text, i)
+      val e = opaqueEnd(text, i)
+      if (e > i) i = e
       else if (c == '(' || c == '[') { depth += 1; i += 1 }
       else if (c == ')' || c == ']') { depth -= 1; i += 1 }
       else if (depth == 0 && (c == 'o' || c == 'O') &&
@@ -1706,9 +1729,8 @@ object Dialect {
       else s"transform($ordered, __graft_g -> __graft_g.__v)")
   }
 
-  /** Balanced argument scan from the '(' at `open` — aware of
-    * single-quoted literals, double-quoted/backtick identifiers, and
-    * both comment forms (a ')' or ',' inside any of those must not
+  /** Balanced argument scan from the '(' at `open` over the code
+    * between opaque units (a ')' or ',' inside a unit must not
     * mis-split); returns the top-level comma-split argument texts and
     * the index just past the closing ')'. Comments are dropped from the
     * captured argument text (it is re-emitted into generated SQL). */
@@ -1720,27 +1742,14 @@ object Dialect {
     val cur = new StringBuilder
     while (j < q.length && depth > 0) {
       val c = q(j)
-      if (c == '\'') { val e = literalEnd(q, j); cur.append(q.substring(j, e)); j = e }
-      else if (c == '"' || c == '`') {
-        // quoted identifier ("" / `` escapes); copied verbatim — the main
-        // rewrite pass converts double quotes to backticks afterwards
-        var e = j + 1
-        var closed = false
-        while (e < q.length && !closed) {
-          if (q(e) == c) {
-            if (e + 1 < q.length && q(e + 1) == c) e += 2
-            else { closed = true; e += 1 }
-          } else e += 1
-        }
-        cur.append(q.substring(j, e)); j = e
-      }
-      else if (c == '-' && j + 1 < q.length && q(j + 1) == '-') {
-        val e = q.indexOf('\n', j)
-        cur.append(' '); j = if (e == -1) q.length else e + 1
-      }
-      else if (c == '/' && j + 1 < q.length && q(j + 1) == '*') {
-        val e = q.indexOf("*/", j + 2)
-        cur.append(' '); j = if (e == -1) q.length else e + 2
+      val e = opaqueEnd(q, j)
+      if (e > j) {
+        // literals and quoted identifiers are copied verbatim (the main
+        // rewrite pass converts double quotes to backticks afterwards);
+        // a comment becomes one space, a -- comment taking its newline
+        if (!isComment(q, j)) cur.append(q.substring(j, e))
+        else cur.append(' ')
+        j = if (c == '-') math.min(e + 1, q.length) else e
       }
       else if (c == '(') { depth += 1; cur.append(c); j += 1 }
       else if (c == ')') { depth -= 1; if (depth > 0) cur.append(c); j += 1 }
@@ -1804,15 +1813,9 @@ object Dialect {
     var i = 0
     while (i < q.length) {
       val c = q(i)
-      if (c == '-' && i + 1 < q.length && q(i + 1) == '-') {
-        val j = q.indexOf('\n', i) match { case -1 => q.length; case e => e }
-        out.append(q.substring(i, j)); i = j
-      } else if (c == '/' && i + 1 < q.length && q(i + 1) == '*') {
-        val e = q.indexOf("*/", i + 2)
-        val j = if (e == -1) q.length else e + 2
-        out.append(q.substring(i, j)); i = j
-      } else if (c == '\'') {
-        val j = literalEnd(q, i); out.append(q.substring(i, j)); i = j
+      val e = opaqueEnd(q, i)
+      if (e > i) {
+        out.append(q.substring(i, e)); i = e
       } else if (c.isLetter || c == '_') {
         val (word, jw) = wordAt(q, i)
         var consumed = -1
@@ -2019,24 +2022,17 @@ object Dialect {
     * outside a literal.
     */
   private def injectNullOrdering(q: String): String = {
-    // token stream with positions (word tokens + single chars), literal-aware
+    // token stream with positions (word tokens + single chars); a literal
+    // or quoted identifier is one token, comments are none
     case class Tok(text: String, start: Int, end: Int)
     val toks = mutable.ArrayBuffer.empty[Tok]
     var i = 0
     while (i < q.length) {
       val c = q(i)
-      if (c == '-' && i + 1 < q.length && q(i + 1) == '-') {
-        i = q.indexOf('\n', i) match { case -1 => q.length; case e => e }
-      }
-      else if (c == '/' && i + 1 < q.length && q(i + 1) == '*') {
-        val e = q.indexOf("*/", i + 2)
-        i = if (e == -1) q.length else e + 2
-      }
-      else if (c == '\'') { val j = literalEnd(q, i); toks += Tok("'lit'", i, j); i = j }
-      else if (c == '`') {
-        var j = i + 1
-        while (j < q.length && q(j) != '`') j += 1
-        toks += Tok("`id`", i, math.min(j + 1, q.length)); i = math.min(j + 1, q.length)
+      val e = opaqueEnd(q, i)
+      if (e > i) {
+        if (!isComment(q, i)) toks += Tok(c.toString, i, e)
+        i = e
       }
       else if (c.isLetter || c == '_') {
         var j = i
@@ -2167,7 +2163,7 @@ object Dialect {
     * thing spelled through GROUPING SETS. */
   private val EmptyGroupByRe = "(?i)GROUP\\s+BY\\s*\\(\\s*\\)".r
   private def rewriteEmptyGroupBy(q: String): String =
-    EmptyGroupByRe.replaceAllIn(q, "GROUP BY GROUPING SETS (())")
+    mapCode(q)(EmptyGroupByRe.replaceAllIn(_, "GROUP BY GROUPING SETS (())"))
 
   // ---------------------------------------------------- VALUES row items
 
@@ -2192,23 +2188,14 @@ object Dialect {
     val sb = new StringBuilder
     var i = 0
     val n = q.length
-    def wordChar(c: Char) = c.isLetterOrDigit || c == '_'
     while (i < n) {
       val c = q(i)
-      if (c == '\'') {
-        val e = literalEnd(q, i); sb.append(q.substring(i, e)); i = e
-      } else if (c == '"' || c == '`') { // quoted identifier, verbatim
-        var e = i + 1
-        var closed = false
-        while (e < n && !closed) {
-          if (q(e) == c) {
-            if (e + 1 < n && q(e + 1) == c) e += 2 else { closed = true; e += 1 }
-          } else e += 1
-        }
+      val e = opaqueEnd(q, i)
+      if (e > i) {
         sb.append(q.substring(i, e)); i = e
-      } else if ((c == 'v' || c == 'V') && (i == 0 || !wordChar(q(i - 1))) &&
+      } else if ((c == 'v' || c == 'V') && (i == 0 || !isWordChar(q(i - 1))) &&
           q.regionMatches(true, i, "VALUES", 0, 6) &&
-          (i + 6 >= n || !wordChar(q(i + 6)))) {
+          (i + 6 >= n || !isWordChar(q(i + 6)))) {
         // `x IN (VALUES …)` — the reference accepts a VALUES body as the
         // IN list (SqlBase.g4 inSubquery takes any query); Spark's IN
         // needs a SELECT, so interpose one. The closing wrap paren is
@@ -2216,7 +2203,7 @@ object Dialect {
         val tail = sb.reverseIterator.dropWhile(_.isWhitespace).take(8).mkString.reverse
         val inValues = tail.endsWith("(") && {
           val beforeParen = tail.dropRight(1).reverse.dropWhile(_.isWhitespace)
-            .takeWhile(wordChar).reverse.toLowerCase
+            .takeWhile(isWordChar).reverse.toLowerCase
           beforeParen == "in"
         }
         val mark = sb.length
@@ -2231,15 +2218,16 @@ object Dialect {
         var done = false
         while (i < n && !done) {
           val ch = q(i)
-          if (ch == '\'') {
-            val e = literalEnd(q, i); cur.append(q.substring(i, e)); i = e
+          val e = opaqueEnd(q, i)
+          if (e > i) {
+            cur.append(q.substring(i, e)); i = e
           } else if (ch == '(') { depth += 1; cur.append(ch); i += 1 }
           else if (ch == ')') {
             if (depth == 0) done = true
             else { depth -= 1; cur.append(ch); i += 1 }
           } else if (ch == ',' && depth == 0) {
             items += cur.toString; cur.clear(); i += 1
-          } else if (depth == 0 && wordChar(ch) && !wordChar(q(i - 1)) &&
+          } else if (depth == 0 && isWordChar(ch) && !isWordChar(q(i - 1)) &&
               ValuesTermRe.findPrefixMatchOf(q.substring(i)).isDefined) {
             done = true
           } else { cur.append(ch); i += 1 }
@@ -2273,10 +2261,26 @@ object Dialect {
   /** One VALUES item: shed grouping parens wrapping the WHOLE item,
     * then turn a leading ROW constructor into a plain parenthesized
     * row; recurse into argument texts so VALUES nested anywhere inside
-    * are processed too. */
+    * are processed too. Comments around the item keep their place. */
   private def unwrapRowItem(item0: String): String = {
     val item = item0.trim
-    if (item.startsWith("(")) {
+    // [codeStart, codeEnd): from the item's first code character (not
+    // whitespace, not a comment) to just past its last
+    var codeStart = -1
+    var codeEnd = 0
+    var i = 0
+    while (i < item.length) {
+      val e = opaqueEnd(item, i)
+      val code = if (e == i) !item(i).isWhitespace else !isComment(item, i)
+      val next = math.max(e, i + 1)
+      if (code) { if (codeStart < 0) codeStart = i; codeEnd = next }
+      i = next
+    }
+    if (codeStart > 0 || codeEnd < item.length) {
+      val s = math.max(codeStart, 0)
+      item.substring(0, s) + unwrapRowItem(item.substring(s, codeEnd)) +
+        item.substring(codeEnd)
+    } else if (item.startsWith("(")) {
       parseParenArgs(item, 0) match {
         case Some((args, after)) if after == item.length =>
           if (args.lengthCompare(1) == 0) {
@@ -2416,12 +2420,9 @@ object Dialect {
     var i = 0
     while (i < q.length) {
       val c = q(i)
-      if (c == '\'') {
-        val e = literalEnd(q, i); out.append(q.substring(i, e)); i = e
-      } else if (c == '`' || c == '"') {
-        var e = i + 1
-        while (e < q.length && q(e) != c) e += 1
-        out.append(q.substring(i, math.min(e + 1, q.length))); i = e + 1
+      val e = opaqueEnd(q, i)
+      if (e > i) {
+        out.append(q.substring(i, e)); i = e
       } else if (c == '(') {
         inListFrame.push(lastWordOf(out) == "in")
         out.append(c); i += 1
@@ -2561,7 +2562,8 @@ object Dialect {
     var body: String = null
     while (k < rest.length && body == null) {
       val c = rest(k)
-      if (c == '\'') k = literalEnd(rest, k) // a skipped COMMENT literal
+      val e = opaqueEnd(rest, k)
+      if (e > k) k = e // a COMMENT literal (or any unit) is skipped
       else if (c.isLetter) {
         var j = k
         while (j < rest.length && isWordChar(rest(j))) j += 1
@@ -2812,15 +2814,18 @@ object Dialect {
           })
       }
     val afterMembers = {
+      // spans run over quoted identifiers: `name."KEY"` is one member
       val out = new StringBuilder
       var i = 0
       var spanStart = 0
       while (i < sql.length) {
-        if (sql.charAt(i) == '\'') {
+        val e = opaqueEnd(sql, i)
+        if (e == i) i += 1
+        else if (sql(i) == '"' || sql(i) == '`') i = e
+        else {
           out.append(members(sql.substring(spanStart, i)))
-          val e = literalEnd(sql, i)
           out.append(sql.substring(i, e)); i = e; spanStart = e
-        } else i += 1
+        }
       }
       out.append(members(sql.substring(spanStart)))
       out.toString
@@ -2828,6 +2833,23 @@ object Dialect {
     // 2. CAST sites (paren-aware, innermost-first via recursion)
     rewriteEnumCasts(afterMembers, enums)
   }
+
+  /** Resolve registered user-defined type names (qualified, so they
+    * cannot collide with bare column identifiers) to their stored
+    * definitions, longest name first so one registered name can never
+    * clip another's prefix. Case-insensitive and token-bounded; only
+    * code is rewritten, never an opaque unit. Runs after
+    * [[substituteEnums]], which leaves an enum name in a nested type
+    * position for this pass. */
+  def substituteTypes(sql: String, types: scala.collection.Map[String, String]): String =
+    if (types.isEmpty) sql
+    else mapCode(sql)(span =>
+      types.toSeq.sortBy(-_._1.length).foldLeft(span) {
+        case (acc, (name, defn)) =>
+          acc.replaceAll(
+            "(?i)(?<![\\w.])" + java.util.regex.Pattern.quote(name) + "(?![\\w.])",
+            java.util.regex.Matcher.quoteReplacement(defn))
+      })
 
   private def rewriteEnumCasts(
       q: String, enums: scala.collection.Map[String, EnumDef]): String = {
@@ -2838,7 +2860,8 @@ object Dialect {
       var last = -1
       while (i < arg.length) {
         val c = arg(i)
-        if (c == '\'') i = literalEnd(arg, i)
+        val e = opaqueEnd(arg, i)
+        if (e > i) i = e
         else {
           if (c == '(' || c == '[') depth += 1
           else if (c == ')' || c == ']') depth -= 1
@@ -2857,7 +2880,8 @@ object Dialect {
     var i = 0
     while (i < q.length) {
       val c = q(i)
-      if (c == '\'') { val e = literalEnd(q, i); out.append(q.substring(i, e)); i = e }
+      val e = opaqueEnd(q, i)
+      if (e > i) { out.append(q.substring(i, e)); i = e }
       else if (isWordChar(c) && (i == 0 || !isWordChar(q(i - 1)))) {
         var j = i
         while (j < q.length && isWordChar(q(j))) j += 1
@@ -2938,22 +2962,11 @@ object Dialect {
     case _ => None
   }
 
-  /** Count of positional `?` placeholders outside literals/comments —
-    * DESCRIBE INPUT's row count and EXECUTE's expected arity. */
+  /** Count of positional `?` placeholders in code (outside every opaque
+    * unit) — DESCRIBE INPUT's row count and EXECUTE's expected arity. */
   def countParams(sql: String): Int = {
-    var i = 0
     var n = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (c == '\'') i = literalEnd(sql, i)
-      else if (c == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        val e = sql.indexOf('\n', i); i = if (e == -1) sql.length else e
-      }
-      else if (c == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2); i = if (e == -1) sql.length else e + 2
-      }
-      else { if (c == '?') n += 1; i += 1 }
-    }
+    mapCode(sql) { span => n += span.count(_ == '?'); span }
     n
   }
 
@@ -2967,7 +2980,8 @@ object Dialect {
     var i = 0
     while (i < s.length) {
       val c = s(i)
-      if (c == '\'') { val e = literalEnd(s, i); cur.append(s.substring(i, e)); i = e }
+      val e = opaqueEnd(s, i)
+      if (e > i) { cur.append(s.substring(i, e)); i = e }
       else if (c == '(' || c == '[') { depth += 1; cur.append(c); i += 1 }
       else if (c == ')' || c == ']') { depth -= 1; cur.append(c); i += 1 }
       else if (c == ',' && depth == 0) { parts += cur.toString.trim; cur.clear(); i += 1 }
@@ -2977,38 +2991,24 @@ object Dialect {
     parts.toSeq.filter(_.nonEmpty)
   }
 
-  /** Substitute each positional `?` placeholder (outside literals and
-    * comments) with the matching USING parameter, parenthesized so an
-    * expression parameter keeps its precedence. Arity mismatches fail
-    * loudly like the reference's ExecuteTask. */
+  /** Substitute each positional `?` placeholder (in code, as counted by
+    * [[countParams]]) with the matching USING parameter, parenthesized
+    * so an expression parameter keeps its precedence. Arity mismatches
+    * fail loudly like the reference's ExecuteTask. */
   def substituteParams(sql: String, params: Seq[String]): String = {
-    val out = new StringBuilder
-    var i = 0
     var p = 0
-    while (i < sql.length) {
-      val c = sql(i)
-      if (c == '\'') { val e = literalEnd(sql, i); out.append(sql.substring(i, e)); i = e }
-      else if (c == '-' && i + 1 < sql.length && sql(i + 1) == '-') {
-        val e = sql.indexOf('\n', i)
-        val j = if (e == -1) sql.length else e
-        out.append(sql.substring(i, j)); i = j
-      }
-      else if (c == '/' && i + 1 < sql.length && sql(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        val j = if (e == -1) sql.length else e + 2
-        out.append(sql.substring(i, j)); i = j
-      }
-      else if (c == '?') {
+    val out = mapCode(sql)(_.flatMap {
+      case '?' =>
         if (p >= params.length)
           throw new IllegalArgumentException(
             s"Incorrect number of parameters: statement has more than ${params.length} placeholders")
-        out.append('(').append(params(p)).append(')'); p += 1; i += 1
-      }
-      else { out.append(c); i += 1 }
-    }
+        p += 1
+        s"(${params(p - 1)})"
+      case c => c.toString
+    })
     if (p != params.length)
       throw new IllegalArgumentException(
         s"Incorrect number of parameters: expected $p, found ${params.length}")
-    out.toString
+    out
   }
 }

@@ -230,11 +230,13 @@ object Engine {
     requireExtensions(spark)
     Tables.registerAll(spark, dir)
     // shadow the object-level translate: every statement path in this
-    // method first resolves the session's user-defined type names
-    // (CREATE TYPE), then runs the dialect translation
+    // method first resolves the session's enum members and casts, then
+    // its other user-defined type names (CREATE TYPE), then runs the
+    // dialect translation — all three Dialect passes over one lexical
+    // grammar (Dialect object doc)
     def translate(q: String): String =
-      Dialect.translate(substituteTypes(spark,
-        Dialect.substituteEnums(q, enumsFor(spark))))
+      Dialect.translate(Dialect.substituteTypes(
+        Dialect.substituteEnums(q, enumsFor(spark)), typesFor(spark)))
     ExplainIoRe.findFirstMatchIn(query) match {
       case Some(m) =>
         // EXPLAIN (TYPE IO) — the reference's I/O plan document
@@ -415,7 +417,7 @@ object Engine {
             typesFor(spark).put(name,
               if (ed.base == "bigint") "bigint" else "varchar")
           case None =>
-            val resolved = substituteTypes(spark, definition).trim
+            val resolved = Dialect.substituteTypes(definition, typesFor(spark)).trim
             val stored =
               if (resolved.startsWith("(")) "ROW " + resolved // structural row
               else resolved                                   // distinct alias
@@ -452,41 +454,6 @@ object Engine {
   private val matViewsFor = new SessionStore[graft.plans.Views.MatView]
   private val typesFor = new SessionStore[String]
   private val enumsFor = new SessionStore[Dialect.EnumDef]
-
-  /** Resolve registered user-defined type names (qualified, so they
-    * cannot collide with bare column identifiers) to their stored
-    * definitions, longest name first so one registered name can never
-    * clip another's prefix. Case-insensitive, token-bounded, and
-    * literal-aware: text inside '…' strings passes through verbatim. */
-  private def substituteTypes(spark: SparkSession, sql: String): String = {
-    val types = typesFor(spark)
-    if (types.isEmpty) return sql
-    def subst(span: String): String =
-      types.toSeq.sortBy(-_._1.length).foldLeft(span) {
-        case (acc, (name, defn)) =>
-          acc.replaceAll(
-            "(?i)(?<![\\w.])" + java.util.regex.Pattern.quote(name) + "(?![\\w.])",
-            java.util.regex.Matcher.quoteReplacement(defn))
-      }
-    val out = new StringBuilder
-    var i = 0
-    var spanStart = 0
-    while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        out.append(subst(sql.substring(spanStart, i)))
-        var j = i + 1 // find the literal's end ('' escapes a quote)
-        while (j < sql.length &&
-            (sql.charAt(j) != '\'' ||
-              (j + 1 < sql.length && sql.charAt(j + 1) == '\'' && { j += 1; true }))) j += 1
-        val end = math.min(j + 1, sql.length)
-        out.append(sql.substring(i, end))
-        i = end
-        spanStart = end
-      } else i += 1
-    }
-    out.append(subst(sql.substring(spanStart)))
-    out.toString
-  }
 
   /** Fail loudly when view/MV DDL would take a name already serving the
     * shared namespace: fixture tables are re-registered with
@@ -624,7 +591,10 @@ object Engine {
 
   /** Translate Presto-dialect SQL to Spark SQL — see [[Dialect]] for the
     * full rule list (function aliases, ARRAY literals, 1-based
-    * subscripts, quoted identifiers, TRY, NULLS LAST injection).
+    * subscripts, quoted identifiers, TRY, NULLS LAST injection) and for
+    * the one lexical grammar every pass shares: nothing inside a string
+    * literal, quoted identifier or comment is rewritten. Session-free:
+    * [[sql]] additionally resolves the session's CREATE TYPE names.
     */
   def translate(query: String): String = Dialect.translate(query)
 

@@ -364,4 +364,32 @@ class DialectSpec extends AnyFunSuite {
         "|| b, c /* second */|| d) AS u(x, y)")
       == "SELECT x FROM t LATERAL VIEW graft_unnest(a  || b, c  || d) u AS x, y")
   }
+
+  // one lexical grammar: no pass reads code inside a literal, a quoted
+  // identifier or a comment
+  test("a literal spelling GROUP BY () is not rewritten") {
+    assert(Engine.translate("SELECT 'GROUP BY ()' AS s") == "SELECT 'GROUP BY ()' AS s")
+  }
+
+  test("VALUES ROW unpacks beside a comment holding an apostrophe") {
+    assert(Engine.translate("VALUES ROW(1, 2) /* it's */") == "VALUES (1, 2) /* it's */ ")
+    assert(Engine.translate("VALUES /* it's */ ROW(1, 2), ROW(3, 4) -- x")
+      == "VALUES /* it's */ (1, 2), (3, 4) -- x ")
+  }
+
+  test("UNNEST after a double-quoted identifier holding an apostrophe") {
+    assert(Engine.translate("SELECT \"it's\", x FROM t CROSS JOIN UNNEST(arr) AS u(x)")
+      == "SELECT `it's`, x FROM t LATERAL VIEW graft_unnest(arr) u AS x")
+  }
+
+  test("IN (VALUES …) after a comment holding an apostrophe") {
+    assert(Engine.translate("SELECT x FROM t /* it's */ WHERE x IN (VALUES 1, 2)")
+      == "SELECT x FROM t /* it's */ WHERE x IN (SELECT * FROM (VALUES 1, 2 ))")
+  }
+
+  test("a ? inside a quoted identifier is not a placeholder") {
+    assert(Dialect.countParams("SELECT \"a?\", ? FROM t") == 1)
+    assert(Dialect.substituteParams("SELECT \"a?\", ? FROM t", Seq("1"))
+      == "SELECT \"a?\", (1) FROM t")
+  }
 }

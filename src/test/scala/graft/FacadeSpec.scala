@@ -1191,4 +1191,8 @@ class FacadeSpec extends AnyFunSuite {
       """SELECT u.w FROM (SELECT ARRAY[1] AS "Arr") s
         |CROSS JOIN UNNEST("Arr") AS u(w)""".stripMargin).count() == 1)
   }
+
+  test("a string literal that spells a rewritable clause comes back as written") {
+    assert(one("SELECT 'GROUP BY ()' AS s") == "GROUP BY ()")
+  }
 }
